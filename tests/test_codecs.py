@@ -687,7 +687,7 @@ def test_png_16bit_reduces_high_byte():
     for r in range(4):
         enc = flat[r].astype(np.int32).copy()
         for i in range(5, 1, -1):
-            enc[i] = (flat[r][i] - flat[r][i - 2]) & 0xFF
+            enc[i] = (int(flat[r][i]) - int(flat[r][i - 2])) & 0xFF
         rows.append(b"\x01" + enc.astype(np.uint8).tobytes())
     h, w, c, out = decode_png(_png_raw(3, 4, 16, 0, b"".join(rows)))
     assert (out[:, :, 0] == (g16.astype(np.uint16) >> 8).astype(np.uint8)).all()

@@ -222,16 +222,16 @@ def test_pii_redact_is_scan_shaped(spark):
 
 
 def test_staged_entries_have_scale_safe_plans(spark):
-    """Pin the staged round-6 entries' plan shapes BEFORE promotion:
-    per-series graphite windows must partition by metric (never a
-    global window over the raw series), and the LM scorer must stay
-    JVM-side with no cartesian product on two large sides."""
+    """Pin the round-6 entries' plan shapes: per-series graphite
+    windows must partition by metric (never a global window over the
+    raw series), and the LM scorer must stay JVM-side with no cartesian
+    product on two large sides."""
     import re
 
-    from whisper_pandas_spark.queries_round6 import STAGED
+    from whisper_pandas_spark.registry import QUERIES
 
     def plan_of(name):
-        return formatted_plan(STAGED[name][0](spark, SF))
+        return formatted_plan(QUERIES[name](spark, SF))
 
     p = plan_of("graphite_per_second")
     # the lag window runs partitioned: a partition-less Window over the
@@ -250,14 +250,14 @@ def test_staged_entries_have_scale_safe_plans(spark):
 
 
 def test_new_staged_entries_plan_shapes(spark):
-    """Plan pins for the late-round-5 staged entries: summarize is one
+    """Plan pins for the late-round-5 entries: summarize is one
     partial-agg exchange; the SCD2 window partitions by the key; the
     archive inventory never shuffles payload rows (scan-shaped Arrow
     pass + sort only for the oracle's determinism)."""
-    from whisper_pandas_spark.queries_round6 import STAGED
+    from whisper_pandas_spark.registry import QUERIES
 
     def plan_of(name):
-        return formatted_plan(STAGED[name][0](spark, SF))
+        return formatted_plan(QUERIES[name](spark, SF))
 
     p = plan_of("graphite_summarize")
     assert p.count("HashAggregate") >= 2  # map-side partial + final
@@ -282,10 +282,10 @@ def test_funnel_and_merge_staged_plans(spark):
     """Funnel stays window-algebra (no joins, no Python, no cartesian);
     MERGE applies the change set via broadcast joins — the full table
     never hash-shuffles."""
-    from whisper_pandas_spark.queries_round6 import STAGED
+    from whisper_pandas_spark.registry import QUERIES
 
     def plan_of(name):
-        return formatted_plan(STAGED[name][0](spark, SF))
+        return formatted_plan(QUERIES[name](spark, SF))
 
     p = plan_of("funnel_view_click_purchase")
     assert "CartesianProduct" not in p and "EvalPython" not in p

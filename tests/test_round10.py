@@ -706,7 +706,7 @@ def test_rake_validation(spark):
 def test_benford_digit_extraction_and_shares(spark, sf_dir):
     import math
 
-    from whisper_pandas_spark.queries_round10 import profile_benford
+    from whisper_pandas_spark.queries_pipeline import profile_benford
 
     rows = profile_benford(spark, sf_dir).collect()
     assert [r.digit for r in rows] == sorted({r.digit for r in rows})

@@ -18,7 +18,7 @@ def _docs(spark, n=30):
 def test_rec_const_pins_build_record():
     """The oracle's record-length arithmetic must match the writer's
     actual bytes for any id/body, or every round-14 oracle drifts."""
-    from whisper_pandas_spark.queries_round14 import _REC_CONST, _WARC_DATE
+    from whisper_pandas_spark.queries_ingest import _REC_CONST, _WARC_DATE
     from whisper_pandas_spark.sources.warc import _build_record
 
     for i, body in [(0, b""), (7, b"xyz"), (12345, "é中".encode())]:
@@ -377,7 +377,7 @@ def test_ann_recall_audit_invariants(spark, sf_dir):
     """Four methods, exact-integer hit/candidate counts, recall within
     bounds, and the high-recall families (bucketed LSH-multi, IVF-SQ8)
     actually deliver on the fixture."""
-    from whisper_pandas_spark.queries_round14 import emb_ann_recall_audit
+    from whisper_pandas_spark.queries_similarity import emb_ann_recall_audit
 
     rows = {r["method"]: r for r in emb_ann_recall_audit(spark, sf_dir).collect()}
     assert set(rows) == {"lsh_multi", "ivf_sq8", "ivf_pq", "jl_rp"}
@@ -595,7 +595,7 @@ def test_zipnum_members_and_selection(spark, tmp_path):
 def test_doremi_mixture_follows_weights(spark, sf_dir):
     """Rates derive from the exact final weights; kept is the md5 gate;
     every rate is in (0, 1]."""
-    from whisper_pandas_spark.queries_round14 import (
+    from whisper_pandas_spark.queries_pipeline import (
         _DOREMI_ITERS,
         sample_doremi_mixture,
         sample_doremi_weights,
@@ -613,7 +613,7 @@ def test_doremi_mixture_follows_weights(spark, sf_dir):
 def test_web_mojibake_equals_plain_funnel(spark, sf_dir):
     """Corrupt -> repair composed ahead of the strip stage must leave
     the entire downstream funnel bit-identical."""
-    from whisper_pandas_spark.queries_round12b import (
+    from whisper_pandas_spark.queries_web import (
         pipeline_web_end_to_end,
         pipeline_web_mojibake,
     )
@@ -627,10 +627,7 @@ def test_wet_rec_const_and_gzip_roundtrip(spark, tmp_path):
     """The WET record-length identity pins _build_record's conversion
     shape, and the gzip WET layout (one member per record) round-trips
     with text intact and no HTTP fields."""
-    from whisper_pandas_spark.queries_round14 import (
-        _WARC_DATE,
-        _WET_REC_CONST,
-    )
+    from whisper_pandas_spark.queries_ingest import _WARC_DATE, _WET_REC_CONST
     from whisper_pandas_spark.sources.warc import (
         _build_record,
         read_warc,

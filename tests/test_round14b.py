@@ -134,7 +134,7 @@ def test_er_golden_records_rules(spark):
 
 
 def test_ccnet_buckets_partition_docs(spark):
-    from whisper_pandas_spark.queries_round14b import text_ccnet_buckets
+    from whisper_pandas_spark.queries_text import text_ccnet_buckets
 
     out = text_ccnet_buckets(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -185,7 +185,7 @@ def test_ccnet_single_doc_lang_goes_tail(spark):
 
 
 def test_dpp_entry_asserts_runtime_pruning(spark):
-    from whisper_pandas_spark.queries_round14b import layout_dynamic_prune
+    from whisper_pandas_spark.queries_materialize import layout_dynamic_prune
 
     # normal config: entry runs and the fact scan is DPP-filtered
     out = layout_dynamic_prune(spark, SF)
@@ -293,7 +293,7 @@ def test_notin_entry_matches_left_anti_on_nonnull_data(spark):
     """On the (non-null-key) fixture the NAAJ result must equal the
     plain anti-join reference — NAAJ changes the plan, not the answer
     here."""
-    from whisper_pandas_spark.queries_round14b import join_notin_nullaware
+    from whisper_pandas_spark.queries_joins import join_notin_nullaware
 
     out = {r["o_orderpriority"]: (r["n"], r["price_cents"])
            for r in join_notin_nullaware(spark, SF).collect()}
@@ -324,10 +324,7 @@ def test_notin_entry_matches_left_anti_on_nonnull_data(spark):
 
 
 def test_attr_credit_conserves_exactly(spark):
-    from whisper_pandas_spark.queries_round14b import (
-        _ATTR_PPM,
-        attr_multitouch_linear,
-    )
+    from whisper_pandas_spark.queries_windows import _ATTR_PPM, attr_multitouch_linear
 
     out = attr_multitouch_linear(spark, SF).collect()
     n_purchases = (
@@ -389,7 +386,7 @@ def test_attr_remainder_goes_to_earliest_touch(spark):
 
 def test_attr_plan_is_equi_join(spark):
     from whisper_pandas_spark.plans.inspect import formatted_plan
-    from whisper_pandas_spark.queries_round14b import attr_multitouch_linear
+    from whisper_pandas_spark.queries_windows import attr_multitouch_linear
 
     plan = formatted_plan(attr_multitouch_linear(spark, SF))
     assert "CartesianProduct" not in plan
@@ -404,7 +401,7 @@ def test_attr_plan_is_equi_join(spark):
 def test_fd_check_verdicts(spark):
     """nation->region must HOLD; the other two candidates must be
     violated on any TPC-H-shaped fixture."""
-    from whisper_pandas_spark.queries_round14b import profile_fd_check
+    from whisper_pandas_spark.queries_pipeline import profile_fd_check
 
     out = {r["fd"]: r for r in profile_fd_check(spark, SF).collect()}
     assert out["nation.n_nationkey->n_regionkey"]["holds"]
@@ -422,7 +419,7 @@ def test_fd_check_verdicts(spark):
 def test_reconcile_conserves_exactly(spark):
     """Hamilton apportionment: sum(reconciled) == fc_total EXACTLY,
     and every nation is within 1 cent of its real-valued quota."""
-    from whisper_pandas_spark.queries_round14b import ts_reconcile_topdown
+    from whisper_pandas_spark.queries_timeseries import ts_reconcile_topdown
 
     rows = ts_reconcile_topdown(spark, SF).collect()
     fc = rows[0]["fc_total_cents"]
@@ -448,7 +445,7 @@ def test_robots_protocol_traps(spark):
     rules never leak into '*', Allow overrides the shorter Disallow,
     exact-length ties go to Allow, empty Disallow restricts nothing,
     Disallow-everything respects its carve-out."""
-    from whisper_pandas_spark.queries_round14b import crawl_robots_filter
+    from whisper_pandas_spark.queries_ingest import crawl_robots_filter
 
     out = crawl_robots_filter(spark, SF).collect()
     by_id = {r["id"]: r for r in out}
@@ -485,7 +482,7 @@ def test_robots_protocol_traps(spark):
 
 def test_robots_plan_is_broadcast_no_python(spark):
     from whisper_pandas_spark.plans.inspect import formatted_plan
-    from whisper_pandas_spark.queries_round14b import crawl_robots_filter
+    from whisper_pandas_spark.queries_ingest import crawl_robots_filter
 
     plan = formatted_plan(crawl_robots_filter(spark, SF))
     assert "CartesianProduct" not in plan
@@ -503,7 +500,7 @@ def test_sitemap_delta_roundtrip_and_classes(spark):
     """The re-parsed sitemap covers every URL exactly once, and the
     planted lastmod/crawl-date arithmetic exercises all three
     verdicts; 'new' is exactly the never-crawled third."""
-    from whisper_pandas_spark.queries_round14b import crawl_sitemap_delta
+    from whisper_pandas_spark.queries_ingest import crawl_sitemap_delta
 
     out = crawl_sitemap_delta(spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -523,7 +520,7 @@ def test_sitemap_delta_roundtrip_and_classes(spark):
 
 def test_sitemap_plan_no_python_no_cartesian(spark):
     from whisper_pandas_spark.plans.inspect import formatted_plan
-    from whisper_pandas_spark.queries_round14b import crawl_sitemap_delta
+    from whisper_pandas_spark.queries_ingest import crawl_sitemap_delta
 
     plan = formatted_plan(crawl_sitemap_delta(spark, SF))
     assert "CartesianProduct" not in plan
@@ -537,10 +534,7 @@ def test_sitemap_plan_no_python_no_cartesian(spark):
 
 
 def test_matryoshka_shape_and_flag(spark):
-    from whisper_pandas_spark.queries_round14b import (
-        _MRL_K,
-        emb_matryoshka_topk,
-    )
+    from whisper_pandas_spark.queries_similarity import _MRL_K, emb_matryoshka_topk
 
     out = emb_matryoshka_topk(spark, SF).collect()
     assert len(out) == 5 * _MRL_K
@@ -612,7 +606,7 @@ def test_sft_spans_identity_and_coverage(spark):
     """Every span's substring equals its assistant content (span_ok
     pinned 1), spans never overlap, and the mask never touches a
     template marker."""
-    from whisper_pandas_spark.queries_round14b import text_sft_masking
+    from whisper_pandas_spark.queries_text import text_sft_masking
 
     out = text_sft_masking(spark, SF).collect()
     docs_n = (
@@ -643,7 +637,7 @@ def test_pack_sft_conservation_and_y180_consistency(spark):
     fragments stay inside [0, B); and every span offset agrees with
     text_sft_masking's length arithmetic modulo the doc's stream
     start."""
-    from whisper_pandas_spark.queries_round14b import (
+    from whisper_pandas_spark.queries_text import (
         _PSFT_B,
         pack_sft_spans,
         text_sft_masking,
@@ -676,10 +670,7 @@ def test_ab_report_invariants(spark):
     """Assignment partitions the users exactly; the scaled chi-square
     matches the Python integer identity; a healthy 50/50 md5 split
     never trips the SRM guardrail on the fixture."""
-    from whisper_pandas_spark.queries_round14b import (
-        _AB_SCALE,
-        ab_experiment_report,
-    )
+    from whisper_pandas_spark.queries_windows import _AB_SCALE, ab_experiment_report
 
     rows = {r["variant"]: r for r in ab_experiment_report(spark, SF).collect()}
     assert set(rows) == {"control", "treatment"}
@@ -706,7 +697,7 @@ def test_politeness_delays_and_slots(spark):
     """The specialbot poison delay (99 s) never binds; declared-delay
     domains use k%7+1, the rest the default; slots are dense per
     domain and fetch_at_s = slot * delay_s exactly."""
-    from whisper_pandas_spark.queries_round14b import (
+    from whisper_pandas_spark.queries_ingest import (
         _POL_DEFAULT_S,
         crawl_politeness_schedule,
     )

@@ -1,6 +1,5 @@
-"""Round-6 staged entries: full value-level Spark-vs-DuckDB comparison
-TODAY (same compare the driver runs), so promotion next round is a
-one-line registry change with zero new risk."""
+"""The 34 round-6 entries: full value-level Spark-vs-DuckDB comparison
+(the same compare the driver runs) at sf0.01."""
 
 from __future__ import annotations
 
@@ -9,9 +8,47 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from whisper_pandas_spark.queries_round6 import STAGED
+from whisper_pandas_spark import registry
+from whisper_pandas_spark.registry import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.01"
+
+ROUND6 = (
+    "dedup_semantic",
+    "emb_pq_ivf_topk",
+    "emb_pq_topk",
+    "funnel_view_click_purchase",
+    "graph_pagerank_trade",
+    "graphite_group_by_node",
+    "graphite_per_second",
+    "graphite_summarize",
+    "incr_agg_orders",
+    "ingest_csv_roundtrip",
+    "ingest_jsonl_roundtrip",
+    "join_asof_forward",
+    "join_star_q5ish",
+    "merge_partitioned_manifest",
+    "merge_upsert_documents",
+    "mm_archive_inventory",
+    "quality_expectations",
+    "sample_mixture_tokens",
+    "sample_shuffle_epoch",
+    "sample_weighted_topk",
+    "scd2_user_event_versions",
+    "sketch_distinct_rollup",
+    "sketch_quantile_rollup",
+    "sketch_topk_rollup",
+    "snapshot_diff_keys",
+    "stream_merge_replay",
+    "stream_session_replay",
+    "stream_sketch_replay",
+    "text_lm_bigram_score",
+    "text_quality_classifier",
+    "text_tfidf_topk",
+    "ts_holt_forecast",
+    "ts_metric_correlation",
+    "ts_seasonal_decompose",
+)
 
 
 @pytest.fixture(scope="module")
@@ -27,11 +64,10 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", ROUND6)
 def test_staged_entry_matches_duckdb(spark, duck, name):
-    fn, oracle = STAGED[name]
-    sdf = fn(spark, SF_DIR).toPandas()
-    ddf = duck.execute(oracle).fetchdf()
+    sdf = QUERIES[name](spark, SF_DIR).toPandas()
+    ddf = duck.execute(ORACLES[name]).fetchdf()
     assert len(sdf) == len(ddf), (len(sdf), len(ddf))
     assert sorted(sdf.columns) == sorted(ddf.columns)
     s = sdf[sorted(sdf.columns)].sort_values(list(sorted(sdf.columns))).reset_index(drop=True)
@@ -45,28 +81,21 @@ def test_staged_entry_matches_duckdb(spark, duck, name):
             assert (s[c].astype(str) == d[c].astype(str)).all(), (name, c)
 
 
-def test_promote_registers_every_staged_entry_with_oracle():
-    """Round-6 promotion integrity: registry import promotes every staged
-    entry into the live QUERIES/ORACLES with its exact fn and oracle, and
-    any still-unrecorded entry sorts ahead of the green refresh bucket so
-    the driver's bounded sweep records it first.
+def test_round6_entries_registered_with_oracle():
+    """Every round-6 entry is in the live QUERIES/ORACLES, and any
+    still-unrecorded one sorts ahead of the green refresh bucket so the
+    driver's bounded sweep records it first.
 
     The ordering half is scoped to entries with NO CORRECTNESS record:
     once the driver sweeps them (green), ``registry._reorder`` correctly
     moves them to the END of the green bucket (newest record last), so
     asserting the pre-sweep ordering for recorded entries would encode a
-    transient state and go red the moment CORRECTNESS_rNN.json lands
-    (exactly what happened between the r6 gate run and the r6 judgment).
+    transient state.
     """
-    from whisper_pandas_spark import registry
-    from whisper_pandas_spark.queries_round6 import STAGED
-    from whisper_pandas_spark.registry import ORACLES, QUERIES
-
-    for name, (fn, oracle) in STAGED.items():
-        assert QUERIES[name] is fn
-        assert ORACLES[name] == oracle
+    for name in ROUND6:
+        assert name in QUERIES and name in ORACLES, name
     order = list(QUERIES)
-    unrecorded = [n for n in STAGED if n not in registry._latest]
+    unrecorded = [n for n in ROUND6 if n not in registry._latest]
     if unrecorded:
         green = [
             i

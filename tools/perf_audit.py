@@ -40,14 +40,7 @@ def main() -> None:
     ).save()
 
     reps = int(os.environ.get("PERF_REPS", "2"))
-    # staged (pre-promotion) entries sweep too, marked with a prefix —
-    # a pathological staged plan should surface BEFORE promotion
-    from whisper_pandas_spark.queries_round6 import STAGED
-
     targets = dict(QUERIES)
-    for name, (fn, _oracle) in STAGED.items():
-        if name not in targets:  # promoted entries are already live
-            targets[f"staged:{name}"] = fn
 
     # PERF_ONLY=name1,name2 narrows the sweep (exact names) — used by the
     # sf1 stress run, where sweeping all ~200 entries at 100x the oracle
@@ -93,7 +86,6 @@ def main() -> None:
         "sink — count() would let Catalyst prune joins/windows; round-11 note",
         "in BENCH_NOTES.md) per entry; ORDER and outliers matter, not 3rd decimals.",
         "",
-        "`staged:` rows are pre-promotion entries (queries_round6.py).",
         "Entries that TRAIN in-engine (k-means / PQ codebooks / PageRank /",
         "component closures) run eager per-iteration checkpoints, so at",
         "fixture scale their wall time is Spark job-count overhead, not",

@@ -58,7 +58,7 @@ AUDITED = [
     "pipeline_corpus_end_to_end",
     "mm_features",
     "whisper_write_roundtrip",
-    # promoted round-6 entries (live since the registry promote() hook)
+    # round-6 entries
     "sample_mixture_tokens",
     "dedup_semantic",
     "graph_pagerank_trade",
@@ -283,18 +283,9 @@ def main() -> None:
         "dedup_ngram_jaccard": lambda: _lazy_dedup("ngram"),
     }
 
-    from whisper_pandas_spark.queries_round6 import STAGED
-
     for name in AUDITED:
         if name in LAZY:
             plan = formatted_plan(LAZY[name]())
-        elif name.startswith("staged:"):
-            fn, _oracle = STAGED[name.removeprefix("staged:")]
-            # No blanket except: a staged entry that starts throwing must
-            # FAIL the audit, not leave a placeholder where its plan pin
-            # was (stream_* entries run their query eagerly and explain
-            # the drained sink — they don't need special handling).
-            plan = formatted_plan(fn(spark, SF_DIR))
         elif name in QUERIES:
             plan = formatted_plan(QUERIES[name](spark, SF_DIR))
         else:

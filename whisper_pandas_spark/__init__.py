@@ -13,6 +13,13 @@ Layout
 - :mod:`whisper_pandas_spark.functions` — scalar/column helper expressions
 - :mod:`whisper_pandas_spark.plans`     — plan inspection helpers
 - :mod:`whisper_pandas_spark.streaming` — Structured Streaming rollups
+- :mod:`whisper_pandas_spark.registry`  — the 290 named entries, each with
+  its DuckDB oracle SQL; entries register through the leaf
+  :mod:`whisper_pandas_spark.entries` from one ``queries_<domain>`` module
+  per domain: ``whisper``, ``timeseries``, ``rollup``, ``sketches``,
+  ``relational``, ``joins``, ``windows``, ``dedup``, ``similarity``,
+  ``text``, ``web``, ``graph``, ``ingest``, ``materialize``, ``streaming``,
+  ``multimodal`` and ``pipeline``
 
 Reference parity is documented per-function with ``file:line`` citations into
 ``/root/reference/whisper_pandas.py`` (the reference implementation is a

@@ -1,12 +1,9 @@
 """Shared curation-funnel fixture + oracle (leaf module).
 
-Extracted from queries_round13b so BOTH the batch funnel
-(`pipeline_curation_end_to_end`) and the round-14 streaming face
-(`stream_curation_replay`) can import it at module-import time without
-a registry cycle: queries_round14 evaluates its oracle strings while
-queries_round13b is still mid-import (the registry imports 13b before
-14), so anything both rounds need must live below the queries layer.
-Imports only operators — no registry, no queries_* modules.
+Used by two domains: the batch funnel (`pipeline_curation_end_to_end`,
+queries_pipeline) and its streaming face (`stream_curation_replay`,
+queries_streaming). Imports only operators — no registry, no queries_*
+modules.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Shared DuckDB oracle fragments for vector arithmetic.
 
-Lives OUTSIDE the registry import cycle (this module imports nothing from
-the package) so any queries_* module can use the fragments at decoration
-time regardless of which module Python happens to import first. Each
+A leaf (this module imports nothing from the package), so any queries_*
+module can use the fragments at decoration time. Each
 fragment is the exact left-fold/double-cast twin of the Spark-side
 expression (operators/similarity.py) — values match bit-for-bit, not
 merely within tolerance.

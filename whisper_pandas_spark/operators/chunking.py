@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 # while RE2's does not, so an explicit class is the only spelling that
 # reads identically in the engine (Spark/Java) and the oracle
 # (DuckDB/RE2). The same literal is used in the registry oracle SQL
-# (queries_round10.py) — keep the two in sync.
+# (queries_text.py) — keep the two in sync.
 WS_SPLIT_RE = "[ \\t\\n\\r\\f\\x0B]+"
 WS_TRIM_RE = "^[ \\t\\n\\r\\f\\x0B]+|[ \\t\\n\\r\\f\\x0B]+$"
 

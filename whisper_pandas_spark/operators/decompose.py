@@ -19,7 +19,7 @@ Whisper ring itself).
 Determinism (oracle-parity): every mean folds through DECIMAL(38,12)
 sums — partition-order-independent — and the remaining arithmetic is
 per-row IEEE doubles, so a SQL engine replays the decomposition
-value-for-value (staged entry `ts_seasonal_decompose`).
+value-for-value (registry entry `ts_seasonal_decompose`).
 """
 
 from __future__ import annotations

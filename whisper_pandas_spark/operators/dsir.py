@@ -27,7 +27,7 @@ only transcendentals; the per-document combination is a LEFT FOLD over
 engine-ordered SUM — so the only cross-engine slack is a possible
 last-ulp difference in libm-vs-JVM ln on identical rational operands,
 absorbed by the +1e-9 biased round-6 (the established exp/ln-oracle
-budget, queries_round6 weighted-sample precedent).
+budget, sample_weighted_topk precedent).
 
 Scale design
 ------------

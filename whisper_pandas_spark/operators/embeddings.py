@@ -10,7 +10,7 @@ Reference parity: the reference engine has no vector surface at all
 (`whisper_pandas.py` is a time-series decoder); this family is part of
 the engine's own LLM-pipeline bar (SURVEY.md §2.10 X3 extension).
 
-Parity design (see the oracle strings in queries_embeddings.py):
+Parity design (see the oracle strings in queries_similarity.py):
 
 - scale = max(|v_i|) is a comparison-only fold — no float arithmetic,
   bit-identical on any engine and any fold order;

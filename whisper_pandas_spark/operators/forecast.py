@@ -18,7 +18,7 @@ a tight codegen loop.
 
 Determinism / oracle-parity: the fold is left-to-right in time order
 with double arithmetic written EXPRESSION-IDENTICAL to the DuckDB
-``list_reduce`` replay (staged entry ``ts_holt_forecast``) — same init
+``list_reduce`` replay (registry entry ``ts_holt_forecast``) — same init
 (l0 = x0, b0 = x1 - x0), same recurrence text, so the states match
 bit-for-bit, not within tolerance.
 """

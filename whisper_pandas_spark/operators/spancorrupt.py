@@ -35,7 +35,7 @@ one sentinel append) and each output string is a single ``' '.join``;
 only the ~n/block md5 offsets per document run as Python calls.
 Semantics are unchanged — the DuckDB oracle
 replays the identical block arithmetic, md5 offsets, and sequence
-construction (queries_round12b._span_oracle), and pytest pins the
+construction (queries_text._span_oracle), and pytest pins the
 Arrow output against a brute-force Python twin.
 """
 

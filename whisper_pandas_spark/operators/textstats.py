@@ -27,8 +27,7 @@ from whisper_pandas_spark.functions.text import tokenize
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "it"]
 
 # Default corpus-gate thresholds (shared by queries_text / queries_pipeline;
-# they live here, registry-free, so oracle builders can import them without
-# touching the query modules' import order).
+# they live here, registry-free, so oracle builders of both can import them).
 GATE_MIN_QUALITY = 0.6
 GATE_MAX_DUP = 0.3
 

@@ -12,15 +12,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.entries import register, table
 from whisper_pandas_spark.operators.rollup import rollup
-from whisper_pandas_spark.registry import _table, register
 
 _RES = 3600  # 1-hour tumbling windows
 _FINE = 600  # assumed fine resolution for avg_zero / xFilesFactor (6 slots/window)
 
 
 def _spark_rollup(spark: SparkSession, sf_dir: str, method: str, xff: float = 0.0) -> DataFrame:
-    events = _table(spark, sf_dir, "events")
+    events = table(spark, sf_dir, "events")
     out = rollup(
         events,
         _RES,
@@ -115,7 +115,7 @@ def rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the composition rollup(rollup(x, 60), 3600) is the materialized view
     chain a Whisper file stores on disk. Two shuffles, each keyed on
     (user, bucket), with the second operating on ~1/60th of the rows."""
-    ev = _table(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     fine = rollup(
         ev, 60, "average", keys=("user_id",), ts_col="ts", value_col="value"
     )
@@ -186,6 +186,6 @@ def resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         resample_prepare,
     )
 
-    ev = _table(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     pts = resample_prepare(ev, "event_type", "ts", "value")
     return resample_fill(pts, 3600).orderBy("key", "grid_epoch")

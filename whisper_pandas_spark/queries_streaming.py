@@ -1,16 +1,16 @@
 """Registry entries: batch replays of the §2.9 Structured Streaming
-operators (rollup, stream-stream interval join, incremental near-dup).
+operators (rollup, interval join, incremental near-dup, sessions, CDC
+merge, change points, top-k, perceptual dedup, curation).
 
-The streaming surface (streaming/rollup.py) is covered by stream≡batch
-pytest, but Structured Streaming can't run inside the driver's DuckDB
-oracle harness — so this entry REPLAYS the real streaming query
-(readStream → withWatermark → window agg) over the static events table
-with ``Trigger.AvailableNow`` into a memory sink, and returns the drained
-result as a batch DataFrame. Because the streaming rollup is
-bucket-for-bucket equal to the batch rollup (epoch-aligned tumbling
-windows, same 8-method agg map), the entry carries the SAME full SQL
-oracle as ``rollup_average`` — a hash-match CORRECTNESS row for §2.9,
-not just a rows-only count.
+Structured Streaming can't run inside the driver's DuckDB oracle
+harness, so each entry REPLAYS the real streaming query (readStream →
+withWatermark → stateful operator) over a static table with
+``Trigger.AvailableNow`` and returns the drained result as a batch
+DataFrame. The stream is equal to its batch twin, so the entry carries
+the batch entry's full SQL oracle — a hash-match CORRECTNESS row, not
+just a rows-only count. Replays of a sketch, KN-count, entity-resolution
+or attribution operator live next to their batch twin, in the domain
+module that owns the shared oracle.
 
 Scale: availableNow is exactly how a 100 TB backfill runs in production —
 the same streaming query graph, bounded input, watermark-bounded state;
@@ -19,18 +19,20 @@ one code path for live and replay is the point of Structured Streaming.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.entries import register, register_cache, table
 from whisper_pandas_spark.functions.text import duck_minhash_pairs_ctes
-from whisper_pandas_spark.registry import register
+
 
 _SINK = "stream_rollup_replay_sink"
 _RES = 3600  # same 1-hour tumbling window as the batch rollup family
 
-# Same oracle as rollup_average (queries_rollup._oracle_rollup("average"));
-# inlined because importing queries_rollup here would be circular (registry
-# imports this module, and queries_rollup imports registry). Parity of the
+# Same oracle as rollup_average (queries_rollup._oracle_rollup("average")),
+# inlined so the domain modules import only leaf modules. Parity of the
 # two strings is asserted in tests/test_streaming.py.
 _ORACLE = f"""SELECT event_type, (CAST(floor(epoch(ts)) AS BIGINT) // {_RES}) * {_RES} AS bucket_epoch, round(avg(value) + 1e-9, 6) AS value, count(value) AS n_points
 FROM events
@@ -157,6 +159,13 @@ _ND_NUM_PERM, _ND_BANDS, _ND_ROWS, _ND_JACCARD_T = 12, 4, 3, 0.8
 _ND_REPLAY_DIR: dict[str, str] = {}
 
 
+@register_cache
+def _drop_nd_replay_dirs() -> None:
+    for d in _ND_REPLAY_DIR.values():
+        shutil.rmtree(d, ignore_errors=True)
+    _ND_REPLAY_DIR.clear()
+
+
 @register(
     "stream_near_dup_replay",
     oracle=f"""
@@ -175,14 +184,12 @@ def stream_near_dup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions equals the batch lsh_pairs over the full corpus — the same
     full algorithm-replication oracle as dedup_minhash_lsh."""
     import os
-    import shutil
     import tempfile
 
-    from whisper_pandas_spark.registry import _table
     from whisper_pandas_spark.streaming.dedup import stream_near_dup
 
     # per-process result cache (same pattern as queries_dedup._PAIRS_CACHE
-    # / queries_materialize._ROUNDTRIP_DIR, cleared by
+    # / queries_whisper._ROUNDTRIP_DIR, cleared by
     # registry.reset_result_caches) — without it every driver/oracle/test
     # invocation leaves a full corpus copy + checkpoint under /tmp
     cached = _ND_REPLAY_DIR.get(sf_dir)
@@ -193,7 +200,7 @@ def stream_near_dup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_i", "doc_j")
         )
 
-    docs = _table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     stale = _ND_REPLAY_DIR.pop(sf_dir, None)
     if stale is not None:
         shutil.rmtree(stale, ignore_errors=True)
@@ -328,3 +335,585 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("metric", "epoch")
     )
+
+
+# -- streaming session-window replay ---------------------------------------
+
+_SESS_SINK = "stream_session_replay_sink"
+
+
+@register(
+    "stream_session_replay",
+    oracle="""
+WITH marked AS (
+  SELECT user_id, ts, value,
+    CASE WHEN lag(ts) OVER w IS NULL
+         OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), grp AS (
+  SELECT *, sum(new_s) OVER (
+    PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+  FROM marked
+), sess AS (
+  SELECT user_id,
+         min(ts) AS session_start,
+         max(ts) + INTERVAL 30 MINUTE AS session_end,
+         count(*) AS n_events,
+         round(sum(value), 6) AS sum_value
+  FROM grp GROUP BY user_id, sid
+)
+SELECT user_id, session_start, session_end, n_events, sum_value
+FROM sess
+WHERE session_end <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)
+ORDER BY user_id, session_start
+""",
+)
+def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+: NATIVE streaming sessionization (`F.session_window`, gap
+    30 min) replayed over the static events table — availableNow +
+    memory sink in APPEND mode, so only sessions the final watermark
+    (max ts − 1 h) has closed emit; the oracle replays the same rule as
+    gaps-and-islands SQL (new session at gap ≥ 30 min — session_window's
+    end is exclusive) plus the same watermark cutoff.
+
+    Boundary note: Spark's internal watermark is ms-truncated; a session
+    ending inside the sub-millisecond slice between the truncated and
+    exact cutoff would diverge — impossible at the registered fixtures'
+    microsecond-jittered timestamps.
+
+    Scale: state = open sessions only (bounded by watermark); sessions
+    merge map-side per user partition. The production backfill shape for
+    user-journey extraction over a 100 TB event log."""
+    from whisper_pandas_spark.sources.tables import stream_events
+
+    sdf = stream_events(spark, sf_dir)
+    out = (
+        sdf.withWatermark("ts", "1 hour")
+        .groupBy("user_id", F.session_window("ts", "30 minutes"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
+        )
+    )
+    q = (
+        out.writeStream.format("memory")
+        .queryName(_SESS_SINK)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    q.stop()
+    return (
+        spark.table(_SESS_SINK)
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
+        .orderBy("user_id", "session_start")
+    )
+
+
+# -- streaming CDC apply: change log -> copy-on-write parquet table --------
+
+
+@register(
+    "stream_merge_replay",
+    """
+SELECT doc_id AS k,
+       CASE WHEN doc_id % 10 = 0 THEN n_chars + 1000 ELSE n_chars END AS v
+FROM documents
+WHERE doc_id % 5 = 0 AND doc_id % 15 <> 0
+ORDER BY k
+""",
+)
+def stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+: the streaming CDC sink (streaming/sink.py:
+    stream_merge_into_parquet) replayed end-to-end — a deterministic
+    change log derived from `documents` (inserts for doc_id%5==0, then
+    updates for %10==0 and deletes for %15==0 at higher sequence
+    numbers) streams through foreachBatch merges into a versioned
+    copy-on-write parquet table; the entry returns the FINAL visible
+    state (read_current_state hides tombstones + bookkeeping). Robust
+    to micro-batch geometry AND order: whole-row per-key max_by(seq)
+    compression plus the sequence-aware tombstone merge make any batch
+    split or delivery order of the log converge to the state the
+    oracle computes relationally."""
+    import tempfile
+
+    from whisper_pandas_spark.operators.merge import read_current_state
+    from whisper_pandas_spark.streaming.sink import stream_merge_into_parquet
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    c1 = docs.filter(F.col("doc_id") % 5 == 0).select(
+        F.col("doc_id").alias("k"),
+        F.col("n_chars").alias("v"),
+        F.col("doc_id").alias("seq"),
+        F.lit(False).alias("del"),
+    )
+    c2 = (
+        docs.filter(F.col("doc_id") % 10 == 0)
+        .select(
+            F.col("doc_id").alias("k"),
+            (F.col("n_chars") + 1000).alias("v"),
+            (F.col("doc_id") + 100000).alias("seq"),
+            F.lit(False).alias("del"),
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") % 15 == 0).select(
+                F.col("doc_id").alias("k"),
+                F.lit(None).cast("long").alias("v"),
+                (F.col("doc_id") + 200000).alias("seq"),
+                F.lit(True).alias("del"),
+            )
+        )
+    )
+    d = tempfile.mkdtemp(prefix="wps_cdc_")
+    c1.coalesce(1).write.parquet(f"{d}/changes/f1")
+    c2.coalesce(1).write.parquet(f"{d}/changes/f2")
+    sdf = (
+        spark.readStream.schema("k long, v long, seq long, del boolean")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/changes/*")
+    )
+    q = stream_merge_into_parquet(
+        sdf, f"{d}/table", "k", "seq", delete_col="del",
+        checkpoint_dir=f"{d}/ckpt",
+    )
+    q.processAllAvailable()
+    q.stop()
+    return (
+        read_current_state(spark, f"{d}/table", delete_col="del", seq_col="seq")
+        .select("k", "v")
+        .orderBy("k")
+    )
+
+
+# -- streaming changepoint-state maintenance --------------------------------------
+
+
+@register(
+    "stream_changepoint_replay",
+    oracle="""
+WITH b AS (
+  SELECT event_type, date_trunc('day', ts) AS bucket_ts,
+         sum(CAST(round(value * 1000) AS BIGINT)) AS y
+  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+  GROUP BY 1, 2
+), c AS (
+  SELECT event_type, bucket_ts, y,
+         row_number() OVER w AS t,
+         sum(y) OVER w AS s_t,
+         count(*) OVER (PARTITION BY event_type) AS n_buckets,
+         sum(y) OVER (PARTITION BY event_type) AS s_n
+  FROM b WINDOW w AS (PARTITION BY event_type ORDER BY bucket_ts)
+), s AS (
+  SELECT *, abs(n_buckets * s_t - t * s_n) AS d_abs FROM c
+  WHERE n_buckets >= 3 AND t < n_buckets
+), r AS (
+  SELECT *, row_number() OVER (PARTITION BY event_type
+                               ORDER BY d_abs DESC, t) AS rnk
+  FROM s
+)
+SELECT event_type, CAST(n_buckets AS BIGINT) AS n_buckets,
+       CAST(s_n AS BIGINT) AS s_n, bucket_ts AS cp_bucket,
+       CAST(d_abs AS BIGINT) AS d_stat
+FROM r WHERE rnk = 1
+ORDER BY event_type
+""",
+)
+def stream_changepoint_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST+: streaming changepoint-state maintenance
+    (streaming/changepoint.py:stream_bucket_sums_update) replayed end
+    to end — `events` split into two change files streams through
+    foreachBatch additive bucket-sum merges into the versioned state
+    (exactly-once via checkpoint-scoped batch markers), then the shift
+    detector (operators/changepoint.py:cusum_from_buckets) runs over
+    the final state. Integer addition is exact, so the maintained
+    state equals the batch recompute and the oracle recomputes the
+    identical argmax from raw data — proving batch bucketing, additive
+    merge, version flips, AND the detector in one check."""
+    import tempfile
+
+    from whisper_pandas_spark.operators.changepoint import cusum_from_buckets
+    from whisper_pandas_spark.operators.merge import current_version_path
+    from whisper_pandas_spark.streaming.changepoint import (
+        stream_bucket_sums_update,
+    )
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_id", "ts", "event_type", "value"
+    )
+    d = tempfile.mkdtemp(prefix="wps_cpstream_")
+    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+        f"{d}/changes/f1"
+    )
+    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
+        f"{d}/changes/f2"
+    )
+    sdf = (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, event_type string, value double"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/changes/*")
+    )
+    q = stream_bucket_sums_update(
+        sdf,
+        f"{d}/state",
+        ("event_type",),
+        "ts",
+        "value",
+        bucket="day",
+        scale=1000,
+        checkpoint_dir=f"{d}/ckpt",
+    )
+    q.processAllAvailable()
+    q.stop()
+    state = spark.read.parquet(current_version_path(f"{d}/state"))
+    return cusum_from_buckets(state, ["event_type"], min_buckets=3).orderBy(
+        "event_type"
+    )
+
+
+# -- streaming heavy-hitters maintenance ---------------------------------------------
+
+
+@register(
+    "stream_topk_replay",
+    oracle="""
+WITH c AS (
+  SELECT lang, source, count(*) AS n FROM documents GROUP BY lang, source
+), r AS (
+  SELECT lang, source, n,
+         row_number() OVER (PARTITION BY lang
+                            ORDER BY n DESC, source) AS rnk
+  FROM c
+)
+SELECT lang, CAST(rnk AS INT) AS rnk, source AS item,
+       CAST(n AS BIGINT) AS count_lo, CAST(n AS BIGINT) AS count_hi
+FROM r WHERE rnk <= 5 ORDER BY lang, rnk
+""",
+)
+def stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST+: streaming heavy-hitters maintenance
+    (streaming/sketches.py:stream_topk_update) replayed end to end —
+    `documents` split into two change files streams through
+    foreachBatch space-saving merges into the versioned top-k state
+    (exactly-once batch markers; the merge is additive), then the
+    merged state reads off per-lang top-5 sources via topk_rollup.
+    Capacity 32 exceeds the ~20 distinct sources per lang, so the
+    whole run stays in the exact regime (rest_max = 0, lo == hi ==
+    true count) and the oracle is the plain relational top-k —
+    completing the streaming-sketch family (additive histogram,
+    idempotent KMV, merge-truncated top-k)."""
+    import tempfile
+
+    from whisper_pandas_spark.operators.merge import current_version_path
+    from whisper_pandas_spark.operators.sketches import topk_rollup
+    from whisper_pandas_spark.streaming.sketches import stream_topk_update
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
+    d = tempfile.mkdtemp(prefix="wps_topkstream_")
+    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
+        f"{d}/changes/f1"
+    )
+    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
+        f"{d}/changes/f2"
+    )
+    sdf = (
+        spark.readStream.schema("doc_id long, lang string, source string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{d}/changes/*")
+    )
+    q = stream_topk_update(
+        sdf, f"{d}/state", ("lang",), "source", 32, checkpoint_dir=f"{d}/ckpt"
+    )
+    q.processAllAvailable()
+    q.stop()
+    state = spark.read.parquet(current_version_path(f"{d}/state"))
+    return topk_rollup(state, ("lang",), 5).orderBy("lang", "rnk")
+
+
+# ---------------------------------------------------------------------------
+# stream_phash_dedup — streaming perceptual registry (idempotent)
+# ---------------------------------------------------------------------------
+# Batch 1 streams the base PGM images, batch 2 their perturbed twins;
+# the registry accepts batch-1 uniques (exact-dhash min-id within the
+# batch) and rejects every twin (hamming <= 6 of a registered
+# fingerprint — banding is complete at <= 7). The whole stream is then
+# deliberately REPROCESSED with a fresh checkpoint: every fingerprint
+# is already registered, so the state is unchanged — the idempotent
+# merge law, no marker machinery (the perceptual sibling of
+# stream_bloom_replay). The oracle replays the two-batch construction
+# over bit strings.
+
+_STREAM_PHASH_ORACLE = """
+WITH imgs AS (
+  SELECT doc_id AS img_id, 0 AS pert, text FROM documents WHERE doc_id % 2 = 0
+  UNION ALL
+  SELECT doc_id + 1000000 AS img_id, 1 AS pert, text
+  FROM documents WHERE doc_id % 2 = 0
+), px AS (
+  SELECT img_id, CAST(t.i AS BIGINT) AS i,
+         (ord(substr(rpad(text, 288, text), CAST(t.i + 1 AS INT), 1)) % 128
+          + CASE WHEN pert = 1 AND t.i % 97 = 0 THEN 3 ELSE 0 END) % 128 AS b
+  FROM imgs CROSS JOIN range(0, 288) AS t(i)
+), grid AS (
+  SELECT img_id, (i // 18) // 2 AS r, (i % 18) // 2 AS c,
+         CAST(sum(b) // 4 AS BIGINT) AS g
+  FROM px GROUP BY 1, 2, 3
+), bits AS (
+  SELECT a.img_id, a.r * 8 + a.c AS k,
+         CASE WHEN a.g < b.g THEN '1' ELSE '0' END AS bit
+  FROM grid a JOIN grid b ON a.img_id = b.img_id AND a.r = b.r
+                         AND b.c = a.c + 1
+  WHERE a.c < 8
+), hstr AS (
+  SELECT img_id, string_agg(bit, '' ORDER BY k) AS bs FROM bits GROUP BY img_id
+), s1 AS (
+  SELECT min(img_id) AS img_id, bs FROM hstr WHERE img_id < 1000000 GROUP BY bs
+), b2 AS (
+  SELECT min(img_id) AS img_id, bs FROM hstr WHERE img_id >= 1000000 GROUP BY bs
+), rej AS (
+  SELECT DISTINCT b2.img_id
+  FROM b2 CROSS JOIN s1
+  WHERE len(list_filter(range(1, 65),
+      k -> substr(b2.bs, CAST(k AS INT), 1)
+           <> substr(s1.bs, CAST(k AS INT), 1))) <= 6
+), acc2 AS (
+  SELECT img_id, bs FROM b2 WHERE img_id NOT IN (SELECT img_id FROM rej)
+), fin AS (
+  SELECT img_id, bs FROM s1 UNION ALL SELECT img_id, bs FROM acc2
+)
+SELECT img_id, bs AS dhash_bits FROM fin ORDER BY img_id
+"""
+
+
+@register("stream_phash_dedup", oracle=_STREAM_PHASH_ORACLE)
+def stream_phash_dedup_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+/X2: streaming perceptual-image dedup
+    (streaming/phash.py:stream_phash_dedup) — a growing dHash registry
+    maintained by foreachBatch: exact within-batch min-id, banded
+    hamming reject against the registry, append-only versioned state.
+    The stream is deliberately reprocessed into the same state
+    (idempotent merge law — the perceptual sibling of
+    stream_bloom_replay's structural contrast to additive CMS).
+    dhash is reported LSB-first as a 64-char bit string so both engines
+    compare exact fingerprints without signed-shift concerns."""
+    import tempfile
+
+    from whisper_pandas_spark.operators.merge import current_version_path
+    from whisper_pandas_spark.streaming.phash import stream_phash_dedup
+
+    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
+    base_px = F.expr(
+        "array_join(transform(split(rpad(text, 288, text), ''),"
+        " c -> char(ascii(c) % 128)), '')"
+    )
+    pert_px = F.expr(
+        "array_join(transform(split(rpad(text, 288, text), ''),"
+        " (c, i) -> char((ascii(c) % 128"
+        "   + IF(i % 97 = 0, 3, 0)) % 128)), '')"
+    )
+    header = F.lit("P5\n18 16\n255\n")
+    d = tempfile.mkdtemp(prefix="wps_phashstream_")
+    docs.select(
+        F.col("doc_id").alias("img_id"),
+        F.encode(F.concat(header, base_px), "utf-8").alias("payload"),
+    ).coalesce(1).write.parquet(f"{d}/changes/f1")
+    docs.select(
+        (F.col("doc_id") + 1000000).alias("img_id"),
+        F.encode(F.concat(header, pert_px), "utf-8").alias("payload"),
+    ).coalesce(1).write.parquet(f"{d}/changes/f2")
+
+    def run_pass(ckpt: str) -> None:
+        sdf = (
+            spark.readStream.schema("img_id long, payload binary")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/changes/*")
+        )
+        q = stream_phash_dedup(
+            sdf, f"{d}/state", max_hamming=6, checkpoint_dir=ckpt
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run_pass(f"{d}/ckpt1")
+    # full reprocess, fresh checkpoint: every fingerprint re-arrives and
+    # is rejected by the registry — state provably unchanged (the hash
+    # gate below would catch any drift)
+    run_pass(f"{d}/ckpt2")
+    state = spark.read.parquet(current_version_path(f"{d}/state"))
+    return state.select(
+        "img_id",
+        F.reverse(F.lpad(F.bin("dhash"), 64, "0")).alias("dhash_bits"),
+    ).orderBy("img_id")
+
+
+# ---------------------------------------------------------------------------
+# stream_bottomk_replay
+# ---------------------------------------------------------------------------
+
+_BK_K = 16
+
+
+def _bottomk_oracle() -> str:
+    return f"""
+WITH h AS (
+  SELECT lang AS grp, doc_id,
+    ('0x' || substr(md5('0:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
+  FROM documents
+), r AS (
+  SELECT grp, doc_id, h,
+    row_number() OVER (PARTITION BY grp ORDER BY h, doc_id) AS rn
+  FROM h
+)
+SELECT grp, doc_id, h FROM r WHERE rn <= {_BK_K}
+ORDER BY grp, h, doc_id
+"""
+
+
+@register("stream_bottomk_replay", oracle=_bottomk_oracle())
+def stream_bottomk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+: streaming per-group bottom-k uniform-sample maintenance
+    (streaming/sketches.py:stream_bottomk_update) replayed end-to-end —
+    per-batch hashing, bottom-k set-merge into versioned state, then
+    the WHOLE stream deliberately reprocessed through a second
+    checkpoint-less pass: bottom-k over a union is idempotent
+    (bk(S∪S)=bk(S)), so the double-processed state still equals the
+    direct batch bottom-k the oracle computes — the sampling face of
+    the HLL/Bloom/KMV idempotent-merge family, vs the marker-protected
+    additive CMS/KN. State is O(groups x k); the per-batch window runs
+    over (prior ∪ batch), never the stream's history."""
+    import tempfile
+
+    from whisper_pandas_spark.operators.merge import current_version_path
+    from whisper_pandas_spark.streaming.sketches import stream_bottomk_update
+
+    items = (
+        table(spark, sf_dir, "documents")
+        .select(F.col("lang").alias("grp"), "doc_id")
+        .withColumn("row_id", F.monotonically_increasing_id())
+    )
+    d = tempfile.mkdtemp(prefix="wps_bkstream_")
+    items.filter(F.col("row_id") % 2 == 0).drop("row_id").coalesce(
+        1
+    ).write.parquet(f"{d}/changes/f1")
+    items.filter(F.col("row_id") % 2 == 1).drop("row_id").coalesce(
+        1
+    ).write.parquet(f"{d}/changes/f2")
+
+    def run_pass(ckpt: str) -> None:
+        sdf = (
+            spark.readStream.schema("grp string, doc_id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/changes/*")
+        )
+        q = stream_bottomk_update(
+            sdf, f"{d}/state", ("grp",), "doc_id", k=_BK_K, checkpoint_dir=ckpt
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run_pass(f"{d}/ckpt1")
+    # full reprocess with a FRESH checkpoint: harmless by idempotence
+    run_pass(f"{d}/ckpt2")
+    state = spark.read.parquet(current_version_path(f"{d}/state"))
+    return state.select("grp", "doc_id", "h").orderBy("grp", "h", "doc_id")
+
+
+# ---------------------------------------------------------------------------
+# stream_curation_replay
+# ---------------------------------------------------------------------------
+
+
+def _stream_curation_oracle() -> str:
+    # the batch funnel's oracle verbatim: the streaming composition is
+    # required to reach the identical final state (global min-id
+    # canonicality via the idempotent registry min-merge)
+    from whisper_pandas_spark.curation_fixture import _curation_oracle
+
+    return _curation_oracle()
+
+
+@register("stream_curation_replay", oracle=_stream_curation_oracle())
+def stream_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+/Y163: the STREAMING curation funnel (streaming/
+    curation.py) — pipeline_curation_end_to_end's gates composed as a
+    foreachBatch maintainer: stateless PII + pinned-log2 entropy gates
+    per micro-batch, an idempotent per-doc flags upsert, and a
+    (clean_md5 -> min doc_id) dedup registry whose min-merge is
+    idempotent/commutative/associative — so the whole stream is
+    REPROCESSED with a fresh checkpoint into provably unchanged state
+    (the stream_bottomk/phash replay doctrine), and canonicality
+    read-off equals the batch funnel's global min-id semantics. The
+    oracle is the batch entry's oracle VERBATIM: one SQL text checks
+    both faces. Text never enters state; the registry shuffles
+    hashes+ids only."""
+    import tempfile
+
+    from whisper_pandas_spark.curation_fixture import (
+        _CUR_MIN_H,
+        _CUR_MIN_TOKENS,
+        _CUR_N_TARGET,
+        _CUR_SEED,
+        _cur_fixture_sql,
+    )
+    from whisper_pandas_spark.streaming.curation import (
+        curation_read_off,
+        stream_curation,
+    )
+
+    docs = table(spark, sf_dir, "documents")
+    buddy = docs.select(
+        F.col("doc_id").alias("bid"), F.col("text").alias("btext")
+    )
+    fix = (
+        docs.join(buddy, F.col("bid") == F.col("doc_id") - 1, "left")
+        .select(
+            "doc_id", "lang", F.expr(_cur_fixture_sql("STRING")).alias("text")
+        )
+        .localCheckpoint(eager=True)
+    )
+    n = fix.count()
+    d = tempfile.mkdtemp(prefix="wps_streamcur_")
+    # 4 micro-batches by doc_id range (any split works — the registry
+    # min-merge is order-independent; ranges keep batches balanced)
+    step = max(1, (n + 3) // 4)
+    for i in range(4):
+        fix.filter(
+            (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
+            if i < 3
+            else (F.col("doc_id") >= i * step)
+        ).coalesce(1).write.parquet(f"{d}/changes/f{i}")
+
+    def run_pass(ckpt: str) -> None:
+        sdf = (
+            spark.readStream.schema("doc_id long, lang string, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/changes/*")
+        )
+        q = stream_curation(
+            sdf,
+            f"{d}/state",
+            min_entropy=_CUR_MIN_H,
+            min_tokens=_CUR_MIN_TOKENS,
+            checkpoint_dir=ckpt,
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run_pass(f"{d}/ckpt1")
+    # full reprocess, fresh checkpoint: every doc re-derives the same
+    # flags row (anti-join upsert) and every registry key min-merges
+    # with itself — state provably unchanged (the hash gate catches
+    # any drift)
+    run_pass(f"{d}/ckpt2")
+    return curation_read_off(
+        spark, f"{d}/state", n_target=_CUR_N_TARGET, seed=_CUR_SEED
+    ).orderBy("doc_id")

@@ -1,6 +1,6 @@
-"""Registry entries: window functions (SURVEY.md §2.6) and scalar
-functions (§2.8) — ranking, analytic, frame-based moving aggregates;
-string / date / math / JSON expressions.
+"""Registry entries: window functions (SURVEY.md §2.6) and the event
+analytics built on them — funnels, cohorts, path transitions,
+multi-touch attribution and A/B reports.
 
 All window orderings include a unique tiebreaker (event_id / orderkey) so
 results are deterministic on both engines; RANGE frames order by epoch
@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.registry import _table, register
+from whisper_pandas_spark.entries import register, table
 
 
 @register(
@@ -34,7 +34,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").desc(), "o_orderkey"
     )
     return (
-        _table(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select("o_custkey", "o_orderkey", "o_totalprice", F.row_number().over(w).alias("rn"))
         .filter(F.col("rn") <= 3)
         .orderBy("o_custkey", "rn")
@@ -58,7 +58,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_acctbal").desc(), "c_custkey"
     )
     return (
-        _table(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .select(
             "c_mktsegment",
             "c_custkey",
@@ -86,7 +86,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead analytics per user timeline."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        _table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select(
             "event_id",
             "user_id",
@@ -116,7 +116,7 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        _table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select("event_id", "user_id", F.round(F.sum("value").over(w), 6).alias("running_total"))
         .orderBy("event_id")
     )
@@ -144,7 +144,7 @@ def window_moving_avg_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rangeBetween(-3600, 0)
     )
     return (
-        _table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select("event_id", "user_id", F.round(F.avg("value").over(w), 6).alias("avg_1h"))
         .orderBy("event_id")
     )
@@ -165,7 +165,7 @@ ORDER BY user_id
 def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/last observation per key (min/max over epoch)."""
     return (
-        _table(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select("user_id", F.unix_timestamp("ts").alias("ts_e"))
         .groupBy("user_id")
         .agg(
@@ -174,171 +174,6 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
         .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Scalar function surface (§2.8)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "scalar_string_funcs",
-    oracle="""
-SELECT p_partkey,
-       upper(p_brand) AS brand_u,
-       length(p_name) AS name_len,
-       regexp_replace(p_type, '[aeiou]', '', 'g') AS type_consonants,
-       substring(p_name, 1, 5) AS name_head,
-       concat(p_brand, ':', p_type) AS brand_type
-FROM part
-ORDER BY p_partkey
-""",
-)
-def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """upper/length/regexp_replace/substring/concat."""
-    return (
-        _table(spark, sf_dir, "part")
-        .select(
-            "p_partkey",
-            F.upper("p_brand").alias("brand_u"),
-            F.length("p_name").alias("name_len"),
-            F.regexp_replace("p_type", "[aeiou]", "").alias("type_consonants"),
-            F.substring("p_name", 1, 5).alias("name_head"),
-            F.concat_ws(":", "p_brand", "p_type").alias("brand_type"),
-        )
-        .orderBy("p_partkey")
-    )
-
-
-@register(
-    "scalar_date_funcs",
-    oracle="""
-SELECT CAST(year(o_orderdate) AS INT) AS yr,
-       CAST(month(o_orderdate) AS INT) AS mo,
-       count(*) AS n_orders,
-       round(sum(o_totalprice), 6) AS month_total
-FROM orders
-GROUP BY yr, mo
-ORDER BY yr, mo
-""",
-)
-def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """year/month extraction + monthly aggregation."""
-    o = _table(spark, sf_dir, "orders")
-    return (
-        o.select(
-            F.year("o_orderdate").alias("yr"),
-            F.month("o_orderdate").alias("mo"),
-            "o_totalprice",
-        )
-        .groupBy("yr", "mo")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 6).alias("month_total"),
-        )
-        .orderBy("yr", "mo")
-    )
-
-
-@register(
-    "scalar_math_funcs",
-    oracle="""
-SELECT l_linenumber,
-       round(CAST(sum(CAST(round(abs(l_discount - 0.05), 6) AS DECIMAL(38,10))) AS DOUBLE)
-             / count(*), 6) AS avg_abs_dev,
-       round(CAST(sum(floor(l_quantity)) AS DOUBLE), 6) AS sum_floor_qty,
-       round(CAST(sum(ceil(l_quantity)) AS DOUBLE), 6) AS sum_ceil_qty,
-       round(CAST(sum(CAST(round(sqrt(l_extendedprice), 6) AS DECIMAL(38,10))) AS DOUBLE)
-             / count(*), 6) AS avg_sqrt_price,
-       round(CAST(sum(CAST(round(ln(l_extendedprice + 1), 6) AS DECIMAL(38,10))) AS DOUBLE)
-             / count(*), 6) AS avg_log_price
-FROM lineitem
-GROUP BY l_linenumber
-ORDER BY l_linenumber
-""",
-)
-def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """abs/floor/ceil/sqrt/ln inside aggregates.
-
-    Double summation is order-dependent (Spark's partial aggregation order
-    differs from a sequential oracle sum), so the hashed floats are made
-    order-independent: round per-row first, sum in exact DECIMAL(38,10)
-    arithmetic (associative ⇒ bit-identical under any partitioning), divide
-    once, round the final result.
-    """
-    li = _table(spark, sf_dir, "lineitem")
-
-    def dec_avg(col, alias):
-        s = F.sum(F.round(col, 6).cast("decimal(38,10)")).cast("double")
-        return F.round(s / F.count(F.lit(1)), 6).alias(alias)
-
-    return (
-        li.groupBy("l_linenumber")
-        .agg(
-            dec_avg(F.abs(F.col("l_discount") - 0.05), "avg_abs_dev"),
-            F.round(F.sum(F.floor("l_quantity")).cast("double"), 6).alias("sum_floor_qty"),
-            F.round(F.sum(F.ceil("l_quantity")).cast("double"), 6).alias("sum_ceil_qty"),
-            dec_avg(F.sqrt("l_extendedprice"), "avg_sqrt_price"),
-            dec_avg(F.log(F.col("l_extendedprice") + 1), "avg_log_price"),
-        )
-        .orderBy("l_linenumber")
-    )
-
-
-@register(
-    "scalar_json_funcs",
-    oracle="""
-SELECT CAST(json_extract_string(props, '$.k') AS INT) % 10 AS k_bucket,
-       count(*) AS n,
-       round(sum(value), 6) AS total_value
-FROM events
-GROUP BY k_bucket
-ORDER BY k_bucket
-""",
-)
-def scalar_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the events.props string column
-    (get_json_object ≡ json_extract_string)."""
-    ev = _table(spark, sf_dir, "events")
-    return (
-        ev.select(
-            (F.get_json_object("props", "$.k").cast("int") % 10).alias("k_bucket"),
-            "value",
-        )
-        .groupBy("k_bucket")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("total_value"))
-        .orderBy("k_bucket")
-    )
-
-
-@register(
-    "scalar_case_when",
-    oracle="""
-SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
-            WHEN o_totalprice < 150000 THEN 'medium'
-            ELSE 'large' END AS size_class,
-       o_orderstatus,
-       count(*) AS n
-FROM orders
-GROUP BY size_class, o_orderstatus
-ORDER BY size_class, o_orderstatus
-""",
-)
-def scalar_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CASE WHEN bucketing + two-key aggregation."""
-    o = _table(spark, sf_dir, "orders")
-    size_class = (
-        F.when(F.col("o_totalprice") < 50000, "small")
-        .when(F.col("o_totalprice") < 150000, "medium")
-        .otherwise("large")
-        .alias("size_class")
-    )
-    return (
-        o.select(size_class, "o_orderstatus")
-        .groupBy("size_class", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("size_class", "o_orderstatus")
     )
 
 
@@ -366,7 +201,7 @@ def window_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream — ``F.window(ts, '1 hour', '15 minutes')``. Spark fans
     each row out to length/slide windows before the single groupBy
     shuffle (the oracle replicates the fan-out with generate_series)."""
-    ev = _table(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     win = F.window("ts", "1 hour", "15 minutes")
     return (
         ev.groupBy(win.alias("w"))
@@ -411,7 +246,7 @@ def window_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     an INDEPENDENT algorithm that must agree session-for-session.
     session_start is min(ts) (engine-neutral; Spark's window.start equals
     it for event-time sessions)."""
-    ev = _table(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(
@@ -449,7 +284,7 @@ def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agged rollup."""
     from pyspark.sql.window import Window
 
-    o = _table(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         "o_totalprice", "o_orderkey"
     )
@@ -466,4 +301,582 @@ def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("cents").alias("max_cents"),
         )
         .orderBy("o_orderpriority", "quartile")
+    )
+
+
+@register(
+    "funnel_view_click_purchase",
+    oracle="""
+WITH s1 AS (
+  SELECT user_id, min(ts) AS t1 FROM events
+  WHERE event_type = 'view' GROUP BY user_id
+), s2 AS (
+  SELECT e.user_id, min(e.ts) AS t2 FROM events e
+  JOIN s1 ON e.user_id = s1.user_id
+  WHERE e.event_type = 'click' AND e.ts > s1.t1
+    AND e.ts <= s1.t1 + INTERVAL 7 DAY
+  GROUP BY e.user_id
+), s3 AS (
+  SELECT e.user_id, min(e.ts) AS t3 FROM events e
+  JOIN s2 ON e.user_id = s2.user_id
+  JOIN s1 ON e.user_id = s1.user_id
+  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+    AND e.ts <= s1.t1 + INTERVAL 7 DAY
+  GROUP BY e.user_id
+)
+SELECT * FROM (
+  SELECT 1 AS step, 'view' AS step_name,
+         (SELECT count(*) FROM s1) AS users_reached
+  UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
+  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
+) ORDER BY step
+""",
+)
+def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Y22: ordered-sequence funnel (operators/funnel.py) — users who
+    viewed, then clicked, then purchased, each step strictly after the
+    previous greedy match and inside a 7-day conversion window. Spark
+    runs it as chained conditional windows over ONE user_id exchange;
+    the oracle replays the same greedy-earliest semantics as cascaded
+    min-joins."""
+    from whisper_pandas_spark.operators.funnel import funnel_counts
+
+    ev = table(spark, sf_dir, "events")
+    return funnel_counts(
+        ev, "user_id", "ts", "event_type",
+        ["view", "click", "purchase"], within_seconds=7 * 86400,
+    )
+
+
+# -- cohort retention, driver-verified ------------------------------------------
+
+_COHORT_B = 86400  # daily buckets: 2 cohorts x ~30 offsets on this fixture
+
+
+@register(
+    "cohort_retention_daily",
+    oracle=f"""
+WITH act AS (
+  SELECT DISTINCT user_id AS u,
+         (floor(epoch(ts))::BIGINT // {_COHORT_B}) AS b
+  FROM events WHERE ts IS NOT NULL
+), fs AS (
+  SELECT u, min(b) AS cohort FROM act GROUP BY u
+), per AS (
+  SELECT f.cohort, a.b - f.cohort AS "offset", count(*) AS n_active
+  FROM act a JOIN fs f USING (u) GROUP BY 1, 2
+), sz AS (
+  SELECT cohort, count(*) AS cohort_size FROM fs GROUP BY cohort
+)
+SELECT p.cohort, p."offset",
+       CAST(p.n_active AS BIGINT) AS n_active,
+       CAST(s.cohort_size AS BIGINT) AS cohort_size,
+       round(CAST(p.n_active AS DOUBLE) / CAST(s.cohort_size AS DOUBLE)
+             + 1e-9, 6) AS retention
+FROM per p JOIN sz s USING (cohort)
+ORDER BY p.cohort, p."offset"
+""",
+)
+def cohort_retention_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.11+: cohort retention (operators/cohort.py) — users bucketed
+    by first-seen day over the events log, per-(cohort, day-offset)
+    active counts and retention fractions: the growth-dashboard
+    retention triangle, as two user-keyed partial aggregations + one
+    user join (no windows, no Python). Integer counts make the oracle
+    trivially exact; the fraction divides the same BIGINTs on both
+    sides."""
+    from whisper_pandas_spark.operators.cohort import cohort_retention
+
+    ev = table(spark, sf_dir, "events")
+    out = cohort_retention(ev, "user_id", "ts", _COHORT_B)
+    eps = F.lit(1e-9)
+    return out.select(
+        "cohort",
+        "offset",
+        "n_active",
+        "cohort_size",
+        F.round(F.col("retention") + eps, 6).alias("retention"),
+    ).orderBy("cohort", "offset")
+
+
+# -- event-path transition matrix -----------------------------------------------
+
+
+@register(
+    "path_transition_matrix",
+    oracle="""
+WITH ordered AS (
+  SELECT event_type AS src,
+         lead(event_type) OVER (PARTITION BY user_id
+                                ORDER BY ts, event_id) AS dst
+  FROM events
+), tr AS (
+  SELECT src, dst, count(*) AS n FROM ordered
+  WHERE dst IS NOT NULL GROUP BY src, dst
+), tot AS (SELECT src AS src2, sum(n) AS n_src FROM tr GROUP BY src)
+SELECT tr.src, tr.dst, CAST(tr.n AS BIGINT) AS n,
+       CAST(tot.n_src AS BIGINT) AS n_src,
+       CAST(tr.n AS DOUBLE) / CAST(tot.n_src AS DOUBLE) AS p
+FROM tr JOIN tot ON tot.src2 = tr.src
+ORDER BY src, dst
+""",
+)
+def path_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Y+: empirical Markov transition matrix over user event streams
+    (operators/paths.py:transition_matrix) — the all-paths complement
+    to the prescribed-path funnel. Per-user time order with the event
+    id as a total-order tie-break; counts exact, each probability one
+    IEEE division of two BIGINTs."""
+    from whisper_pandas_spark.operators.paths import transition_matrix
+
+    ev = table(spark, sf_dir, "events")
+    return transition_matrix(
+        ev, "user_id", "ts", "event_type", tiebreak_col="event_id"
+    )
+
+
+# -- percent_rank / cume_dist window family ------------------------------------------
+
+
+@register(
+    "window_pct_rank_dist",
+    oracle="""
+SELECT c_custkey, c_mktsegment,
+       CAST(round(c_acctbal * 100) AS BIGINT) AS cents,
+       percent_rank() OVER w AS pct_rank,
+       cume_dist() OVER w AS cume
+FROM customer
+WINDOW w AS (PARTITION BY c_mktsegment
+             ORDER BY CAST(round(c_acctbal * 100) AS BIGINT), c_custkey)
+ORDER BY c_custkey
+""",
+)
+def window_pct_rank_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """W1+: relative-rank analytics — percent_rank ((rank-1)/(n-1)) and
+    cume_dist (peers-or-below / n) per market segment over integer
+    cents, custkey as the total-order tie-break. Both are single IEEE
+    divisions of exact integers; completes the ranking window family
+    (rank/dense_rank/row_number/ntile already covered)."""
+    c = table(spark, sf_dir, "customer").withColumn(
+        "cents", F.round(F.col("c_acctbal") * 100).cast("long")
+    )
+    w = Window.partitionBy("c_mktsegment").orderBy("cents", "c_custkey")
+    return (
+        c.select(
+            "c_custkey",
+            "c_mktsegment",
+            "cents",
+            F.percent_rank().over(w).alias("pct_rank"),
+            F.cume_dist().over(w).alias("cume"),
+        )
+        .orderBy("c_custkey")
+    )
+
+
+# -- gaps-and-islands streaks ---------------------------------------------------
+
+
+@register(
+    "window_gaps_islands",
+    oracle="""
+WITH days AS (
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
+  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
+),
+r AS (
+  SELECT user_id, d,
+         row_number() OVER (PARTITION BY user_id ORDER BY d) AS rn
+  FROM days
+),
+s AS (
+  SELECT user_id, d - CAST(rn AS INT) AS g, count(*) AS len,
+         min(d) AS streak_start
+  FROM r GROUP BY user_id, d - CAST(rn AS INT)
+),
+m AS (
+  SELECT user_id, g, len, streak_start,
+         max(len) OVER (PARTITION BY user_id) AS ml
+  FROM s
+)
+SELECT user_id,
+       CAST(sum(len) AS BIGINT) AS n_active_days,
+       CAST(count(*) AS BIGINT) AS n_streaks,
+       CAST(min(ml) AS BIGINT) AS max_streak,
+       min(CASE WHEN len = ml THEN streak_start END) AS max_streak_start
+FROM m GROUP BY user_id
+ORDER BY user_id
+""",
+)
+def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.6+: gaps-and-islands — per-user consecutive-active-day streaks
+    via the classic date-minus-row_number island key (consecutive days
+    share `d - rn`), then per-user streak stats: active days, streak
+    count, longest streak, and the start date of the EARLIEST longest
+    streak (deterministic tie-break).  All integer/date arithmetic.
+    Plan: ONE exchange on user_id serves the distinct, the row_number
+    window, both group-bys, and the max window — every downstream key
+    set contains user_id, so Catalyst reuses the partitioning
+    end-to-end (no second shuffle at any scale)."""
+    from pyspark.sql.window import Window
+
+    ev = table(spark, sf_dir, "events")
+    days = (
+        ev.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+        .select("user_id", F.to_date("ts").alias("d"))
+        .distinct()
+    )
+    w = Window.partitionBy("user_id").orderBy("d")
+    islands = days.withColumn(
+        "g", F.date_sub(F.col("d"), F.row_number().over(w))
+    )
+    streaks = islands.groupBy("user_id", "g").agg(
+        F.count(F.lit(1)).alias("len"),
+        F.min("d").alias("streak_start"),
+    )
+    ml = F.max("len").over(Window.partitionBy("user_id"))
+    m = streaks.withColumn("ml", ml)
+    return (
+        m.groupBy("user_id")
+        .agg(
+            F.sum("len").alias("n_active_days"),
+            F.count(F.lit(1)).alias("n_streaks"),
+            F.min("ml").alias("max_streak"),
+            F.min(
+                F.when(F.col("len") == F.col("ml"), F.col("streak_start"))
+            ).alias("max_streak_start"),
+        )
+        .orderBy("user_id")
+    )
+
+
+# ---------------------------------------------------------------------------
+# attr_multitouch_linear
+# ---------------------------------------------------------------------------
+
+#: Attribution lookback window (days before the conversion).
+_ATTR_LOOKBACK_DAYS = 3
+#: Credit per conversion, in parts-per-million (exact integer split).
+_ATTR_PPM = 1_000_000
+
+_ATTR_ORACLE = f"""
+WITH conv AS (
+  SELECT event_id AS p_id, user_id, ts AS p_ts,
+    CAST(round(value * 100) AS BIGINT) AS val_cents
+  FROM events WHERE event_type = 'purchase'
+), touch AS (
+  SELECT event_id AS t_id, user_id, ts AS t_ts, event_type AS touch_type
+  FROM events WHERE event_type IN ('view', 'click', 'signup')
+), pairs AS (
+  SELECT c.p_id, c.val_cents, t.t_id, t.touch_type,
+    row_number() OVER (PARTITION BY c.p_id ORDER BY t.t_ts, t.t_id) AS rn,
+    count(*) OVER (PARTITION BY c.p_id) AS n
+  FROM conv c JOIN touch t ON c.user_id = t.user_id
+    AND t.t_ts < c.p_ts
+    AND t.t_ts >= c.p_ts - INTERVAL {_ATTR_LOOKBACK_DAYS} DAY
+), credited AS (
+  SELECT touch_type, p_id, val_cents,
+    {_ATTR_PPM} // n
+      + CASE WHEN rn = 1 THEN {_ATTR_PPM} % n ELSE 0 END AS ppm
+  FROM pairs
+), direct AS (
+  SELECT '(none)' AS touch_type, p_id, val_cents,
+    {_ATTR_PPM} AS ppm
+  FROM conv WHERE p_id NOT IN (SELECT p_id FROM pairs)
+), unioned AS (
+  SELECT * FROM credited UNION ALL SELECT * FROM direct
+)
+SELECT touch_type,
+  CAST(count(*) AS BIGINT) AS n_credits,
+  CAST(count(DISTINCT p_id) AS BIGINT) AS n_conversions,
+  CAST(sum(ppm) AS BIGINT) AS credit_ppm,
+  CAST(sum(ppm * val_cents) AS BIGINT) AS rev_credit
+FROM unioned GROUP BY touch_type ORDER BY touch_type
+"""
+
+
+@register("attr_multitouch_linear", oracle=_ATTR_ORACLE)
+def attr_multitouch_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Y173: multi-touch attribution — the marketing-analytics family
+    the registry lacked (funnel/path entries count SEQUENCES; nothing
+    distributed conversion CREDIT). Linear model with an exact integer
+    split: each purchase's 10^6 ppm divide evenly over its lookback
+    touches (floor), remainder to the EARLIEST touch (ts, event_id
+    total order) — so credit conserves exactly: sum(ppm) = 10^6 x
+    conversions, a property the hash gate re-proves every run.
+    Untouched conversions credit a '(none)' direct bucket (never
+    silently dropped). Revenue weighting is ppm x value_cents — all
+    BIGINT. Plan: ONE user-keyed interval join (per-user blocks are
+    human-bounded, the as-of doctrine) + one per-conversion window +
+    one map-side-combined agg; at 100 TB shuffle keys are (user_id)
+    then (p_id) — ids and cents only, never props payloads."""
+    ev = table(spark, sf_dir, "events")
+    conv = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"),
+        F.col("user_id"),
+        F.col("ts").alias("p_ts"),
+        F.round(F.col("value") * 100).cast("bigint").alias("val_cents"),
+    )
+    touch = ev.filter(
+        F.col("event_type").isin("view", "click", "signup")
+    ).select(
+        F.col("event_id").alias("t_id"),
+        F.col("user_id"),
+        F.col("ts").alias("t_ts"),
+        F.col("event_type").alias("touch_type"),
+    )
+
+    pairs = conv.join(touch, "user_id").filter(
+        (F.col("t_ts") < F.col("p_ts"))
+        & (
+            F.col("t_ts")
+            >= F.col("p_ts")
+            - F.expr(f"INTERVAL {_ATTR_LOOKBACK_DAYS} DAY")
+        )
+    )
+    w = Window.partitionBy("p_id")
+    credited = pairs.select(
+        "touch_type",
+        "p_id",
+        "val_cents",
+        F.row_number()
+        .over(w.orderBy(F.col("t_ts"), F.col("t_id")))
+        .alias("rn"),
+        F.count(F.lit(1)).over(w).alias("n"),
+    ).select(
+        "touch_type",
+        "p_id",
+        "val_cents",
+        (
+            F.expr(f"{_ATTR_PPM} div n")
+            + F.when(
+                F.col("rn") == 1, F.expr(f"{_ATTR_PPM} % n")
+            ).otherwise(F.lit(0))
+        ).alias("ppm"),
+    )
+    direct = conv.join(
+        pairs.select("p_id").distinct(), "p_id", "left_anti"
+    ).select(
+        F.lit("(none)").alias("touch_type"),
+        "p_id",
+        "val_cents",
+        F.lit(_ATTR_PPM).cast("bigint").alias("ppm"),
+    )
+    return (
+        credited.unionByName(direct)
+        .groupBy("touch_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_credits"),
+            F.countDistinct("p_id").cast("bigint").alias("n_conversions"),
+            F.sum("ppm").cast("bigint").alias("credit_ppm"),
+            F.sum(F.col("ppm") * F.col("val_cents"))
+            .cast("bigint")
+            .alias("rev_credit"),
+        )
+        .orderBy("touch_type")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stream_attr_replay
+# ---------------------------------------------------------------------------
+
+
+@register("stream_attr_replay", oracle=_ATTR_ORACLE)
+def stream_attr_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.9+/Y179: STREAMING attribution (streaming/attribution.py) —
+    purchases arrive in 4 micro-batches and credit against the static
+    touch store through the batch entry's arithmetic verbatim; the
+    credits state upserts idempotently on p_id. Credit is a pure
+    per-conversion function, so batching commutes and the batch
+    entry's oracle checks the streaming face VERBATIM; the second
+    pass (fresh checkpoint, full re-delivery) proves unchanged state.
+    Credit conservation (sum ppm = 10^6 x conversions) survives the
+    stream by construction — each conversion's split lands atomically
+    in one batch."""
+    import tempfile
+
+    from whisper_pandas_spark.streaming.attribution import (
+        attribution_read_off,
+        stream_attribution,
+    )
+
+    ev = table(spark, sf_dir, "events")
+    conv = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"),
+        "user_id",
+        F.col("ts").alias("p_ts"),
+        F.round(F.col("value") * 100).cast("bigint").alias("val_cents"),
+    )
+    touch = ev.filter(
+        F.col("event_type").isin("view", "click", "signup")
+    ).select(
+        F.col("event_id").alias("t_id"),
+        "user_id",
+        F.col("ts").alias("t_ts"),
+        F.col("event_type").alias("touch_type"),
+    ).localCheckpoint(eager=True)
+    d = tempfile.mkdtemp(prefix="wps_streamattr_")
+    bounds = conv.agg(
+        F.min("p_id").alias("lo"), F.max("p_id").alias("hi")
+    ).collect()[0]
+    step = max(1, (int(bounds["hi"]) - int(bounds["lo"])) // 4 + 1)
+    for i in range(4):
+        lo = int(bounds["lo"]) + i * step
+        cond = F.col("p_id") >= lo
+        if i < 3:
+            cond = cond & (F.col("p_id") < lo + step)
+        conv.filter(cond).coalesce(1).write.mode("overwrite").parquet(
+            f"{d}/changes/f{i}"
+        )
+
+    schema = "p_id long, user_id long, p_ts timestamp, val_cents bigint"
+
+    def run_pass(ckpt: str) -> None:
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{d}/changes/*")
+        )
+        q = stream_attribution(
+            sdf,
+            touch,
+            f"{d}/state",
+            _ATTR_LOOKBACK_DAYS,
+            _ATTR_PPM,
+            checkpoint_dir=ckpt,
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run_pass(f"{d}/ckpt1")
+    run_pass(f"{d}/ckpt2")
+    return attribution_read_off(spark, f"{d}/state")
+
+
+# ---------------------------------------------------------------------------
+# ab_experiment_report
+# ---------------------------------------------------------------------------
+
+_AB_SEED = 42
+#: chi-square scale (statistic reported as floor(chi2 * 1e6)).
+_AB_SCALE = 1_000_000
+#: 3.841 * 1e6 — the 95% critical value for 1 df, in scaled units.
+_AB_CRIT = 3_841_000
+
+
+def _ab_oracle() -> str:
+    from whisper_pandas_spark.operators.sampling import duck_hash_bucket
+
+    return f"""
+WITH users AS (
+  SELECT DISTINCT user_id FROM events
+), assigned AS (
+  SELECT user_id,
+    CASE WHEN ({duck_hash_bucket("user_id", _AB_SEED)}) % 2 = 0
+         THEN 'control' ELSE 'treatment' END AS variant
+  FROM users
+), conv AS (
+  SELECT user_id,
+    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS rev_cents
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id
+), per_user AS (
+  SELECT a.variant, a.user_id,
+    CASE WHEN c.user_id IS NULL THEN 0 ELSE 1 END AS converted,
+    coalesce(c.rev_cents, 0) AS rev_cents
+  FROM assigned a LEFT JOIN conv c ON a.user_id = c.user_id
+), per_variant AS (
+  SELECT variant, CAST(count(*) AS BIGINT) AS n_users,
+    CAST(sum(converted) AS BIGINT) AS n_converted,
+    CAST(sum(rev_cents) AS BIGINT) AS revenue_cents
+  FROM per_user GROUP BY variant
+), tot AS (
+  SELECT CAST(sum(n_users) AS BIGINT) AS n,
+    CAST(sum(CASE WHEN variant = 'control' THEN n_users ELSE 0 END)
+         AS BIGINT) AS nc
+  FROM per_variant
+)
+SELECT v.variant, v.n_users, v.n_converted,
+  CAST(v.n_converted * {_AB_SCALE} // v.n_users AS BIGINT) AS conv_ppm,
+  v.revenue_cents,
+  CAST((2 * t.nc - t.n) * (2 * t.nc - t.n) * {_AB_SCALE} // t.n
+       AS BIGINT) AS srm_chi2_x1e6,
+  CAST((2 * t.nc - t.n) * (2 * t.nc - t.n) * {_AB_SCALE} // t.n
+       >= {_AB_CRIT} AS INT) AS srm_flag
+FROM per_variant v CROSS JOIN tot t
+ORDER BY v.variant
+"""
+
+
+@register("ab_experiment_report", oracle=_ab_oracle())
+def ab_experiment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Y182: experimentation analytics — the A/B family the registry
+    lacked (hash splits existed for train/test, but nothing computed
+    an EXPERIMENT READOUT): deterministic 50/50 user assignment via
+    the engine-portable md5 bucket, per-variant conversion and
+    revenue (exact cents), conversion rate in exact ppm (floor div),
+    and the sample-ratio-mismatch guardrail as an EXACT-INTEGER
+    chi-square — for two buckets chi2 = (2*n_c - N)^2 / N, reported
+    as floor(chi2 * 10^6) with the 1-df 95% critical value pinned as
+    a literal, so the srm_flag verdict is pure BIGINT arithmetic the
+    oracle replays (no float distribution code anywhere). Plan: one
+    distinct, one purchase aggregate, a broadcast-sized variant
+    census; nothing corpus-sized past the first aggregates."""
+    from whisper_pandas_spark.operators.sampling import hash_bucket
+
+    ev = table(spark, sf_dir, "events")
+    users = ev.select("user_id").distinct()
+    assigned = users.select(
+        "user_id",
+        F.when(hash_bucket(F.col("user_id"), _AB_SEED) % 2 == 0, "control")
+        .otherwise("treatment")
+        .alias("variant"),
+    )
+    conv = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(
+            F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("rev_cents")
+        )
+    )
+    per_user = assigned.join(conv, "user_id", "left").select(
+        "variant",
+        F.when(F.col("rev_cents").isNull(), 0).otherwise(1).alias(
+            "converted"
+        ),
+        F.coalesce(F.col("rev_cents"), F.lit(0)).alias("rev_cents"),
+    )
+    per_variant = per_user.groupBy("variant").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_users"),
+        F.sum("converted").cast("bigint").alias("n_converted"),
+        F.sum("rev_cents").cast("bigint").alias("revenue_cents"),
+    )
+    tot = per_variant.agg(
+        F.sum("n_users").cast("bigint").alias("n"),
+        F.sum(
+            F.when(F.col("variant") == "control", F.col("n_users")).otherwise(
+                0
+            )
+        )
+        .cast("bigint")
+        .alias("nc"),
+    )
+    chi2 = F.expr(
+        f"(2 * nc - n) * (2 * nc - n) * {_AB_SCALE} div n"
+    ).cast("bigint")
+    return (
+        per_variant.crossJoin(F.broadcast(tot))
+        .select(
+            "variant",
+            "n_users",
+            "n_converted",
+            F.expr(f"n_converted * {_AB_SCALE} div n_users")
+            .cast("bigint")
+            .alias("conv_ppm"),
+            "revenue_cents",
+            chi2.alias("srm_chi2_x1e6"),
+            (chi2 >= _AB_CRIT).cast("int").alias("srm_flag"),
+        )
+        .orderBy("variant")
     )

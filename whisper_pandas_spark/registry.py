@@ -10,80 +10,59 @@ Every implemented operator gets a named entry here:
 
 Column names are aliased identically on both sides — the driver's compare
 sorts columns by name before hashing values.
+
+The entries live in the ``queries_<domain>`` modules listed in ``DOMAINS``;
+they register through the leaf :mod:`whisper_pandas_spark.entries`, whose
+tables this module re-exports and puts in driver-sweep order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import importlib
+import json
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from whisper_pandas_spark.entries import (
+    CACHE_CLEARERS,
+    ORACLES,
+    QUERIES,
+    register,
+    register_cache,
+)
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+__all__ = ["ORACLES", "QUERIES", "register", "register_cache", "reset_result_caches"]
 
-
-def register(
-    name: str, oracle: str | None = None
-) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable[[SparkSession, str], DataFrame]]:
-    """Decorator registering a query (and optionally its DuckDB oracle)."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from whisper_pandas_spark.sources.tables import load_table
-
-    return load_table(spark, name, sf_dir)
+# Import order only breaks ties inside a _reorder bucket.
+DOMAINS = (
+    "whisper",
+    "materialize",
+    "similarity",
+    "streaming",
+    "text",
+    "web",
+    "multimodal",
+    "pipeline",
+    "dedup",
+    "joins",
+    "relational",
+    "windows",
+    "rollup",
+    "timeseries",
+    "sketches",
+    "graph",
+    "ingest",
+)
 
 
 def reset_result_caches() -> None:
     """Drop every per-process result materialization the registry entries
-    share (MinHash pair table, whisper round-trip tree, bucketed-table
-    marker). The caches make repeated driver/oracle runs cheap; the BENCH
-    calls this before every timed run so a timing always covers the full
-    pipeline, never a checkpoint read."""
-    import sys
-
-    mods = sys.modules
-    qd = mods.get("whisper_pandas_spark.queries_dedup")
-    if qd is not None:
-        qd._PAIRS_CACHE.clear()
-    qm = mods.get("whisper_pandas_spark.queries_materialize")
-    if qm is not None:
-        qm._ROUNDTRIP_DIR.clear()
-        qm._BUCKETED_DONE.clear()
-        qm._ZORDER_DIR.clear()
-        qm._PART_DIR.clear()
-    q7 = mods.get("whisper_pandas_spark.queries_round7")
-    if q7 is not None:
-        q7._BLOOM_DIR.clear()
-    qs = mods.get("whisper_pandas_spark.queries_streaming")
-    if qs is not None:
-        import shutil
-
-        for d in qs._ND_REPLAY_DIR.values():
-            shutil.rmtree(d, ignore_errors=True)
-        qs._ND_REPLAY_DIR.clear()
-    q14 = mods.get("whisper_pandas_spark.queries_round14")
-    if q14 is not None:
-        import shutil
-
-        for d, _n in q14._WARC_TREE.values():
-            shutil.rmtree(d, ignore_errors=True)
-        q14._WARC_TREE.clear()
-    q14b = mods.get("whisper_pandas_spark.queries_round14b")
-    if q14b is not None:
-        import shutil
-
-        for d in q14b._DV_DIR.values():
-            shutil.rmtree(d, ignore_errors=True)
-        q14b._DV_DIR.clear()
+    share (each module registers its caches with ``register_cache``). The
+    caches make repeated driver/oracle runs cheap; the BENCH calls this
+    before every timed run so a timing always covers the full pipeline,
+    never a checkpoint read."""
+    for clear in CACHE_CLEARERS:
+        clear()
     # Also drop every leaked persistent-RDD block. Eager localCheckpoints
     # cut lineage, but their blocks outlive the query's Python objects
     # until the JVM ContextCleaner eventually notices — across a 39-query
@@ -106,9 +85,8 @@ def reset_result_caches() -> None:
         pass
 
 
-# Record-derived ordering (used by _reorder below, and by
-# queries_round6.promote()): the driver walks the registry in insertion
-# order with a bounded budget (~50 entries per round), so ordering decides
+# Record-derived ordering (used by _reorder below): the driver walks the
+# registry in insertion order with a bounded budget (~50 entries per round), so ordering decides
 # what gets (re-)recorded:
 #
 #   1. entries whose LATEST record is non-green (a fix must be re-recorded),
@@ -117,18 +95,14 @@ def reset_result_caches() -> None:
 #
 # stable within each bucket, derived from the CORRECTNESS_r*.json records
 # the driver leaves in the repo root. This self-maintains across rounds.
-import glob as _glob
-import json as _json
-import os as _os
-
-_ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _latest: dict[str, tuple[int, dict]] = {}
 for _i, _path in enumerate(
-    sorted(_glob.glob(_os.path.join(_ROOT, "CORRECTNESS_r*.json")))
+    sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")))
 ):
     try:
         with open(_path) as _f:
-            _data = _json.load(_f)
+            _data = json.load(_f)
     except (OSError, ValueError):
         continue
     for _name, _rec in _data.items():
@@ -161,69 +135,7 @@ def _reorder() -> None:
     ORACLES.update(o)
 
 
-# Import side-effect modules that populate the registry. Kept at the bottom
-# so `register` / `_table` exist when they run.
-#
-# ORDER MATTERS: the driver walks the registry in insertion order and has a
-# bounded budget (round 1 stopped after 50 of 66 entries, leaving every
-# similarity/text/multimodal/whisper entry unchecked). The extension surface
-# therefore registers FIRST; the 8 near-identical rollup_* variants and the
-# window_* family — all driver-green in round 1 — register last.
-from whisper_pandas_spark import queries_whisper  # noqa: E402,F401
-from whisper_pandas_spark import queries_materialize  # noqa: E402,F401
-from whisper_pandas_spark import queries_similarity  # noqa: E402,F401
-from whisper_pandas_spark import queries_embeddings  # noqa: E402,F401
-from whisper_pandas_spark import queries_streaming  # noqa: E402,F401
-from whisper_pandas_spark import queries_text  # noqa: E402,F401
-from whisper_pandas_spark import queries_multimodal  # noqa: E402,F401
-from whisper_pandas_spark import queries_pipeline  # noqa: E402,F401
-from whisper_pandas_spark import queries_dedup  # noqa: E402,F401
-from whisper_pandas_spark import queries_joins  # noqa: E402,F401
-from whisper_pandas_spark import queries_relational  # noqa: E402,F401
-from whisper_pandas_spark import queries_windows  # noqa: E402,F401
-from whisper_pandas_spark import queries_rollup  # noqa: E402,F401
-
-# Round 6: promote the formerly-staged queries_round6 entries into the live
-# registry (VERDICT r5 "Next round" #1). They carry no CORRECTNESS record yet,
-# so _order_key queues them first for the driver sweep. promote() is
-# idempotent and ends with _reorder(); queries_round6 ALSO self-promotes at
-# its module bottom, covering the import order where a test loads
-# queries_round6 first (whose oracle builders pull in registry mid-load —
-# promoting here alone would then see a half-populated STAGED dict).
-from whisper_pandas_spark import queries_round6 as _q6  # noqa: E402
-
-_q6.promote()
-
-# Round 7: direct registrations (no staging needed — promote()'s final
-# _reorder sorts never-recorded entries to the sweep front regardless of
-# import position, and queries_round7's oracles are plain SQL strings
-# with no mid-load registry dependency).
-from whisper_pandas_spark import queries_round7  # noqa: E402,F401
-from whisper_pandas_spark import queries_round7b  # noqa: E402,F401
-from whisper_pandas_spark import queries_round7c  # noqa: E402,F401
-
-# Round 8: same direct-registration pattern.
-from whisper_pandas_spark import queries_round8  # noqa: E402,F401
-
-# Round 9: same direct-registration pattern.
-from whisper_pandas_spark import queries_round9  # noqa: E402,F401
-
-# Round 10: same direct-registration pattern.
-from whisper_pandas_spark import queries_round10  # noqa: E402,F401
-
-# Round 11: same direct-registration pattern.
-from whisper_pandas_spark import queries_round11  # noqa: E402,F401
-
-# Round 12: same direct-registration pattern.
-from whisper_pandas_spark import queries_round12  # noqa: E402,F401
-from whisper_pandas_spark import queries_round12b  # noqa: E402,F401
-
-# Round 13: same direct-registration pattern.
-from whisper_pandas_spark import queries_round13  # noqa: E402,F401
-from whisper_pandas_spark import queries_round13b  # noqa: E402,F401
-
-# Round 14: same direct-registration pattern.
-from whisper_pandas_spark import queries_round14  # noqa: E402,F401
-from whisper_pandas_spark import queries_round14b  # noqa: E402,F401
+for _domain in DOMAINS:
+    importlib.import_module(f"whisper_pandas_spark.queries_{_domain}")
 
 _reorder()

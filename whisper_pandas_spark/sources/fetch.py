@@ -23,13 +23,12 @@ and selects the archive from the first file's header.
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.sources.format import read_header
+from whisper_pandas_spark.sources.format import list_whisper_files, read_header
 
 
 def select_archive(path: str, span_seconds: int, compression: str = "infer") -> int:
@@ -63,18 +62,11 @@ def fetch(
 
     register_whisper(spark)
     probe = path
-    if os.path.isdir(path):
-        hits = sorted(
-            globmod.glob(os.path.join(path, "**", "*.wsp"), recursive=True)
-            + globmod.glob(os.path.join(path, "**", "*.wsp.gz"), recursive=True)
-        )
+    if os.path.isdir(path) or any(ch in path for ch in "*?["):
+        hits = list_whisper_files(path)
         if not hits:
-            raise FileNotFoundError(f"no whisper files under {path!r}")
-        probe = hits[0]
-    elif any(ch in path for ch in "*?["):
-        hits = sorted(globmod.glob(path))
-        if not hits:
-            raise FileNotFoundError(f"no whisper files match {path!r}")
+            where = "under" if os.path.isdir(path) else "match"
+            raise FileNotFoundError(f"no whisper files {where} {path!r}")
         probe = hits[0]
 
     anchor = until_epoch if now_epoch is None else now_epoch

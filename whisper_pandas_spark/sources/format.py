@@ -21,6 +21,7 @@ file); bulk point decode lives in the executor-side reader
 
 from __future__ import annotations
 
+import glob
 import gzip
 import os
 import struct
@@ -190,3 +191,16 @@ def read_file_bytes(path: str, compression: str = "infer") -> bytes:
     with open(path, "rb") as f:
         raw = f.read()
     return gzip.decompress(raw) if comp == "gzip" else raw
+
+
+def list_whisper_files(path: str) -> list[str]:
+    """Sorted Whisper files a load path names: every ``.wsp`` and
+    ``.wsp.gz`` under a directory (recursively), else the glob matches of
+    the path. Empty when nothing matches; callers decide what that means."""
+    if os.path.isdir(path):
+        return sorted(
+            f
+            for pat in ("*.wsp", "*.wsp.gz")
+            for f in glob.glob(os.path.join(path, "**", pat), recursive=True)
+        )
+    return sorted(glob.glob(path))

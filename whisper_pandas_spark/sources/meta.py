@@ -9,7 +9,6 @@ over a path DataFrame for millions of files.
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 from collections.abc import Iterable
 
@@ -24,7 +23,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from whisper_pandas_spark.sources.format import FileInfo, read_header
+from whisper_pandas_spark.sources.format import FileInfo, list_whisper_files, read_header
 
 FILE_META_SCHEMA = StructType(
     [
@@ -58,14 +57,10 @@ def _expand(paths: str | Iterable[str]) -> list[str]:
         paths = [paths]
     out: list[str] = []
     for p in paths:
-        if os.path.isdir(p):
-            out.extend(
-                f
-                for pat in ("*.wsp", "*.wsp.gz")
-                for f in globmod.glob(os.path.join(p, "**", pat), recursive=True)
-            )
-        else:
-            out.extend(globmod.glob(p) or [p])
+        # a non-directory path that matches nothing stays, so reading its
+        # header raises FileNotFoundError
+        hits = list_whisper_files(p)
+        out.extend(hits if hits or os.path.isdir(p) else [p])
     return sorted(set(out))
 
 

@@ -39,7 +39,6 @@ position the reference keeps as the pandas row index
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 from dataclasses import dataclass
 from struct import error as struct_error
@@ -72,6 +71,7 @@ from pyspark.sql.types import (
 
 from whisper_pandas_spark.sources.format import (
     ArchiveInfo,
+    list_whisper_files,
     read_file_bytes,
     read_header,
     read_points,
@@ -307,15 +307,10 @@ class WhisperScanReader(DataSourceReader):
         files: list[str] = []
         bases: list[str] = []
         for path in self.paths:
+            files.extend(list_whisper_files(path))
             if os.path.isdir(path):
-                pats = [
-                    os.path.join(path, "**", "*.wsp"),
-                    os.path.join(path, "**", "*.wsp.gz"),
-                ]
-                files.extend(f for pat in pats for f in globmod.glob(pat, recursive=True))
                 bases.append(path)
             else:
-                files.extend(globmod.glob(path))
                 bases.append(os.path.dirname(path.split("*")[0]))
         # metric derivation base: common prefix of all contributing bases
         self._base = os.path.commonpath(bases) if bases else ""

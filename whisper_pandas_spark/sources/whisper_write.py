@@ -36,7 +36,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from whisper_pandas_spark.sources.format import AGGREGATION_METHODS
+from whisper_pandas_spark.sources.format import (
+    AGGREGATION_METHODS,
+    ARCHIVE_HEADER,
+    FILE_HEADER,
+    POINT_DTYPE,
+    POINT_SIZE,
+)
 
 # method name -> numpy reducer over (ts, vals) of one coarse window
 _AGG_IDS = {name: i for i, name in AGGREGATION_METHODS.items()}
@@ -99,8 +105,6 @@ def build_wsp_bytes(
     buckets the new points touch), so a bucket whose finer points partially
     expired may be refreshed from the surviving ones.
     """
-    import struct
-
     import numpy as np
 
     if aggregation not in _AGG_IDS:
@@ -134,19 +138,20 @@ def build_wsp_bytes(
                 )
             )
 
-    header_size = 16 + 12 * len(archives)
+    header_size = FILE_HEADER.size + ARCHIVE_HEADER.size * len(archives)
     offsets, off = [], header_size
     for _spp, pts in archives:
         offsets.append(off)
-        off += 12 * pts
+        off += POINT_SIZE * pts
     buf = bytearray(off)
     max_retention = max(spp * pts for spp, pts in archives)
-    struct.pack_into(
-        ">LLfL", buf, 0, _AGG_IDS[aggregation], max_retention,
-        x_files_factor, len(archives),
+    FILE_HEADER.pack_into(
+        buf, 0, _AGG_IDS[aggregation], max_retention, x_files_factor, len(archives)
     )
     for i, (spp, pts) in enumerate(archives):
-        struct.pack_into(">LLL", buf, 16 + 12 * i, offsets[i], spp, pts)
+        ARCHIVE_HEADER.pack_into(
+            buf, FILE_HEADER.size + ARCHIVE_HEADER.size * i, offsets[i], spp, pts
+        )
 
     newest = int(ts[-1]) if len(ts) else 0
     if old_arch is not None and len(old_arch[0][0]):
@@ -201,11 +206,11 @@ def build_wsp_bytes(
         keep = a_ts > newest - spp * pts
         a_ts, a_vals = a_ts[keep], a_vals[keep]
 
-        arch = np.zeros(pts, dtype=[("ts", ">u4"), ("val", ">f8")])
+        arch = np.zeros(pts, dtype=POINT_DTYPE)
         slots = (a_ts // spp) % pts
-        arch["ts"][slots] = a_ts
-        arch["val"][slots] = a_vals
-        buf[offsets[i] : offsets[i] + 12 * pts] = arch.tobytes()
+        arch["timestamp"][slots] = a_ts
+        arch["value"][slots] = a_vals
+        buf[offsets[i] : offsets[i] + POINT_SIZE * pts] = arch.tobytes()
 
         fine_ts, fine_vals = a_ts, a_vals
         prev_spp = spp

@@ -1,5 +1,5 @@
 """Streaming multi-touch attribution: the incremental face of
-queries_round14b.py:attr_multitouch_linear (SURVEY §2.9 x Y173).
+queries_windows.py:attr_multitouch_linear (SURVEY §2.9 x Y173).
 
 Conversions arrive continuously (a purchase stream); the touch history
 they attribute over is the static (slowly-growing) events store. The

@@ -39,26 +39,17 @@ safe: expired points only ever disappear below the watermark.
 
 from __future__ import annotations
 
-import glob as globmod
 import os
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql.datasource import DataSourceStreamReader, InputPartition
 
 from whisper_pandas_spark.sources.format import (
+    list_whisper_files,
     read_file_bytes,
     read_header,
     read_points,
 )
-
-
-def _files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            globmod.glob(os.path.join(path, "**", "*.wsp"), recursive=True)
-            + globmod.glob(os.path.join(path, "**", "*.wsp.gz"), recursive=True)
-        )
-    return sorted(globmod.glob(path))
 
 
 def _file_max_ts(path: str) -> int:
@@ -106,7 +97,7 @@ class WhisperStreamReader(DataSourceStreamReader):
 
         skip = str(self.options.get("on_error") or "fail").lower() == "skip"
         marks: dict[str, int] = {}
-        for f in _files(self.path):
+        for f in list_whisper_files(self.path):
             try:
                 mtime = os.stat(f).st_mtime
                 cached = self._peek.get(f)
