@@ -230,19 +230,6 @@ def test_pq_topk_recall_on_clustered_data(spark):
         assert (g["adc_dist"].diff().dropna() >= 0).all()
 
 
-def test_pq_train_checkpoint_bit_identical(spark):
-    from whisper_pandas_spark.operators.embeddings import pq_train
-
-    emb = spark.createDataFrame(
-        _clustered_vectors(n_per=10), "vec_id long, embedding array<double>"
-    )
-    a = pq_train(emb, 8, 2, 4, iters=2, checkpoint=True).collect()
-    b = pq_train(emb, 8, 2, 4, iters=2, checkpoint=False).collect()
-    ka = {(r["sub"], r["cid"]): list(r["centroid"]) for r in a}
-    kb = {(r["sub"], r["cid"]): list(r["centroid"]) for r in b}
-    assert ka == kb
-
-
 def test_pq_topk_ivf_composes_cells_and_codes(spark):
     from pyspark.sql import functions as F
 

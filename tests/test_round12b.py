@@ -440,7 +440,7 @@ def test_int8_codes_arrow_bitmatches_expression_form(spark):
     """The round-15 Arrow quantization pass must be element-for-element
     equal to the expression form it replaced
     (transform/aggregate HOFs over cast-to-double inputs), including
-    the all-zero-vector rule and a ragged/empty row."""
+    the all-zero-vector rule, a ragged/empty row and a NULL vector."""
     from pyspark.sql import functions as F
 
     from whisper_pandas_spark.operators.embeddings import _quantize, _vabs_max
@@ -448,23 +448,24 @@ def test_int8_codes_arrow_bitmatches_expression_form(spark):
 
     df = _km_fixture(spark).unionByName(
         spark.createDataFrame(
-            [(9001, [0.0, 0.0, 0.0, 0.0]), (9002, [])],
+            [(9001, [0.0, 0.0, 0.0, 0.0]), (9002, []), (9003, None)],
             "vec_id long, embedding array<double>",
         )
     )
     v = F.col("embedding")
-    expr = {
-        r["vec_id"]: list(r["q"])
-        for r in df.select(
-            "vec_id", _quantize(v, _vabs_max(v)).alias("q")
-        ).collect()
-    }
-    arrow = {
-        r["vec_id"]: list(r["q"])
-        for r in int8_codes(df, "vec_id", "embedding").collect()
-    }
+    def codes(rows):
+        return {
+            r["vec_id"]: None if r["q"] is None else list(r["q"])
+            for r in rows
+        }
+
+    expr = codes(
+        df.select("vec_id", _quantize(v, _vabs_max(v)).alias("q")).collect()
+    )
+    arrow = codes(int8_codes(df, "vec_id", "embedding").collect())
     assert arrow == expr
     assert arrow[9001] == [0, 0, 0, 0] and arrow[9002] == []
+    assert arrow[9003] is None
 
 
 def test_kmeans_matches_bruteforce(spark):

@@ -367,12 +367,7 @@ def test_multimodal_curation_funnel(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_langid_arrow_matches_sql(spark):
-    from whisper_pandas_spark.operators.langid import (
-        _train_and_classify_sql,
-        train_and_classify,
-    )
-
+def _langid_rows():
     rows = []
     for i in range(60):
         lang = ["en", "de", "fr"][i % 3]
@@ -382,6 +377,16 @@ def test_langid_arrow_matches_sql(spark):
             "fr": "le rapide renard brun saute par dessus le chien paresseux",
         }[lang]
         rows.append((i, lang, f"{base} variant {i} token{i * 7}"))
+    return rows
+
+
+def test_langid_arrow_matches_sql(spark):
+    from whisper_pandas_spark.operators.langid import (
+        _train_and_classify_sql,
+        train_and_classify,
+    )
+
+    rows = _langid_rows()
     rows.append((60, "en", ""))  # gram-less doc: drops on both paths
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     a = {
@@ -397,6 +402,35 @@ def test_langid_arrow_matches_sql(spark):
     assert a == b
     assert 60 not in a  # the empty doc produced no grams
     assert len(a) == 60
+
+
+def test_langid_null_doc_id_is_an_ordinary_document(spark):
+    """A NULL doc id neither marks a profile row nor loses the document:
+    the corpus trains the same profiles as with that document under a
+    fresh id (so every other document keeps its exact distance), and
+    the NULL-id document is classified once, like its fresh-id twin."""
+    from whisper_pandas_spark.operators.langid import train_and_classify
+
+    odd = "der faule hund schlaeft unter dem grossen tisch im garten"
+
+    def run(extra_id):
+        df = spark.createDataFrame(
+            _langid_rows() + [(extra_id, "de", odd)],
+            "doc_id long, lang string, text string",
+        )
+        return [
+            (r["doc_id"], r["pred_lang"], r["lang_dist"])
+            for r in train_and_classify(
+                df, "doc_id", "lang", "text", k=25
+            ).collect()
+        ]
+
+    with_null = run(None)
+    fresh = {d: (p, s) for d, p, s in run(999)}
+    nulls = [(p, s) for d, p, s in with_null if d is None]
+    assert nulls == [fresh.pop(999)]
+    assert nulls[0][0] is not None
+    assert {d: (p, s) for d, p, s in with_null if d is not None} == fresh
 
 
 # ---------------------------------------------------------------------------

@@ -468,67 +468,15 @@ def test_stream_curation_state_and_merge_law(spark, tmp_path):
     assert out[8]["is_canonical"] and out[5]["is_canonical"]
 
 
-def test_funnel_correct_with_reliable_checkpoint(tmp_path):
-    """VERDICT r13 #7: the curation funnel must be bit-identical on a
-    FRESH default-config session (spark.cleaner defaults) with a
-    RELIABLE checkpoint dir configured — the cluster deployment mode of
-    stage.py:stage_materialize. Runs in a subprocess so the session is
-    genuinely fresh (its own SparkContext, no fixture-session state);
-    asserts both the value match vs the DuckDB oracle and that the
-    reliable path was actually taken (checkpoint files exist)."""
-    import subprocess
-    import sys
-    from pathlib import Path
+def test_funnel_correct_with_reliable_checkpoint(tmp_path, sf_dir):
+    """The curation funnel's barriers bind to a reliable checkpoint dir
+    on a fresh default-config session (the cluster deployment mode of
+    stage.py:stage_materialize), write checkpoint files, and stay
+    value-identical to the DuckDB oracle."""
+    from tests.test_barriers import run_reliable_barriers
 
-    repo = Path(__file__).resolve().parents[1]
-    ckdir = tmp_path / "reliable_ck"
-    script = f"""
-import sys
-sys.path.insert(0, {str(repo)!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[4]")
-         .appName("funnel_fresh")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir({str(ckdir)!r})
-from whisper_pandas_spark.registry import ORACLES, QUERIES
-sdf = QUERIES["pipeline_curation_end_to_end"](
-    spark, "/root/testdata/sf0.001"
-).toPandas()
-import duckdb
-con = duckdb.connect()
-for t in ("documents",):
-    con.execute(
-        "CREATE VIEW " + t + " AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/" + t + ".parquet')"
-    )
-ddf = con.execute(ORACLES["pipeline_curation_end_to_end"]).fetchdf()
-assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-sdf = sdf.sort_values("doc_id").reset_index(drop=True)
-ddf = ddf.sort_values("doc_id").reset_index(drop=True)
-for c in sdf.columns:
-    a, b = sdf[c], ddf[c]
-    if a.dtype.kind == "f":
-        assert (abs(a - b) < 1e-9).all(), c
-    else:
-        assert (a.astype(str) == b.astype(str)).all(), c
-import os
-files = [p for p, _, fs in os.walk({str(ckdir)!r}) for f in fs]
-assert files, "no reliable checkpoint files written"
-print("FRESH-SESSION-FUNNEL-OK")
-spark.stop()
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=420,
-    )
-    assert "FRESH-SESSION-FUNNEL-OK" in out.stdout, (
-        out.stdout[-2000:],
-        out.stderr[-2000:],
+    run_reliable_barriers(
+        tmp_path, sf_dir, ("pipeline_curation_end_to_end",)
     )
 
 

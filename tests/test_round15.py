@@ -1,68 +1,19 @@
-"""Round-15 optimization pins: stage_materialize bindings added this
-round (fuzzy passjoin base0, corpus-pipeline assigned barrier) must be
-bit-identical on a FRESH default-config session with a RELIABLE
-checkpoint dir configured — the cluster deployment mode."""
+"""Reliable-checkpoint pins for the fuzzy passjoin and corpus-pipeline
+funnels: their multi-consumer barriers bind through
+stage.py:stage_materialize and must stay value-identical on a fresh
+default-config session with a reliable checkpoint dir."""
 
 from __future__ import annotations
 
-import subprocess
-import sys
-from pathlib import Path
+from tests.test_barriers import run_reliable_barriers
 
 
-def test_r15_stage_barriers_correct_with_reliable_checkpoint(tmp_path):
-    """dedup_fuzzy_passjoin and pipeline_corpus_end_to_end (both bind
-    their multi-consumer barriers through stage.py:stage_materialize as
-    of round 15) replay value-identical vs the DuckDB oracle in a fresh
-    subprocess session whose SparkContext has a reliable checkpoint dir;
-    asserts the reliable path was actually taken."""
-    repo = Path(__file__).resolve().parents[1]
-    ckdir = tmp_path / "reliable_ck"
-    script = f"""
-import sys
-sys.path.insert(0, {str(repo)!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[4]")
-         .appName("r15_barriers_fresh")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-spark.sparkContext.setCheckpointDir({str(ckdir)!r})
-from whisper_pandas_spark.registry import ORACLES, QUERIES
-import duckdb
-con = duckdb.connect()
-for t in ("documents",):
-    con.execute(
-        "CREATE VIEW " + t + " AS SELECT * FROM "
-        "read_parquet('/root/testdata/sf0.001/" + t + ".parquet')"
-    )
-for name in ("dedup_fuzzy_passjoin", "pipeline_corpus_end_to_end"):
-    sdf = QUERIES[name](spark, "/root/testdata/sf0.001").toPandas()
-    ddf = con.execute(ORACLES[name]).fetchdf()
-    assert len(sdf) == len(ddf), (name, len(sdf), len(ddf))
-    cols = list(sdf.columns)
-    sdf = sdf.sort_values(cols).reset_index(drop=True)
-    ddf = ddf[cols].sort_values(cols).reset_index(drop=True)
-    for c in cols:
-        a, b = sdf[c], ddf[c]
-        if a.dtype.kind == "f":
-            assert (abs(a - b) < 1e-9).all(), (name, c)
-        else:
-            assert (a.astype(str) == b.astype(str)).all(), (name, c)
-import os
-files = [f for p, _, fs in os.walk({str(ckdir)!r}) for f in fs]
-assert files, "no reliable checkpoint files written"
-print("R15-BARRIERS-OK")
-spark.stop()
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=420,
-    )
-    assert "R15-BARRIERS-OK" in out.stdout, (
-        out.stdout[-2000:],
-        out.stderr[-2000:],
+def test_r15_stage_barriers_correct_with_reliable_checkpoint(tmp_path, sf_dir):
+    """dedup_fuzzy_passjoin (base0 barrier) and pipeline_corpus_end_to_end
+    (assigned barrier) write reliable checkpoint files and match the
+    DuckDB oracle value for value."""
+    run_reliable_barriers(
+        tmp_path,
+        sf_dir,
+        ("dedup_fuzzy_passjoin", "pipeline_corpus_end_to_end"),
     )

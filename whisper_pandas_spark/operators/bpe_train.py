@@ -26,7 +26,7 @@ Scale shape (the part that matters at 100 TB):
   Arrow map applying the merge — for corpora whose unique-word table
   genuinely cannot collect. Both modes are bit-identical
   (property-tested).
-- **Lineage truncation per iteration** (`localCheckpoint(eager=True)`),
+- **Lineage truncation per iteration** (an eager stage barrier),
   the `kmeans_cosine(checkpoint=True)` pattern: the plan stays constant
   in the iteration count instead of compounding K map stages deep.
 - **Segmentation** re-uses the same vocab trick: apply merges to the
@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.functions.text import tokenize
+from whisper_pandas_spark.stage import stage_materialize
 
 END = "</w>"  # end-of-word marker, per the original BPE formulation
 
@@ -191,7 +192,7 @@ def learn_merges(
     partial-agg exchange for adjacent-pair counts, a driver-side top-1
     (ties break (freq desc, a asc, b asc) — both engines' string order
     agrees for BMP code points), and one Arrow merge pass. Lineage is
-    truncated by an eager ``localCheckpoint`` every ``checkpoint_every``
+    truncated by an eager stage barrier every ``checkpoint_every``
     merges rather than every merge (the round-9 MMR lesson): between
     checkpoints the pending plan carries at most ``checkpoint_every``
     stacked Arrow maps, each re-run once by the next pair-count action —
@@ -203,7 +204,7 @@ def learn_merges(
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = stage_materialize(vocab)
 
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
@@ -243,7 +244,7 @@ def learn_merges(
 
         vocab = vocab.mapInPandas(apply_merge, "syms array<string>, freq long")
         if len(merges) % checkpoint_every == 0:
-            vocab = vocab.localCheckpoint(eager=True)
+            vocab = stage_materialize(vocab)
     return merges
 
 

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 # Shared with operators/textrank.py:_tokenize and the DuckDB oracles:
 # lower -> collapse non-alnum runs to one space -> trim -> split.
 _TOKEN_SPLIT_RE = "[^a-z0-9]+"
@@ -75,14 +77,13 @@ def collocation_lift(
         ).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
 
-    uni = (
+    uni = stage_materialize(
         toks.select(F.explode("toks").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
         # Vocabulary-sized and scanned three times below (two count
         # joins + the total); materialize once instead of re-tokenizing
         # the corpus per use.
-        .localCheckpoint(eager=True)
     )
     n_total = uni.agg(F.sum("n_w").alias("n_total"))
 

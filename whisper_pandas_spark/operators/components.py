@@ -26,8 +26,7 @@ Scale properties:
   bytes/row;
 - the frame a round touches is one row per node IN SOME PAIR (the
   near-dup minority, not the corpus);
-- lineage is truncated per round with an eager localCheckpoint (the
-  cluster-scale twin is a parquet checkpoint per round);
+- lineage is truncated per round with an eager stage barrier;
 - the convergence probe exploits monotonicity: labels only ever
   DECREASE, so "no label changed" is exactly "the label-sum is
   unchanged" — one exact DECIMAL sum over the just-checkpointed frame
@@ -39,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.stage import stage_materialize
 
 
 def connected_components(
@@ -58,11 +59,10 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
+    labels = stage_materialize(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
     def label_sum(frame: DataFrame):
@@ -89,10 +89,9 @@ def connected_components(
         hop = cand.select(
             F.col("node").alias("comp"), F.col("comp").alias("comp2")
         )
-        new = (
+        new = stage_materialize(
             cand.join(hop, "comp")
             .select("node", F.least("comp", "comp2").alias("comp"))
-            .localCheckpoint(eager=True)
         )
         # monotone convergence probe: labels never increase, so the
         # label-sum is strictly smaller iff ANY label changed

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.stage import stage_materialize
+
 # Deterministic tie-break for the 6-decimal output rounding: with
 # 6-decimal inputs the trend quotient lands EXACTLY on half-1e-6
 # boundaries (N/48 with N a micro-unit integer ties whenever
@@ -356,7 +358,7 @@ def autocorrelation(
     if bucket not in ("day", "hour"):
         raise ValueError("bucket must be 'day' or 'hour'")
     unit_args = {"day": "0, 0, 0, l.lag, 0, 0, 0", "hour": "0, 0, 0, 0, l.lag, 0, 0"}[bucket]
-    grid = (
+    grid = stage_materialize(
         df.where(
             F.col(time_col).isNotNull() & F.col(value_col).isNotNull()
         )
@@ -370,12 +372,11 @@ def autocorrelation(
         # the caller no handle to unpersist a cache — a plain persist()
         # here would pin blocks in the CacheManager across repeated
         # calls (it is never released until the session dies). An eager
-        # localCheckpoint materializes the grid exactly once, truncates
+        # stage barrier materializes the grid exactly once, truncates
         # lineage, and its blocks are released by the ContextCleaner
         # when the DataFrame is garbage-collected — the same lifecycle
         # graph.py's iterative operators use, without needing an
         # explicit unpersist the caller can't make.
-        .localCheckpoint(eager=True)
     )
     lags = grid.sparkSession.range(1, max_lag + 1).select(
         F.col("id").cast("int").alias("lag")

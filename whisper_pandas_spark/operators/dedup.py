@@ -42,6 +42,7 @@ from whisper_pandas_spark.functions.text import (
     tokenize,
     word_shingles,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 SIMHASH_BITS = 60
 
@@ -691,13 +692,6 @@ def fuzzy_pairs_passjoin(
     # tokenize + prefix projection (6 corpus scans at 100 TB). The frame
     # is narrow by construction (block, id, ≤prefix_len-char norm, len),
     # and the blocks are GC-released with the DataFrame.
-    # stage_materialize (round 15, VERDICT r14 #8): binds to the
-    # RELIABLE checkpoint dir when the cluster configures one, so a
-    # corpus-sized barrier is not one executor preemption away from
-    # recompute-from-nothing; localCheckpoint remains the local-mode
-    # binding.
-    from whisper_pandas_spark.stage import stage_materialize
-
     base0 = stage_materialize(
         _spread(
             df.select(

@@ -15,13 +15,13 @@ Scale shape: relevance is ONE broadcast-query corpus pass (map-side
 cosine, no shuffle); each of the k greedy rounds is one scan of the
 remaining corpus computing `greatest(ms, cos(v, picked))` + a top-1
 (TakeOrderedAndProject) — cost k * O(corpus), the canonical MMR bound.
-The running state localCheckpoints every FOURTH round rather than every
-round: between checkpoints the lineage is at most 4 narrow map-side
-projections over a candidate set the ``max_candidates`` contract already
-bounds, so re-deriving it inside the top-1 job is cheaper than paying a
-separate materialization job per round (measured ~25% of the entry's
-wall at k=8); plan depth stays bounded in k either way, and
-checkpointing never changes bits (the kmeans-trainer parity tests pin
+The running state passes a stage barrier every FOURTH round rather
+than every round: between barriers the lineage is at most 4 narrow
+map-side projections over a candidate set the ``max_candidates``
+contract already bounds, so re-deriving it inside the top-1 job is
+cheaper than paying a separate materialization job per round (measured
+~25% of the entry's wall at k=8); plan depth stays bounded in k either
+way, and a barrier never changes bits (the kmeans-trainer parity tests pin
 that). Only the k picked rows ever reach the driver.
 
 Determinism: cosine uses the shared left-fold dot/norm
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.stage import stage_materialize
 
 _NEG = -1e18  # max-over-empty-set sentinel (cos is in [-1, 1])
 
@@ -86,7 +88,7 @@ def mmr_select(
         cosine(F.col(vec_col), q).alias("__rel"),
         F.lit(None).cast("double").alias("__ms"),
     ).where(F.col("__rel").isNotNull())
-    state = state.localCheckpoint(eager=True)
+    state = stage_materialize(state)
 
     score = F.when(
         F.col("__ms").isNull(), F.lit(lam) * F.col("__rel")
@@ -117,7 +119,7 @@ def mmr_select(
         )
         # bounded-lineage checkpoint: every 4th round (see module doc)
         if rnk % 4 == 0:
-            state = state.localCheckpoint(eager=True)
+            state = stage_materialize(state)
     return spark.createDataFrame(
         picks, f"rnk int, {id_col} {id_type}, relevance double, score double"
     )

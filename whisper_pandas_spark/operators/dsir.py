@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.functions.text import hash64, tokenize
+from whisper_pandas_spark.stage import stage_materialize
 
 N_BUCKETS = 256
 _SEED = "dsir"
@@ -101,16 +102,14 @@ def dsir_weights(
     # adds no rows), then derive BOTH models from that already-reduced
     # frame — without this, the model/totals/scoring branches would
     # each re-run the corpus explode (3 scans at 100 TB). The eager
-    # localCheckpoint materializes the reduced frame once for its two
-    # consumers (the engine's standard shared-lineage move; a real
-    # cluster run would persist to shuffle-tier storage the same way).
+    # stage barrier materializes the reduced frame once for its two
+    # consumers (the engine's standard shared-lineage move).
     # count("b") skips NULLs, so the carrier row of a token-less doc
     # lands as (doc, is_t, NULL, n=0) — invisible to the model sums and
     # a 0.0 contribution to the score fold below
-    per_db = (
+    per_db = stage_materialize(
         toks.groupBy("doc", "is_t", "b")
         .agg(F.count("b").cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
     )
     model = per_db.where(F.col("b").isNotNull()).groupBy("b").agg(
         F.sum(F.when(F.col("is_t") == 1, F.col("n")).otherwise(0))

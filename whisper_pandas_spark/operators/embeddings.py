@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 Q_LEVELS = 127.0  # symmetric int8 range [-127, 127]
 
 
@@ -302,7 +304,6 @@ def pq_train(
     seed: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Train the M per-subspace L2 codebooks JOINTLY (one loop, every
     subspace a group key — not M sequential jobs): returns
@@ -313,9 +314,9 @@ def pq_train(
     md5(seed:sub:vec_id) seed that subspace's codebook (deterministic,
     engine-portable). Each Lloyd iteration: broadcast codebooks join +
     partial-agg argmin, then exact-decimal per-(sub, cell, pos) means —
-    bit-identical under any partitioning; ``checkpoint`` truncates
-    lineage per iteration (the kmeans_cosine contract). Empty cells
-    drop out, mirroring the cosine trainer.
+    bit-identical under any partitioning; every iteration ends in a
+    stage barrier that truncates lineage (the kmeans_cosine contract).
+    Empty cells drop out, mirroring the cosine trainer.
     """
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -326,7 +327,7 @@ def pq_train(
 
     subv = _subvectors(vectors, m, d_sub, id_col, vec_col)
     w = Window.partitionBy("sub").orderBy("h")
-    cent = (
+    cent = stage_materialize(
         subv.withColumn(
             "h",
             F.md5(
@@ -343,8 +344,6 @@ def pq_train(
             F.col("svec").alias("centroid"),
         )
     )
-    if checkpoint:
-        cent = cent.localCheckpoint(eager=True)
     for _ in range(iters):
         assigned = _pq_assign(subv, cent)
         means = (
@@ -360,7 +359,7 @@ def pq_train(
                 ).alias("mval")
             )
         )
-        cent = (
+        cent = stage_materialize(
             means.groupBy("sub", "cell")
             .agg(
                 F.transform(
@@ -370,8 +369,6 @@ def pq_train(
             )
             .select("sub", F.col("cell").alias("cid"), "centroid")
         )
-        if checkpoint:
-            cent = cent.localCheckpoint(eager=True)
     return cent
 
 

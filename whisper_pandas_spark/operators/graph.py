@@ -10,11 +10,10 @@ Design points (all shared with operators/kmeans.py, the other iterative
 trainer):
 
 - **Checkpointed iterations.** Every Lloyd-style round ends in an eager
-  ``localCheckpoint`` so the downstream plan holds ONE iteration's
-  operators over a materialized rank table — constant in ``iters``
-  instead of compounding (the kmeans change measured 17 -> 5 exchanges).
-  On a real cluster this becomes ``checkpoint()`` against the
-  checkpoint dir; the semantics are identical.
+  stage barrier (``stage.stage_materialize``) so the downstream plan
+  holds ONE iteration's operators over a materialized rank table —
+  constant in ``iters`` instead of compounding (the kmeans change
+  measured 17 -> 5 exchanges).
 - **Partition-order-independent arithmetic.** Per-edge contributions are
   cast to DECIMAL(38,12) before the per-node sum, so the fold is exact
   and the result is bit-identical under any partitioning — the same
@@ -32,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def pagerank(
     edges: DataFrame,
@@ -39,7 +40,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -81,9 +81,7 @@ def pagerank(
     # every iteration (rank is the only moving part)
     eo = e.join(outdeg, "src").persist()
     teleport = (F.lit(1.0) - F.lit(damping)) / F.lit(n)
-    ranks = nodes.withColumn("rank", F.lit(1.0) / F.lit(n))
-    if checkpoint:
-        ranks = ranks.localCheckpoint(eager=True)
+    ranks = stage_materialize(nodes.withColumn("rank", F.lit(1.0) / F.lit(n)))
     for _ in range(iters):
         contrib = eo.join(
             ranks.select(F.col("node").alias("src"), "rank"), "src"
@@ -100,8 +98,7 @@ def pagerank(
                 * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
             ).alias("rank"),
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = stage_materialize(ranks)
     for cached in (e, nodes, eo):
         cached.unpersist()
     return ranks
@@ -126,7 +123,7 @@ def triangle_participation(edges: DataFrame, src: str = "src", dst: str = "dst")
     Returns (node, n_tri) — each triangle credits all three corners —
     exact integers, so a SQL oracle replays it verbatim.
     """
-    und = (
+    und = stage_materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
@@ -137,7 +134,6 @@ def triangle_participation(edges: DataFrame, src: str = "src", dst: str = "dst")
         # orientation join; materialize it once (edge-list-sized — the
         # standard practice for distributed triangle counting) instead
         # of re-deriving the upstream pair-generation 3x.
-        .localCheckpoint(eager=True)
     )
     deg = (
         und.select(F.col("u").alias("k"))
@@ -150,7 +146,7 @@ def triangle_participation(edges: DataFrame, src: str = "src", dst: str = "dst")
     first_u = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    ori = (
+    ori = stage_materialize(
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -158,7 +154,6 @@ def triangle_participation(edges: DataFrame, src: str = "src", dst: str = "dst")
             F.when(first_u, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
         # Scanned three times by the wedge join below — same rationale.
-        .localCheckpoint(eager=True)
     )
     e1 = ori.select(F.col("s").alias("a"), F.col("t").alias("b"))
     e2 = ori.select(F.col("s").alias("b"), F.col("t").alias("c"))
@@ -220,10 +215,9 @@ def label_propagation(
     count is exactly 1 and "most frequent, ties to smallest" collapses
     to ``min(neighbor)`` — one map-side-combined hash aggregate.
 
-    Labels checkpoint per round (localCheckpoint — `checkpoint()` on a
-    real cluster) so plan depth is constant in `iters`, the same
-    discipline as pagerank/kmeans above. Synchronous LPA on
-    bipartite-ish structures can oscillate — callers pick `iters`
+    Labels pass a stage barrier per round so plan depth is constant in
+    `iters`, the same discipline as pagerank/kmeans above. Synchronous
+    LPA on bipartite-ish structures can oscillate — callers pick `iters`
     (small, as recommended in the paper) rather than iterate to
     convergence.
 
@@ -236,7 +230,7 @@ def label_propagation(
     shp = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    # persist (not localCheckpoint): rounds 2..n re-read the cache, and
+    # persist (not a stage barrier): rounds 2..n re-read the cache, and
     # the 2|E| blocks are freed before returning instead of leaking in
     # the block manager until the ContextCleaner runs (bfs_distances
     # discipline); round 1 materializes it lazily inside its own job.
@@ -280,7 +274,7 @@ def label_propagation(
             pick = both.groupBy(F.col("a").alias("node")).agg(
                 F.min("b").alias("label")
             )
-            labels = pick.localCheckpoint(eager=True)
+            labels = stage_materialize(pick)
             continue
         # node-sized build side hash-joins against the cached edge
         # layout — no sort of either side (the SMJ alternative re-sorts
@@ -310,7 +304,7 @@ def label_propagation(
         # pick covers EVERY node by construction: nodes derive from the
         # edge endpoints, so each has >= 1 neighbor and therefore >= 1
         # neighbor-label row — no per-round left-join-coalesce needed.
-        labels = pick.localCheckpoint(eager=True)
+        labels = stage_materialize(pick)
     if labels is None:  # iters == 0: every node keeps its own label
         nodes = both.select(F.col("a").alias("node")).distinct()
         return nodes.select("node", F.col("node").alias("label"))
@@ -327,15 +321,14 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    checkpoint: bool = True,
     prepared: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances, bounded at ``max_hops``.
 
     ``prepared=True``: the caller guarantees ``edges`` is already
-    distinct AND cheap to re-scan (e.g. a localCheckpoint/checkpoint
-    union), so the internal distinct+persist is skipped — the round-15
-    path for callers that dedup the DIRECTED list before symmetrizing
+    distinct AND cheap to re-scan (e.g. a union of stage barriers), so
+    the internal distinct+persist is skipped — the round-15 path for
+    callers that dedup the DIRECTED list before symmetrizing
     (half the dedup exchange, and the union branches read materialized
     blocks instead of re-running the edge derivation per round).
 
@@ -360,12 +353,11 @@ def bfs_distances(
     distance table is node-sized; the edge list is scanned once per
     round and never re-keyed, so bucketing edges by ``src`` makes the
     frontier join exchange-free on a real cluster. ONLY the frontier
-    checkpoints per round (eager ``localCheckpoint``; ``checkpoint()``
-    on a cluster): the hop levels are disjoint by construction, so the
-    final distance table is assembled as one union of the checkpointed
-    frontiers instead of re-materializing a growing copy of the whole
-    table every round (round 14 — halves the checkpoint jobs, and the
-    anti-join reads the same checkpointed blocks).
+    passes a stage barrier per round: the hop levels are disjoint by
+    construction, so the final distance table is assembled as one union
+    of the materialized frontiers instead of re-materializing a growing
+    copy of the whole table every round (round 14 — halves the barrier
+    jobs, and the anti-join reads the same materialized blocks).
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
@@ -375,11 +367,11 @@ def bfs_distances(
     )
     if not prepared:
         e = e.distinct().persist()
-    frontier = sources.select(
-        F.col(node).cast("long").alias("node")
-    ).distinct().withColumn("dist", F.lit(0).cast("int"))
-    if checkpoint:
-        frontier = frontier.localCheckpoint(eager=True)
+    frontier = stage_materialize(
+        sources.select(F.col(node).cast("long").alias("node"))
+        .distinct()
+        .withColumn("dist", F.lit(0).cast("int"))
+    )
     frontiers = [frontier]
     seen = frontier.select("node")
     for _ in range(max_hops):
@@ -390,9 +382,7 @@ def bfs_distances(
             .groupBy(F.col("dst").alias("node"))
             .agg((F.min("dist") + F.lit(1)).cast("int").alias("dist"))
         )
-        frontier = reached.join(seen, "node", "left_anti")
-        if checkpoint:
-            frontier = frontier.localCheckpoint(eager=True)
+        frontier = stage_materialize(reached.join(seen, "node", "left_anti"))
         frontiers.append(frontier)
         seen = seen.unionByName(frontier.select("node"))
     if not prepared:
@@ -409,7 +399,6 @@ def kcore(
     max_rounds: int = 8,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """k-core decomposition by synchronous peeling, bounded at
     ``max_rounds``.
@@ -448,9 +437,9 @@ def kcore(
         .persist()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    alive = deg.where(F.col("deg") >= k).select("src", "deg")
-    if checkpoint:
-        alive = alive.localCheckpoint(eager=True)
+    alive = stage_materialize(
+        deg.where(F.col("deg") >= k).select("src", "deg")
+    )
     prev_n = alive.count()
     for _ in range(max_rounds - 1):
         nodes = alive.select(F.col("src").alias("n"))
@@ -458,9 +447,9 @@ def kcore(
             nodes.withColumnRenamed("n", "src"), "src", "left_semi"
         ).join(nodes.withColumnRenamed("n", "dst"), "dst", "left_semi")
         deg = ee.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        alive = deg.where(F.col("deg") >= k).select("src", "deg")
-        if checkpoint:
-            alive = alive.localCheckpoint(eager=True)
+        alive = stage_materialize(
+            deg.where(F.col("deg") >= k).select("src", "deg")
+        )
         n = alive.count()
         if n == prev_n:
             break  # fixpoint: further rounds are no-ops

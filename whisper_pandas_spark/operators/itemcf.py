@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def item_similarity_topk(
     baskets: DataFrame,
@@ -66,8 +68,8 @@ def item_similarity_topk(
             inc.join(bsz.where(F.col("__n") <= max_basket), "b")
             .drop("__n")
         )
-    item_cnt = inc.groupBy("item").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
+    item_cnt = stage_materialize(
+        inc.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
     )
     a = inc.select(F.col("b").alias("b"), F.col("item").alias("i"))
     bb = inc.select(F.col("b").alias("b"), F.col("item").alias("j"))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from whisper_pandas_spark.operators.similarity import ivf_assign
+from whisper_pandas_spark.stage import stage_materialize
 
 
 def kmeans_cosine(
@@ -60,7 +61,7 @@ def kmeans_cosine(
 
     ``checkpoint=True`` (the DEFAULT — it is the production shape for
     iterative training) materializes the (tiny, k-row) centroid frame
-    after every iteration with an eager ``localCheckpoint``, truncating
+    after every iteration with an eager stage barrier, truncating
     lineage so the downstream plan contains ONE iteration's operators
     regardless of ``iters``. ``checkpoint=False`` compounds the
     iterations into a single plan whose exchange count grows linearly
@@ -115,7 +116,7 @@ def kmeans_cosine(
             ).alias("embedding")
         ).select(F.col("cell").alias("cid"), "embedding")
         if checkpoint:
-            cent = cent.localCheckpoint(eager=True)
+            cent = stage_materialize(cent)
 
     return cent
 
@@ -156,7 +157,7 @@ def int8_codes(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     identical IEEE chain — cast float64, s = max(|x|, initial 0.0),
     floor(x / s * 127.0 + 0.5) — element-for-element bit-equal
     (pytest-pinned against the expression form), all-zero vectors map
-    to all-zero codes.
+    to all-zero codes, and a NULL vector maps to a NULL code.
     """
     import numpy as np
     import pandas as pd
@@ -170,7 +171,8 @@ def int8_codes(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             vecs = list(pdf["_v"])
-            if len({len(v) for v in vecs}) == 1 and len(vecs[0]) > 0:
+            lens = {-1 if v is None else len(v) for v in vecs}
+            if len(lens) == 1 and min(lens) > 0:
                 x = np.array(vecs, dtype=np.float64)  # n x dim
                 s = np.abs(x).max(axis=1, initial=0.0)
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -179,9 +181,12 @@ def int8_codes(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
                     )
                 q[s == 0.0] = 0.0
                 out = q.astype(np.int64).tolist()
-            else:  # ragged/empty rows: per-row, same arithmetic
+            else:  # ragged/empty/NULL rows: per-row, same arithmetic
                 out = []
                 for vec in vecs:
+                    if vec is None:
+                        out.append(None)
+                        continue
                     x = np.asarray(vec, dtype=np.float64)
                     s = np.abs(x).max(initial=0.0)
                     if s == 0.0:
@@ -331,17 +336,15 @@ def kmeans_int8(
     # a small single-file fixture arrives as ONE partition, which would
     # run every Arrow assign pass on one worker (_spread docstring);
     # at real scale the scan already arrives wide and this is a no-op.
-    # localCheckpoint materializes the quantization ONCE: the iteration
+    # the stage barrier materializes the quantization ONCE: the iteration
     # runs 2-3 jobs over `codes` per Lloyd step — without the
-    # checkpoint every job re-runs the full quantization Arrow pass
+    # barrier every job re-runs the full quantization Arrow pass
     # over its upstream lineage (measured 2x total at the sf1 stress,
     # back when the pass was still the interpreted expression form).
     codes = (
         codes_df
         if codes_df is not None
-        else _spread(int8_codes(df, id_col, vec_col)).localCheckpoint(
-            eager=True
-        )
+        else stage_materialize(_spread(int8_codes(df, id_col, vec_col)))
     )
     init_rows = codes.orderBy(id_col).limit(k).collect()
     if len(init_rows) < k:

@@ -36,8 +36,8 @@ Scale shape:
 - scoring joins the stream back to the count tables on their keys —
   plain hash joins whose build sides are the vocab-bounded tables;
 - per-document reduction is one groupBy(doc) ORDER-PINNED ln-p fold;
-- the stream and the c123 root table materialize once
-  (localCheckpoint) — seven consumers otherwise re-derive the corpus
+- the stream and the c123 root table materialize once (stage
+  barriers) — seven consumers otherwise re-derive the corpus
   lineage.
 
 Determinism: all counts are exact BIGINTs; each probability is a fixed
@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.stage import stage_materialize
 
 KN_DISCOUNT = 0.75
 BOS = "<s>"
@@ -88,20 +90,19 @@ def kn_trigram_score(
     (<s> <s> </s> is not formed — a token-less doc yields exactly one
     trigram (<s>, <s>, </s>)), so every input row has an output row.
     """
-    # eager localCheckpoint: the stream feeds SEVEN consumers (six count
+    # eager stage barrier: the stream feeds SEVEN consumers (six count
     # tables + the scoring join) — without it each one re-derives the
     # tokenize/window lineage, i.e. seven corpus scans (the
     # pipeline_corpus_end_to_end lesson; checkpoint blocks GC-release
     # with the frame, unlike persist)
-    tri = trigram_stream(df, id_col, text_col).localCheckpoint(eager=True)
+    tri = stage_materialize(trigram_stream(df, id_col, text_col))
     grams = tri.select("w1", "w2", "w3")
 
     # c123 is the vocab-bounded root of every other count table —
     # materialize it once instead of re-aggregating the stream 5x
-    c123 = (
+    c123 = stage_materialize(
         grams.groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c123"))
-        .localCheckpoint(eager=True)
     )
     return kn_score_from_counts(tri, c123, id_col, discount)
 

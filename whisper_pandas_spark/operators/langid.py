@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def _char_ngrams(df: DataFrame, text_col: str, ns: Sequence[int]) -> DataFrame:
     """Explode lower(text) into all character n-grams for each n in *ns*
@@ -227,9 +229,13 @@ def train_and_classify(
 
         import pandas as pd
 
+        # Doc rows leave with their input batch; only the per-language
+        # training Counter (vocab-bounded) lives to the end of the task.
+        # ``is_doc`` tells the two row kinds apart, so a NULL doc id is
+        # an ordinary document.
         per_lang: dict = {}
-        ids_out, grams_out = [], []
         for pdf in batches:
+            ids_out, grams_out = [], []
             for doc_id, lang, text in zip(
                 pdf.iloc[:, 0], pdf.iloc[:, 1], pdf.iloc[:, 2]
             ):
@@ -246,38 +252,38 @@ def train_and_classify(
                     ]
                     ids_out.append(doc_id)
                     grams_out.append([g for g, _cnt in top])
-        if ids_out:
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids_out,
-                    "lang": None,
-                    "g": None,
-                    "c": None,
-                    "grams": grams_out,
-                }
-            )
+            if ids_out:
+                yield pd.DataFrame(
+                    {
+                        "is_doc": True,
+                        "doc_id": ids_out,
+                        "lang": None,
+                        "g": None,
+                        "c": None,
+                        "grams": grams_out,
+                    }
+                )
         rows = [
-            (None, lang, g, int(v), None)
+            (False, None, lang, g, int(v), None)
             for lang, cc in per_lang.items()
             for g, v in cc.items()
         ]
         if rows:
             yield pd.DataFrame(
-                rows, columns=["doc_id", "lang", "g", "c", "grams"]
+                rows, columns=["is_doc", "doc_id", "lang", "g", "c", "grams"]
             )
 
-    combined = (
+    combined = stage_materialize(
         spread.select(F.col(id_col), F.col(lang_col), F.col(text_col))
         .mapInPandas(
             _pass1,
-            f"doc_id {id_type}, lang string, g string, c long,"
-            " grams array<string>",
+            f"is_doc boolean, doc_id {id_type}, lang string, g string,"
+            " c long, grams array<string>",
         )
-        .localCheckpoint(eager=True)
     )
     w_lang = Window.partitionBy("lang").orderBy(F.desc("__c"), F.col("g"))
     profiles = (
-        combined.where(F.col("doc_id").isNull())
+        combined.where(~F.col("is_doc"))
         .groupBy("lang", "g")
         .agg(F.sum("c").alias("__c"))
         .withColumn("lr", F.row_number().over(w_lang))
@@ -316,9 +322,7 @@ def train_and_classify(
                     }
                 )
 
-    docs = combined.where(F.col("doc_id").isNotNull()).select(
-        F.col("doc_id"), F.col("grams")
-    )
+    docs = combined.where(F.col("is_doc")).select("doc_id", "grams")
     return docs.mapInPandas(
         classify, f"`{id_col}` {id_type}, pred_lang string, lang_dist long"
     )
@@ -345,10 +349,9 @@ def _train_and_classify_sql(
     grams = _char_ngrams(df, text_col, ns).select(
         F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang"), "g"
     )
-    dc = (
+    dc = stage_materialize(
         grams.groupBy("doc_id", "lang", "g")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
     )
     w_doc = Window.partitionBy("doc_id").orderBy(F.desc("__c"), F.col("g"))
     doc_prof = (

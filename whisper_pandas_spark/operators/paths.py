@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def transition_matrix(
     df: DataFrame,
@@ -47,7 +49,7 @@ def transition_matrix(
     Rows order by (src, dst) for a stable result.
     """
     w = Window.partitionBy(entity_col).orderBy(time_col, tiebreak_col)
-    steps = (
+    steps = stage_materialize(
         df.select(
             F.col(state_col).alias("src"),
             F.lead(state_col).over(w).alias("dst"),
@@ -57,7 +59,6 @@ def transition_matrix(
         .agg(F.count(F.lit(1)).alias("n"))
         # |states|^2-sized; materialize so the per-source totals below
         # re-aggregate THIS table instead of re-running the raw window.
-        .localCheckpoint(eager=True)
     )
     totals = steps.groupBy(F.col("src").alias("src2")).agg(
         F.sum("n").alias("n_src")

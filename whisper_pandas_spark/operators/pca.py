@@ -38,6 +38,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 PCA_ITERS = 10
 
 
@@ -45,7 +47,7 @@ def _centered_codes(df: DataFrame, id_col: str, vec_col: str, dim: int):
     """(codes frame with qc = q - floored-int-mean, and the mean list)."""
     from whisper_pandas_spark.operators.kmeans import int8_codes
 
-    codes = int8_codes(df, id_col, vec_col).localCheckpoint(eager=True)
+    codes = stage_materialize(int8_codes(df, id_col, vec_col))
     mu_rows = (
         codes.select(F.posexplode("q").alias("d", "v"))
         .groupBy("d")
@@ -145,7 +147,7 @@ def pca_top_component(
     import pandas as pd
 
     qc, _ = _centered_codes(df, id_col, vec_col, dim)
-    qc = qc.localCheckpoint(eager=True)
+    qc = stage_materialize(qc)
     c = gram_matrix(qc, dim)
     v, norm = power_iterate(c, iters)
     eig = round(norm, 6)
@@ -193,7 +195,7 @@ def abtt_correct(
     import pandas as pd
 
     qc, _ = _centered_codes(df, id_col, vec_col, dim)
-    qc = qc.localCheckpoint(eager=True)
+    qc = stage_materialize(qc)
     c = gram_matrix(qc, dim)
     v, _ = power_iterate(c, iters)
     varr = np.asarray(v, dtype=np.float64)

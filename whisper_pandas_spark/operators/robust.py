@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def _median_of_counts(cnt: DataFrame, gcols: Sequence[str], col: str, out: str) -> DataFrame:
     """Per-group exact weighted median over a (group..., value, __c)
@@ -65,7 +67,7 @@ def robust_mad_stats(
     The raw rows are scanned EXACTLY ONCE — the first groupBy collapses
     them to the per-group distinct-value count table (bounded by value
     cardinality, which the micro-unit quantization caps), which is then
-    materialized (localCheckpoint) and carries the rest of the
+    materialized (stage barrier) and carries the rest of the
     computation: deviations re-key the COUNT table by |x - med| and
     re-sum, so the MAD and the outlier count never touch raw data
     again."""
@@ -73,13 +75,12 @@ def robust_mad_stats(
     v = df.where(F.col(value_col).isNotNull()).select(
         *gcols, F.round(F.col(value_col) * scale).cast("long").alias("x")
     )
-    cnt = (
+    cnt = stage_materialize(
         v.groupBy(*gcols, "x")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
     )
     med = _median_of_counts(cnt, gcols, "x", "med_micro")
-    dev_cnt = (
+    dev_cnt = stage_materialize(
         cnt.join(F.broadcast(med), gcols)
         .select(
             *gcols,
@@ -88,7 +89,6 @@ def robust_mad_stats(
         )
         .groupBy(*gcols, "d")
         .agg(F.sum("__c").alias("__c"))
-        .localCheckpoint(eager=True)
     )
     mad = _median_of_counts(dev_cnt, gcols, "d", "mad_micro").drop("__n")
     out = (

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.operators.kmeans import int8_codes, kmeans_int8
+from whisper_pandas_spark.stage import stage_materialize
 
 # theta = 0.97 -> theta^2 = 9409/10000 (exact rational)
 THETA_NUM = 9409
@@ -91,9 +92,7 @@ def semdedup(
 
     # quantize the corpus ONCE: the materialized code frame feeds both
     # the k-means iterations and the pairwise cell stage
-    codes = _spread(int8_codes(df, id_col, vec_col)).localCheckpoint(
-        eager=True
-    )
+    codes = stage_materialize(_spread(int8_codes(df, id_col, vec_col)))
     # keep_codes: the final assign pass already reads every code, so
     # the q column rides along for free — the former
     # assigned-join-codes (a full id-keyed shuffle of BOTH sides) is

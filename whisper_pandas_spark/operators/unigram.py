@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.operators.bpe_train import _word_vocab
+from whisper_pandas_spark.stage import stage_materialize
 
 _MAX_WORD = 64  # lattice cost is O(len * max_piece_len); cap abusive words
 
@@ -180,7 +181,7 @@ def unigram_train(
     if max_piece_len < 1:
         raise ValueError("max_piece_len must be >= 1")
     spark = df.sparkSession
-    words = _word_vocab(df, text_col).localCheckpoint(eager=True)
+    words = stage_materialize(_word_vocab(df, text_col))
     if seed_size is None:
         seed_size = max(vocab_size * 4, 16)
     seed = _seed_vocab(words, max_piece_len, seed_size).collect()

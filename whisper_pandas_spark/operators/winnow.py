@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 #: cross-engine hash: first 15 md5 hex chars of "win:<gram>" as BIGINT
 #: (same family as operators/sketches.py `_kmv_hash`).
 HASH_PREFIX = "win"
@@ -243,15 +245,13 @@ def winnow_overlap_pairs(
       max_fp_docs^2 and is the documented recall trade;
     - the pair count is a partial aggregation on (doc_i, doc_j).
 
-    The distinct (id, fp) table is eager-localCheckpointed: it feeds
+    The distinct (id, fp) table is an eager stage barrier: it feeds
     the stop-fingerprint count AND both self-join sides, so without the
     barrier the whole upstream fingerprint build re-runs once per
     consumer (4 Arrow passes observed in the round-14 plan audit);
     narrow by construction, blocks GC-release with the DataFrame.
     """
-    distinct_fps = (
-        fps.select(id_col, "fp").distinct().localCheckpoint(eager=True)
-    )
+    distinct_fps = stage_materialize(fps.select(id_col, "fp").distinct())
     small = (
         distinct_fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("nd"))

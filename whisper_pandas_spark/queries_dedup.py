@@ -40,6 +40,7 @@ from whisper_pandas_spark.operators.dedup import (
     simhash_arrow,
     simhash_pairs,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 
 def _finalize(df: DataFrame, *extra_cached: DataFrame) -> DataFrame:
@@ -48,7 +49,7 @@ def _finalize(df: DataFrame, *extra_cached: DataFrame) -> DataFrame:
     stay pinned by Spark's CacheManager for the life of the session. The
     checkpointed result blocks are GC-managed, so downstream collects
     still reuse them without a leak."""
-    out = df.localCheckpoint(eager=True)
+    out = stage_materialize(df)
     release_cached(df)
     for c in extra_cached:
         c.unpersist()
@@ -277,7 +278,7 @@ def _minhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = table(spark, sf_dir, "documents")
         sig = minhash_signature_arrow(docs, "doc_id", "text", NUM_PERM).persist()
         pairs = lsh_pairs(sig, BANDS, ROWS, JACCARD_T)
-        out = pairs.localCheckpoint(eager=True)
+        out = stage_materialize(pairs)
         sig.unpersist()
         for c in getattr(pairs, "_wps_cached", []):
             c.unpersist()
@@ -1241,7 +1242,7 @@ def stream_er_linkage_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = table(spark, sf_dir, "customer")
-    recs = L.er_records(cust).localCheckpoint(eager=True)
+    recs = stage_materialize(L.er_records(cust))
     clean = recs.filter(F.col("src") == "clean")
     dirty = recs.filter(F.col("src") == "dirty")
     d = tempfile.mkdtemp(prefix="wps_streamer_")

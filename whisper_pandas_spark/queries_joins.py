@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
 from whisper_pandas_spark.operators.asof import asof_join, range_join
+from whisper_pandas_spark.stage import stage_materialize
 
 
 @register(
@@ -1413,13 +1414,12 @@ def join_q20ish_nested_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
     )
     s = F.broadcast(table(spark, sf_dir, "supplier"))
-    q = (
+    q = stage_materialize(
         li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.round("l_quantity").cast("long")).alias("sq"))
         # (part, supplier)-sized and consumed twice (threshold join +
         # per-part totals); materialize so lineitem is scanned ONCE
-        .localCheckpoint(eager=True)
     )
     pt = q.groupBy(F.col("l_partkey").alias("pk")).agg(F.sum("sq").alias("pq"))
     hot = (

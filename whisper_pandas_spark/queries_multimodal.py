@@ -21,6 +21,7 @@ from whisper_pandas_spark.operators.multimodal import (
     sample_frames,
     with_payload,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 
 @register(
@@ -476,7 +477,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(
         "doc_i", "doc_j", F.col("hamming").cast("int").alias("hamming")
     ).orderBy("doc_i", "doc_j")
-    out = out.localCheckpoint(eager=True)
+    out = stage_materialize(out)
     for c in getattr(pairs, "_wps_cached", []):
         c.unpersist()
     return out.orderBy("doc_i", "doc_j")
@@ -591,7 +592,7 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select(
         "doc_i", "doc_j", F.col("hamming").cast("int").alias("hamming")
     ).orderBy("doc_i", "doc_j")
-    out = out.localCheckpoint(eager=True)
+    out = stage_materialize(out)
     for c in getattr(pairs, "_wps_cached", []):
         c.unpersist()
     return out.orderBy("doc_i", "doc_j")
@@ -715,7 +716,7 @@ def mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pairs.select("doc_i", "doc_j", "total_hamming").orderBy(
         "doc_i", "doc_j"
     )
-    out = out.localCheckpoint(eager=True)
+    out = stage_materialize(out)
     for c in getattr(pairs, "_wps_cached", []):
         c.unpersist()
     return out.orderBy("doc_i", "doc_j")
@@ -794,7 +795,7 @@ def mm_phash_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pairs = phash_neardup_pairs(imgs, "img_id", max_hamming=6)
-    pairs_ck = pairs.localCheckpoint(eager=True)
+    pairs_ck = stage_materialize(pairs)
     for c in getattr(pairs, "_wps_cached", []):
         c.unpersist()
     kept = canonical_filter(
@@ -903,8 +904,6 @@ def pipeline_multimodal_curation(
         )
     )
     pairs = phash_neardup_pairs(imgs, "img_id", max_hamming=6)
-    from whisper_pandas_spark.stage import stage_materialize
-
     pairs_ck = stage_materialize(pairs)
     for c in getattr(pairs, "_wps_cached", []):
         c.unpersist()

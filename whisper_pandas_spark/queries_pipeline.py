@@ -31,6 +31,7 @@ from whisper_pandas_spark.operators.sampling import (
     split_assign,
 )
 from whisper_pandas_spark.operators.skew import salted_agg_count_sum, salted_join
+from whisper_pandas_spark.stage import stage_materialize
 
 
 SAMPLE_FRAC = 0.25
@@ -450,7 +451,6 @@ def pipeline_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.operators.decontam import ngram_contamination
     from whisper_pandas_spark.operators.packing import pack_bins
     from whisper_pandas_spark.operators.textstats import quality_gate_filter
-    from whisper_pandas_spark.stage import stage_materialize
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     gated = quality_gate_filter(docs, "doc_id", "text")
@@ -465,8 +465,7 @@ def pipeline_corpus_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-train union), and the caller has no handle to unpersist — a
     # persist here would pin a fresh copy in the CacheManager on every
     # bench rep / driver run (the round-11 ADVICE leak class; checkpoint
-    # blocks are GC-released with the DataFrame). stage_materialize
-    # binds to a RELIABLE checkpoint when the cluster configures one.
+    # blocks are GC-released with the DataFrame).
     assigned = stage_materialize(
         split_assign(deduped, "doc_id", TEST_FRAC, VAL_FRAC)
     )
@@ -1084,7 +1083,6 @@ def pipeline_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.operators.lexical import token_entropy
     from whisper_pandas_spark.operators.redact import pii_redact
     from whisper_pandas_spark.operators.sampling import temperature_rebalance
-    from whisper_pandas_spark.stage import stage_materialize
 
     docs = table(spark, sf_dir, "documents")
     buddy = docs.select(
@@ -1094,17 +1092,15 @@ def pipeline_curation_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix = b0.select(
         "doc_id", "lang", F.expr(_cur_fixture_sql("STRING")).alias("text")
     )
-    # Stage-boundary materialization (stage.py:stage_materialize —
-    # reliable checkpoint when the context has a checkpoint dir, the
-    # cluster deployment mode; eager localCheckpoint otherwise): red
-    # feeds BOTH the entropy branch and the funnel frame, gate feeds
-    # dedup + the output frame, g2 feeds the survivor counts + the
+    # Stage barriers (stage.py:stage_materialize): red feeds BOTH the
+    # entropy branch and the funnel frame, gate feeds dedup + the
+    # output frame, g2 feeds the survivor counts + the
     # output join — without the barriers each consumer re-evaluates
     # its whole upstream subtree and the plan multiplies to 64 parquet
     # scans of the fixture (measured); with them the corpus is scanned
     # once per stage. SCALE.md "Funnel stage boundaries" has the
-    # 100 TB story; test_round14 pins bit-equality under a fresh
-    # default-config session with a reliable checkpoint dir.
+    # 100 TB story; tests/test_barriers.py pins bit-equality under a
+    # fresh default-config session with a reliable checkpoint dir.
     red = (
         pii_redact(fix, "doc_id", "text")
         .join(fix.select("doc_id", "lang"), "doc_id")
@@ -1229,7 +1225,6 @@ def _doremi_losses(spark: SparkSession, sf_dir: str):
         logreg_train,
     )
     from whisper_pandas_spark.operators.doremi import LOSS_SCALE
-    from whisper_pandas_spark.stage import stage_materialize
 
     docs = table(spark, sf_dir, "documents")
     feats = docs.select(

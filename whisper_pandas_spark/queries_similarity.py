@@ -37,6 +37,7 @@ from whisper_pandas_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_lsh,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 
 DIM = 64
@@ -175,6 +176,10 @@ ORDER BY vec_i, vec_j
 """,
 )
 def _near_dup_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X3/X2 hybrid: embedding-cosine near-dup pairs blocked by label
+    (cluster prior). Equi-join on the blocking key keeps the pair count
+    Σ n_label² instead of n²; at 100 TB the blocking key would be an LSH
+    bucket (sim_topk_lsh's) — identical join shape."""
     from whisper_pandas_spark.operators.similarity import cosine_with_norms, norm
 
     emb = table(spark, sf_dir, "embeddings").select(
@@ -201,14 +206,6 @@ def _near_dup_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_i", "vec_j", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= NEAR_DUP_T)
     )
-
-
-def sim_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3/X2 hybrid: embedding-cosine near-dup pairs blocked by label
-    (cluster prior). Equi-join on the blocking key keeps the pair count
-    Σ n_label² instead of n²; at 100 TB the blocking key would be an LSH
-    bucket (sim_topk_lsh's) — identical join shape."""
-    return _near_dup_pairs_df(spark, sf_dir).orderBy("vec_i", "vec_j")
 
 
 @register(
@@ -782,7 +779,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize eagerly, then release the corpus-wide cell cache (same
     # _finalize discipline as queries_dedup) so repeated driver/bench
     # runs don't pin executor storage
-    out = sem.localCheckpoint(eager=True)
+    out = stage_materialize(sem)
     release_cached(sem)
     return out.orderBy("vec_id")
 
@@ -1413,10 +1410,10 @@ def emb_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = table(spark, sf_dir, "embeddings")
-    codes = int8_codes(emb, "vec_id", "embedding").localCheckpoint(eager=True)
-    proj = rp_project_int8(
-        emb, "vec_id", "embedding", _RP_IN_DIM, RP_OUT_DIM
-    ).localCheckpoint(eager=True)
+    codes = stage_materialize(int8_codes(emb, "vec_id", "embedding"))
+    proj = stage_materialize(
+        rp_project_int8(emb, "vec_id", "embedding", _RP_IN_DIM, RP_OUT_DIM)
+    )
 
     def topk(df: DataFrame, vcol: str, n: int, out_dot: str, out_rnk: str):
         q = df.filter(F.col("vec_id") < _RP_NQ).select(
@@ -1618,9 +1615,7 @@ def emb_abtt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.operators.pca import abtt_correct
 
     emb = table(spark, sf_dir, "embeddings")
-    qa = abtt_correct(emb, "vec_id", "embedding", _PCA_DIM).localCheckpoint(
-        eager=True
-    )
+    qa = stage_materialize(abtt_correct(emb, "vec_id", "embedding", _PCA_DIM))
     q = qa.filter(F.col("vec_id") < _ABTT_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("a").alias("qv")
     )
@@ -2139,10 +2134,9 @@ def emb_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < _ANN_NQ)
-    truth = (
-        cosine_topk(emb, q, K)
-        .select("query_id", "vec_id")
-        .localCheckpoint(eager=True)  # 50 rows, read by all 4 hit joins
+    # 50 rows, read by all 4 hit joins
+    truth = stage_materialize(
+        cosine_topk(emb, q, K).select("query_id", "vec_id")
     )
 
     # 1) LSH-multi: union-of-tables bucket candidates, cosine rerank
@@ -2203,9 +2197,10 @@ def emb_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand3 = ivf_cand(cent3, _PQ_NPROBE)
 
     # 4) JL random projection: top-k by projected integer dot
-    proj = rp_project_int8(
-        emb, "vec_id", "embedding", DIM, RP_OUT_DIM
-    ).localCheckpoint(eager=True)  # Arrow matmul runs once for both sides
+    # Arrow matmul runs once for both sides
+    proj = stage_materialize(
+        rp_project_int8(emb, "vec_id", "embedding", DIM, RP_OUT_DIM)
+    )
     pq_ = proj.filter(F.col("vec_id") < _ANN_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("p").alias("qv")
     )

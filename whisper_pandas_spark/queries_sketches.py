@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.stage import stage_materialize
 
 
 # -- HLL sketch-table rollup ------------------------------------------------
@@ -353,7 +354,7 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize it once so the pairwise self-join reads state rather
     # than recomputing the raw-data pipeline on both sides — exactly what
     # a deployment does by writing the sketch table to parquet
-    merged = kmv_rollup(shards, ("event_type",)).localCheckpoint(eager=True)
+    merged = stage_materialize(kmv_rollup(shards, ("event_type",)))
     ops = kmv_pair_ops(merged, "event_type")
     eps = F.lit(1e-9)
     return ops.select(

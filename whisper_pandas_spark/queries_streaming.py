@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, register_cache, table
 from whisper_pandas_spark.functions.text import duck_minhash_pairs_ctes
+from whisper_pandas_spark.stage import stage_materialize
 
 
 _SINK = "stream_rollup_replay_sink"
@@ -873,12 +874,11 @@ def stream_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     buddy = docs.select(
         F.col("doc_id").alias("bid"), F.col("text").alias("btext")
     )
-    fix = (
+    fix = stage_materialize(
         docs.join(buddy, F.col("bid") == F.col("doc_id") - 1, "left")
         .select(
             "doc_id", "lang", F.expr(_cur_fixture_sql("STRING")).alias("text")
         )
-        .localCheckpoint(eager=True)
     )
     n = fix.count()
     d = tempfile.mkdtemp(prefix="wps_streamcur_")

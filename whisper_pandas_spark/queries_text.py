@@ -26,6 +26,7 @@ from whisper_pandas_spark.operators.textstats import (
     quality_score,
     token_stats,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 
 @register(
@@ -1852,7 +1853,7 @@ def stream_kn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.processAllAvailable()
     q.stop()
     c123 = spark.read.parquet(current_version_path(f"{d}/state"))
-    tri = trigram_stream(docs, "doc_id", "text").localCheckpoint(eager=True)
+    tri = stage_materialize(trigram_stream(docs, "doc_id", "text"))
     return kn_score_from_counts(tri, c123, "doc_id").orderBy("doc_id")
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.stage import stage_materialize
 
 
 # ---------------------------------------------------------------------------
@@ -185,9 +186,9 @@ def sample_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lineage so both consumers (quota + totals) read evaluated
     # columns; at 100 TB the equivalent is writing the keyed projection
     # once, exactly what a CCNet-style pipeline does anyway.
-    keyed = url_key_df(urls, "url").select(
-        "doc_id", "reg_domain"
-    ).localCheckpoint(eager=True)
+    keyed = stage_materialize(
+        url_key_df(urls, "url").select("doc_id", "reg_domain")
+    )
     kept = per_group_quota(keyed, "reg_domain", "doc_id", 5)
     totals = keyed.groupBy("reg_domain").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
@@ -620,13 +621,15 @@ def _web_funnel(spark: SparkSession, sf_dir: str, mangler=None) -> DataFrame:
     c4 = c4_line_filter(keyed, "doc_id", "clean1").join(
         keyed.select("doc_id", "reg_domain"), "doc_id"
     )
-    # eager localCheckpoint: the funnel reads base/d1/d2 from FOUR
+    # eager stage barrier: the funnel reads base/d1/d2 from FOUR
     # aggregation consumers — without it each one re-runs the whole
     # strip+C4 chain (the pipeline_corpus_end_to_end lesson)
-    base = c4.select(
-        "doc_id", "reg_domain", F.col("doc_kept").alias("c4_kept"),
-        F.col("clean_text").alias("clean2"),
-    ).localCheckpoint(eager=True)
+    base = stage_materialize(
+        c4.select(
+            "doc_id", "reg_domain", F.col("doc_kept").alias("c4_kept"),
+            F.col("clean_text").alias("clean2"),
+        )
+    )
     # One fused pass instead of four aggregation consumers + three
     # left joins (round 14, guide §2.4): every stage verdict becomes a
     # per-row FLAG computed by the same two windows the staged form

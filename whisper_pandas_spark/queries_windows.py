@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.stage import stage_materialize
 
 
 @register(
@@ -707,14 +708,14 @@ def stream_attr_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("p_ts"),
         F.round(F.col("value") * 100).cast("bigint").alias("val_cents"),
     )
-    touch = ev.filter(
-        F.col("event_type").isin("view", "click", "signup")
-    ).select(
-        F.col("event_id").alias("t_id"),
-        "user_id",
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("touch_type"),
-    ).localCheckpoint(eager=True)
+    touch = stage_materialize(
+        ev.filter(F.col("event_type").isin("view", "click", "signup")).select(
+            F.col("event_id").alias("t_id"),
+            "user_id",
+            F.col("ts").alias("t_ts"),
+            F.col("event_type").alias("touch_type"),
+        )
+    )
     d = tempfile.mkdtemp(prefix="wps_streamattr_")
     bounds = conv.agg(
         F.min("p_id").alias("lo"), F.max("p_id").alias("hi")

@@ -52,6 +52,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 MAX_MEMBER_BYTES = 1 << 30
 
 
@@ -376,4 +378,4 @@ def write_webdataset_shards(
     )
     # the action: force every task to write, then return the (tiny,
     # checkpointed) manifest so callers can persist it next to the data
-    return manifest.localCheckpoint(eager=True)
+    return stage_materialize(manifest)

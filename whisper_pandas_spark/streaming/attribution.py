@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def _credit_batch(
     conv: DataFrame, touch: DataFrame, lookback_days: int, ppm: int
@@ -94,9 +96,9 @@ def stream_attribution(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        rows = _credit_batch(
-            batch_df, touch, lookback_days, ppm
-        ).localCheckpoint(eager=True)
+        rows = stage_materialize(
+            _credit_batch(batch_df, touch, lookback_days, ppm)
+        )
         cur = current_version_path(f"{base}/credits")
         if cur is None:
             state = rows

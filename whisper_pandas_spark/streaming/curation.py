@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def _funnel_rows(
     batch_df: DataFrame, min_entropy: float, min_tokens: int
@@ -51,14 +53,13 @@ def _funnel_rows(
     from whisper_pandas_spark.operators.lexical import token_entropy
     from whisper_pandas_spark.operators.redact import pii_redact
 
-    red = (
+    red = stage_materialize(  # feeds entropy + the output row
         pii_redact(batch_df, "doc_id", "text")
         .join(batch_df.select("doc_id", "lang"), "doc_id")
         .withColumn(
             "pii_found",
             (F.col("n_emails") + F.col("n_ipv4") + F.col("n_phones")) > 0,
         )
-        .localCheckpoint(eager=True)  # feeds entropy + the output row
     )
     ent = token_entropy(red, "doc_id", "clean_text").select(
         "doc_id", "n_tokens", "entropy"
@@ -103,8 +104,8 @@ def stream_curation(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        rows = _funnel_rows(batch_df, min_entropy, min_tokens).localCheckpoint(
-            eager=True
+        rows = stage_materialize(
+            _funnel_rows(batch_df, min_entropy, min_tokens)
         )
 
         cur_docs = current_version_path(f"{base}/docs")

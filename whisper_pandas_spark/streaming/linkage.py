@@ -34,6 +34,7 @@ from whisper_pandas_spark.operators.linkage import (
     er_candidates,
     er_score_pairs,
 )
+from whisper_pandas_spark.stage import stage_materialize
 
 
 def stream_linkage(
@@ -58,9 +59,7 @@ def stream_linkage(
             return
         spark = batch_df.sparkSession
         recs = clean_df.unionByName(batch_df)
-        pairs = er_score_pairs(er_candidates(recs)).localCheckpoint(
-            eager=True
-        )
+        pairs = stage_materialize(er_score_pairs(er_candidates(recs)))
         cur = current_version_path(f"{base}/pairs")
         if cur is None:
             state = pairs

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.stage import stage_materialize
+
 
 def _bands(df: DataFrame) -> DataFrame:
     keys = F.array(
@@ -80,10 +82,9 @@ def stream_phash_dedup(
             return
         spark = batch_df.sparkSession
         hashes = image_dhash(batch_df, id_col, payload_col)
-        batch_min = (
+        batch_min = stage_materialize(
             hashes.groupBy("dhash")
             .agg(F.min("doc_id").alias("img_id"))
-            .localCheckpoint(eager=True)
         )
         cur = current_version_path(base)
         if cur is None:
