@@ -540,6 +540,10 @@ def main() -> None:
                 "steal_waits": steal_waited,
                 "steal_pct_session": steal_session,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                # host CPUs this process may run on, and the master the
+                # session resolved (local[$SPARK_GRAFT_CPUS] by default)
+                "cpus": len(os.sched_getaffinity(0)),
+                "master": spark.sparkContext.master,
             }
         )
     )

@@ -8,7 +8,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.operators.sampling import hash_sample, split_assign
+from whisper_pandas_spark.operators.sampling import (
+    BUCKET_SPACE,
+    duck_hash_bucket,
+    hash_bucket,
+    hash_sample,
+    split_assign,
+)
 from whisper_pandas_spark.operators.skew import salted_agg_count_sum, salted_join
 
 SF = "/root/testdata/sf0.001"
@@ -40,6 +46,37 @@ def test_split_assign_consistent_and_total(spark):
         again.select("doc_id", F.col("split").alias("s2")), "doc_id"
     )
     assert merged.filter(F.col("s1") != F.col("s2")).count() == 0
+
+
+def test_null_key_hash_bucket_matches_duckdb(spark):
+    """A NULL key has no bucket on either engine: ``hash_sample`` drops
+    the row, as the DuckDB filter does, and ``split_assign`` puts it in
+    ``train`` (the CASE's ELSE)."""
+    import duckdb
+
+    rows = [(1, "doc-1"), (2, "naïve"), (3, None)]
+    df = spark.createDataFrame(rows, "id long, k string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, k VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    b = duck_hash_bucket("k")
+
+    got = {r["id"]: r["b"] for r in df.select("id", hash_bucket(F.col("k")).alias("b")).collect()}
+    want = dict(con.execute(f"SELECT id, {b} FROM t").fetchall())
+    assert got == want and want[3] is None
+
+    full = int(1.0 * BUCKET_SPACE)
+    got = {r["id"] for r in hash_sample(df, "k", 1.0).collect()}
+    want = {i for (i,) in con.execute(f"SELECT id FROM t WHERE {b} < {full}").fetchall()}
+    assert got == want == {1, 2}
+
+    t, v = int(0.5 * BUCKET_SPACE), full
+    got = {r["id"]: r["split"] for r in split_assign(df, "k", 0.5, 0.5).collect()}
+    want = dict(con.execute(
+        f"SELECT id, CASE WHEN {b} < {t} THEN 'test' WHEN {b} < {v} THEN 'val'"
+        " ELSE 'train' END FROM t"
+    ).fetchall())
+    assert got == want and want[3] == "train"
 
 
 def test_salted_join_equals_plain_join_with_planted_skew(spark):
@@ -494,8 +531,6 @@ def test_scd2_from_log_compresses_runs(spark):
 def _naive_mixture(spark, df, quotas):
     """Single-window greedy reference (the oracle's shape)."""
     from pyspark.sql import Window
-
-    from whisper_pandas_spark.operators.sampling import hash_bucket
 
     w = (
         Window.partitionBy("dom")

@@ -12,7 +12,7 @@ from pathlib import Path
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -752,6 +752,15 @@ def test_seasonal_decompose_all_null_when_n_equals_period(spark):
         assert r["trend"] is None and r["seasonal"] is None and r["residual"] is None
 
 
+def _round_half_up(x: float, nd: int) -> float:
+    """Spark's ``round`` on a double: HALF_UP on its decimal form. Python's
+    ``round`` is half-even (0.0078125 -> 0.007812, Spark 0.007813)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP)
+    return float(q)
+
+
 @SLOW
 @given(
     vals=st.lists(
@@ -762,6 +771,7 @@ def test_seasonal_decompose_all_null_when_n_equals_period(spark):
     a=st.sampled_from([0.2, 0.5, 0.9]),
     b=st.sampled_from([0.0, 0.3, 1.0]),
 )
+@example(vals=[1.0, 0.0, 0.96875, 0.0, 0.0], a=0.5, b=1.0)
 def test_holt_forecast_matches_python_fold_property(spark, vals, a, b):
     from pyspark.sql import functions as F
 
@@ -777,5 +787,5 @@ def test_holt_forecast_matches_python_fold_property(spark, vals, a, b):
         bb = b * (a * x + (1.0 - a) * (l + bb) - l) + (1.0 - b) * bb
         l = nl
     r = holt_forecast(df, ("metric",), "ts", "value", a, b, 1).collect()[0]
-    assert abs(r["level"] - round(l, 6)) < 1e-9
-    assert abs(r["slope"] - round(bb, 6)) < 1e-9
+    assert abs(r["level"] - _round_half_up(l, 6)) < 1e-9
+    assert abs(r["slope"] - _round_half_up(bb, 6)) < 1e-9

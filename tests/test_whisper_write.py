@@ -179,3 +179,14 @@ def test_invalid_specs():
         parse_archives("10:100,25:50")
     with pytest.raises(ValueError, match="aggregation"):
         build_wsp_bytes([BASE], [1.0], [(10, 4)], "bogus")
+
+
+@pytest.mark.parametrize(
+    "spec, bad",
+    [("10:0", "10:0"), ("0:10,60:5", "0:10"), ("-10:5", "-10:5")],
+)
+def test_parse_archives_rejects_nonpositive(spec, bad):
+    """A zero-point archive would silently drop every point; a zero or
+    negative resolution used to raise ZeroDivisionError/struct.error."""
+    with pytest.raises(ValueError, match=f"archive '{bad}'"):
+        parse_archives(spec)

@@ -5,7 +5,9 @@
 #
 #     sh tools/ci_check.sh
 #
-# 1. pytest suite
+# 1. pytest suites (tests/ with the Tier-1 geometry: local[nproc] and
+#    a local scratch dir, unless the caller already set them; then
+#    perfbench/tests)
 # 2. oracle sweep at the driver-like local[8]/8-shuffle geometry
 # 3. oracle sweep at local[3]/3-shuffle (odd parallelism flushes out
 #    anything that accidentally depends on partition count)
@@ -16,7 +18,10 @@
 #    task #2)
 set -e
 cd "$(dirname "$0")/.."
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+export SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
 python -m pytest tests/ -q
+python -m pytest perfbench/tests -q
 python tools/oracle_check.py
 ORACLE_MASTER='local[3]' ORACLE_SHUFFLE=3 python tools/oracle_check.py
 python tools/stale_recheck.py 20

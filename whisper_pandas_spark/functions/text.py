@@ -3,23 +3,8 @@
 These are the shared building blocks for the dedup / text-analysis operator
 family (SURVEY.md §2.10 X1–X4). Every primitive here is expressible
 IDENTICALLY in Spark SQL and DuckDB SQL, which is what makes the MinHash /
-SimHash pipelines oracle-able bit-for-bit instead of "rows-only".
-
-The hash family is md5-based: ``hash64(s) = int(md5(s)[:15], 16)`` — a
-60-bit unsigned value that fits a signed BIGINT on both engines:
-
-- Spark : ``cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)``
-- DuckDB : ``('0x' || substr(md5(s), 1, 15))::BIGINT``
-
-(verified equal this session: md5('hello') prefix → 419982666956583591 on
-both). Seeded variants hash ``'{seed}:' || s``.
-
-Scale note: md5-per-shingle is JVM-side whole-stage-codegen work (no Python
-round trip). At 100 TB, ~K permutations × shingles per doc is the dominant
-CPU cost of MinHash; it is embarrassingly parallel, shuffle-free (all
-narrow, per-row), and beats any Python UDF path. If profiling ever demands
-more, the drop-in replacement is a vectorized pandas_udf over xxhash — the
-plumbing stays identical.
+SimHash pipelines oracle-able bit-for-bit instead of "rows-only". The md5
+hash family they hash with lives in :mod:`functions.hashing`.
 """
 
 from __future__ import annotations
@@ -27,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Number of md5 hex chars used for the 60-bit hash (15 chars × 4 bits).
-HASH_HEX_CHARS = 15
-SIMHASH_BITS = 4 * HASH_HEX_CHARS  # 60
+from whisper_pandas_spark.functions.hashing import duck_base_hash32, py_md5_int
 
 
 def tokenize(text: Column | str) -> Column:
@@ -109,38 +92,12 @@ MINHASH_P = (1 << 61) - 1  # Mersenne prime 2^61-1
 def minhash_perm_constants(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs derived from md5 — identical literals
     are embedded in the Spark plan and the DuckDB oracle SQL."""
-    import hashlib
-
     out = []
     for i in range(num_perm):
-        a = int(hashlib.md5(f"minhash-a:{i}".encode()).hexdigest()[:8], 16)
-        b = int(hashlib.md5(f"minhash-b:{i}".encode()).hexdigest()[:15], 16)
+        a = py_md5_int(f"minhash-a:{i}", 8)
+        b = py_md5_int(f"minhash-b:{i}", 15)
         out.append((a % ((1 << 30) - 1) + 1, b % MINHASH_P))
     return out
-
-
-def base_hash32(s: Column) -> Column:
-    """32-bit base hash (md5 prefix) — one md5 per value, permutations are
-    arithmetic on top."""
-    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-
-
-def duck_base_hash32(s_expr: str) -> str:
-    return f"('0x' || substr(md5({s_expr}), 1, 8))::BIGINT"
-
-
-def hash64(s: Column) -> Column:
-    """60-bit deterministic hash of a string column (see module docstring)."""
-    return F.conv(F.substring(F.md5(s), 1, HASH_HEX_CHARS), 16, 10).cast("bigint")
-
-
-def seeded_hash64(s: Column, seed: int) -> Column:
-    """Seeded member of the hash family: hash64('{seed}:' || s)."""
-    return hash64(F.concat(F.lit(f"{seed}:"), s))
-
-
-# DuckDB-side twin of base_hash32 (the query modules inline their own
-# tokenize/shingle SQL next to each oracle for line-by-line diffability).
 
 
 DUCK_TOKS = (

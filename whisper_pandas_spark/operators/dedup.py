@@ -9,7 +9,7 @@ needs, Spark-first:
   distributed sha2 digest: no skew by construction, map-side partial agg,
   scales linearly with executors.
 - **minhash_lsh_pairs** — MinHash signatures (shuffle-free, per-row,
-  whole-stage-codegen md5 family from `functions.text`) → banded LSH
+  whole-stage-codegen md5 family from `functions.hashing`) → banded LSH
   bucketing (shuffle keyed on (band, band_hash) — rows are tiny
   (doc_id + 2 ints), so the shuffle is O(num_bands × docs), NOT O(text)) →
   candidate pairs by self-join within buckets → exact Jaccard verification
@@ -37,14 +37,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from whisper_pandas_spark.functions.text import (
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    base_hash32,
     hash64,
+    py_md5_int,
+)
+from whisper_pandas_spark.functions.text import (
+    MINHASH_P,
+    minhash_perm_constants,
     tokenize,
     word_shingles,
 )
 from whisper_pandas_spark.stage import stage_materialize
 
-SIMHASH_BITS = 60
+SIMHASH_BITS = 4 * HASH_HEX_CHARS  # 60
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -77,12 +84,6 @@ def minhash_signature(
     DuckDB-replicable. Docs with no shingles are dropped (they cannot
     near-dup by shingle overlap).
     """
-    from whisper_pandas_spark.functions.text import (
-        MINHASH_P,
-        base_hash32,
-        minhash_perm_constants,
-    )
-
     # Materialize tokens BEFORE shingling (see word_shingles perf contract).
     toks = df.select(
         F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
@@ -154,19 +155,12 @@ def minhash_signature_arrow(
     import numpy as np
     import pandas as pd
 
-    from whisper_pandas_spark.functions.text import (
-        MINHASH_P,
-        minhash_perm_constants,
-    )
-
     consts = minhash_perm_constants(num_perm)
     A = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
     B = np.array([b for _, b in consts], dtype=np.int64)[:, None]
     n = shingle_n
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         non_alnum = re.compile(r"[^a-z0-9]+")
         for pdf in batches:
             ids, hhs, sigs = [], [], []
@@ -180,12 +174,7 @@ def minhash_signature_arrow(
                     " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
                 }
                 hh = np.fromiter(
-                    (
-                        int.from_bytes(
-                            hashlib.md5(s.encode()).digest()[:4], "big"
-                        )
-                        for s in shingles
-                    ),
+                    (py_md5_int(s, 8) for s in shingles),
                     dtype=np.int64,
                     count=len(shingles),
                 )
@@ -315,7 +304,7 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Arrow-batched SimHash — same values as :func:`simhash_df`, ~20×
     faster (the 60 interpreted bit-vote folds cost ~6 s for 5 000 docs at
     sf0.1; numpy does the bit matrix in microseconds per doc). Tokenize +
-    md5 match functions.text exactly; equality is regression-tested."""
+    md5 match functions.text/hashing exactly; equality is regression-tested."""
     import re
     from typing import Iterator
 
@@ -323,8 +312,6 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     import pandas as pd
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         non_alnum = re.compile(r"[^a-z0-9]+")
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for pdf in batches:
@@ -338,10 +325,7 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                     continue
                 toks = non_alnum.sub(" ", str(text).lower()).strip().split(" ")
                 hs = np.fromiter(
-                    (
-                        int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
-                        for t in toks
-                    ),
+                    (py_md5_int(t, HASH_HEX_CHARS) for t in toks),
                     dtype=np.int64,
                     count=len(toks),
                 )
@@ -367,7 +351,7 @@ def shingle_hashes_arrow(
     """(doc_id, hh[, carry...]) — distinct 32-bit shingle hashes per doc,
     Arrow path.
 
-    Same tokenize/md5 family as functions.text (and the same values as the
+    Same tokenize/md5 family as functions.text/hashing (and the same values as the
     expression pipeline); exists because interpreted shingle generation
     alone costs ~13 s at sf0.1 while this pass is sub-second.
 
@@ -386,8 +370,6 @@ def shingle_hashes_arrow(
     carry = tuple(carry_cols)
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         non_alnum = re.compile(r"[^a-z0-9]+")
         for pdf in batches:
             ids, hhs = [], []
@@ -405,12 +387,7 @@ def shingle_hashes_arrow(
                 }
                 hh = np.unique(
                     np.fromiter(
-                        (
-                            int.from_bytes(
-                                hashlib.md5(s.encode()).digest()[:4], "big"
-                            )
-                            for s in shingles
-                        ),
+                        (py_md5_int(s, 8) for s in shingles),
                         dtype=np.int64,
                         count=len(shingles),
                     )

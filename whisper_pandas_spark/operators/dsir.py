@@ -21,7 +21,7 @@ token counts over the target/raw corpora, and T/R their totals
 Cross-engine determinism
 ------------------------
 Counts, buckets, and totals are exact integers on both engines (md5
-hash family, functions/text.py). The two ln() calls per bucket are the
+hash family, functions/hashing.py). The two ln() calls per bucket are the
 only transcendentals; the per-document combination is a LEFT FOLD over
 (bucket, n_in_doc * lw[bucket]) in sorted bucket order — never an
 engine-ordered SUM — so the only cross-engine slack is a possible
@@ -48,7 +48,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.functions.text import hash64, tokenize
+from whisper_pandas_spark.functions.hashing import seeded_hash64
+from whisper_pandas_spark.functions.text import tokenize
 from whisper_pandas_spark.stage import stage_materialize
 
 N_BUCKETS = 256
@@ -59,7 +60,7 @@ def dsir_bucket(tok: Column) -> Column:
     """md5 feature hash of a token into 0..N_BUCKETS-1 (exact integers
     on both engines; DuckDB twin:
     ``('0x' || substr(md5('dsir:' || tok), 1, 15))::BIGINT % 256``)."""
-    return hash64(F.concat(F.lit(f"{_SEED}:"), tok)) % N_BUCKETS
+    return seeded_hash64(tok, _SEED) % N_BUCKETS
 
 
 def dsir_weights(

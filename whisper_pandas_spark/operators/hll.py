@@ -52,6 +52,12 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    duck_md5_int,
+    keyed_hash64,
+)
+
 #: default register count (2^6); standard error ~ 1.04/sqrt(64) ~ 13%
 M_DEFAULT = 64
 
@@ -74,27 +80,10 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1.0 + 1.079 / m)
 
 
-def _hll_hash(value, seed: int):
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(f"hll{seed}"), F.col(value).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-
-
 def hll_duck_hash(value_sql: str, seed: int = 0) -> str:
     """DuckDB twin of the sketch hash — oracles build on this."""
-    return (
-        f"('0x' || substr(md5('hll{seed}:' || CAST({value_sql} AS VARCHAR)),"
-        " 1, 15))::BIGINT"
+    return duck_md5_int(
+        f"'hll{seed}:' || CAST({value_sql} AS VARCHAR)", HASH_HEX_CHARS
     )
 
 
@@ -126,7 +115,7 @@ def hll_shard_sketches(
     )
     return (
         df.where(F.col(value_col).isNotNull())
-        .select(*keys, _hll_hash(value_col, seed).alias("h"))
+        .select(*keys, keyed_hash64(f"hll{seed}", value_col).alias("h"))
         # h is a 60-bit non-negative BIGINT: use INTEGER div/mod (a
         # float `/` would round above 2^53 and corrupt the payload)
         .selectExpr(*keys, f"h % {m} AS bucket", f"h div {m} AS w")

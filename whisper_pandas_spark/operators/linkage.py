@@ -10,7 +10,7 @@ Everything here is the published probabilistic-linkage recipe
 - **Synthesis** (`er_records`): the TPC-H customer table carries too few
   string fields for realistic linkage, so the operator derives a
   phone + city per customer from md5(custkey) — pure codegen
-  (``conv(substr(md5(..),1,15),16,10)``, the span-corruption idiom) so
+  (``hash64`` of functions/hashing.py, the span-corruption idiom) so
   DuckDB replays every derived byte. A deterministic 25% "dirty" source
   is planted the way ER benchmarks (Febrl, North-Carolina voters) are
   built: one phone digit bumped, one name char deleted, city swapped
@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import hash64
+
 #: Pinned city vocabulary (24 — chosen co-prime with nothing relevant;
 #: index = h % 24). Names are arbitrary labels, only equality matters.
 CITIES = (
@@ -93,13 +95,7 @@ POSSIBLE_T = 18
 
 def _h(tag: str, key_col: str) -> F.Column:
     """60-bit deterministic hash both engines replay byte-identically."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(tag), F.col(key_col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    return hash64(F.concat(F.lit(tag), F.col(key_col).cast("string")))
 
 
 def er_records(customer: DataFrame) -> DataFrame:

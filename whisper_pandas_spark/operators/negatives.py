@@ -2,7 +2,7 @@
 
 `negative_samples` — for every user in an interaction log, k items the
 user did NOT interact with, drawn pseudo-randomly but DETERMINISTICALLY
-from the engine's cross-engine md5 hash family (functions/text.py): the
+from the engine's cross-engine md5 hash family (functions/hashing.py): the
 i-th candidate for user u is `base_hash32(u || ':' || i) mod n_items`.
 Candidates that collide with a real interaction (or repeat an earlier
 candidate) are discarded and the oversampled tail fills the gap — the
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from whisper_pandas_spark.functions.text import base_hash32
+from whisper_pandas_spark.functions.hashing import base_hash32
 
 
 def negative_samples(

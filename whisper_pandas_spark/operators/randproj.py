@@ -30,9 +30,9 @@ reduction every sim_* entry uses, but over out_dim-element arrays.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
+
+from whisper_pandas_spark.functions.hashing import duck_md5_int, py_md5_int
 
 RP_OUT_DIM = 16
 RP_PREFIX = "rp"
@@ -40,17 +40,17 @@ RP_PREFIX = "rp"
 
 def rp_sign(d: int, j: int) -> int:
     """+1 / -1 from the first md5 hex digit of 'rp:<d>:<j>' (even -> +1)."""
-    h = hashlib.md5(f"{RP_PREFIX}:{d}:{j}".encode()).hexdigest()
-    return 1 if int(h[0], 16) % 2 == 0 else -1
+    return 1 if py_md5_int(f"{RP_PREFIX}:{d}:{j}", 1) % 2 == 0 else -1
 
 
 def rp_duck_sign(d_sql: str, j_sql: str) -> str:
     """DuckDB twin of :func:`rp_sign` — oracles build on this."""
-    return (
-        f"(CASE WHEN ('0x' || substr(md5('{RP_PREFIX}:' ||"
-        f" CAST({d_sql} AS VARCHAR) || ':' || CAST({j_sql} AS VARCHAR)),"
-        " 1, 1))::BIGINT % 2 = 0 THEN 1 ELSE -1 END)"
+    h = duck_md5_int(
+        f"'{RP_PREFIX}:' || CAST({d_sql} AS VARCHAR) || ':'"
+        f" || CAST({j_sql} AS VARCHAR)",
+        1,
     )
+    return f"(CASE WHEN {h} % 2 = 0 THEN 1 ELSE -1 END)"
 
 
 def rp_sign_matrix(in_dim: int, out_dim: int = RP_OUT_DIM) -> list[list[int]]:

@@ -22,16 +22,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import duck_md5_int, md5_int
+
 #: 16^8 — the hash bucket space (first 8 md5 hex chars).
 BUCKET_SPACE = 1 << 32
 
 
 def hash_bucket(key: Column, seed: int = 0) -> Column:
     """Uniform bucket in [0, 2^32) from md5(seed:key) — deterministic,
-    engine-portable (DuckDB: ``('0x' || substr(md5(...), 1, 8))::BIGINT``)."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(str(seed)), key)), 1, 8), 16, 10
-    ).cast("bigint")
+    engine-portable (DuckDB twin: :func:`duck_hash_bucket`). A NULL key
+    has no bucket (NULL), as in DuckDB: every comparison with it is
+    false, so samplers drop the row and :func:`split_assign` puts it in
+    ``train``."""
+    return md5_int(F.concat(F.lit(f"{seed}:"), key), 8)
 
 
 def hash_sample(
@@ -117,9 +120,7 @@ def per_group_quota(
 
 def duck_hash_bucket(key_sql: str, seed: int = 0) -> str:
     """DuckDB expression equal to :func:`hash_bucket` bit-for-bit."""
-    return (
-        f"('0x' || substr(md5('{seed}:' || {key_sql}), 1, 8))::BIGINT"
-    )
+    return duck_md5_int(f"'{seed}:' || {key_sql}", 8)
 
 
 def deterministic_shuffle(

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from whisper_pandas_spark.functions.hashing import py_md5_int
+
 
 def dot(a: Column, b: Column) -> Column:
     # Cast to double BEFORE multiplying and fold left in array order: this
@@ -160,14 +162,11 @@ def _hyperplane(seed: int, plane: int, dim: int) -> list[float]:
     literal array, identical on the DuckDB oracle side (generated by the
     same function).
     """
-    import hashlib
-
-    vals: list[float] = []
-    for d in range(dim):
-        h = hashlib.md5(f"plane:{seed}:{plane}:{d}".encode()).hexdigest()
-        # map 8 hex chars to [-1, 1)
-        vals.append(int(h[:8], 16) / float(1 << 31) - 1.0)
-    return vals
+    # map 8 hex chars to [-1, 1)
+    return [
+        py_md5_int(f"plane:{seed}:{plane}:{d}", 8) / float(1 << 31) - 1.0
+        for d in range(dim)
+    ]
 
 
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:

@@ -24,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    duck_md5_int,
+    keyed_hash64,
+)
+
 
 def hll_shard_sketches(
     df: DataFrame,
@@ -561,7 +567,7 @@ def kll_quantiles(
 # union/intersection/Jaccard estimates.
 #
 # Unlike HLL, this implementation is built on the repo's cross-engine md5
-# hash family (functions/text.py), so the sketch content — and therefore
+# hash family (functions/hashing.py), so the sketch content — and therefore
 # the APPROXIMATE estimates themselves — are bit-deterministic and
 # DuckDB-replayable: the `sketch_kmv_setops` oracle hash-gates the
 # estimator in the approximate regime, not just an exact regime.
@@ -573,27 +579,10 @@ def kll_quantiles(
 _KMV_SPACE = float(1 << 60)  # hash64 range (15 md5 hex chars)
 
 
-def _kmv_hash(value, seed: int):
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(f"kmv{seed}"), F.col(value).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-
-
 def kmv_duck_hash(value_sql: str, seed: int = 0) -> str:
     """DuckDB twin of the sketch hash — oracles build on this."""
-    return (
-        f"('0x' || substr(md5('kmv{seed}:' || CAST({value_sql} AS VARCHAR)),"
-        " 1, 15))::BIGINT"
+    return duck_md5_int(
+        f"'kmv{seed}:' || CAST({value_sql} AS VARCHAR)", HASH_HEX_CHARS
     )
 
 
@@ -615,7 +604,7 @@ def kmv_shard_sketches(
     kcols = [F.col(c) for c in keys]
     hashed = (
         df.filter(F.col(value_col).isNotNull())
-        .select(*kcols, _kmv_hash(value_col, seed).alias("__h"))
+        .select(*kcols, keyed_hash64(f"kmv{seed}", value_col).alias("__h"))
         .distinct()
     )
     w = Window.partitionBy(*kcols).orderBy("__h")
@@ -745,30 +734,15 @@ def _cms_col(value, seed: int, width: int):
     """Column index of *value* in hash row *seed*: first 15 md5 hex chars
     as a BIGINT (non-negative), mod width — the same construction (and
     therefore the same collisions) as :func:`cms_duck_hash`."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.lit(f"cms{seed}"), F.col(value).cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % width
-    ).cast("int")
+    return (keyed_hash64(f"cms{seed}", value) % width).cast("int")
 
 
 def cms_duck_hash(value_sql: str, seed: int, width: int) -> str:
     """DuckDB twin of the CMS column hash — oracles build on this."""
-    return (
-        f"CAST(('0x' || substr(md5('cms{seed}:' || CAST({value_sql} AS"
-        f" VARCHAR)), 1, 15))::BIGINT % {width} AS INT)"
+    h = duck_md5_int(
+        f"'cms{seed}:' || CAST({value_sql} AS VARCHAR)", HASH_HEX_CHARS
     )
+    return f"CAST({h} % {width} AS INT)"
 
 
 def cms_shard_sketches(
@@ -886,31 +860,17 @@ def _bloom_bit(value, seed: int, m: int):
     """Bit index of *value* under hash *seed*: first 15 md5 hex chars as
     a non-negative BIGINT, mod m — same construction (same collisions)
     as :func:`bloom_duck_hash`."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.lit(f"bloom{seed}"), F.col(value).cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % m
-    ).cast("int")
+    return (keyed_hash64(f"bloom{seed}", value) % m).cast("int")
 
 
 def bloom_duck_hash(value_sql: str, seed_sql: str, m: int) -> str:
     """DuckDB twin of the Bloom bit hash (*seed_sql* may be a column)."""
-    return (
-        f"CAST(('0x' || substr(md5('bloom' || CAST({seed_sql} AS VARCHAR)"
-        f" || ':' || CAST({value_sql} AS VARCHAR)), 1, 15))::BIGINT"
-        f" % {m} AS INT)"
+    h = duck_md5_int(
+        f"'bloom' || CAST({seed_sql} AS VARCHAR)"
+        f" || ':' || CAST({value_sql} AS VARCHAR)",
+        HASH_HEX_CHARS,
     )
+    return f"CAST({h} % {m} AS INT)"
 
 
 def bloom_shard_sketches(

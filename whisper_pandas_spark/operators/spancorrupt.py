@@ -41,10 +41,11 @@ Arrow output against a brute-force Python twin.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 from pyspark.sql import DataFrame
+
+from whisper_pandas_spark.functions.hashing import HASH_HEX_CHARS, py_md5_int
 
 BLOCK = 20
 SPAN_LEN = 3
@@ -56,24 +57,11 @@ EOS_TOKEN = "<eos>"
 _NON_ALNUM = re.compile("[^a-z0-9]+")
 
 
-def _offset_sql(doc_sql: str, block_sql: str, block: int, span_len: int) -> str:
-    """md5-driven span offset within a block: hash % (block - span_len + 1).
-
-    (Spark-SQL form, kept as executable documentation of the offset
-    law; the Arrow pass and the DuckDB oracle both replay it.)"""
-    space = block - span_len + 1
-    return (
-        f"(cast(conv(substring(md5(concat('span:', cast({doc_sql} as string),"
-        f" ':', cast({block_sql} as string))), 1, 15), 16, 10) as bigint)"
-        f" % {space})"
-    )
-
-
 def _offset(doc_id, blk: int, space: int) -> int:
-    """Python twin of :func:`_offset_sql` — int of the first 15 md5 hex
-    chars of 'span:<doc>:<blk>' (60 bits, non-negative) mod *space*."""
-    h = hashlib.md5(f"span:{doc_id}:{blk}".encode()).hexdigest()
-    return int(h[:15], 16) % space
+    """md5-driven span offset within a block, ``space = block - span_len
+    + 1``: the 60-bit hash of 'span:<doc>:<blk>' mod *space* (the DuckDB
+    oracle replays it as ``hash64 % space``)."""
+    return py_md5_int(f"span:{doc_id}:{blk}", HASH_HEX_CHARS) % space
 
 
 def span_corrupt(

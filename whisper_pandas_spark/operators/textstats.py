@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import md5_int
 from whisper_pandas_spark.functions.text import tokenize
 
 # Tiny stopword lexicon, shared verbatim with the DuckDB oracle.
@@ -231,10 +232,7 @@ def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     roll = F.aggregate(
         toks,
         F.lit(0).cast("bigint"),
-        lambda acc, t: (
-            acc * 31
-            + F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("bigint")
-        ).bitwiseAND(mod),
+        lambda acc, t: (acc * 31 + md5_int(t, 7)).bitwiseAND(mod),
     )
     return df.select(
         F.col(id_col).alias("doc_id"),

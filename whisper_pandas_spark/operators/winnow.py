@@ -42,29 +42,25 @@ round-8 MinHash lesson, operators/dedup.py:_spread docstring):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    duck_md5_int,
+    py_md5_int,
+    seeded_hash64,
+)
 from whisper_pandas_spark.stage import stage_materialize
 
 #: cross-engine hash: first 15 md5 hex chars of "win:<gram>" as BIGINT
-#: (same family as operators/sketches.py `_kmv_hash`).
+#: (functions/hashing.py).
 HASH_PREFIX = "win"
-
-
-def _gram_hash_col(gram: Column) -> Column:
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{HASH_PREFIX}:"), gram)), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
 
 
 def winnow_duck_hash(gram_sql: str) -> str:
     """DuckDB twin of the k-gram hash — oracles build on this."""
-    return (
-        f"('0x' || substr(md5('{HASH_PREFIX}:' || {gram_sql}), 1, 15))::BIGINT"
-    )
+    return duck_md5_int(f"'{HASH_PREFIX}:' || {gram_sql}", HASH_HEX_CHARS)
 
 
 def winnow_fingerprints(
@@ -98,7 +94,9 @@ def winnow_fingerprints(
         toks.select(
             F.col(id_col),
             F.col("pos"),
-            F.when(complete, _gram_hash_col(F.concat_ws(" ", *parts))).alias("h"),
+            F.when(
+                complete, seeded_hash64(F.concat_ws(" ", *parts), HASH_PREFIX)
+            ).alias("h"),
         )
         .filter(F.col("h").isNotNull())
     )
@@ -155,7 +153,6 @@ def winnow_fingerprints_arrow(
     id_type = df.schema[id_col].dataType.simpleString()
 
     def compute(batches):
-        import hashlib
         from collections import deque
 
         import pandas as pd
@@ -178,12 +175,7 @@ def winnow_fingerprints_arrow(
                     g = " ".join(toks[i : i + k])
                     h = memo.get(g)
                     if h is None:
-                        h = int(
-                            hashlib.md5(("win:" + g).encode()).hexdigest()[
-                                :15
-                            ],
-                            16,
-                        )
+                        h = py_md5_int(f"{HASH_PREFIX}:{g}", HASH_HEX_CHARS)
                         memo[g] = h
                     hs.append(h)
                 sel: set[int] = set()

@@ -22,13 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.functions.hashing import HASH_HEX_CHARS, duck_base_hash32
 from whisper_pandas_spark.functions.text import DUCK_SHINGLES as _DUCK_SHINGLES
-from whisper_pandas_spark.functions.text import (
-    DUCK_TOKS,
-    HASH_HEX_CHARS,
-    duck_base_hash32,
-    duck_minhash_pairs_ctes,
-)
+from whisper_pandas_spark.functions.text import DUCK_TOKS, duck_minhash_pairs_ctes
 from whisper_pandas_spark.operators import linkage as L
 from whisper_pandas_spark.operators.dedup import (
     SIMHASH_BITS,

@@ -345,7 +345,7 @@ def _e2e_oracle() -> str:
     individual entry already proves bit-exact (gate ≡ filter_quality_gates,
     dedup ≡ dedup_exact, split ≡ sample_train_test_split, decontam ≡
     decontam_ngram_overlap, packing ≡ pack_sequences)."""
-    from whisper_pandas_spark.functions.text import duck_base_hash32
+    from whisper_pandas_spark.functions.hashing import duck_base_hash32
     from whisper_pandas_spark.operators.textstats import (
         GATE_MAX_DUP,
         GATE_MIN_QUALITY,

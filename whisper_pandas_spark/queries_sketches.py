@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.functions.hashing import HASH_HEX_CHARS, duck_md5_int
 from whisper_pandas_spark.stage import stage_materialize
 
 
@@ -468,10 +469,11 @@ def _cms_duck_hash_rowvar(value_sql: str, width: int) -> str:
     """The cms_duck_hash construction with the seed taken from the
     ``rows_`` CTE's ``r.row`` column instead of a literal (seed*depth+r
     with seed=0 is just r) — same md5 input string, same collisions."""
-    return (
-        "CAST(('0x' || substr(md5('cms' || CAST(r.row AS VARCHAR) || ':' ||"
-        f" CAST({value_sql} AS VARCHAR)), 1, 15))::BIGINT % {width} AS INT)"
+    h = duck_md5_int(
+        f"'cms' || CAST(r.row AS VARCHAR) || ':' || CAST({value_sql} AS VARCHAR)",
+        HASH_HEX_CHARS,
     )
+    return f"CAST({h} % {width} AS INT)"
 
 
 def _cms_oracle() -> str:

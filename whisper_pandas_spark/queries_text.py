@@ -15,6 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    duck_md5_int,
+    seeded_hash64,
+)
 from whisper_pandas_spark.functions.text import DUCK_TOKS
 from whisper_pandas_spark.operators.textstats import (
     GATE_MAX_DUP,
@@ -1706,22 +1711,11 @@ def text_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FIM_PRE, _FIM_SUF, _FIM_MID = "<fim_pre>", "<fim_suf>", "<fim_mid>"
 
 
-def _fim_h(tag: str, doc_sql: str, spark: bool) -> str:
-    if spark:
-        return (
-            f"cast(conv(substring(md5(concat('{tag}:',"
-            f" cast({doc_sql} as string))), 1, 15), 16, 10) as bigint)"
-        )
-    return (
-        f"('0x' || substr(md5('{tag}:' || CAST({doc_sql} AS VARCHAR)),"
-        " 1, 15))::BIGINT"
-    )
-
-
 def _fim_oracle() -> str:
-    h0 = _fim_h("fim0", "doc_id", False)
-    h1 = _fim_h("fim1", "doc_id", False)
-    h2 = _fim_h("fim2", "doc_id", False)
+    h0, h1, h2 = (
+        duck_md5_int(f"'fim{i}:' || CAST(doc_id AS VARCHAR)", HASH_HEX_CHARS)
+        for i in range(3)
+    )
     return f"""
 WITH toks AS (
   SELECT doc_id,
@@ -1764,9 +1758,10 @@ def text_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     reordered text verbatim."""
     from whisper_pandas_spark.functions.text import tokenize
 
-    h0 = _fim_h("fim0", "doc_id", True)
-    h1 = _fim_h("fim1", "doc_id", True)
-    h2 = _fim_h("fim2", "doc_id", True)
+    h0, h1, h2 = (
+        seeded_hash64(F.col("doc_id").cast("string"), f"fim{i}")
+        for i in range(3)
+    )
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", tokenize("text").alias("t0")
     ).select(
@@ -1775,11 +1770,11 @@ def text_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "t",
         F.size("t").alias("n"),
-        F.expr(f"({h0} % 2) = 0").alias("fim_applied"),
-        F.expr(f"{h1} % (size(t) + 1)").alias("c1"),
+        (h0 % 2 == 0).alias("fim_applied"),
+        (h1 % (F.size("t") + 1)).alias("c1"),
     ).select(
         "*",
-        F.expr(f"c1 + ({h2} % (n - c1 + 1))").alias("c2"),
+        (F.col("c1") + h2 % (F.col("n") - F.col("c1") + 1)).alias("c2"),
     )
     join_slice = (
         "array_join(slice(t, {start}, {length}), ' ')"

@@ -11,7 +11,7 @@ index first, read only the files whose bitsets claim the key.
 This implementation keeps everything engine-portable and deterministic:
 
 - **Hash family**: the repo's cross-engine md5 recipe
-  (functions/text.py) — ``pos_j(v) = hash64("bloom<j>:" + v) % m`` — so
+  (functions/hashing.py) — ``pos_j(v) = hash64("bloom<j>:" + v) % m`` — so
   index content is bit-reproducible on any engine and across rebuilds.
 - **Build**: one distinct over (file, key), one (file, word)-keyed
   partial aggregation folding ``bit_or`` of single-bit words, one tiny
@@ -33,10 +33,14 @@ range/Z-order layouts.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.functions.hashing import (
+    HASH_HEX_CHARS,
+    keyed_hash64,
+    py_md5_int,
+)
 
 _WORD = 64
 
@@ -44,26 +48,12 @@ _WORD = 64
 def _spark_pos(value_col: str, j: int, m: int):
     """Bit position of hash j for a (string-cast) key column — JVM-side
     twin of :func:`_py_pos`."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":", F.lit(f"bloom{j}"), F.col(value_col).cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    return F.pmod(h, F.lit(m))
+    return F.pmod(keyed_hash64(f"bloom{j}", value_col), F.lit(m))
 
 
 def _py_pos(value: str, j: int, m: int) -> int:
     """Driver-side twin of :func:`_spark_pos` (identical md5 recipe)."""
-    h = int(hashlib.md5(f"bloom{j}:{value}".encode()).hexdigest()[:15], 16)
-    return h % m
+    return py_md5_int(f"bloom{j}:{value}", HASH_HEX_CHARS) % m
 
 
 def build_bloom_index(

@@ -75,8 +75,12 @@ def parse_archives(spec: str) -> list[tuple[int, int]]:
     archives must use multiples of the finer resolution (Whisper rule)."""
     out = []
     for part in spec.split(","):
-        spp, points = part.split(":")
-        out.append((int(spp), int(points)))
+        spp, points = (int(x) for x in part.split(":"))
+        if spp <= 0 or points <= 0:
+            raise ValueError(
+                f"archive {part!r}: seconds_per_point and points must be > 0"
+            )
+        out.append((spp, points))
     for (a, _), (b, _) in zip(out, out[1:]):
         if b % a != 0 or b <= a:
             raise ValueError(
