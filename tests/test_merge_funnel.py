@@ -69,6 +69,13 @@ def test_merge_crash_before_flip_leaves_old_version_live(spark, table, tmp_path)
     (pathlib.Path(base) / "v1").mkdir()
     (pathlib.Path(base) / "v1" / "part-garbage.parquet").write_bytes(b"torn")
     assert current_version_path(base) == v0  # readers still see v0
+    # the torn v1 was never live: the next merge numbers past it instead
+    # of failing on it, and builds on v0
+    changes = spark.createDataFrame([(2, "B", 200)], "id long, s string, v long")
+    v2 = merge_into_parquet(spark, base, changes, "id")
+    assert v2.endswith("v2") and current_version_path(base) == v2
+    live = {r["id"]: (r["s"], r["v"]) for r in spark.read.parquet(v2).collect()}
+    assert live == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30)}
 
 
 # -- funnel ----------------------------------------------------------------

@@ -28,10 +28,14 @@ No reference-repo parity: whisper_pandas is read-only; this backs the
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _CURRENT = "_CURRENT"
+_LAST_BATCH = "_LAST_BATCH"
 
 
 def _evolved_columns(
@@ -109,8 +113,6 @@ def merge_changes(
 def current_version_path(base: str) -> str | None:
     """Resolve the live version directory under ``base`` (pointer file),
     or None before the first merge."""
-    from pathlib import Path
-
     ptr = Path(base) / _CURRENT
     if not ptr.exists():
         return None
@@ -158,6 +160,35 @@ def merge_changes_ordered(
     return picked.select(*[F.col(f"__r.{c}").alias(c) for c in cols])
 
 
+def merge_state(
+    prior: DataFrame | None,
+    changes: DataFrame,
+    key_col: str,
+    delete_col: str | None = None,
+    seq_col: str | None = None,
+) -> DataFrame:
+    """The table after applying ``changes`` to ``prior`` (None: no table
+    yet) — :func:`merge_changes`, or :func:`merge_changes_ordered` when
+    ``seq_col`` is given, with the first-version cases spelled out."""
+    if seq_col is not None:
+        # tombstones retained from day one; the change set itself
+        # still reduces to one row per key (a raw log may carry
+        # several changes for a key even in its first batch)
+        return merge_changes_ordered(
+            changes.limit(0) if prior is None else prior,
+            changes,
+            key_col,
+            seq_col,
+        )
+    if prior is not None:
+        return merge_changes(prior, changes, key_col, delete_col)
+    if delete_col is not None:
+        return changes.where(
+            ~F.coalesce(F.col(delete_col), F.lit(False))
+        ).drop(delete_col)
+    return changes
+
+
 def merge_into_parquet(
     spark: SparkSession,
     base: str,
@@ -168,13 +199,8 @@ def merge_into_parquet(
     extra_files: dict[str, str] | None = None,
 ) -> str:
     """Apply ``changes`` to the keyed parquet table rooted at ``base``
-    and return the new version directory.
-
-    Layout: ``base/v<N>/`` holds full table versions; ``base/_CURRENT``
-    names the live one. The new version is fully written BEFORE the
-    pointer flips (single-file rename-class operation), so readers see
-    either the old or the new table, never a torn mix; old versions
-    remain for time travel / rollback until vacuumed.
+    and return the new version directory (one :func:`advance_version`
+    step; old versions remain for time travel / rollback until vacuumed).
 
     ``seq_col=None`` (default): classic MERGE — change rows win
     unconditionally, ``delete_col`` rows drop their keys.
@@ -187,58 +213,85 @@ def merge_into_parquet(
     directory BEFORE the pointer flips, so markers land atomically with
     the version they describe.
     """
-    from pathlib import Path
+    return advance_version(
+        spark,
+        base,
+        lambda prior: merge_state(prior, changes, key_col, delete_col, seq_col),
+        extra_files=extra_files,
+    )
 
+
+# -- versioned-table layout ---------------------------------------------------
+#
+# ``base/v<N>/`` holds full table versions and ``base/_CURRENT`` names the
+# live one. Only the functions below know that layout.
+
+
+def _version_dirs(root: Path) -> list[Path]:
+    """Every ``v<N>`` directory under ``root``, oldest first."""
+    return sorted(
+        (d for d in root.glob("v*") if d.is_dir() and d.name[1:].isdigit()),
+        key=lambda d: int(d.name[1:]),
+    )
+
+
+def _commit_version(base: str, write: Callable[[Path], None]) -> str:
+    """Fill the next version directory with ``write(new_dir)``, then
+    atomically flip ``_CURRENT`` to it. The new number is past EVERY
+    existing ``v<N>``: a directory the pointer does not name is never
+    live (the pointer flips only after a full write), so a torn one left
+    by a crashed writer is stepped over instead of colliding."""
     root = Path(base)
     root.mkdir(parents=True, exist_ok=True)
-    cur = current_version_path(base)
-    if cur is None:
-        if seq_col is not None:
-            # tombstones retained from day one; the change set itself
-            # still reduces to one row per key (a raw log may carry
-            # several changes for a key even in its first batch)
-            new_state = merge_changes_ordered(
-                changes.limit(0), changes, key_col, seq_col
-            )
-        elif delete_col is not None:
-            new_state = changes.where(
-                ~F.coalesce(F.col(delete_col), F.lit(False))
-            ).drop(delete_col)
-        else:
-            new_state = changes
-        next_n = 0
-    else:
-        table = spark.read.parquet(cur)
-        if seq_col is not None:
-            new_state = merge_changes_ordered(table, changes, key_col, seq_col)
-        else:
-            new_state = merge_changes(table, changes, key_col, delete_col)
-        next_n = int(Path(cur).name[1:]) + 1
-    return write_version(base, new_state, next_n, extra_files)
-
-
-def write_version(
-    base: str,
-    df: DataFrame,
-    version: int,
-    extra_files: dict[str, str] | None = None,
-) -> str:
-    """Write ``df`` as ``base/v<version>/`` and atomically flip the
-    ``_CURRENT`` pointer — the crash-safe full-write-then-flip step every
-    versioned state table here shares (MERGE above, the streaming sketch
-    sink). ``extra_files`` land in the version dir BEFORE the flip."""
-    from pathlib import Path
-
-    root = Path(base)
-    root.mkdir(parents=True, exist_ok=True)
-    new_dir = root / f"v{version}"
-    df.write.mode("errorifexists").parquet(str(new_dir))
-    for name, content in (extra_files or {}).items():
-        (new_dir / name).write_text(content)
+    versions = _version_dirs(root)
+    new_dir = root / f"v{int(versions[-1].name[1:]) + 1 if versions else 0}"
+    write(new_dir)
     tmp = root / f"{_CURRENT}.tmp"
     tmp.write_text(new_dir.name)
     tmp.replace(root / _CURRENT)  # atomic pointer flip
     return str(new_dir)
+
+
+def advance_version(
+    spark: SparkSession,
+    base: str,
+    step: Callable[[DataFrame | None], DataFrame],
+    batch: tuple[str, int] | None = None,
+    extra_files: dict[str, str] | None = None,
+) -> str:
+    """Advance the versioned table at ``base`` by one step and return the
+    live version directory: read the live version (None before the
+    first), write ``step(prior)`` in full as the next version, then flip
+    the pointer — readers see the old or the new table, never a torn mix.
+    ``extra_files`` land in the new version directory before the flip.
+
+    ``batch = (stream id, batch id)`` makes the step exactly-once for a
+    ``foreachBatch`` stream: a ``_LAST_BATCH`` marker holding
+    ``"<stream id>:<batch id>"`` is written into the new version before
+    the flip, and a batch that the live version's marker already covers
+    (same stream id, batch id at or below it) is skipped, leaving the
+    table as it is. The stream id is the checkpoint directory — only a
+    checkpoint makes batch ids durable, so a stream without one passes
+    None and every batch is applied.
+    """
+    cur = current_version_path(base)
+    if batch is not None and cur is not None:
+        marker = Path(cur) / _LAST_BATCH
+        if marker.exists():
+            sid, _, last = marker.read_text().rpartition(":")
+            if sid == batch[0] and int(last) >= batch[1]:
+                return cur
+    new_state = step(None if cur is None else spark.read.parquet(cur))
+    files = dict(extra_files or {})
+    if batch is not None:
+        files[_LAST_BATCH] = f"{batch[0]}:{batch[1]}"
+
+    def write(new_dir: Path) -> None:
+        new_state.write.mode("errorifexists").parquet(str(new_dir))
+        for name, content in files.items():
+            (new_dir / name).write_text(content)
+
+    return _commit_version(base, write)
 
 
 def read_current_state(
@@ -271,16 +324,11 @@ def vacuum_versions(base: str, keep_last: int = 2) -> list[str]:
     version are unaffected — only versions older than the retention
     window disappear (the copy-on-write vacuum contract)."""
     import shutil
-    from pathlib import Path
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    root = Path(base)
     cur = current_version_path(base)
-    versions = sorted(
-        (d for d in root.glob("v*") if d.is_dir() and d.name[1:].isdigit()),
-        key=lambda d: int(d.name[1:]),
-    )
+    versions = _version_dirs(Path(base))
     keep = {str(d) for d in versions[-keep_last:]}
     if cur is not None:
         keep.add(cur)
@@ -349,7 +397,6 @@ def _part_dirs(data_dir, part_col: str) -> dict[str, str]:
 
 def _read_manifest(version_dir: str) -> dict[str, str]:
     import json
-    from pathlib import Path
 
     p = Path(version_dir) / _MANIFEST
     if not p.exists():
@@ -373,8 +420,6 @@ def _read_parts(
     re-escaping the raw value — so values needing escaping round-trip.
     Cross-version unions allow missing columns (null-backfill): after a
     schema-evolving merge, older versions lack the new columns."""
-    from pathlib import Path
-
     wanted = manifest if parts is None else {
         p: v for p, v in manifest.items() if p in parts
     }
@@ -428,14 +473,9 @@ def merge_into_parquet_partitioned(
     partitions than that should go through the unpartitioned MERGE.
     """
     import json
-    from pathlib import Path
 
-    root = Path(base)
-    root.mkdir(parents=True, exist_ok=True)
     cur = current_version_path(base)
     manifest = _read_manifest(cur) if cur is not None else {}
-    next_n = 0 if cur is None else int(Path(cur).name[1:]) + 1
-    vname = f"v{next_n}"
 
     changes.persist()
     try:
@@ -455,54 +495,34 @@ def merge_into_parquet_partitioned(
             raise ValueError(
                 f"null {part_col} partition values are not supported"
             )
-        changed = [str(r[part_col]) for r in touched_rows]
+        changed = {str(r[part_col]) for r in touched_rows}
         prior = (
             _read_parts(spark, base, manifest, part_col, changed)
             if any(p in manifest for p in changed)
             else None
         )
-        if seq_col is not None:
-            empty = changes.limit(0)
-            new_state = merge_changes_ordered(
-                prior if prior is not None else empty,
-                changes,
-                key_col,
-                seq_col,
-            )
-        else:
-            if prior is None:
-                new_state = (
-                    changes.where(
-                        ~F.coalesce(F.col(delete_col), F.lit(False))
-                    ).drop(delete_col)
-                    if delete_col is not None
-                    else changes
-                )
-            else:
-                new_state = merge_changes(prior, changes, key_col, delete_col)
+        new_state = merge_state(prior, changes, key_col, delete_col, seq_col)
 
-        new_dir = root / vname
-        (
-            new_state.write.mode("errorifexists")
-            .partitionBy(part_col)
-            .parquet(str(new_dir / "data"))
-        )
+        def write(new_dir: Path) -> None:
+            new_state.write.mode("errorifexists").partitionBy(
+                part_col
+            ).parquet(str(new_dir / "data"))
+            # partitions whose merged state is empty vanish from the
+            # manifest (partitionBy writes no dir for them); directory
+            # names are Hive-escaped by the writer, so unescape back to
+            # RAW manifest keys
+            new_manifest = {
+                p: v for p, v in manifest.items() if p not in changed
+            }
+            for p in _part_dirs(new_dir / "data", part_col):
+                new_manifest[p] = new_dir.name
+            (new_dir / _MANIFEST).write_text(
+                json.dumps(new_manifest, sort_keys=True)
+            )
+
+        return _commit_version(base, write)
     finally:
         changes.unpersist()
-    # partitions whose merged state is empty vanish from the manifest
-    # (partitionBy writes no dir for them); directory names are
-    # Hive-escaped by the writer, so unescape back to RAW manifest keys
-    written = set(_part_dirs(new_dir / "data", part_col))
-    new_manifest = {
-        p: v for p, v in manifest.items() if p not in set(changed)
-    }
-    for p in written:
-        new_manifest[p] = vname
-    (new_dir / _MANIFEST).write_text(json.dumps(new_manifest, sort_keys=True))
-    tmp = root / f"{_CURRENT}.tmp"
-    tmp.write_text(vname)
-    tmp.replace(root / _CURRENT)
-    return str(new_dir)
 
 
 def read_current_state_partitioned(
@@ -537,16 +557,12 @@ def vacuum_partitioned(base: str, keep_last: int = 2) -> list[str]:
     :func:`vacuum_versions`, age alone is not sufficient, because old
     versions keep serving untouched partitions."""
     import shutil
-    from pathlib import Path
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root = Path(base)
     cur = current_version_path(base)
-    versions = sorted(
-        (d for d in root.glob("v*") if d.is_dir() and d.name[1:].isdigit()),
-        key=lambda d: int(d.name[1:]),
-    )
+    versions = _version_dirs(root)
     retained = {str(d) for d in versions[-keep_last:]}
     if cur is not None:
         retained.add(cur)
@@ -585,16 +601,13 @@ def compact_current(
     as a new version with ``target_files`` parquet files. Returns the
     new version dir. State is bit-preserved (same rows); only layout
     changes."""
-    from pathlib import Path
-
-    cur = current_version_path(base)
-    if cur is None:
+    if current_version_path(base) is None:
         raise FileNotFoundError(f"no current version under {base}")
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    df = spark.read.parquet(cur).coalesce(target_files)
-    next_n = int(Path(cur).name[1:]) + 1
-    return write_version(base, df, next_n)
+    return advance_version(
+        spark, base, lambda prior: prior.coalesce(target_files)
+    )
 
 
 def compact_partitioned(
@@ -615,7 +628,6 @@ def compact_partitioned(
     vacuum_partitioned later reclaims the fragmented originals once no
     retained manifest references them."""
     import json
-    from pathlib import Path
 
     cur = current_version_path(base)
     if cur is None:
@@ -637,38 +649,32 @@ def compact_partitioned(
     if not fragmented:
         return None, []
 
-    next_n = int(Path(cur).name[1:]) + 1
-    vname = f"v{next_n}"
-    new_dir = root / vname
     frag_df = _read_parts(spark, base, manifest, part_col, fragmented)
-    (
-        frag_df.repartition(part_col)
-        .write.mode("errorifexists")
-        .partitionBy(part_col)
-        .parquet(str(new_dir / "data"))
-    )
-    written = set(_part_dirs(new_dir / "data", part_col))
-    missing = set(fragmented) - written
-    if missing:
-        raise RuntimeError(
-            f"compaction lost partitions {sorted(missing)!r}"
+
+    def write(new_dir: Path) -> None:
+        frag_df.repartition(part_col).write.mode("errorifexists").partitionBy(
+            part_col
+        ).parquet(str(new_dir / "data"))
+        written = set(_part_dirs(new_dir / "data", part_col))
+        missing = set(fragmented) - written
+        if missing:
+            raise RuntimeError(
+                f"compaction lost partitions {sorted(missing)!r}"
+            )
+        new_manifest = dict(manifest)
+        for p in written:
+            new_manifest[p] = new_dir.name
+        (new_dir / _MANIFEST).write_text(
+            json.dumps(new_manifest, sort_keys=True)
         )
-    new_manifest = dict(manifest)
-    for p in written:
-        new_manifest[p] = vname
-    (new_dir / _MANIFEST).write_text(json.dumps(new_manifest, sort_keys=True))
-    tmp = root / f"{_CURRENT}.tmp"
-    tmp.write_text(vname)
-    tmp.replace(root / _CURRENT)
-    return str(new_dir), sorted(fragmented)
+
+    return _commit_version(base, write), sorted(fragmented)
 
 
 def _infer_part_col(data_dir) -> str:
     """Partition column of a Hive-layout data dir (single-level): the
     name before ``=`` in its subdirectories. Raises if the layout is not
     a single consistent ``col=value`` level."""
-    from pathlib import Path
-
     names = {
         d.name.split("=", 1)[0]
         for d in Path(data_dir).iterdir()
@@ -714,8 +720,6 @@ def change_feed(
     — one read per involved version, Hive-unescaped dirs, basePath set);
     ``part_col`` is inferred from the Hive layout when not given.
     Plain (unpartitioned-merge) versions are read directly as before."""
-    from pathlib import Path
-
     from whisper_pandas_spark.operators.diffing import table_diff
 
     root = Path(base)

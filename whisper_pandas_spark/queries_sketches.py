@@ -751,14 +751,14 @@ def stream_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_bloom_update) replayed end-to-end — the sparse item lattice
     streams through foreachBatch union-distinct merges into the
     versioned filter state, and then the WHOLE stream is deliberately
-    reprocessed into the same state by a second checkpoint-less query
-    (every batch is a replay): the idempotent merge law means no
-    `_LAST_BATCH` marker machinery exists anywhere in this path, and
-    the final state still equals the direct build — which is exactly
-    what the shared batch oracle hash-gates (the structural contrast to
-    `stream_cms_replay`, whose additive merge REQUIRES exactly-once
-    markers).  Probes 0..39 read membership verdicts off the final
-    state with the exact truth joined alongside."""
+    reprocessed by a second query under a fresh checkpoint (a new
+    stream id, so no batch marker covers it and every batch is a
+    replay): the idempotent merge law keeps the final state equal to
+    the direct build — which is exactly what the shared batch oracle
+    hash-gates (the structural contrast to `stream_cms_replay`, whose
+    additive merge REQUIRES a checkpoint).  Probes 0..39 read
+    membership verdicts off the final state with the exact truth joined
+    alongside."""
     import tempfile
 
     from whisper_pandas_spark.operators.merge import current_version_path

@@ -649,7 +649,7 @@ def stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fingerprint — banding is complete at <= 7). The whole stream is then
 # deliberately REPROCESSED with a fresh checkpoint: every fingerprint
 # is already registered, so the state is unchanged — the idempotent
-# merge law, no marker machinery (the perceptual sibling of
+# merge law, no marker needed (the perceptual sibling of
 # stream_bloom_replay). The oracle replays the two-batch construction
 # over bit strings.
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.stage import stage_materialize
+from whisper_pandas_spark.streaming.sink import maintain_table
 
 
 def _credit_batch(
@@ -84,38 +85,21 @@ def stream_attribution(
 ):
     """Start the attribution maintainer over a conversion stream
     ``(p_id, user_id, p_ts, val_cents)``. One versioned state table
-    lands under *base*: ``credits``."""
-    from pathlib import Path
+    lands under *base*: ``credits``. Merge law: insert-if-absent on
+    p_id (idempotent)."""
 
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         rows = stage_materialize(
             _credit_batch(batch_df, touch, lookback_days, ppm)
         )
-        cur = current_version_path(f"{base}/credits")
-        if cur is None:
-            state = rows
-            v = 0
-        else:
-            prev = spark.read.parquet(cur)
-            fresh = rows.join(
-                prev.select("p_id").distinct(), "p_id", "left_anti"
-            )  # idempotent: a re-delivered conversion re-derives its rows
-            state = prev.unionByName(fresh)
-            v = int(Path(cur).name[1:]) + 1
-        write_version(f"{base}/credits", state, v)
+        if prev is None:
+            return rows
+        fresh = rows.join(
+            prev.select("p_id").distinct(), "p_id", "left_anti"
+        )  # idempotent: a re-delivered conversion re-derives its rows
+        return prev.unionByName(fresh)
 
-    writer = sdf_conv.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf_conv, f"{base}/credits", step, checkpoint_dir)
 
 
 def attribution_read_off(spark, base: str) -> DataFrame:

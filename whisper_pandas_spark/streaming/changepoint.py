@@ -4,11 +4,9 @@ Keeps the (group..., bucket_ts, y) integer bucket-sum table — the
 mergeable state `operators/changepoint.py:cusum_from_buckets` reads
 off — current from a stream: each micro-batch aggregates to its own
 bucket sums (operators/changepoint.py:bucket_sums — the batch IS the
-shard) and merges ADDITIVELY into the versioned state with the same
-full-write-then-flip + `_LAST_BATCH` exactly-once discipline as the
-streaming histogram (streaming/sketches.py:stream_sketch_update): the
-merge is additive, so a replayed batch would double-count and the
-checkpoint-scoped batch marker is REQUIRED for correctness.
+shard) and merges into the versioned state through
+streaming/sink.py:maintain_table. Merge law: integer sum (additive), so
+a checkpoint is required.
 
 Why this shape at 100 TB: the state is O(groups x buckets) — days, not
 events — each batch costs one partial aggregation over the BATCH, and
@@ -23,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.streaming.sink import maintain_table
 
 
 def stream_bucket_sums_update(
@@ -40,58 +40,23 @@ def stream_bucket_sums_update(
     table at ``base``. Returns the StreamingQuery; read the live state
     with ``spark.read.parquet(current_version_path(base))`` and detect
     shifts with :func:`...operators.changepoint.cusum_from_buckets`."""
-    from pathlib import Path
-
     from whisper_pandas_spark.operators.changepoint import bucket_sums
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is required: the bucket-sum merge is additive, "
-            "so a replayed batch would double-count — batch-id dedup needs "
-            "durable batch numbering"
-        )
     kcols = list(keys)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = current_version_path(base)
-        next_version = 0
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == checkpoint_dir and int(last) >= batch_id:
-                    return  # replay of an already-merged batch
-            next_version = int(Path(cur).name[1:]) + 1
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_buckets = bucket_sums(
             batch_df, kcols, time_col, value_col, bucket=bucket, scale=scale
         )
-        if cur is None:
-            new_state = batch_buckets
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *kcols, "bucket_ts", "y"
-            )
-            new_state = (
-                prior.unionByName(batch_buckets)
-                .groupBy(*kcols, "bucket_ts")
-                .agg(F.sum("y").alias("y"))
-            )
-        write_version(
-            base,
-            new_state,
-            next_version,
-            extra_files={"_LAST_BATCH": f"{checkpoint_dir}:{batch_id}"},
+        if prior is None:
+            return batch_buckets
+        return (
+            prior.select(*kcols, "bucket_ts", "y")
+            .unionByName(batch_buckets)
+            .groupBy(*kcols, "bucket_ts")
+            .agg(F.sum("y").alias("y"))
         )
 
-    return (
-        sdf.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return maintain_table(
+        sdf, base, step, checkpoint_dir, additive="bucket-sum"
     )

@@ -42,7 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.operators.merge import advance_version
 from whisper_pandas_spark.stage import stage_materialize
+from whisper_pandas_spark.streaming.sink import Batch, start_batches
 
 
 def _funnel_rows(
@@ -92,59 +94,41 @@ def stream_curation(
     (doc_id, lang, text) stream. Two versioned state tables land under
     *base*: ``docs`` (per-doc funnel flags) and ``registry``
     (clean_md5 -> min doc_id). See module docstring for the merge
-    laws."""
-    from pathlib import Path
+    laws; each table is advanced exactly once per checkpointed batch."""
 
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def body(batch_df: DataFrame, batch: Batch) -> None:
         rows = stage_materialize(
             _funnel_rows(batch_df, min_entropy, min_tokens)
         )
 
-        cur_docs = current_version_path(f"{base}/docs")
-        if cur_docs is None:
-            docs_state = rows
-            v_docs = 0
-        else:
-            prev = spark.read.parquet(cur_docs)
+        def docs(prev: DataFrame | None) -> DataFrame:
+            if prev is None:
+                return rows
             fresh = rows.join(
                 prev.select("doc_id"), "doc_id", "left_anti"
             )  # idempotent: a re-delivered doc re-derives the same row
-            docs_state = prev.unionByName(fresh)
-            v_docs = int(Path(cur_docs).name[1:]) + 1
-        write_version(f"{base}/docs", docs_state, v_docs)
+            return prev.unionByName(fresh)
 
-        surv = (
-            rows.filter("entropy_ok")
-            .groupBy(F.col("clean_md5").alias("k"))
-            .agg(F.min("doc_id").alias("cid"))
-        )
-        cur_reg = current_version_path(f"{base}/registry")
-        if cur_reg is None:
-            reg_state = surv
-            v_reg = 0
-        else:
-            prev = spark.read.parquet(cur_reg)
+        def registry(prev: DataFrame | None) -> DataFrame:
+            surv = (
+                rows.filter("entropy_ok")
+                .groupBy(F.col("clean_md5").alias("k"))
+                .agg(F.min("doc_id").alias("cid"))
+            )
+            if prev is None:
+                return surv
             # min-merge: idempotent + commutative + associative
-            reg_state = (
+            return (
                 prev.unionByName(surv)
                 .groupBy("k")
                 .agg(F.min("cid").alias("cid"))
             )
-            v_reg = int(Path(cur_reg).name[1:]) + 1
-        write_version(f"{base}/registry", reg_state, v_reg)
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+        spark = batch_df.sparkSession
+        advance_version(spark, f"{base}/docs", docs, batch)
+        advance_version(spark, f"{base}/registry", registry, batch)
+
+    return start_batches(sdf, body, checkpoint_dir)
 
 
 def curation_read_off(

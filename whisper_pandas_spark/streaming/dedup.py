@@ -39,6 +39,7 @@ from whisper_pandas_spark.operators.dedup import (
     lsh_pairs,
     minhash_signature_arrow,
 )
+from whisper_pandas_spark.streaming.sink import Batch, start_batches
 
 
 def stream_near_dup(
@@ -65,9 +66,7 @@ def stream_near_dup(
     incremental store across multiple micro-batches).
     """
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def sink(batch_df: DataFrame, batch: Batch) -> None:
         spark = batch_df.sparkSession
         new_sig = minhash_signature_arrow(
             batch_df, id_col, text_col, num_perm
@@ -102,9 +101,6 @@ def stream_near_dup(
         all_sig.unpersist()
         new_sig.unpersist()
 
-    writer = sdf.writeStream.foreachBatch(sink)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(
+        sdf, sink, checkpoint_dir, available_now=available_now
+    )

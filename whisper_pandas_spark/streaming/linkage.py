@@ -35,6 +35,7 @@ from whisper_pandas_spark.operators.linkage import (
     er_score_pairs,
 )
 from whisper_pandas_spark.stage import stage_materialize
+from whisper_pandas_spark.streaming.sink import maintain_table
 
 
 def stream_linkage(
@@ -46,37 +47,20 @@ def stream_linkage(
     """Start the linkage maintainer over a dirty-record stream
     ``(rec_id, src, nation, name, phone, city, bal_cents, seg)``.
     One versioned state table lands under *base*: ``pairs``
-    (c_id, d_id, score, cls, is_true)."""
-    from pathlib import Path
+    (c_id, d_id, score, cls, is_true). Merge law: insert-if-absent on
+    (c_id, d_id) (idempotent)."""
 
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         recs = clean_df.unionByName(batch_df)
         pairs = stage_materialize(er_score_pairs(er_candidates(recs)))
-        cur = current_version_path(f"{base}/pairs")
-        if cur is None:
-            state = pairs
-            v = 0
-        else:
-            prev = spark.read.parquet(cur)
-            fresh = pairs.join(
-                prev.select("c_id", "d_id"), ["c_id", "d_id"], "left_anti"
-            )  # idempotent: a re-delivered pair re-derives the same row
-            state = prev.unionByName(fresh)
-            v = int(Path(cur).name[1:]) + 1
-        write_version(f"{base}/pairs", state, v)
+        if prev is None:
+            return pairs
+        fresh = pairs.join(
+            prev.select("c_id", "d_id"), ["c_id", "d_id"], "left_anti"
+        )  # idempotent: a re-delivered pair re-derives the same row
+        return prev.unionByName(fresh)
 
-    writer = sdf_dirty.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf_dirty, f"{base}/pairs", step, checkpoint_dir)
 
 
 def linkage_read_off(spark, base: str) -> DataFrame:

@@ -17,13 +17,10 @@ Semantics per micro-batch (deterministic given the batch sequence):
    reject set is exactly the hamming ball, no false accepts);
 4. append the accepted (dhash, img_id) rows to the versioned state.
 
-Merge law: like Bloom/KMV and unlike the additive CMS, the state
-transition is IDEMPOTENT — a replayed batch's fingerprints are all
-within hamming 0 of the registry, so every row is rejected and the
-state is unchanged. No `_LAST_BATCH` marker machinery exists in this
-path; the registry survives duplicated files and full reprocesses by
-construction (asserted end-to-end by the `stream_phash_dedup` entry,
-which reprocesses the whole stream into the same state).
+Merge law: hamming-ball-filtered append (idempotent — a replayed
+batch's fingerprints are all within hamming 0 of the registry, so every
+row is rejected; the `stream_phash_dedup` entry reprocesses the whole
+stream into the same state).
 
 Scale shape: the registry holds one 8-byte hash + one id per UNIQUE
 image — orders of magnitude smaller than the stream; each batch pays
@@ -38,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whisper_pandas_spark.stage import stage_materialize
+from whisper_pandas_spark.streaming.sink import maintain_table
 
 
 def _bands(df: DataFrame) -> DataFrame:
@@ -62,13 +60,7 @@ def stream_phash_dedup(
 ):
     """Start the streaming registry maintainer over an (id, payload)
     stream; state versions land under ``base`` (operators/merge.py
-    write_version layout). See module docstring for semantics."""
-    from pathlib import Path
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
+    versioned-table layout). See module docstring for semantics."""
     from whisper_pandas_spark.operators.multimodal import image_dhash
 
     if not 0 <= max_hamming <= 7:
@@ -77,39 +69,26 @@ def stream_phash_dedup(
             f"got {max_hamming}"
         )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         hashes = image_dhash(batch_df, id_col, payload_col)
         batch_min = stage_materialize(
             hashes.groupBy("dhash")
             .agg(F.min("doc_id").alias("img_id"))
         )
-        cur = current_version_path(base)
-        if cur is None:
-            new_state = batch_min
-            next_version = 0
-        else:
-            state = spark.read.parquet(cur).select("dhash", "img_id")
-            lb = _bands(batch_min).select(
-                F.col("dhash").alias("bh"), "band", "bkey"
-            )
-            rb = _bands(state).select(
-                F.col("dhash").alias("sh"), "band", "bkey"
-            )
-            conflict = (
-                lb.join(rb, ["band", "bkey"])
-                .filter(F.bit_count(F.expr("bh ^ sh")) <= max_hamming)
-                .select(F.col("bh").alias("dhash"))
-                .distinct()
-            )
-            accepted = batch_min.join(conflict, "dhash", "left_anti")
-            next_version = int(Path(cur).name[1:]) + 1
-            new_state = state.unionByName(accepted)
-        write_version(base, new_state, next_version)
+        if prior is None:
+            return batch_min
+        state = prior.select("dhash", "img_id")
+        lb = _bands(batch_min).select(
+            F.col("dhash").alias("bh"), "band", "bkey"
+        )
+        rb = _bands(state).select(F.col("dhash").alias("sh"), "band", "bkey")
+        conflict = (
+            lb.join(rb, ["band", "bkey"])
+            .filter(F.bit_count(F.expr("bh ^ sh")) <= max_hamming)
+            .select(F.col("bh").alias("dhash"))
+            .distinct()
+        )
+        accepted = batch_min.join(conflict, "dhash", "left_anti")
+        return state.unionByName(accepted)
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)

@@ -1,24 +1,97 @@
-"""Streaming → Whisper sink: persist a metric stream as .wsp files.
+"""Streaming sinks, and the one way the engine starts a ``foreachBatch``
+query.
 
-Composes Structured Streaming with the batch write path
-(sources/whisper_write.py) via ``foreachBatch`` — the idiomatic Spark
-pattern for sinks without a native streaming writer. Each micro-batch
-writes in MERGE mode: a touched metric's existing file is read and the
-batch's points overlay its stored ring slots, so points that arrived in
-earlier micro-batches survive. Slot overlay is idempotent (replaying a
-batch writes the same values into the same slots), so foreachBatch's
-at-least-once delivery is safe too.
+:func:`start_batches` is the only ``foreachBatch`` call in the package:
+it skips empty micro-batches, binds the checkpoint and starts the query.
+:func:`maintain_table` builds on it to keep one versioned state table
+(operators/merge.py) current — every streaming maintainer passes it its
+own merge step.
 
-This makes the engine a (batch-fed) Graphite-compatible writer: stream →
-optional rollup/dedup → .wsp tree readable by Graphite tooling and by our
-own reader.
+Streaming → Whisper: :func:`stream_to_whisper` persists a metric stream
+as .wsp files through the batch write path (sources/whisper_write.py).
+Each micro-batch writes in MERGE mode: a touched metric's existing file
+is read and the batch's points overlay its stored ring slots, so points
+that arrived in earlier micro-batches survive. Slot overlay is
+idempotent (replaying a batch writes the same values into the same
+slots), so foreachBatch's at-least-once delivery is safe too. This
+makes the engine a (batch-fed) Graphite-compatible writer: stream →
+optional rollup/dedup → .wsp tree readable by Graphite tooling and by
+our own reader.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from whisper_pandas_spark.operators.merge import advance_version, merge_state
 from whisper_pandas_spark.sources.whisper_write import write_whisper
+
+Batch = tuple[str, int] | None
+
+
+def start_batches(
+    sdf: DataFrame,
+    body: Callable[[DataFrame, Batch], None],
+    checkpoint_dir: str | None = None,
+    *,
+    additive: str | None = None,
+    output_mode: str = "append",
+    available_now: bool = False,
+):
+    """Start ``sdf`` as a ``foreachBatch`` query and return the
+    StreamingQuery. ``body(batch_df, batch)`` runs for every non-empty
+    micro-batch; ``batch`` is ``(checkpoint_dir, batch_id)`` — the
+    exactly-once key of :func:`~whisper_pandas_spark.operators.merge.advance_version`
+    — when a checkpoint is given, else None (without a checkpoint batch
+    ids restart from 0 on every run, so they key nothing).
+
+    ``additive`` names a merge law under which a replayed batch would
+    double-count; such a stream refuses to start without a checkpoint.
+    """
+    if additive is not None and not checkpoint_dir:
+        raise ValueError(
+            f"checkpoint_dir is required: the {additive} merge is additive, "
+            "so a replayed batch would double-count — batch-id dedup needs "
+            "durable batch numbering"
+        )
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            body(batch_df, (checkpoint_dir, batch_id) if checkpoint_dir else None)
+
+    writer = sdf.writeStream.foreachBatch(run).outputMode(output_mode)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def maintain_table(
+    sdf: DataFrame,
+    base: str,
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+    checkpoint_dir: str | None = None,
+    *,
+    additive: str | None = None,
+):
+    """Keep the versioned table at ``base`` current from ``sdf``: each
+    micro-batch advances it by ``step(batch_df, prior)`` (``prior`` is
+    the live state, None before the first version), exactly once per
+    batch when checkpointed. Returns the StreamingQuery."""
+
+    def body(batch_df: DataFrame, batch: Batch) -> None:
+        advance_version(
+            batch_df.sparkSession,
+            base,
+            lambda prior: step(batch_df, prior),
+            batch,
+        )
+
+    return start_batches(sdf, body, checkpoint_dir, additive=additive)
 
 
 def stream_to_whisper(
@@ -39,17 +112,12 @@ def stream_to_whisper(
     merge-mode slot overlay makes re-writes of a window idempotent —
     last update wins, exactly Whisper's own slot semantics)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def sink(batch_df: DataFrame, batch: Batch) -> None:
         write_whisper(
             batch_df, out_dir, archives, aggregation, x_files_factor, merge=True
         )
 
-    writer = sdf.writeStream.foreachBatch(sink).outputMode(output_mode)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_batches(sdf, sink, checkpoint_dir, output_mode=output_mode)
 
 
 def stream_merge_into_parquet(
@@ -77,16 +145,10 @@ def stream_merge_into_parquet(
       at-least-once delivery — including a restart from a fresh
       checkpoint — converges to the same table.
 
-    On top of that, when a ``checkpoint_dir`` is given a ``_LAST_BATCH``
-    marker (checkpoint-scoped: ``<stream id>:<batch id>``) is written
-    INTO the new version directory before the pointer flips; a replay
-    under the SAME checkpoint skips cleanly so the version chain stays
-    one-per-batch. A different checkpoint dir is a different stream id —
-    its batch numbering restarts, and its batches re-merge (harmlessly,
-    by idempotence) instead of being wrongly skipped. WITHOUT a
-    checkpoint, batch ids are not durable (a restart renumbers from 0),
-    so no marker is written or honored — every batch re-merges through
-    the idempotent path rather than risking a wrong skip.
+    With a ``checkpoint_dir`` each batch is also applied exactly once
+    (the ``advance_version`` marker), so a replay under the same
+    checkpoint adds no version; a different checkpoint is a different
+    stream and re-merges, harmlessly by idempotence.
 
     Read the live state with ``read_current_state(spark, base,
     delete_col=..., seq_col=...)`` — the raw versions keep tombstones
@@ -97,35 +159,10 @@ def stream_merge_into_parquet(
     rewrite; partition the base path and merge per partition to bound
     rewrite amplification.
     """
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        merge_into_parquet,
-    )
-
-    stream_id = checkpoint_dir
     cols = list(sdf.columns)
     others = [c for c in cols if c not in (key_col, seq_col)]
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # The marker short-circuit is only sound when batch ids are
-        # durable, i.e. a checkpoint exists. A checkpoint-less restart
-        # renumbers batches from 0 — matching on a shared placeholder id
-        # would wrongly skip its early batches, silently dropping new
-        # change data; without a checkpoint we rely on the seq-aware
-        # merge's idempotence alone (re-merges are harmless).
-        cur = current_version_path(base) if stream_id is not None else None
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == stream_id and int(last) >= batch_id:
-                    return  # same stream replaying — already applied
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         latest = (
             batch_df.groupBy(key_col)
             .agg(
@@ -136,21 +173,6 @@ def stream_merge_into_parquet(
             )
             .select(*[F.col(f"__r.{c}").alias(c) for c in cols])
         )
-        merge_into_parquet(
-            batch_df.sparkSession,
-            base,
-            latest,
-            key_col,
-            delete_col=delete_col,
-            seq_col=seq_col,
-            extra_files=(
-                {"_LAST_BATCH": f"{stream_id}:{batch_id}"}
-                if stream_id is not None
-                else {}
-            ),
-        )
+        return merge_state(prior, latest, key_col, delete_col, seq_col)
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)

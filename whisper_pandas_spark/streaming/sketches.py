@@ -3,13 +3,12 @@
 
 Each micro-batch is sketched on its own (one tiny histogram row per key
 group — the batch IS the shard) and merged element-wise into the
-versioned state table with the same full-write-then-flip discipline as
-the CDC sink (operators/merge.py:write_version). Because the merge is
-ADDITIVE, replaying a batch would double-count — unlike the seq-aware
-CDC merge there is no idempotence to fall back on — so a checkpoint is
-REQUIRED and the `_LAST_BATCH` marker short-circuit provides the
-standard exactly-once foreachBatch recipe (skip batch ids at or below
-the marker written with the version they produced).
+versioned state table through streaming/sink.py:maintain_table, which
+applies every checkpointed batch exactly once
+(operators/merge.py:advance_version). Every maintainer here only names
+its merge step; an ADDITIVE law (histogram, top-k, CMS, KN counts)
+double-counts a replayed batch, so it refuses to start without a
+checkpoint.
 
 The payoff at 100 TB: the state is kilobytes per key group, every batch
 costs one partial aggregation over the BATCH, and any later consumer
@@ -22,6 +21,8 @@ final state equals the batch recompute bit-for-bit).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from whisper_pandas_spark.streaming.sink import maintain_table
 
 
 def stream_sketch_update(
@@ -39,61 +40,25 @@ def stream_sketch_update(
     the StreamingQuery (caller awaits/stops); read the live state with
     ``spark.read.parquet(current_version_path(base))`` and summarize it
     with :func:`~whisper_pandas_spark.operators.sketches.hist_quantiles`.
+    Merge law: element-wise count sum (additive).
     """
-    from pathlib import Path
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sketches import (
         hist_rollup,
         hist_shard_sketches,
     )
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is required: the sketch merge is additive, so "
-            "a replayed batch would double-count — batch-id dedup needs "
-            "durable batch numbering"
-        )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = current_version_path(base)
-        next_version = 0
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == checkpoint_dir and int(last) >= batch_id:
-                    return  # replay of an already-merged batch
-            next_version = int(Path(cur).name[1:]) + 1
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = hist_shard_sketches(
             batch_df, keys, value_col, lo, hi, n_bins
         )
-        if cur is None:
-            new_state = batch_sketch
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *keys, "cnt"
-            )
-            new_state = hist_rollup(
-                prior.unionByName(batch_sketch), keys
-            )
-        write_version(
-            base,
-            new_state,
-            next_version,
-            extra_files={"_LAST_BATCH": f"{checkpoint_dir}:{batch_id}"},
+        if prior is None:
+            return batch_sketch
+        return hist_rollup(
+            prior.select(*keys, "cnt").unionByName(batch_sketch), keys
         )
 
-    return (
-        sdf.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return maintain_table(
+        sdf, base, step, checkpoint_dir, additive="histogram"
     )
 
 
@@ -110,45 +75,23 @@ def stream_kmv_update(
     (operators/sketches.py kmv_*): each micro-batch is sketched on its
     own and set-union-merged (kmv_rollup) into the versioned state.
 
-    Unlike the ADDITIVE histogram merge above, the KMV merge is
-    IDEMPOTENT — re-unioning hashes that are already in the state leaves
-    the bottom-k unchanged — so a replayed batch cannot corrupt the
-    state and ``checkpoint_dir`` is optional for CORRECTNESS (it still
-    buys restart progress tracking and avoids wasted recompute; the
-    idempotence is asserted in tests). This is the practical argument
-    for KMV state in an at-least-once pipeline.
+    Merge law: bottom-k set union (idempotent — a replayed batch cannot
+    corrupt the state, so ``checkpoint_dir`` is optional).
     """
-    from pathlib import Path
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sketches import (
         kmv_rollup,
         kmv_shard_sketches,
     )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = kmv_shard_sketches(batch_df, keys, value_col, k, seed)
-        cur = current_version_path(base)
-        if cur is None:
-            new_state = kmv_rollup(batch_sketch, keys)
-            next_version = 0
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *keys, "k", "hs"
-            )
-            new_state = kmv_rollup(prior.unionByName(batch_sketch), keys)
-            next_version = int(Path(cur).name[1:]) + 1
-        write_version(base, new_state, next_version)
+        if prior is None:
+            return kmv_rollup(batch_sketch, keys)
+        return kmv_rollup(
+            prior.select(*keys, "k", "hs").unionByName(batch_sketch), keys
+        )
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)
 
 
 def stream_topk_update(
@@ -172,28 +115,13 @@ def stream_topk_update(
     stays 0 and the state equals the batch recompute bit-for-bit —
     which is what the registry oracle checks; the approximate-regime
     bound (lo <= true <= lo + rest_max) is pytest-pinned.
-
-    Like the histogram stream (and unlike KMV), the merge is ADDITIVE:
-    a replayed batch would double-count, so the checkpoint-scoped
-    `_LAST_BATCH` marker is REQUIRED for correctness.
+    Merge law: space-saving count sum (additive).
     """
-    from pathlib import Path
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sketches import topk_shard_sketches
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is required: the top-k merge is additive, so "
-            "a replayed batch would double-count — batch-id dedup needs "
-            "durable batch numbering"
-        )
     kcols = list(keys)
 
     def merge_states(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -244,39 +172,15 @@ def stream_topk_update(
             )
         )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = current_version_path(base)
-        next_version = 0
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == checkpoint_dir and int(last) >= batch_id:
-                    return  # replay of an already-merged batch
-            next_version = int(Path(cur).name[1:]) + 1
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = topk_shard_sketches(batch_df, keys, item_col, capacity)
-        if cur is None:
-            new_state = batch_sketch
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *kcols, "items", "rest_max"
-            )
-            new_state = merge_states(prior, batch_sketch)
-        write_version(
-            base,
-            new_state,
-            next_version,
-            extra_files={"_LAST_BATCH": f"{checkpoint_dir}:{batch_id}"},
+        if prior is None:
+            return batch_sketch
+        return merge_states(
+            prior.select(*kcols, "items", "rest_max"), batch_sketch
         )
 
-    return (
-        sdf.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return maintain_table(sdf, base, step, checkpoint_dir, additive="top-k")
 
 
 def stream_cms_update(
@@ -292,70 +196,28 @@ def stream_cms_update(
     """Streaming twin for the count-min sketches (operators/sketches.py
     cms_*): each micro-batch is sketched on its own (the batch IS the
     shard) and merged into the versioned state by the CMS elementwise-sum
-    law (cms_rollup over the sparse cell union).
-
-    Like the histogram merge — and unlike KMV — the merge is ADDITIVE,
-    so a replayed batch would double-count every counter and
-    ``checkpoint_dir`` is REQUIRED: the `_LAST_BATCH` marker
-    short-circuit provides the standard exactly-once foreachBatch
-    recipe. State is (keys..., row, col, cnt) — at most
-    groups x depth x width rows, kilobytes per group — and any later
-    consumer reads point-frequency estimates off it with cms_estimate
-    without touching raw history.
+    law (cms_rollup over the sparse cell union) — additive. State is
+    (keys..., row, col, cnt) — at most groups x depth x width rows,
+    kilobytes per group — and any later consumer reads point-frequency
+    estimates off it with cms_estimate without touching raw history.
     """
-    from pathlib import Path
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sketches import (
         cms_rollup,
         cms_shard_sketches,
     )
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is required: the CMS merge is additive, so a "
-            "replayed batch would double-count — batch-id dedup needs "
-            "durable batch numbering"
-        )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = current_version_path(base)
-        next_version = 0
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == checkpoint_dir and int(last) >= batch_id:
-                    return  # replay of an already-merged batch
-            next_version = int(Path(cur).name[1:]) + 1
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = cms_shard_sketches(
             batch_df, keys, value_col, depth=depth, width=width, seed=seed
         )
-        if cur is None:
-            new_state = batch_sketch
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *keys, "row", "col", "cnt"
-            )
-            new_state = cms_rollup(prior.unionByName(batch_sketch), keys)
-        write_version(
-            base,
-            new_state,
-            next_version,
-            extra_files={"_LAST_BATCH": f"{checkpoint_dir}:{batch_id}"},
+        if prior is None:
+            return batch_sketch
+        return cms_rollup(
+            prior.select(*keys, "row", "col", "cnt").unionByName(batch_sketch),
+            keys,
         )
 
-    return (
-        sdf.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return maintain_table(sdf, base, step, checkpoint_dir, additive="CMS")
 
 
 def stream_hll_update(
@@ -371,46 +233,26 @@ def stream_hll_update(
     each micro-batch is sketched on its own and element-wise-MAX-merged
     (hll_rollup) into the versioned register state — live distinct
     counts per group over an unbounded stream in O(groups x m) state.
-
-    Like Bloom/KMV — and unlike the additive CMS — the merge is
-    IDEMPOTENT (max-merging registers that are already absorbed changes
-    nothing), so a replayed batch or a full reprocess cannot corrupt
-    the state: no `_LAST_BATCH` marker machinery, asserted end-to-end
-    by the `stream_hll_replay` entry's deliberate double-pass.
+    Merge law: register max (idempotent; the `stream_hll_replay` entry's
+    deliberate double pass asserts it end to end).
     """
-    from pathlib import Path
-
     from whisper_pandas_spark.operators.hll import (
         hll_rollup,
         hll_shard_sketches,
     )
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = hll_shard_sketches(
             batch_df, keys, value_col, m=m, seed=seed
         )
-        cur = current_version_path(base)
-        if cur is None:
-            new_state = hll_rollup(batch_sketch, keys)
-            next_version = 0
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *keys, "bucket", "reg"
-            )
-            new_state = hll_rollup(prior.unionByName(batch_sketch), keys)
-            next_version = int(Path(cur).name[1:]) + 1
-        write_version(base, new_state, next_version)
+        if prior is None:
+            return hll_rollup(batch_sketch, keys)
+        return hll_rollup(
+            prior.select(*keys, "bucket", "reg").unionByName(batch_sketch),
+            keys,
+        )
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)
 
 
 def stream_bloom_update(
@@ -428,49 +270,25 @@ def stream_bloom_update(
     own and set-union-merged (bloom_rollup) into the versioned state —
     the streaming face of Dolma-style corpus dedup, where every arriving
     shard's keys are added to one global membership filter.
-
-    Like KMV — and unlike the additive CMS — the merge is IDEMPOTENT
-    (re-unioning bits that are already set changes nothing), so a
-    replayed batch, a duplicated file, or a full reprocess CANNOT
-    corrupt the state: ``checkpoint_dir`` is optional for correctness
-    (it still buys restart progress tracking), and no `_LAST_BATCH`
-    marker machinery is needed. Asserted end-to-end in the
-    `stream_bloom_replay` entry, which deliberately reprocesses the
-    whole stream into the same state.
+    Merge law: bit-set union (idempotent; the `stream_bloom_replay`
+    entry reprocesses the whole stream into the same state).
     """
-    from pathlib import Path
-
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sketches import (
         bloom_rollup,
         bloom_shard_sketches,
     )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_sketch = bloom_shard_sketches(
             batch_df, keys, value_col, k=k, m=m, seed=seed
         )
-        cur = current_version_path(base)
-        if cur is None:
-            new_state = bloom_rollup(batch_sketch, keys)
-            next_version = 0
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *keys, "bit"
-            )
-            new_state = bloom_rollup(prior.unionByName(batch_sketch), keys)
-            next_version = int(Path(cur).name[1:]) + 1
-        write_version(base, new_state, next_version)
+        if prior is None:
+            return bloom_rollup(batch_sketch, keys)
+        return bloom_rollup(
+            prior.select(*keys, "bit").unionByName(batch_sketch), keys
+        )
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)
 
 
 def stream_kn_counts_update(
@@ -484,75 +302,34 @@ def stream_kn_counts_update(
     (operators/knlm.py): each micro-batch of documents contributes its
     trigram counts, merged into the versioned (w1, w2, w3, c123) state
     by elementwise SUM — live LM statistics over an unbounded corpus,
-    scoreable at any time via kn_score_from_counts.
-
-    Like the CMS/histogram family — and unlike Bloom/KMV/HLL — the
-    merge is ADDITIVE, so a replayed batch would double-count and
-    ``checkpoint_dir`` is REQUIRED (the `_LAST_BATCH` marker
-    short-circuit, the standard exactly-once foreachBatch recipe).
-    State is the Zipf-bounded trigram-type table — orders of magnitude
-    below corpus scale and exactly the c123 root the batch scorer
-    derives everything from, so stream-maintained counts score
-    BIT-IDENTICALLY to a batch rebuild (asserted by the
+    scoreable at any time via kn_score_from_counts. Merge law: count
+    sum (additive). State is the Zipf-bounded trigram-type table —
+    orders of magnitude below corpus scale and exactly the c123 root the
+    batch scorer derives everything from, so stream-maintained counts
+    score BIT-IDENTICALLY to a batch rebuild (asserted by the
     `stream_kn_replay` entry's shared oracle).
     """
-    from pathlib import Path
+    from pyspark.sql import functions as F
 
     from whisper_pandas_spark.operators.knlm import trigram_stream
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
 
-    if not checkpoint_dir:
-        raise ValueError(
-            "checkpoint_dir is required: the trigram-count merge is "
-            "additive, so a replayed batch would double-count — batch-id "
-            "dedup needs durable batch numbering"
-        )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = current_version_path(base)
-        next_version = 0
-        if cur is not None:
-            marker = Path(cur) / "_LAST_BATCH"
-            if marker.exists():
-                sid, _, last = marker.read_text().rpartition(":")
-                if sid == checkpoint_dir and int(last) >= batch_id:
-                    return  # replay of an already-merged batch
-            next_version = int(Path(cur).name[1:]) + 1
-        from pyspark.sql import functions as F
-
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         batch_counts = (
             trigram_stream(batch_df, id_col, text_col)
             .groupBy("w1", "w2", "w3")
             .agg(F.count(F.lit(1)).alias("c123"))
         )
-        if cur is None:
-            new_state = batch_counts
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                "w1", "w2", "w3", "c123"
-            )
-            new_state = (
-                prior.unionByName(batch_counts)
-                .groupBy("w1", "w2", "w3")
-                .agg(F.sum("c123").alias("c123"))
-            )
-        write_version(
-            base,
-            new_state,
-            next_version,
-            extra_files={"_LAST_BATCH": f"{checkpoint_dir}:{batch_id}"},
+        if prior is None:
+            return batch_counts
+        return (
+            prior.select("w1", "w2", "w3", "c123")
+            .unionByName(batch_counts)
+            .groupBy("w1", "w2", "w3")
+            .agg(F.sum("c123").alias("c123"))
         )
 
-    return (
-        sdf.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return maintain_table(
+        sdf, base, step, checkpoint_dir, additive="trigram-count"
     )
 
 
@@ -574,10 +351,10 @@ def stream_bottomk_update(
 
         bk(S ∪ T) = bk(bk(S) ∪ T),   bk(S ∪ S) = bk(S)
 
-    so — like Bloom/KMV/HLL and unlike the additive CMS/KN counters —
-    a replayed batch or a full checkpoint-less reprocess cannot corrupt
-    the state (no `_LAST_BATCH` marker machinery; asserted end-to-end
-    by `stream_bottomk_replay`'s deliberate double pass).
+    so a replayed batch or a full reprocess cannot corrupt the state
+    (asserted end-to-end by `stream_bottomk_replay`'s double pass).
+    Rows are ranked by (h, id) ascending with NULLs last, as in the
+    DuckDB twin, so a NULL id (NULL hash) never displaces a real one.
 
     Relation to :func:`stream_kmv_update` above: KMV keeps only the k
     minimum HASHES per group, packed as a sketch array — an estimator
@@ -588,21 +365,17 @@ def stream_bottomk_update(
     estimator state can reconstruct. O(groups x k) state, one window
     over (prior ∪ batch) — never over the stream's bulk.
     """
-    from pathlib import Path
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from whisper_pandas_spark.operators.merge import (
-        current_version_path,
-        write_version,
-    )
     from whisper_pandas_spark.operators.sampling import hash_bucket
 
     key_cols = [*keys, id_col]
 
     def bottom_k(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*keys).orderBy("h", id_col)
+        w = Window.partitionBy(*keys).orderBy(
+            F.col("h").asc_nulls_last(), F.col(id_col).asc_nulls_last()
+        )
         return (
             df.dropDuplicates(key_cols)
             .withColumn("rn", F.row_number().over(w))
@@ -610,25 +383,12 @@ def stream_bottomk_update(
             .drop("rn")
         )
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def step(batch_df: DataFrame, prior: DataFrame | None) -> DataFrame:
         hashed = batch_df.select(*key_cols).withColumn(
             "h", hash_bucket(F.col(id_col).cast("string"), seed)
         )
-        cur = current_version_path(base)
-        if cur is None:
-            new_state = bottom_k(hashed)
-            next_version = 0
-        else:
-            prior = batch_df.sparkSession.read.parquet(cur).select(
-                *key_cols, "h"
-            )
-            new_state = bottom_k(prior.unionByName(hashed))
-            next_version = int(Path(cur).name[1:]) + 1
-        write_version(base, new_state, next_version)
+        if prior is None:
+            return bottom_k(hashed)
+        return bottom_k(prior.select(*key_cols, "h").unionByName(hashed))
 
-    writer = sdf.writeStream.foreachBatch(apply).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return maintain_table(sdf, base, step, checkpoint_dir)
