@@ -18,6 +18,9 @@ def spark():
     spark = get_spark(app_name="whisper_pandas_spark_tests", master="local[4]",
                       shuffle_partitions=4)
     yield spark
+    from whisper_pandas_spark.registry import reset_result_caches
+
+    reset_result_caches()  # remove the scratch directories entries made
     spark.stop()
 
 

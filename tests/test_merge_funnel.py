@@ -8,9 +8,13 @@ from pyspark.sql import functions as F
 
 from whisper_pandas_spark.operators.funnel import funnel_counts, funnel_steps
 from whisper_pandas_spark.operators.merge import (
+    _MANIFEST,
+    _commit_version,
     current_version_path,
     merge_changes,
     merge_into_parquet,
+    vacuum_partitioned,
+    vacuum_versions,
 )
 
 
@@ -76,6 +80,33 @@ def test_merge_crash_before_flip_leaves_old_version_live(spark, table, tmp_path)
     assert v2.endswith("v2") and current_version_path(base) == v2
     live = {r["id"]: (r["s"], r["v"]) for r in spark.read.parquet(v2).collect()}
     assert live == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30)}
+
+
+@pytest.mark.parametrize("vacuum", [vacuum_versions, vacuum_partitioned])
+def test_vacuum_skips_torn_version_past_live(tmp_path, vacuum):
+    """v0..v2 committed with v2 live, and a torn v3 (no manifest) past it,
+    as a crashed or still-running writer leaves one. keep_last=2 keeps
+    the two newest COMMITTED versions; v3 is neither counted, deleted nor
+    read."""
+    import json
+
+    base = tmp_path / "tbl"
+
+    def write(n):
+        def fill(d):
+            d.mkdir()
+            (d / _MANIFEST).write_text(json.dumps({"p": f"v{n}"}))
+
+        return fill
+
+    for n in range(3):
+        _commit_version(str(base), write(n))
+    (base / "v3").mkdir()
+    (base / "v3" / "part-garbage.parquet").write_bytes(b"torn")
+
+    assert vacuum(str(base), keep_last=2) == [str(base / "v0")]
+    assert sorted(d.name for d in base.glob("v*")) == ["v1", "v2", "v3"]
+    assert current_version_path(str(base)) == str(base / "v2")
 
 
 # -- funnel ----------------------------------------------------------------

@@ -571,11 +571,11 @@ def test_semdedup_gate_matches_exact_rational(a, b):
 # ---------------------------------------------------------------------------
 
 
-def test_partition_prune_plan_and_guard(spark):
+def test_partition_prune_plan_and_guard(spark, sf_dir):
     from whisper_pandas_spark.plans.inspect import partition_filters
     from whisper_pandas_spark.registry import QUERIES
 
-    df = QUERIES["layout_partition_prune"](spark, "/root/testdata/sf0.001")
+    df = QUERIES["layout_partition_prune"](spark, sf_dir)
     rows = df.collect()
     assert 1 <= len(rows) <= 10 and all(r["n"] > 0 for r in rows)
     # the helper itself: a filtered read of the materialized layout
@@ -583,7 +583,7 @@ def test_partition_prune_plan_and_guard(spark):
     import whisper_pandas_spark.queries_materialize as qm
     from pyspark.sql import functions as F2
 
-    d = qm._PART_DIR["/root/testdata/sf0.001"]
+    d = qm._partitioned_events(spark, sf_dir)
     q = spark.read.parquet(d).filter(F2.col("ts_date") == "2024-01-04")
     pf = " ".join(partition_filters(q))
     assert "ts_date" in pf and "2024-01-04" in pf

@@ -29,6 +29,8 @@ def main() -> int:
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
 
+    from whisper_pandas_spark.registry import reset_result_caches
+
     spark = (
         SparkSession.builder.master(MASTER)
         .config("spark.sql.session.timeZone", "UTC")
@@ -58,6 +60,20 @@ def main() -> int:
     filters = sys.argv[1:]
     queries = e.queries()
     oracles = e.oracle_sql()
+    try:
+        fails = sweep(spark, con, queries, oracles, filters)
+    finally:
+        # once, after the sweep: entries share cached results while it
+        # runs, and no scratch directory outlives it
+        reset_result_caches()
+    print(f"\nFAILURES: {fails}")
+    spark.stop()
+    return 1 if fails else 0
+
+
+def sweep(spark, con, queries, oracles, filters) -> int:
+    """Check every entry whose name contains one of ``filters`` (all when
+    empty) and return the number that fail."""
     fails = 0
     for name, fn in queries.items():
         if filters and not any(f in name for f in filters):
@@ -128,9 +144,7 @@ def main() -> int:
             print(f"{name:35s} HASH-RISK   atol-close but not bit-identical")
         else:
             print(f"{name:35s} OK          {len(sdf)} rows")
-    print(f"\nFAILURES: {fails}")
-    spark.stop()
-    return 1 if fails else 0
+    return fails
 
 
 if __name__ == "__main__":

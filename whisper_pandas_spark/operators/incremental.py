@@ -37,10 +37,6 @@ _RETRACTABLE = ("count", "sum")
 _SUPPORTED = ("count", "sum", "min", "max")
 
 
-def _state_cols(measures: dict[str, tuple[str, ...]]) -> list[str]:
-    return [f"{col}_{agg}" for col, aggs in measures.items() for agg in aggs]
-
-
 def _validate(measures: dict[str, tuple[str, ...]], retract: bool) -> None:
     if not measures:
         raise ValueError("measures must be non-empty")

@@ -235,6 +235,18 @@ def _version_dirs(root: Path) -> list[Path]:
     )
 
 
+def _committed_versions(base: str) -> list[Path]:
+    """The ``v<N>`` directories up to and including the live one, oldest
+    first. One numbered past the live one was never live and may belong
+    to a writer still running, so the vacuums neither count, delete nor
+    read it."""
+    cur = current_version_path(base)
+    if cur is None:
+        return []
+    live = int(Path(cur).name[1:])
+    return [d for d in _version_dirs(Path(base)) if int(d.name[1:]) <= live]
+
+
 def _commit_version(base: str, write: Callable[[Path], None]) -> str:
     """Fill the next version directory with ``write(new_dir)``, then
     atomically flip ``_CURRENT`` to it. The new number is past EVERY
@@ -322,16 +334,14 @@ def vacuum_versions(base: str, keep_last: int = 2) -> list[str]:
     Time travel reaches back ``keep_last`` versions after a vacuum; the
     pointer file is untouched, so readers mid-flight on a RETAINED
     version are unaffected — only versions older than the retention
-    window disappear (the copy-on-write vacuum contract)."""
+    window disappear (the copy-on-write vacuum contract). A directory
+    numbered past the live one is left alone and not counted."""
     import shutil
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    cur = current_version_path(base)
-    versions = _version_dirs(Path(base))
+    versions = _committed_versions(base)
     keep = {str(d) for d in versions[-keep_last:]}
-    if cur is not None:
-        keep.add(cur)
     removed = []
     for d in versions:
         if str(d) not in keep:
@@ -555,17 +565,15 @@ def vacuum_partitioned(base: str, keep_last: int = 2) -> list[str]:
     deleted when NO retained manifest (the newest ``keep_last``, always
     including the live one) references it — unlike
     :func:`vacuum_versions`, age alone is not sufficient, because old
-    versions keep serving untouched partitions."""
+    versions keep serving untouched partitions. A directory numbered past
+    the live one is left alone, not counted and its manifest not read."""
     import shutil
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root = Path(base)
-    cur = current_version_path(base)
-    versions = _version_dirs(root)
+    versions = _committed_versions(base)
     retained = {str(d) for d in versions[-keep_last:]}
-    if cur is not None:
-        retained.add(cur)
     referenced: set[str] = set()
     for d in versions:
         if str(d) in retained:

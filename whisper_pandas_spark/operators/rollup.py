@@ -96,48 +96,3 @@ def rollup(
             F.col("n_points") / F.lit(float(slots)) >= F.lit(float(x_files_factor))
         )
     return out
-
-
-def rollup_sql(
-    table: str,
-    resolution_seconds: int,
-    method: str = "average",
-    x_files_factor: float = 0.0,
-    fine_resolution_seconds: int | None = None,
-    keys: tuple[str, ...] = ("metric",),
-    ts_col: str = "timestamp",
-    value_col: str = "value",
-) -> str:
-    """ANSI-SQL equivalent of :func:`rollup` (runs on DuckDB and Spark) —
-    used as the oracle in the driver's correctness gate."""
-    bucket = (
-        f"to_timestamp((epoch({ts_col})::BIGINT // {resolution_seconds})"
-        f" * {resolution_seconds})"
-    )
-    exprs = {
-        "average": f"avg({value_col})",
-        "sum": f"sum({value_col})",
-        "last": f"max_by({value_col}, {ts_col})",
-        "max": f"max({value_col})",
-        "min": f"min({value_col})",
-        "absmax": f"max_by({value_col}, abs({value_col}))",
-        "absmin": f"min_by({value_col}, abs({value_col}))",
-    }
-    if method == "avg_zero":
-        slots = resolution_seconds // fine_resolution_seconds
-        val = f"sum({value_col}) / {slots}"
-    else:
-        val = exprs[method]
-    key_list = ", ".join(keys)
-    sql = (
-        f"SELECT {key_list}, {bucket} AS bucket, {val} AS value,"
-        f" count({value_col}) AS n_points\n"
-        f"FROM {table}\nGROUP BY {key_list}, bucket"
-    )
-    if x_files_factor > 0.0:
-        slots = resolution_seconds // fine_resolution_seconds
-        sql = (
-            f"SELECT * FROM ({sql})\n"
-            f"WHERE n_points / {float(slots)} >= {float(x_files_factor)}"
-        )
-    return sql

@@ -579,13 +579,6 @@ def kll_quantiles(
 _KMV_SPACE = float(1 << 60)  # hash64 range (15 md5 hex chars)
 
 
-def kmv_duck_hash(value_sql: str, seed: int = 0) -> str:
-    """DuckDB twin of the sketch hash — oracles build on this."""
-    return duck_md5_int(
-        f"'kmv{seed}:' || CAST({value_sql} AS VARCHAR)", HASH_HEX_CHARS
-    )
-
-
 def kmv_shard_sketches(
     df: DataFrame,
     keys: tuple[str, ...],

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.entries import register, register_cache, replay, table
 from whisper_pandas_spark.functions.hashing import HASH_HEX_CHARS, duck_base_hash32
 from whisper_pandas_spark.functions.text import DUCK_SHINGLES as _DUCK_SHINGLES
 from whisper_pandas_spark.functions.text import DUCK_TOKS, duck_minhash_pairs_ctes
@@ -1230,8 +1230,6 @@ def stream_er_linkage_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a fresh checkpoint (run here) provably lands in unchanged
     state. The master never enters state; pairs carry ids + score
     only."""
-    import tempfile
-
     from whisper_pandas_spark.streaming.linkage import (
         linkage_read_off,
         stream_linkage,
@@ -1241,35 +1239,24 @@ def stream_er_linkage_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     recs = stage_materialize(L.er_records(cust))
     clean = recs.filter(F.col("src") == "clean")
     dirty = recs.filter(F.col("src") == "dirty")
-    d = tempfile.mkdtemp(prefix="wps_streamer_")
     n_hi = dirty.agg(F.max("rec_id")).collect()[0][0] - L.DIRTY_OFFSET
     step = max(1, (int(n_hi) + 4) // 4)
+    frames = []
     for i in range(4):
         lo = L.DIRTY_OFFSET + i * step
         cond = F.col("rec_id") >= lo
         if i < 3:
             cond = cond & (F.col("rec_id") < lo + step)
-        dirty.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-            f"{d}/changes/f{i}"
-        )
-
-    schema = (
-        "rec_id long, src string, nation int, name string, phone string,"
-        " city string, bal_cents bigint, seg string"
+        frames.append(dirty.filter(cond))
+    # the second pass reprocesses the whole stream under a fresh
+    # checkpoint: every pair re-derives and anti-joins away — state
+    # provably unchanged under the hash gate
+    d = replay(
+        spark,
+        frames,
+        lambda sdf, d, ckpt: stream_linkage(
+            sdf, clean, f"{d}/state", checkpoint_dir=ckpt
+        ),
+        passes=2,
     )
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_linkage(sdf, clean, f"{d}/state", checkpoint_dir=ckpt)
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess, fresh checkpoint: every pair re-derives and
-    # anti-joins away — state provably unchanged under the hash gate
-    run_pass(f"{d}/ckpt2")
     return linkage_read_off(spark, f"{d}/state")

@@ -10,12 +10,10 @@ parquet.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.entries import register, scratch_dir, scratch_once, table
 from whisper_pandas_spark.sources.warc import HTTP_ENVELOPE_CONST as _WARC_HTTP_CONST
 
 
@@ -32,21 +30,16 @@ def ingest_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9+: documents -> JSONL export -> tolerant explicit-schema read.
     Losslessness IS the assertion: the oracle reads the original parquet,
     so any encode/decode drift (quoting, unicode, nulls) hash-fails."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
     from whisper_pandas_spark.sources.ingest import read_jsonl, write_jsonl
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = Path(tempfile.gettempdir()) / f"wps_jsonl_{tag}"
+    out = scratch_dir("wps_jsonl_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    write_jsonl(docs, str(out))
+    write_jsonl(docs, out)
     back = read_jsonl(
         spark,
-        str(out),
+        out,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     return back.orderBy("doc_id")
@@ -65,14 +58,9 @@ def ingest_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the quoting/escape round trip is what the hash gate checks on the
     carried-through value columns; raw multi-line text itself rides the
     JSONL twin, which is the lossless-text path)."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
     from whisper_pandas_spark.sources.ingest import read_csv, write_csv
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = Path(tempfile.gettempdir()) / f"wps_csv_{tag}"
+    out = scratch_dir("wps_csv_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -80,10 +68,10 @@ def ingest_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.md5(F.encode("text", "utf-8")).alias("text_md5"),
     )
-    write_csv(docs, str(out))
+    write_csv(docs, out)
     back = read_csv(
         spark,
-        str(out),
+        out,
         "doc_id long, lang string, source string, n_chars long, text_md5 string",
     )
     return back.orderBy("doc_id")
@@ -106,21 +94,16 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange twin of the parquet path. Losslessness IS the
     assertion: the oracle reads the original parquet, so any ORC
     encode/decode drift (unicode, nulls, type mapping) hash-fails."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
     from whisper_pandas_spark.sources.ingest import read_orc, write_orc
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = Path(tempfile.gettempdir()) / f"wps_orc_{tag}"
+    out = scratch_dir("wps_orc_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    write_orc(docs, str(out))
+    write_orc(docs, out)
     back = read_orc(
         spark,
-        str(out),
+        out,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     return back.orderBy("doc_id")
@@ -144,21 +127,16 @@ def ingest_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONL/CSV/ORC round trips. Losslessness IS the assertion: the
     oracle reads the original parquet, so any entity-escaping or
     whitespace drift in the XML encode/decode chain hash-fails."""
-    import hashlib
-    import tempfile
-    from pathlib import Path
-
     from whisper_pandas_spark.sources.ingest import read_xml, write_xml
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = Path(tempfile.gettempdir()) / f"wps_xml_{tag}"
+    out = scratch_dir("wps_xml_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    write_xml(docs, str(out))
+    write_xml(docs, out)
     back = read_xml(
         spark,
-        str(out),
+        out,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     return back.orderBy("doc_id")
@@ -188,12 +166,10 @@ def ingest_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a scan). The oracle replays the HTTP-envelope
     Content-Length arithmetic byte-exactly, so the value hash proves
     the container headers, not just the payload text."""
-    import tempfile
-
     from whisper_pandas_spark.sources.warc import read_warc, write_warc
 
     docs = table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="wps_warc_")
+    d = scratch_dir("wps_warc_")
     # file count IS the parallelism for WARC (one task per file, both
     # directions) — size shards to ~4k records like a real crawl sizes
     # to ~1 GiB members (measured: 4 fixed files at the sf1 stress =
@@ -274,38 +250,23 @@ WITH nf AS (
 """
 
 
-def _warc_tree(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+def _warc_tree(spark: SparkSession, sf_dir: str) -> str:
     """Write the documents table as an UNCOMPRESSED sharded WARC tree
     (offset arithmetic is SQL-replayable only without gzip framing;
-    the gzip path is pinned by pytest instead) and return
-    (dir, n_files). Cached per (process, sf_dir) — all three round-14
-    entries read the same tree; reset_result_caches drops it so bench
-    timings always pay the write."""
+    the gzip path is pinned by pytest instead) and return its directory.
+    Built once per process per sf_dir — the WARC-tree entries read the
+    same tree; reset_result_caches drops it so bench timings always pay
+    the write."""
     from whisper_pandas_spark.sources.warc import write_warc
 
-    key = sf_dir
-    if key in _WARC_TREE:
-        return _WARC_TREE[key]
-    import tempfile
+    def build(d: str) -> None:
+        docs = table(spark, sf_dir, "documents")
+        n_files = max(4, (docs.count() + 3999) // 4000)
+        write_warc(
+            docs, d, "doc_id", "text", num_files=n_files, compression="none"
+        )
 
-    docs = table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="wps_cdx_")
-    n_files = max(4, (docs.count() + 3999) // 4000)
-    write_warc(
-        docs, d, "doc_id", "text", num_files=n_files, compression="none"
-    )
-    _WARC_TREE[key] = (d, n_files)
-    return d, n_files
-
-
-_WARC_TREE: dict[str, tuple[str, int]] = {}
-
-
-@register_cache
-def _drop_warc_trees() -> None:
-    for d, _n in _WARC_TREE.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _WARC_TREE.clear()
+    return scratch_once("wps_cdx_", sf_dir, build)
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +300,7 @@ def ingest_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.sources.cdx import build_cdx
     from whisper_pandas_spark.sources.warc import read_warc
 
-    d, _n = _warc_tree(spark, sf_dir)
+    d = _warc_tree(spark, sf_dir)
     return build_cdx(read_warc(spark, d)).orderBy("surt_key")
 
 
@@ -374,7 +335,7 @@ def warc_selective_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.sources.cdx import build_cdx, fetch_ranges
     from whisper_pandas_spark.sources.warc import read_warc
 
-    d, _n = _warc_tree(spark, sf_dir)
+    d = _warc_tree(spark, sf_dir)
     cdx = build_cdx(read_warc(spark, d))
     hits = cdx.filter(F.col("url").like("http://corpus.example/doc/1%"))
     fetched_bytes = hits.agg(F.sum("record_length")).first()[0]
@@ -438,7 +399,7 @@ def ingest_wat_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.sources.cdx import extract_wat
     from whisper_pandas_spark.sources.warc import read_warc
 
-    d, _n = _warc_tree(spark, sf_dir)
+    d = _warc_tree(spark, sf_dir)
     rec = read_warc(spark, d).filter(F.col("warc_type") == "response")
     return extract_wat(rec).orderBy("url")
 
@@ -510,8 +471,6 @@ def cdx_zipnum_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry RAISES unless the selection is a proper subset; the oracle
     replays the block arithmetic from pure rank math, so a hash match
     proves the cluster.idx interval selection mechanics exactly."""
-    import tempfile
-
     from whisper_pandas_spark.sources.cdx import (
         build_cdx,
         write_zipnum,
@@ -520,12 +479,11 @@ def cdx_zipnum_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from whisper_pandas_spark.sources.warc import read_warc
 
-    d, _n = _warc_tree(spark, sf_dir)
+    d = _warc_tree(spark, sf_dir)
     cdx = build_cdx(read_warc(spark, d))
     n = cdx.count()
     block_lines = max(16, -(-n // 8))
-    zdir = tempfile.mkdtemp(prefix="wps_zipnum_")
-    gz = f"{zdir}/cdx-00000.gz"
+    gz = f"{scratch_dir('wps_zipnum_')}/cdx-00000.gz"
     idx = write_zipnum(cdx, gz, block_lines)
     sel = zipnum_select(idx, _ZN_PREFIX)
     if not sel or len(sel) >= len(idx):
@@ -615,12 +573,10 @@ def ingest_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     record Content-Length AND the record offset/length arithmetic via
     per-shard window cumsums — container bytes proven, not just
     payloads."""
-    import tempfile
-
     from whisper_pandas_spark.sources.warc import read_warc, write_warc
 
     docs = table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="wps_wet_")
+    d = scratch_dir("wps_wet_")
     n_files = max(4, (docs.count() + 3999) // 4000)
     write_warc(
         docs,
@@ -678,14 +634,12 @@ def pipeline_crawl_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag TRUE — a hash match proves the four production paths agree
     byte-for-byte on every document. All joins are on the unique URL;
     checks are pure codegen."""
-    import tempfile
-
     from whisper_pandas_spark.sources.cdx import build_cdx, extract_wat
     from whisper_pandas_spark.sources.warc import read_warc, write_warc
 
-    d_warc, _n = _warc_tree(spark, sf_dir)
+    d_warc = _warc_tree(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
-    d_wet = tempfile.mkdtemp(prefix="wps_wetc_")
+    d_wet = scratch_dir("wps_wetc_")
     n_files = max(4, (docs.count() + 3999) // 4000)
     write_warc(
         docs, d_wet, "doc_id", "text",

@@ -13,13 +13,11 @@ its pruning fails to reach the scan.
 from __future__ import annotations
 
 import re
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.entries import register, scratch_dir, scratch_once, table
 
 
 # ---------------------------------------------------------------------------
@@ -27,8 +25,6 @@ from whisper_pandas_spark.entries import register, register_cache, table
 # ---------------------------------------------------------------------------
 
 _BUCKETS = 16
-_BUCKETED_DONE: set[str] = set()
-register_cache(_BUCKETED_DONE.clear)
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -38,8 +34,8 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     tag = re.sub(r"\W+", "_", sf_dir).strip("_")
     t_cust, t_ord = f"wps_bkt_customer_{tag}", f"wps_bkt_orders_{tag}"
-    if sf_dir not in _BUCKETED_DONE:
-        base = tempfile.mkdtemp(prefix="wps_bucketed_")
+
+    def build(base: str) -> None:
         materialize_bucketed(
             table(spark, sf_dir, "customer"), t_cust, "c_custkey",
             _BUCKETS, sort_cols="c_custkey", path=f"{base}/customer",
@@ -48,7 +44,8 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             table(spark, sf_dir, "orders"), t_ord, "o_custkey",
             _BUCKETS, sort_cols="o_custkey", path=f"{base}/orders",
         )
-        _BUCKETED_DONE.add(sf_dir)
+
+    scratch_once("wps_bucketed_", sf_dir, build)
     return t_cust, t_ord
 
 
@@ -90,8 +87,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Y25: Z-order clustered layout with proven row-group pruning
 # ---------------------------------------------------------------------------
 
-_ZORDER_DIR: dict[str, str] = {}
-register_cache(_ZORDER_DIR.clear)
 _ZBOX = (0.40, 0.50)  # box = [min + 40% span, min + 50% span] per column
 
 
@@ -100,16 +95,16 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
     per process per sf_dir."""
     from whisper_pandas_spark.sources.clustered import materialize_zorder
 
-    if sf_dir not in _ZORDER_DIR:
-        d = tempfile.mkdtemp(prefix="wps_zorder_")
-        materialize_zorder(
+    return scratch_once(
+        "wps_zorder_",
+        sf_dir,
+        lambda d: materialize_zorder(
             table(spark, sf_dir, "orders"),
             d,
             ["o_custkey", "o_totalprice"],
             num_files=8,
-        )
-        _ZORDER_DIR[sf_dir] = d
-    return _ZORDER_DIR[sf_dir]
+        ),
+    )
 
 
 @register(
@@ -202,25 +197,21 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (zorder-entry doctrine) the entry RAISES when the filter fails to
 # reach the scan rather than returning slow-but-correct rows.
 
-_PART_DIR: dict[str, str] = {}
-register_cache(_PART_DIR.clear)
 _PART_DAY_OFFSET = 3  # min event date + 3 — present at every SF (30-day span)
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as ts_date=YYYY-MM-DD/ Hive partitions, once
     per process per sf_dir."""
-    if sf_dir not in _PART_DIR:
-        d = tempfile.mkdtemp(prefix="wps_hivepart_")
-        (
-            table(spark, sf_dir, "events")
-            .withColumn("ts_date", F.to_date("ts"))
-            .write.partitionBy("ts_date")
-            .mode("overwrite")
-            .parquet(d)
-        )
-        _PART_DIR[sf_dir] = d
-    return _PART_DIR[sf_dir]
+    return scratch_once(
+        "wps_hivepart_",
+        sf_dir,
+        lambda d: table(spark, sf_dir, "events")
+        .withColumn("ts_date", F.to_date("ts"))
+        .write.partitionBy("ts_date")
+        .mode("overwrite")
+        .parquet(d),
+    )
 
 
 @register(
@@ -450,7 +441,6 @@ def merge_partitioned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     zorder-entry discipline), then returns per-lang aggregates of the
     manifest-resolved live state, which the oracle recomputes
     relationally."""
-    import tempfile
     from pathlib import Path
 
     from whisper_pandas_spark.operators.merge import (
@@ -465,8 +455,7 @@ def merge_partitioned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_df = docs.where(F.col("doc_id") % 5 != 0).withColumn(
         "is_delete", F.lit(False)
     )
-    d = tempfile.mkdtemp(prefix="wps_pmerge_")
-    t = f"{d}/table"
+    t = f"{scratch_dir('wps_pmerge_')}/table"
     merge_into_parquet_partitioned(
         spark, t, base_df, "doc_id", "lang", delete_col="is_delete"
     )
@@ -644,8 +633,6 @@ def merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_M = 1 << 13
 _BLOOM_H = 7
 _BLOOM_PROBE = (7, 123, 400)
-_BLOOM_DIR: dict[str, str] = {}
-register_cache(_BLOOM_DIR.clear)
 
 
 def _bloom_table(spark: SparkSession, sf_dir: str) -> str:
@@ -653,24 +640,22 @@ def _bloom_table(spark: SparkSession, sf_dir: str) -> str:
     deliberately NOT on doc_id, so per-file doc_id min/max spans nearly
     the whole id range and statistics-based pruning is useless for a
     doc_id point lookup; once per process per sf_dir."""
-    import tempfile
-
     from whisper_pandas_spark.sources.clustered import (
         materialize_range_clustered,
     )
 
-    if sf_dir not in _BLOOM_DIR:
-        d = tempfile.mkdtemp(prefix="wps_bloom_")
-        materialize_range_clustered(
+    return scratch_once(
+        "wps_bloom_",
+        sf_dir,
+        lambda d: materialize_range_clustered(
             table(spark, sf_dir, "documents").select(
                 "doc_id", "lang", "n_chars"
             ),
             d,
             ["lang", "n_chars"],
             num_files=8,
-        )
-        _BLOOM_DIR[sf_dir] = d
-    return _BLOOM_DIR[sf_dir]
+        ),
+    )
 
 
 @register(
@@ -744,7 +729,6 @@ def merge_compact_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the zorder/bloom in-query discipline), then returns per-lang
     aggregates of the live state — which must be UNCHANGED by layout,
     as the oracle's plain relational recompute verifies."""
-    import tempfile
     from pathlib import Path
 
     from whisper_pandas_spark.operators.merge import (
@@ -759,8 +743,7 @@ def merge_compact_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    d = tempfile.mkdtemp(prefix="wps_compact_")
-    t = f"{d}/table"
+    t = f"{scratch_dir('wps_compact_')}/table"
     merge_into_parquet_partitioned(
         spark, t, docs.repartition(8), "doc_id", "lang"
     )
@@ -919,16 +902,13 @@ def merge_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ([rev] suffix) and every insert uses fresh keys, so batch == feed
     exactly; fingerprint-diff drift (missed changes, phantom rows)
     hash-mismatches."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import (
         change_feed,
         merge_into_parquet,
     )
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="wps_cdf_")
-    t = f"{d}/table"
+    t = f"{scratch_dir('wps_cdf_')}/table"
     merge_into_parquet(spark, t, docs, "doc_id")  # v0
     changes = (
         docs.where((F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 97 != 2))
@@ -1021,15 +1001,7 @@ def layout_dynamic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merge_deletion_vectors
 # ---------------------------------------------------------------------------
 
-_DV_DIR: dict[str, str] = {}
 _DV_FILES = 4
-
-
-@register_cache
-def _drop_dv_dirs() -> None:
-    for d in _DV_DIR.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _DV_DIR.clear()
 
 
 @register(
@@ -1055,8 +1027,6 @@ def merge_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible to the survivors. DV state is deterministic
     (id-derived positions, overwrite-idempotent versions), so
     repeated runs land in identical state."""
-    import tempfile
-
     from whisper_pandas_spark.operators.deletevec import (
         add_deletes,
         base_file_state,
@@ -1064,13 +1034,13 @@ def merge_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_base,
     )
 
-    key = sf_dir
-    if key not in _DV_DIR:
-        d = tempfile.mkdtemp(prefix="wps_dv_")
-        docs = table(spark, sf_dir, "documents")
-        write_base(docs, "doc_id", d, _DV_FILES)
-        _DV_DIR[key] = d
-    d = _DV_DIR[key]
+    d = scratch_once(
+        "wps_dv_",
+        sf_dir,
+        lambda d: write_base(
+            table(spark, sf_dir, "documents"), "doc_id", d, _DV_FILES
+        ),
+    )
     before = base_file_state(d)
 
     data = spark.read.parquet(f"{d}/data")
@@ -1127,8 +1097,6 @@ def merge_dv_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Survivors after compaction must equal the DV read before it (the
     oracle's plain predicate). Idempotent: a re-run finds no deleted
     rows to re-record and rewrites nothing."""
-    import tempfile
-
     from whisper_pandas_spark.operators.deletevec import (
         add_deletes,
         base_file_state,
@@ -1137,7 +1105,7 @@ def merge_dv_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_base,
     )
 
-    d = tempfile.mkdtemp(prefix="wps_dvc_")
+    d = scratch_dir("wps_dvc_")
     docs = table(spark, sf_dir, "documents")
     write_base(docs, "doc_id", d, _DV_FILES)
     data = spark.read.parquet(f"{d}/data")

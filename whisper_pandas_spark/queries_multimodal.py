@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.entries import register, scratch_dir, table
 from whisper_pandas_spark.operators.multimodal import (
     FRAME_BYTES,
     binary_metadata,
@@ -256,10 +256,8 @@ def mm_archive_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tar write + binaryFile scan + member extraction chain is
     value-checked end to end (the whisper fixture-from-parquet recipe
     applied to the WebDataset source)."""
-    import hashlib
     import io
     import tarfile
-    import tempfile
     from pathlib import Path
 
     from whisper_pandas_spark.sources.archives import read_archive_members
@@ -271,9 +269,7 @@ def mm_archive_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .collect()
     )  # small deterministic slice (~6% of docs) — fixture build only
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    out = Path(tempfile.gettempdir()) / f"wps_tar_{tag}"
-    out.mkdir(exist_ok=True)
+    out = Path(scratch_dir("wps_tar_"))
     bufs = {s: io.BytesIO() for s in range(3)}
     tars = {s: tarfile.open(fileobj=b, mode="w") for s, b in bufs.items()}
     for row in docs:

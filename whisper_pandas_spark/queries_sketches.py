@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.entries import register, replay, table
 from whisper_pandas_spark.functions.hashing import HASH_HEX_CHARS, duck_md5_int
 from whisper_pandas_spark.stage import stage_materialize
 
@@ -142,37 +142,25 @@ def stream_sketch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer n_chars), so the oracle recomputes the identical values
     from raw data — proving batch sketching, element-wise merge,
     version flips, AND the readout in one check."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.operators.sketches import hist_quantiles
     from whisper_pandas_spark.streaming.sketches import stream_sketch_update
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    d = tempfile.mkdtemp(prefix="wps_sketchstream_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_sketch_update(
+            sdf,
+            f"{d}/state",
+            ("lang",),
+            "n_chars",
+            0.0,
+            float(_HQ_BINS),
+            _HQ_BINS,
+            checkpoint_dir=ckpt,
+        ),
     )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema("doc_id long, lang string, n_chars long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_sketch_update(
-        sdf,
-        f"{d}/state",
-        ("lang",),
-        "n_chars",
-        0.0,
-        float(_HQ_BINS),
-        _HQ_BINS,
-        checkpoint_dir=f"{d}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     return hist_quantiles(
         state, ("lang",), _SSQ, 0.0, float(_HQ_BINS), _HQ_BINS
@@ -407,34 +395,22 @@ def stream_kmv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_kept, distinct estimate, min/k-th hash) — the oracle recomputes
     the identical bottom-k from raw data, proving batch sketching,
     union merge, version flips AND the estimator in one hash check."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.streaming.sketches import stream_kmv_update
 
     ev = table(spark, sf_dir, "events").select("event_type", "user_id")
-    d = tempfile.mkdtemp(prefix="wps_kmvstream_")
-    ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [ev.filter(F.col("user_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_kmv_update(
+            sdf,
+            f"{d}/state",
+            ("event_type",),
+            "user_id",
+            k=_KMV_K,
+            checkpoint_dir=ckpt,
+        ),
     )
-    ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_kmv_update(
-        sdf,
-        f"{d}/state",
-        ("event_type",),
-        "user_id",
-        k=_KMV_K,
-        checkpoint_dir=f"{d}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     kk = F.col("k")
     full = F.size("hs") >= kk
@@ -579,8 +555,6 @@ def stream_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit, so this shares `sketch_cms_estimate`'s oracle — one
     hash gate proving batch sketching, additive merge, version flips,
     AND the probe readout."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.operators.sketches import cms_estimate
     from whisper_pandas_spark.streaming.sketches import stream_cms_update
@@ -591,29 +565,19 @@ def stream_cms_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
         (F.col("user_id") % _CMS_BUCKETS).alias("item"),
     )
-    d = tempfile.mkdtemp(prefix="wps_cmsstream_")
-    items.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [items.filter(F.col("event_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_cms_update(
+            sdf,
+            f"{d}/state",
+            ("scope",),
+            "item",
+            depth=_CMS_D,
+            width=_CMS_W,
+            checkpoint_dir=ckpt,
+        ),
     )
-    items.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema("scope string, event_id long, item long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_cms_update(
-        sdf,
-        f"{d}/state",
-        ("scope",),
-        "item",
-        depth=_CMS_D,
-        width=_CMS_W,
-        checkpoint_dir=f"{d}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     probes = spark.range(_CMS_PROBES).select(F.col("id").alias("item"))
     est = cms_estimate(
@@ -759,8 +723,6 @@ def stream_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     additive merge REQUIRES a checkpoint).  Probes 0..39 read
     membership verdicts off the final state with the exact truth joined
     alongside."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.operators.sketches import bloom_contains
     from whisper_pandas_spark.streaming.sketches import stream_bloom_update
@@ -771,21 +733,13 @@ def stream_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
         ((F.col("user_id") % 1000) * _BLOOM_SPREAD).alias("item"),
     )
-    d = tempfile.mkdtemp(prefix="wps_bloomstream_")
-    items.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
-    )
-    items.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema("scope string, event_id long, item long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_bloom_update(
+    # the second pass reprocesses the whole stream under a FRESH
+    # checkpoint: every batch re-merges into the existing state —
+    # harmless by idempotence, proven by the hash
+    d = replay(
+        spark,
+        [items.filter(F.col("event_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_bloom_update(
             sdf,
             f"{d}/state",
             ("scope",),
@@ -793,14 +747,9 @@ def stream_bloom_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             k=_BLOOM_K,
             m=_BLOOM_M,
             checkpoint_dir=ckpt,
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess with a FRESH checkpoint: every batch re-merges into
-    # the existing state — harmless by idempotence, proven by the hash
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     probes = spark.range(_BLOOM_PROBES).select(F.col("id").alias("item"))
     got = bloom_contains(
@@ -940,14 +889,13 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9+: streaming HLL maintenance (streaming/sketches.py:
     stream_hll_update) replayed end-to-end — per-batch sketches MAX-
     merged into versioned register state, then the WHOLE stream
-    deliberately reprocessed by a second checkpoint-less pass: the
+    deliberately reprocessed by a second pass under a fresh checkpoint
+    (a new stream id, so no batch marker covers it): the
     idempotent merge law means the double-processed state still equals
     the direct batch build, which is exactly what the shared batch
     oracle hash-gates (the distinct-count sibling of
     stream_bloom_replay; contrast stream_cms_replay, whose additive
     merge requires exactly-once markers)."""
-    import tempfile
-
     from whisper_pandas_spark.operators.hll import hll_estimate
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.streaming.sketches import stream_hll_update
@@ -955,29 +903,16 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = _hll_items(spark, sf_dir).withColumn(
         "row_id", F.monotonically_increasing_id()
     )
-    d = tempfile.mkdtemp(prefix="wps_hllstream_")
-    items.filter(F.col("row_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
-    )
-    items.filter(F.col("row_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema("grp string, val string, row_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_hll_update(
+    # the second pass reprocesses the whole stream under a FRESH
+    # checkpoint: harmless by idempotence
+    d = replay(
+        spark,
+        [items.filter(F.col("row_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_hll_update(
             sdf, f"{d}/state", ("grp",), "val", m=_HLL_M, checkpoint_dir=ckpt
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess with a FRESH checkpoint: harmless by idempotence
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     est = hll_estimate(state, ("grp",), m=_HLL_M)
     exact = _hll_items(spark, sf_dir).groupBy("grp").agg(

@@ -19,12 +19,17 @@ one code path for live and replay is the point of Structured Streaming.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.entries import (
+    change_stream,
+    drain_to_memory,
+    register,
+    replay,
+    scratch_once,
+    table,
+)
 from whisper_pandas_spark.functions.text import duck_minhash_pairs_ctes
 from whisper_pandas_spark.stage import stage_materialize
 
@@ -60,17 +65,8 @@ def stream_rollup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value",
         watermark="1 hour",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(_SINK)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(_SINK)
+        drain_to_memory(out, _SINK, "complete")
         .select(
             "event_type",
             F.unix_timestamp("bucket").alias("bucket_epoch"),
@@ -129,17 +125,8 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         upper_seconds=_JOIN_UB,
         watermark="1 hour",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(_JOIN_SINK)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(_JOIN_SINK)
+        drain_to_memory(joined, _JOIN_SINK, "append")
         .select(
             "user_id",
             "click_id",
@@ -156,15 +143,6 @@ def stream_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doesn't import queries_dedup (registration order stays put). Parameter
 # parity with the batch entry is asserted in tests/test_streaming.py.
 _ND_NUM_PERM, _ND_BANDS, _ND_ROWS, _ND_JACCARD_T = 12, 4, 3, 0.8
-#: sf_dir -> materialized replay dir (cleared by reset_result_caches)
-_ND_REPLAY_DIR: dict[str, str] = {}
-
-
-@register_cache
-def _drop_nd_replay_dirs() -> None:
-    for d in _ND_REPLAY_DIR.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _ND_REPLAY_DIR.clear()
 
 
 @register(
@@ -178,59 +156,36 @@ def stream_near_dup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 × §2.10: the INCREMENTAL MinHash-LSH near-dup stream
     (streaming/dedup.py — foreachBatch around the batch operators with a
     persistent signature store) replayed over `documents` split into 3
-    files with maxFilesPerTrigger=1 + availableNow, so the store really
+    files (doc_id mod 3), one per micro-batch, so the store really
     grows across micro-batches. A pair is emitted exactly once, in the
     micro-batch where the YOUNGER side arrives; band assignment and the
     Jaccard verify are deterministic per document, so the union of all
     emissions equals the batch lsh_pairs over the full corpus — the same
-    full algorithm-replication oracle as dedup_minhash_lsh."""
-    import os
-    import tempfile
-
+    full algorithm-replication oracle as dedup_minhash_lsh. The pairs
+    are built once per process per sf_dir."""
     from whisper_pandas_spark.streaming.dedup import stream_near_dup
 
-    # per-process result cache (same pattern as queries_dedup._PAIRS_CACHE
-    # / queries_whisper._ROUNDTRIP_DIR, cleared by
-    # registry.reset_result_caches) — without it every driver/oracle/test
-    # invocation leaves a full corpus copy + checkpoint under /tmp
-    cached = _ND_REPLAY_DIR.get(sf_dir)
-    if cached is not None and os.path.isdir(os.path.join(cached, "pairs")):
-        return (
-            spark.read.parquet(os.path.join(cached, "pairs"))
-            .select("doc_i", "doc_j", "jaccard")
-            .orderBy("doc_i", "doc_j")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def build(d: str) -> None:
+        replay(
+            spark,
+            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+            lambda sdf, _src, ckpt: stream_near_dup(
+                sdf,
+                pairs_dir=f"{d}/pairs",
+                sig_store_dir=f"{d}/sigs",
+                checkpoint_dir=ckpt,
+                num_perm=_ND_NUM_PERM,
+                bands=_ND_BANDS,
+                rows=_ND_ROWS,
+                jaccard_threshold=_ND_JACCARD_T,
+            ),
         )
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    stale = _ND_REPLAY_DIR.pop(sf_dir, None)
-    if stale is not None:
-        shutil.rmtree(stale, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="wps_stream_neardup_")
-    _ND_REPLAY_DIR[sf_dir] = base
-    src = os.path.join(base, "in")
-    # 3 files -> 3 micro-batches under maxFilesPerTrigger=1: batch 2's
-    # docs are deduped against batches 0-1 through the signature store
-    docs.repartition(3).write.parquet(src)
-    sdf = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = stream_near_dup(
-        sdf,
-        pairs_dir=os.path.join(base, "pairs"),
-        sig_store_dir=os.path.join(base, "sigs"),
-        checkpoint_dir=os.path.join(base, "ckpt"),
-        num_perm=_ND_NUM_PERM,
-        bands=_ND_BANDS,
-        rows=_ND_ROWS,
-        jaccard_threshold=_ND_JACCARD_T,
-        available_now=True,
-    )
-    q.awaitTermination()
-    q.stop()
+    d = scratch_once("wps_stream_neardup_", sf_dir, build)
     return (
-        spark.read.parquet(os.path.join(base, "pairs"))
+        spark.read.parquet(f"{d}/pairs")
         .select("doc_i", "doc_j", "jaccard")
         .orderBy("doc_i", "doc_j")
     )
@@ -281,8 +236,6 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches; the oracle replays the sequential fold per point with
     DuckDB prefix list_reduce (alpha = 0.25 exactly representable, the
     fold's multiply-add order mirrored operation-for-operation)."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from whisper_pandas_spark.streaming.stateful import streaming_ewma
@@ -301,33 +254,16 @@ def stream_ewma_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rn",
         )
     )
-    d = tempfile.mkdtemp(prefix="wps_ewma_replay_")
-    pts.filter(F.col("rn") <= _EW_CAP // 2).drop("rn").coalesce(
-        1
-    ).write.parquet(f"{d}/src/f1")
-    pts.filter(F.col("rn") > _EW_CAP // 2).drop("rn").coalesce(
-        1
-    ).write.parquet(f"{d}/src/f2")
-    sdf = (
-        spark.readStream.schema(
-            "metric string, timestamp timestamp, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/src/*")
+    sdf = change_stream(
+        spark,
+        [
+            pts.filter(F.col("rn") <= _EW_CAP // 2).drop("rn"),
+            pts.filter(F.col("rn") > _EW_CAP // 2).drop("rn"),
+        ],
     )
     out = streaming_ewma(sdf, alpha=_EW_ALPHA)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(_EW_SINK)
-        .outputMode("append")
-        .option("checkpointLocation", f"{d}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(_EW_SINK)
+        drain_to_memory(out, _EW_SINK, "append")
         .select(
             "metric",
             F.unix_timestamp("timestamp").alias("epoch"),
@@ -397,17 +333,8 @@ def stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 6).alias("sum_value"),
         )
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(_SESS_SINK)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
     return (
-        spark.table(_SESS_SINK)
+        drain_to_memory(out, _SESS_SINK, "append")
         .select(
             "user_id",
             F.col("session_window.start").alias("session_start"),
@@ -444,8 +371,6 @@ def stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression plus the sequence-aware tombstone merge make any batch
     split or delivery order of the log converge to the state the
     oracle computes relationally."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import read_current_state
     from whisper_pandas_spark.streaming.sink import stream_merge_into_parquet
 
@@ -473,20 +398,13 @@ def stream_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    d = tempfile.mkdtemp(prefix="wps_cdc_")
-    c1.coalesce(1).write.parquet(f"{d}/changes/f1")
-    c2.coalesce(1).write.parquet(f"{d}/changes/f2")
-    sdf = (
-        spark.readStream.schema("k long, v long, seq long, del boolean")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
+    d = replay(
+        spark,
+        [c1, c2],
+        lambda sdf, d, ckpt: stream_merge_into_parquet(
+            sdf, f"{d}/table", "k", "seq", delete_col="del", checkpoint_dir=ckpt
+        ),
     )
-    q = stream_merge_into_parquet(
-        sdf, f"{d}/table", "k", "seq", delete_col="del",
-        checkpoint_dir=f"{d}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
     return (
         read_current_state(spark, f"{d}/table", delete_col="del", seq_col="seq")
         .select("k", "v")
@@ -538,8 +456,6 @@ def stream_changepoint_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     state equals the batch recompute and the oracle recomputes the
     identical argmax from raw data — proving batch bucketing, additive
     merge, version flips, AND the detector in one check."""
-    import tempfile
-
     from whisper_pandas_spark.operators.changepoint import cusum_from_buckets
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.streaming.changepoint import (
@@ -549,32 +465,20 @@ def stream_changepoint_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    d = tempfile.mkdtemp(prefix="wps_cpstream_")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [ev.filter(F.col("event_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_bucket_sums_update(
+            sdf,
+            f"{d}/state",
+            ("event_type",),
+            "ts",
+            "value",
+            bucket="day",
+            scale=1000,
+            checkpoint_dir=ckpt,
+        ),
     )
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_bucket_sums_update(
-        sdf,
-        f"{d}/state",
-        ("event_type",),
-        "ts",
-        "value",
-        bucket="day",
-        scale=1000,
-        checkpoint_dir=f"{d}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     return cusum_from_buckets(state, ["event_type"], min_buckets=3).orderBy(
         "event_type"
@@ -612,30 +516,18 @@ def stream_topk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     true count) and the oracle is the plain relational top-k —
     completing the streaming-sketch family (additive histogram,
     idempotent KMV, merge-truncated top-k)."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.operators.sketches import topk_rollup
     from whisper_pandas_spark.streaming.sketches import stream_topk_update
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    d = tempfile.mkdtemp(prefix="wps_topkstream_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_topk_update(
+            sdf, f"{d}/state", ("lang",), "source", 32, checkpoint_dir=ckpt
+        ),
     )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema("doc_id long, lang string, source string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_topk_update(
-        sdf, f"{d}/state", ("lang",), "source", 32, checkpoint_dir=f"{d}/ckpt"
-    )
-    q.processAllAvailable()
-    q.stop()
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     return topk_rollup(state, ("lang",), 5).orderBy("lang", "rnk")
 
@@ -706,8 +598,6 @@ def stream_phash_dedup_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_bloom_replay's structural contrast to additive CMS).
     dhash is reported LSB-first as a 64-char bit string so both engines
     compare exact fingerprints without signed-shift concerns."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.streaming.phash import stream_phash_dedup
 
@@ -722,33 +612,27 @@ def stream_phash_dedup_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
         "   + IF(i % 97 = 0, 3, 0)) % 128)), '')"
     )
     header = F.lit("P5\n18 16\n255\n")
-    d = tempfile.mkdtemp(prefix="wps_phashstream_")
-    docs.select(
-        F.col("doc_id").alias("img_id"),
-        F.encode(F.concat(header, base_px), "utf-8").alias("payload"),
-    ).coalesce(1).write.parquet(f"{d}/changes/f1")
-    docs.select(
-        (F.col("doc_id") + 1000000).alias("img_id"),
-        F.encode(F.concat(header, pert_px), "utf-8").alias("payload"),
-    ).coalesce(1).write.parquet(f"{d}/changes/f2")
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema("img_id long, payload binary")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_phash_dedup(
+    # the second pass reprocesses the whole stream under a fresh
+    # checkpoint: every fingerprint re-arrives and is rejected by the
+    # registry — state provably unchanged (the hash gate below would
+    # catch any drift)
+    d = replay(
+        spark,
+        [
+            docs.select(
+                F.col("doc_id").alias("img_id"),
+                F.encode(F.concat(header, base_px), "utf-8").alias("payload"),
+            ),
+            docs.select(
+                (F.col("doc_id") + 1000000).alias("img_id"),
+                F.encode(F.concat(header, pert_px), "utf-8").alias("payload"),
+            ),
+        ],
+        lambda sdf, d, ckpt: stream_phash_dedup(
             sdf, f"{d}/state", max_hamming=6, checkpoint_dir=ckpt
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess, fresh checkpoint: every fingerprint re-arrives and
-    # is rejected by the registry — state provably unchanged (the hash
-    # gate below would catch any drift)
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     return state.select(
         "img_id",
@@ -784,15 +668,13 @@ def stream_bottomk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9+: streaming per-group bottom-k uniform-sample maintenance
     (streaming/sketches.py:stream_bottomk_update) replayed end-to-end —
     per-batch hashing, bottom-k set-merge into versioned state, then
-    the WHOLE stream deliberately reprocessed through a second
-    checkpoint-less pass: bottom-k over a union is idempotent
+    the WHOLE stream deliberately reprocessed through a second pass
+    under a fresh checkpoint: bottom-k over a union is idempotent
     (bk(S∪S)=bk(S)), so the double-processed state still equals the
     direct batch bottom-k the oracle computes — the sampling face of
     the HLL/Bloom/KMV idempotent-merge family, vs the marker-protected
     additive CMS/KN. State is O(groups x k); the per-batch window runs
     over (prior ∪ batch), never the stream's history."""
-    import tempfile
-
     from whisper_pandas_spark.operators.merge import current_version_path
     from whisper_pandas_spark.streaming.sketches import stream_bottomk_update
 
@@ -801,29 +683,16 @@ def stream_bottomk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("lang").alias("grp"), "doc_id")
         .withColumn("row_id", F.monotonically_increasing_id())
     )
-    d = tempfile.mkdtemp(prefix="wps_bkstream_")
-    items.filter(F.col("row_id") % 2 == 0).drop("row_id").coalesce(
-        1
-    ).write.parquet(f"{d}/changes/f1")
-    items.filter(F.col("row_id") % 2 == 1).drop("row_id").coalesce(
-        1
-    ).write.parquet(f"{d}/changes/f2")
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema("grp string, doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_bottomk_update(
+    # the second pass reprocesses the whole stream under a FRESH
+    # checkpoint: harmless by idempotence
+    d = replay(
+        spark,
+        [items.filter(F.col("row_id") % 2 == r).drop("row_id") for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_bottomk_update(
             sdf, f"{d}/state", ("grp",), "doc_id", k=_BK_K, checkpoint_dir=ckpt
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess with a FRESH checkpoint: harmless by idempotence
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     state = spark.read.parquet(current_version_path(f"{d}/state"))
     return state.select("grp", "doc_id", "h").orderBy("grp", "h", "doc_id")
 
@@ -856,8 +725,6 @@ def stream_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the batch entry's oracle VERBATIM: one SQL text checks
     both faces. Text never enters state; the registry shuffles
     hashes+ids only."""
-    import tempfile
-
     from whisper_pandas_spark.curation_fixture import (
         _CUR_MIN_H,
         _CUR_MIN_TOKENS,
@@ -881,39 +748,33 @@ def stream_curation_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     n = fix.count()
-    d = tempfile.mkdtemp(prefix="wps_streamcur_")
     # 4 micro-batches by doc_id range (any split works — the registry
     # min-merge is order-independent; ranges keep batches balanced)
     step = max(1, (n + 3) // 4)
-    for i in range(4):
+    frames = [
         fix.filter(
             (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
             if i < 3
             else (F.col("doc_id") >= i * step)
-        ).coalesce(1).write.parquet(f"{d}/changes/f{i}")
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema("doc_id long, lang string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
         )
-        q = stream_curation(
+        for i in range(4)
+    ]
+    # the second pass reprocesses the whole stream under a fresh
+    # checkpoint: every doc re-derives the same flags row (anti-join
+    # upsert) and every registry key min-merges with itself — state
+    # provably unchanged (the hash gate catches any drift)
+    d = replay(
+        spark,
+        frames,
+        lambda sdf, d, ckpt: stream_curation(
             sdf,
             f"{d}/state",
             min_entropy=_CUR_MIN_H,
             min_tokens=_CUR_MIN_TOKENS,
             checkpoint_dir=ckpt,
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    # full reprocess, fresh checkpoint: every doc re-derives the same
-    # flags row (anti-join upsert) and every registry key min-merges
-    # with itself — state provably unchanged (the hash gate catches
-    # any drift)
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     return curation_read_off(
         spark, f"{d}/state", n_target=_CUR_N_TARGET, seed=_CUR_SEED
     ).orderBy("doc_id")

@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.entries import register, replay, table
 from whisper_pandas_spark.functions.hashing import (
     HASH_HEX_CHARS,
     duck_md5_int,
@@ -1820,8 +1820,6 @@ def stream_kn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `text_kn_trigram_score`'s oracle — one hash gate proving batch
     counting, additive merges, version flips, AND the scoring readout
     over live-maintained statistics."""
-    import tempfile
-
     from whisper_pandas_spark.operators.knlm import (
         kn_score_from_counts,
         trigram_stream,
@@ -1830,23 +1828,13 @@ def stream_kn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from whisper_pandas_spark.streaming.sketches import stream_kn_counts_update
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="wps_knstream_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-        f"{d}/changes/f1"
+    d = replay(
+        spark,
+        [docs.filter(F.col("doc_id") % 2 == r) for r in (0, 1)],
+        lambda sdf, d, ckpt: stream_kn_counts_update(
+            sdf, f"{d}/state", "doc_id", "text", checkpoint_dir=ckpt
+        ),
     )
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-        f"{d}/changes/f2"
-    )
-    sdf = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/changes/*")
-    )
-    q = stream_kn_counts_update(
-        sdf, f"{d}/state", "doc_id", "text", checkpoint_dir=f"{d}/ckpt"
-    )
-    q.processAllAvailable()
-    q.stop()
     c123 = spark.read.parquet(current_version_path(f"{d}/state"))
     tri = stage_materialize(trigram_stream(docs, "doc_id", "text"))
     return kn_score_from_counts(tri, c123, "doc_id").orderBy("doc_id")

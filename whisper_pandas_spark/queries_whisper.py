@@ -18,12 +18,10 @@ tests/test_reference_fixture.py.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, register_cache, table
+from whisper_pandas_spark.entries import register, scratch_once, table
 
 # Roundtrip fixture: the tree every entry here reads, written from
 # `events` by ``_roundtrip_tree``.
@@ -152,10 +150,6 @@ def whisper_fetch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROUNDTRIP_DIR: dict[str, str] = {}
-register_cache(_ROUNDTRIP_DIR.clear)
-
-
 def _roundtrip_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic (metric, timestamp, value) frame from `events`:
     metric = event_type, timestamps a 10 s ramp per metric in arrival
@@ -178,17 +172,17 @@ def _roundtrip_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _roundtrip_tree(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir not in _ROUNDTRIP_DIR:
-        from whisper_pandas_spark.sources.whisper_write import write_whisper
+    from whisper_pandas_spark.sources.whisper_write import write_whisper
 
-        d = tempfile.mkdtemp(prefix="wps_roundtrip_")
-        write_whisper(
+    return scratch_once(
+        "wps_roundtrip_",
+        sf_dir,
+        lambda d: write_whisper(
             _roundtrip_points(spark, sf_dir), d,
             archives=RT_ARCHIVES, aggregation="average",
             x_files_factor=RT_XFF,
-        )
-        _ROUNDTRIP_DIR[sf_dir] = d
-    return _ROUNDTRIP_DIR[sf_dir]
+        ),
+    )
 
 
 @register(

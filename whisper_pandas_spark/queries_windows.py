@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.entries import register, table
+from whisper_pandas_spark.entries import register, replay, table
 from whisper_pandas_spark.stage import stage_materialize
 
 
@@ -694,8 +694,6 @@ def stream_attr_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Credit conservation (sum ppm = 10^6 x conversions) survives the
     stream by construction — each conversion's split lands atomically
     in one batch."""
-    import tempfile
-
     from whisper_pandas_spark.streaming.attribution import (
         attribution_read_off,
         stream_attribution,
@@ -716,41 +714,30 @@ def stream_attr_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("touch_type"),
         )
     )
-    d = tempfile.mkdtemp(prefix="wps_streamattr_")
     bounds = conv.agg(
         F.min("p_id").alias("lo"), F.max("p_id").alias("hi")
     ).collect()[0]
     step = max(1, (int(bounds["hi"]) - int(bounds["lo"])) // 4 + 1)
+    frames = []
     for i in range(4):
         lo = int(bounds["lo"]) + i * step
         cond = F.col("p_id") >= lo
         if i < 3:
             cond = cond & (F.col("p_id") < lo + step)
-        conv.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-            f"{d}/changes/f{i}"
-        )
-
-    schema = "p_id long, user_id long, p_ts timestamp, val_cents bigint"
-
-    def run_pass(ckpt: str) -> None:
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/changes/*")
-        )
-        q = stream_attribution(
+        frames.append(conv.filter(cond))
+    d = replay(
+        spark,
+        frames,
+        lambda sdf, d, ckpt: stream_attribution(
             sdf,
             touch,
             f"{d}/state",
             _ATTR_LOOKBACK_DAYS,
             _ATTR_PPM,
             checkpoint_dir=ckpt,
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_pass(f"{d}/ckpt1")
-    run_pass(f"{d}/ckpt2")
+        ),
+        passes=2,
+    )
     return attribution_read_off(spark, f"{d}/state")
 
 

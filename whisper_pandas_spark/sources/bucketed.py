@@ -23,7 +23,7 @@ Requirements Spark imposes (and this wrapper encodes):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def materialize_bucketed(
@@ -56,8 +56,3 @@ def materialize_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back (bucket metadata comes with it)."""
-    return spark.table(table)

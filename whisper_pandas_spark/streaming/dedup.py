@@ -53,17 +53,13 @@ def stream_near_dup(
     bands: int = 4,
     rows: int = 3,
     jaccard_threshold: float = 0.8,
-    available_now: bool = False,
 ):
     """Start the incremental near-dup stream over (doc_id, text) rows.
 
     Emits (doc_i, doc_j, jaccard) rows to *pairs_dir* (parquet, append)
     where at least one side arrived in the current micro-batch; maintains
     the MinHash signature store at *sig_store_dir*. Returns the
-    StreamingQuery. ``available_now=True`` replays the currently-visible
-    input to exhaustion and stops — the backfill/verification mode (pair
-    it with ``maxFilesPerTrigger`` on the source to exercise the
-    incremental store across multiple micro-batches).
+    StreamingQuery.
     """
 
     def sink(batch_df: DataFrame, batch: Batch) -> None:
@@ -101,6 +97,4 @@ def stream_near_dup(
         all_sig.unpersist()
         new_sig.unpersist()
 
-    return start_batches(
-        sdf, sink, checkpoint_dir, available_now=available_now
-    )
+    return start_batches(sdf, sink, checkpoint_dir)

@@ -39,7 +39,6 @@ def start_batches(
     *,
     additive: str | None = None,
     output_mode: str = "append",
-    available_now: bool = False,
 ):
     """Start ``sdf`` as a ``foreachBatch`` query and return the
     StreamingQuery. ``body(batch_df, batch)`` runs for every non-empty
@@ -65,8 +64,6 @@ def start_batches(
     writer = sdf.writeStream.foreachBatch(run).outputMode(output_mode)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()
 
 
