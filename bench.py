@@ -1,11 +1,16 @@
 #!/usr/bin/env python
 """Benchmark runner: times the engine's headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints TWO JSON lines: the per-rep
+detail ``{"bench_detail": {...}}``, then the compact headline
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 ``value`` is total wall seconds over the headline set (lower is better).
+
+This module also owns the one timing path every tool uses: ``timed`` (the
+clock pair), ``best_of`` (N timed calls), ``entry_reps`` (the registry-entry
+protocol) and ``warm_up`` (the session warm-up).
 """
 
 from __future__ import annotations
@@ -21,6 +26,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from whisper_pandas_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Host gates (see main): thresholds, wait budgets and the wait cadence.
+QUIET_LOAD, QUIET_WAITS, QUIET_SLEEP = 0.5, 4, 60  # 1-min loadavg; s per wait
+QUIET_SPIN, SPIN_WAITS = 0.80, 4  # _spin_probe seconds
+QUIET_STEAL, STEAL_WAITS = 5.0, 4  # all-core steal, percent
+# Reps per entry: quiet captures keep the best of REPS, throttled or
+# degraded ones the best of FULL_REPS.
+REPS, FULL_REPS = 3, 5
 
 # Headline queries: a representative slice of the registry (scan-heavy agg,
 # join, window, dedup, similarity). Kept explicit so bench time stays
@@ -117,6 +130,17 @@ HEADLINE3 = [
     "text_ccnet_buckets",
 ]
 
+# The Whisper decode entry, timed in the headline stanza next to the
+# registry entries.
+WHISPER_SCAN = "whisper_scan_83mb"
+# Entry name -> the final-line stanza that reports its best, in run order.
+STANZA = {
+    WHISPER_SCAN: "queries",
+    **dict.fromkeys(HEADLINE, "queries"),
+    **dict.fromkeys(HEADLINE2, "queries2"),
+    **dict.fromkeys(HEADLINE3, "queries3"),
+}
+
 
 # Reference golden-fixture geometry (BASELINE.md: 82.8 MB, 6 898 801 point
 # slots, 3 archives at 10 s/60 s/3600 s with the measured fill ratios) —
@@ -131,22 +155,25 @@ WHISPER_GEOMETRY = [
 WHISPER_BENCH_DIR = "/tmp/whisper_bench_fixture"
 
 
-def _whisper_fixture() -> str:
-    import sys as _sys
-
-    _sys.path.insert(0, str(Path(__file__).resolve().parent / "tests"))
-    from wsp_fixtures import build_wsp
-
-    path = Path(WHISPER_BENCH_DIR) / "example.wsp"
+def _whisper_fixture(
+    name: str = "example.wsp", archives: list[tuple] = WHISPER_GEOMETRY
+) -> str:
+    """Path of the fixture ``name`` under WHISPER_BENCH_DIR, built on first
+    use with ``tests/wsp_fixtures.build_wsp``."""
+    path = Path(WHISPER_BENCH_DIR) / name
     if not path.exists():
+        sys.path.insert(0, str(Path(__file__).resolve().parent / "tests"))
+        from wsp_fixtures import build_wsp
+
         path.parent.mkdir(parents=True, exist_ok=True)
-        build_wsp(str(path), archives=WHISPER_GEOMETRY)
+        build_wsp(str(path), archives=archives)
     return str(path)
 
 
-def _bench_whisper_scan(spark, reps: int, spin: list[float] | None) -> list[float]:
-    """Full decode of the reference-geometry file + a per-archive aggregate
-    (forces both timestamp and value columns through Arrow)."""
+def _whisper_scan(spark):
+    """The ``whisper_scan_83mb`` entry: full decode of the reference-geometry
+    file + a per-archive aggregate (forces both timestamp and value columns
+    through Arrow), as a registry-style ``fn(spark, sf_dir)``."""
     from whisper_pandas_spark.sources.whisper import register_whisper
 
     register_whisper(spark)
@@ -154,29 +181,72 @@ def _bench_whisper_scan(spark, reps: int, spin: list[float] | None) -> list[floa
     # Warm the Python DataSource machinery (driver-side plan worker +
     # executor source workers) with a minimal file: that one-time
     # per-application cost (~3-4 s) is amortized over every read in a real
-    # deployment and would otherwise dominate this single-read timing.
-    tiny = Path(WHISPER_BENCH_DIR) / "tiny.wsp"
-    if not tiny.exists():
-        import sys as _sys
+    # deployment and is not the engine's scan cost.
+    tiny = _whisper_fixture("tiny.wsp", [(10, 16, 1.0)])
+    spark.read.format("whisper").load(tiny).count()
+    return lambda spark, _sf_dir: (
+        spark.read.format("whisper").load(path).groupBy("archive").count()
+    )
 
-        _sys.path.insert(0, str(Path(__file__).resolve().parent / "tests"))
-        from wsp_fixtures import build_wsp
 
-        build_wsp(str(tiny), archives=[(10, 16, 1.0)])
-    spark.read.format("whisper").load(str(tiny)).count()
-    # N timed reps (the caller records best + spread) — the same
-    # steady-state protocol every other headline query uses (a capacity
-    # plan sizes on the repeated-read rate; the one-time Python
-    # DataSource spin-up is not the engine's scan cost)
-    times = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        df = spark.read.format("whisper").load(path)
-        df.groupBy("archive").count().collect()
-        times.append(time.perf_counter() - t0)
-        if spin is not None:
-            spin.append(_rep_spin())
-    return times
+# -- the timing path: every timing in bench.py and tools/ goes through here --
+
+
+def timed(fn, *args):
+    """Call ``fn(*args)``; return (its result, its wall seconds)."""
+    t0 = time.perf_counter()
+    out = fn(*args)
+    return out, time.perf_counter() - t0
+
+
+def best_of(n: int, fn, before=None):
+    """``n`` timed calls of ``fn()``, each after an untimed ``before()``;
+    return (the last call's result, the ``n`` walls)."""
+    out, walls = None, []
+    for _ in range(n):
+        if before is not None:
+            before()
+        out, wall = timed(fn)
+        walls.append(wall)
+    return out, walls
+
+
+def entry_reps(spark, fn, sf_dir: str, n: int):
+    """Time a registry entry ``fn(spark, sf_dir)`` ``n`` times; return (its
+    last DataFrame, the ``n`` walls). Each rep asks the JVM to collect first
+    (one entry's garbage must not bill the next entry's run: cross-entry GC
+    debt on the one shared heap was the dominant run-to-run noise source)
+    and drops the shared result caches (so every rep pays the FULL
+    pipeline), both untimed. The timed call then writes every output
+    column to the noop sink: count() would let Catalyst prune unreferenced
+    projections, whole Window operators and left joins whose build side
+    has unique keys, timing a fraction of the plan."""
+    from whisper_pandas_spark import registry
+
+    def before() -> None:
+        spark._jvm.System.gc()
+        registry.reset_result_caches()
+
+    def rep():
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        return df
+
+    return best_of(n, rep, before=before)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the session's one-time costs before the first timed rep: JVM +
+    parquet footer caches, the Python worker pool (one ``mapInPandas`` task
+    per core) and the noop-sink write path (its first use JIT-compiles the
+    whole WriteFiles stack, ~2.5 s)."""
+    cores = spark.sparkContext.defaultParallelism
+    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    region.count()
+    spark.range(cores).repartition(cores).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+    region.write.format("noop").mode("overwrite").save()
 
 
 def _spin_probe(iters: int = 20_000_000) -> float:
@@ -268,283 +338,173 @@ def _steal_probe(seconds: float = 1.5) -> float | None:
     return _steal_pct(a, _stat_fields())
 
 
-def main() -> None:
-    from whisper_pandas_spark.registry import QUERIES, reset_result_caches
+def _wait_until_quiet(probe, threshold: float, waits: int):
+    """Read ``probe()`` until it is at most ``threshold`` (None, no evidence,
+    counts as quiet), sleeping QUIET_SLEEP s between reads, at most
+    ``waits`` times; return (the last reading, the waits spent). A
+    contended host usually quiets within a few minutes, so a bounded wait
+    captures a quiet window when one exists; if none comes, the bench runs
+    anyway and its record says so."""
+    value, waited = probe(), 0
+    while value is not None and value > threshold and waited < waits:
+        time.sleep(QUIET_SLEEP)
+        value, waited = probe(), waited + 1
+    return value, waited
 
-    # Stamp host load BEFORE the session starts (the bench itself drives
-    # load to ~32 while running): a 1-minute loadavg well above ~1-2 at
-    # entry means co-tenant contention and the totals are inflated —
-    # machine-detectable from the artifact alone (VERDICT r6 Perf note),
-    # no BENCH_NOTES prose required.
-    #
-    # Round 8: don't just STAMP contention — wait it out (bounded). The
-    # 1-minute loadavg decays with ~60 s half-life once a co-tenant
-    # finishes, so a few 60 s waits capture a quiet window when one
-    # exists; if the host never quiets, run anyway and let the stamp say
-    # so. Knobs: SPARK_GRAFT_BENCH_QUIET_LOAD (threshold, default 0.5),
-    # SPARK_GRAFT_BENCH_QUIET_WAITS (max waits, default 4, 0 disables),
-    # SPARK_GRAFT_BENCH_QUIET_SLEEP (seconds per wait, default 60).
-    quiet_load = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_LOAD", "0.5"))
-    max_waits = int(os.environ.get("SPARK_GRAFT_BENCH_QUIET_WAITS", "4"))
-    sleep_s = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_SLEEP", "60"))
-    load_initial = round(os.getloadavg()[0], 2)
-    waited = 0
-    while os.getloadavg()[0] > quiet_load and waited < max_waits:
-        time.sleep(sleep_s)
-        waited += 1
-    load_at_start = round(os.getloadavg()[0], 2)
-    # Host-speed calibration (see _spin_probe): once before the session
-    # starts (the quiet-window number) and once after the last timed
-    # query (did the host stay quiet THROUGH the run?).
-    #
-    # Round 14 (VERDICT r13 #1): the artifact must be SELF-DEFENDING —
-    # two rounds running the committed BENCH was captured in a host-steal
-    # window while the true numbers lived only in BENCH_NOTES prose. The
-    # gate is mechanical: a capture is "quiet" iff the load at session
-    # start is <= quiet_load AND the spin probe is <= QUIET_SPIN at BOTH
-    # start and end of the timed session. The start-side spin gate
-    # loop-retries (bounded, same 60 s cadence as the load gate) before
-    # any Spark work is spent; if the start never quiets, or the host
-    # degrades mid-session, the artifact switches to best-of-5 PRIMARY
-    # values with a quarter-length spin probe stamped after every rep —
-    # so a mechanical reader sees either `capture: "quiet"` or per-rep
-    # evidence of which reps were throttled.
-    quiet_spin = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_SPIN", "0.80"))
-    spin_waits = int(os.environ.get("SPARK_GRAFT_BENCH_SPIN_WAITS", "4"))
-    spin_s = _spin_probe()
-    spin_waited = 0
-    while spin_s > quiet_spin and spin_waited < spin_waits:
-        time.sleep(sleep_s)
-        spin_s = _spin_probe()
-        spin_waited += 1
-    # Multi-core steal gate (round 14, second continuation): loadavg and
-    # the single-thread spin probe both read quiet while the hypervisor
-    # steals 16%+ of CPU under parallel load (steal only manifests when
-    # cores are busy — which is exactly when the bench runs). Probe with
-    # an all-core burn, wait it out on the same bounded cadence, and
-    # measure steal ACROSS the whole timed session from /proc/stat so the
-    # artifact records the contention that actually overlapped the
-    # timings, not just the edges.
-    quiet_steal = float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_STEAL", "5.0"))
-    steal_waits = int(os.environ.get("SPARK_GRAFT_BENCH_STEAL_WAITS", "4"))
-    steal_pct = _steal_probe()
-    steal_waited = 0
-    while (
-        steal_pct is not None
-        and steal_pct > quiet_steal
-        and steal_waited < steal_waits
-    ):
-        time.sleep(sleep_s)
-        steal_pct = _steal_probe()
-        steal_waited += 1
+
+# Host-gate readings main() records, in final-line order.
+GATES = (
+    "load_at_start", "load_initial", "quiet_waits", "spin_waits", "spin_s",
+    "spin_s_end", "steal_pct_start", "steal_waits", "steal_pct_session",
+)
+
+
+def final_line(
+    bests: dict[str, float], reps: int, quiet: bool, gates: dict, master: str
+) -> dict[str, object]:
+    """The compact headline record (the LAST stdout line): per-entry bests
+    split into the three stanzas, their running totals, the rep count, the
+    capture state with the GATES readings, and the data scale, CPUs and
+    master. Readers of a run parse this line from a ~2000-char tail of the
+    output, so nothing bulky belongs here; per-rep detail goes on the line
+    before."""
+    stanzas: dict[str, dict[str, float]] = {
+        "queries": {}, "queries2": {}, "queries3": {}
+    }
+    for name, best in bests.items():
+        stanzas[STANZA[name]][name] = round(best, 4)
+    total = round(sum(stanzas["queries"].values()), 4)
+    total_ext = round(total + sum(stanzas["queries2"].values()), 4)
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": stanzas["queries"],
+        "queries2": stanzas["queries2"],
+        "value_extended": total_ext,
+        "queries3": stanzas["queries3"],
+        "value_r9plus": round(total_ext + sum(stanzas["queries3"].values()), 4),
+        "reps": reps,
+        # "quiet": every gate passed at the start and the end, the values
+        # are trustworthy as-is; "best_of_5": the host never quieted or
+        # degraded mid-run, values are best-of-5 with per-rep spin stamps
+        # in bench_detail.query_stats
+        "capture": "quiet" if quiet else "best_of_5",
+        **{name: gates[name] for name in GATES},
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # host CPUs this process may run on, and the master the session
+        # resolved (local[$SPARK_GRAFT_CPUS] by default)
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": master,
+    }
+
+
+def main() -> None:
+    from whisper_pandas_spark.registry import QUERIES
+
+    # Host gates, all before any Spark work is spent (each retries on the
+    # QUIET_SLEEP cadence up to its wait budget):
+    # - load: a 1-minute loadavg above QUIET_LOAD means a co-tenant; the
+    #   bench itself drives load up once running, so this is stamped first;
+    # - spin: the single-thread probe above QUIET_SPIN means a slow host;
+    # - steal: loadavg and the spin probe both read quiet while the
+    #   hypervisor steals 16%+ under parallel load (steal only shows when
+    #   every core is busy, which is when the bench runs), so an all-core
+    #   burn reads it; steal is also measured ACROSS the timed session.
+    # A capture is "quiet" iff all three pass at the start AND the spin and
+    # session steal still pass at the end; otherwise every entry runs (or
+    # is topped up) to FULL_REPS with a spin stamp after every rep.
+    gates: dict[str, object] = {"load_initial": round(os.getloadavg()[0], 2)}
+    load, gates["quiet_waits"] = _wait_until_quiet(
+        lambda: os.getloadavg()[0], QUIET_LOAD, QUIET_WAITS
+    )
+    gates["load_at_start"] = round(load, 2)
+    gates["spin_s"], gates["spin_waits"] = _wait_until_quiet(
+        _spin_probe, QUIET_SPIN, SPIN_WAITS
+    )
+    gates["steal_pct_start"], gates["steal_waits"] = _wait_until_quiet(
+        _steal_probe, QUIET_STEAL, STEAL_WAITS
+    )
+    steal = gates["steal_pct_start"]
     start_quiet = (
-        load_at_start <= quiet_load
-        and spin_s <= quiet_spin
-        and (steal_pct is None or steal_pct <= quiet_steal)
+        gates["load_at_start"] <= QUIET_LOAD
+        and gates["spin_s"] <= QUIET_SPIN
+        and (steal is None or steal <= QUIET_STEAL)
     )
 
     spark = get_spark(app_name="whisper_pandas_spark_bench")
+    warm_up(spark, SF_DIR)
+    entries = {
+        name: _whisper_scan(spark) if name == WHISPER_SCAN else QUERIES[name]
+        for name in STANZA
+        if name == WHISPER_SCAN or name in QUERIES
+    }
+    # Per-rep walls (and, in throttled mode, per-rep quarter-spin stamps:
+    # quiet ~0.17 s, compare vs QUIET_SPIN/4) ride along in the detail
+    # line, so a noisy run is self-diagnosing: an entry whose max is 2-3x
+    # its best was hit by co-tenant load mid-rep, not regressed.
+    walls: dict[str, list[float]] = {name: [] for name in entries}
+    spins: dict[str, list[float]] = {}
 
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    names = [n for n in HEADLINE if n in QUERIES]
-
-    # Warm the JVM + parquet footer caches AND the Python worker pool with
-    # cheap actions so the first timed query doesn't pay session start-up
-    # (the worker pool alone is ~3 s on local[32]).
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    # ... and the noop-sink write path (its first use JIT-compiles the
-    # whole WriteFiles stack — measured ~2.5 s of one-time cost that would
-    # otherwise land on the first timed query).
-    spark.read.parquet(f"{SF_DIR}/region.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    base_reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    full_reps = int(os.environ.get("SPARK_GRAFT_BENCH_FULL_REPS", "5"))
-    # Throttled start → go straight to the best-of-5 protocol with
-    # per-rep spin stamps; quiet start → the cheap 3-rep protocol
-    # (topped up to 5 afterwards ONLY if the end probe shows the host
-    # degraded mid-session).
-    reps = base_reps if start_quiet else max(base_reps, full_reps)
-    with_spin = not start_quiet
-    timings: dict[str, float] = {}
-    # Per-query rep statistics ride along in the artifact so a noisy run
-    # is SELF-diagnosing: a query whose max is 2-3x its best was hit by
-    # co-tenant load mid-rep (the documented failure mode in
-    # BENCH_NOTES.md), not regressed — the spread says so without a
-    # manual re-run. In throttled-capture mode each query also carries
-    # its per-rep quarter-spin series (quiet ~0.17 s; compare vs
-    # quiet_spin/4) so a reader can see WHICH reps were stolen.
-    stats: dict[str, dict[str, object]] = {}
-    all_times: dict[str, list[float]] = {}
-    spin_series: dict[str, list[float]] = {}
-
-    names2 = [n for n in HEADLINE2 if n in QUERIES]
-    names3 = [n for n in HEADLINE3 if n in QUERIES]
-    timings2: dict[str, float] = {}
-    timings3: dict[str, float] = {}
-    all_names = names + names2 + names3
-
-    def timed_pass(
-        rep_count: int, record_spin: bool, interleave: bool = False
-    ) -> None:
-        # Two rep orders, same per-query best-of-N semantics:
-        # - clustered (quiet captures, the historical protocol): all N
-        #   reps of a query back-to-back — measures warm steady-state
-        #   (page cache, JVM heap state), the number a capacity plan
-        #   would use, and stays like-for-like comparable with every
-        #   prior round's quiet artifact. Safe because the steal gate
-        #   now proves the whole session ran unthrottled.
-        # - interleaved (throttled fallback): rep 1 of every query,
-        #   then rep 2, ... — host steal arrives in waves at the minute
-        #   scale (BENCH_NOTES, second continuation), and back-to-back
-        #   reps let one wave poison every rep of one query; interleaved
-        #   reps land minutes apart so best-of-N samples independent
-        #   host states. Measured on a steal-free host: interleaved
-        #   bests run 10-50% over clustered (cold data caches between a
-        #   query's reps), so it is ONLY used when contention is the
-        #   bigger error term.
-        def one_rep(name: str) -> None:
-            fn = QUERIES[name]
-            # Ask the JVM to collect BEFORE the timed rep so one
-            # query's garbage doesn't bill the next query's run (single
-            # shared heap on local[32]; cross-query GC debt was the
-            # dominant run-to-run noise source, not CPU).
-            spark._jvm.System.gc()
-            times = all_times.setdefault(name, [])
-            # drop shared result materializations (e.g. the MinHash
-            # pair checkpoint) so every timed run pays the FULL pipeline
-            reset_result_caches()
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            # Force FULL materialization of every output column:
-            # count() would let Catalyst prune unreferenced projections
-            # (and whole Window operators) before the count aggregate,
-            # timing little more than a scan for projection-only
-            # queries. The noop sink evaluates the complete plan with no
-            # driver transfer.
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-            if record_spin:
-                spin_series.setdefault(name, []).append(_rep_spin())
-
-        def whisper_reps(n: int) -> None:
-            ws = all_times.setdefault("whisper_scan_83mb", [])
-            sp = spin_series.setdefault("whisper_scan_83mb", [])
-            ws.extend(
-                _bench_whisper_scan(spark, n, sp if record_spin else None)
-            )
+    def timed_pass(rep_count: int, interleave: bool) -> None:
+        # Two rep orders, same per-entry best-of-N semantics:
+        # - clustered (quiet captures, the historical protocol): all N reps
+        #   of an entry back-to-back, the warm steady-state a capacity plan
+        #   would use, comparable with every prior quiet artifact;
+        # - interleaved (throttled; each rep spin-stamped): rep 1 of every
+        #   entry, then rep 2, ... Host steal arrives in minute-scale
+        #   waves, and interleaved reps land minutes apart so best-of-N
+        #   samples independent host states. On a steal-free host
+        #   interleaved bests run 10-50% over clustered (cold data caches
+        #   between an entry's reps), so it is ONLY used under contention.
+        def rep(name: str, n: int) -> None:
+            walls[name] += entry_reps(spark, entries[name], SF_DIR, n)[1]
 
         if interleave:
             for _ in range(rep_count):
-                whisper_reps(1)
-                for name in all_names:
-                    one_rep(name)
+                for name in entries:
+                    rep(name, 1)
+                    spins.setdefault(name, []).append(_rep_spin())
         else:
-            whisper_reps(rep_count)
-            for name in all_names:
-                for _ in range(rep_count):
-                    one_rep(name)
+            for name in entries:
+                rep(name, rep_count)
+
+    def probe_end() -> bool:
+        """Stamp the end probes; True iff the session stayed quiet."""
+        gates["spin_s_end"] = _spin_probe()
+        gates["steal_pct_session"] = steal = _steal_pct(stat_t0, _stat_fields())
+        return gates["spin_s_end"] <= QUIET_SPIN and (
+            steal is None or steal <= QUIET_STEAL
+        )
 
     stat_t0 = _stat_fields()
-    timed_pass(reps, with_spin, interleave=not start_quiet)
-    spin_s_end = _spin_probe()
-    steal_session = _steal_pct(stat_t0, _stat_fields())
+    timed_pass(REPS if start_quiet else FULL_REPS, interleave=not start_quiet)
+    quiet = probe_end() and start_quiet
+    # Host degraded mid-session after a quiet start: top up every entry to
+    # best-of-FULL_REPS with per-rep spin stamps, then re-probe; the best
+    # across the degraded-window and top-up reps is the primary value.
+    if start_quiet and not quiet:
+        timed_pass(FULL_REPS - REPS, interleave=True)
+        quiet = probe_end()
 
-    # Host degraded mid-session after a quiet start: top up every query
-    # to best-of-5 with per-rep spin stamps, then re-probe. The artifact
-    # then carries BOTH the degraded-window reps and the top-up reps —
-    # best-of-5 across all of them is the primary value. Session-wide
-    # steal above the quiet threshold counts as degradation: the timed
-    # window was contended even if the edge probes were not.
-    degraded = spin_s_end > quiet_spin or (
-        steal_session is not None and steal_session > quiet_steal
-    )
-    if start_quiet and degraded and full_reps > reps:
-        with_spin = True
-        timed_pass(full_reps - reps, True, interleave=True)
-        spin_s_end = _spin_probe()
-        steal_session = _steal_pct(stat_t0, _stat_fields())
-
-    capture_quiet = (
-        start_quiet
-        and spin_s_end <= quiet_spin
-        and (steal_session is None or steal_session <= quiet_steal)
-    )
-
-    def record(name: str, target: dict[str, float]) -> None:
-        ts = sorted(all_times[name])
-        target[name] = round(ts[0], 4)
-        st: dict[str, object] = {
+    stats: dict[str, dict[str, object]] = {}
+    for name, ts in walls.items():
+        ts = sorted(ts)
+        stats[name] = {
             "best": round(ts[0], 4),
             # true median: average the two middle elements for even N
-            "median": round(
-                (ts[(len(ts) - 1) // 2] + ts[len(ts) // 2]) / 2, 4
-            ),
+            "median": round((ts[(len(ts) - 1) // 2] + ts[len(ts) // 2]) / 2, 4),
             "max": round(ts[-1], 4),
         }
-        if spin_series.get(name):
-            st["spin"] = [round(s, 3) for s in spin_series[name]]
-        stats[name] = st
-
-    record("whisper_scan_83mb", timings)
-    for name in all_names:
-        record(
-            name,
-            timings2
-            if name in names2
-            else (timings3 if name in names3 else timings),
-        )
-    reps = max(len(v) for v in all_times.values())
-    total = round(sum(timings.values()), 4)
-    total_ext = round(total + sum(timings2.values()), 4)
-    total_r9p = round(total_ext + sum(timings3.values()), 4)
-    # The driver parses the LAST stdout line and keeps only a ~2000-char
-    # tail of output; round 10's artifact came back ``parsed: null``
-    # because ``query_stats`` grew the single line past that window
-    # (VERDICT r10 What's-wrong #1). Bulky per-rep detail therefore goes
-    # on its OWN earlier line, and the final line stays a compact JSON
-    # (~1 kB) carrying the headline metric plus per-query bests.
+        if name in spins:
+            stats[name]["spin"] = [round(s, 3) for s in spins[name]]
+    bests = {name: min(ts) for name, ts in walls.items()}
+    reps = max(map(len, walls.values()))
     print(json.dumps({"bench_detail": {"query_stats": stats}}))
     print(
         json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries2": timings2,
-                "value_extended": total_ext,
-                "queries3": timings3,
-                "value_r9plus": total_r9p,
-                "reps": reps,
-                # "quiet": load <= quiet_load at session start AND spin
-                # probe <= quiet_spin at BOTH start and end — the values
-                # are trustworthy as-is. "best_of_5": the host never
-                # quieted (or degraded mid-run); values are best-of-5
-                # with per-rep spin stamps in bench_detail.query_stats.
-                "capture": "quiet" if capture_quiet else "best_of_5",
-                "load_at_start": load_at_start,
-                "load_initial": load_initial,
-                "quiet_waits": waited,
-                "spin_waits": spin_waited,
-                "spin_s": spin_s,
-                "spin_s_end": spin_s_end,
-                # all-core steal probe at the start gate and the
-                # /proc/stat steal fraction across the timed session —
-                # quiet means <= quiet_steal (default 5%) at both
-                "steal_pct_start": steal_pct,
-                "steal_waits": steal_waited,
-                "steal_pct_session": steal_session,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # host CPUs this process may run on, and the master the
-                # session resolved (local[$SPARK_GRAFT_CPUS] by default)
-                "cpus": len(os.sched_getaffinity(0)),
-                "master": spark.sparkContext.master,
-            }
+            final_line(bests, reps, quiet, gates, spark.sparkContext.master)
         )
     )
     spark.stop()

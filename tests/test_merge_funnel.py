@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -82,31 +84,54 @@ def test_merge_crash_before_flip_leaves_old_version_live(spark, table, tmp_path)
     assert live == {1: ("a", 10), 2: ("B", 200), 3: ("c", 30)}
 
 
+def _fill_version(n):
+    """A ``_commit_version`` writer for a minimal partitioned version:
+    a directory holding a manifest that points at itself."""
+
+    def fill(d):
+        d.mkdir()
+        (d / _MANIFEST).write_text(json.dumps({"p": f"v{n}"}))
+
+    return fill
+
+
+def _tear(d):
+    """What a crashed writer leaves: a version directory with no manifest
+    and no commit marker."""
+    d.mkdir()
+    (d / "part-garbage.parquet").write_bytes(b"torn")
+
+
 @pytest.mark.parametrize("vacuum", [vacuum_versions, vacuum_partitioned])
 def test_vacuum_skips_torn_version_past_live(tmp_path, vacuum):
     """v0..v2 committed with v2 live, and a torn v3 (no manifest) past it,
     as a crashed or still-running writer leaves one. keep_last=2 keeps
     the two newest COMMITTED versions; v3 is neither counted, deleted nor
     read."""
-    import json
-
     base = tmp_path / "tbl"
-
-    def write(n):
-        def fill(d):
-            d.mkdir()
-            (d / _MANIFEST).write_text(json.dumps({"p": f"v{n}"}))
-
-        return fill
-
     for n in range(3):
-        _commit_version(str(base), write(n))
-    (base / "v3").mkdir()
-    (base / "v3" / "part-garbage.parquet").write_bytes(b"torn")
+        _commit_version(str(base), _fill_version(n))
+    _tear(base / "v3")
 
     assert vacuum(str(base), keep_last=2) == [str(base / "v0")]
     assert sorted(d.name for d in base.glob("v*")) == ["v1", "v2", "v3"]
     assert current_version_path(str(base)) == str(base / "v2")
+
+
+@pytest.mark.parametrize("vacuum", [vacuum_versions, vacuum_partitioned])
+def test_vacuum_skips_torn_version_below_live(tmp_path, vacuum):
+    """v0 committed, a torn v1 from a crashed writer, then v2 committed
+    past it and live. keep_last=2 keeps the two COMMITTED versions v0 and
+    v2, so time travel still reaches two real versions; v1 is neither
+    counted, deleted nor read."""
+    base = tmp_path / "tbl"
+    _commit_version(str(base), _fill_version(0))
+    _tear(base / "v1")
+    _commit_version(str(base), _fill_version(2))
+
+    assert current_version_path(str(base)) == str(base / "v2")
+    assert vacuum(str(base), keep_last=2) == []
+    assert sorted(d.name for d in base.glob("v*")) == ["v0", "v1", "v2"]
 
 
 # -- funnel ----------------------------------------------------------------

@@ -14,13 +14,13 @@ from __future__ import annotations
 import io
 import sys
 import tarfile
-import time
 from pathlib import Path
 
 import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from bench import best_of
 from whisper_pandas_spark.functions.codecs import encode_png
 
 
@@ -59,22 +59,20 @@ def main() -> None:
     spark = get_spark()
     spark.range(10).count()  # warm
 
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n_members = read_archive_members(spark, str(tmp)).count()
-        best = min(best, time.perf_counter() - t0)
+    n_members, walls = best_of(
+        3, lambda: read_archive_members(spark, str(tmp)).count()
+    )
+    best = min(walls)
     print(
         f"members: {n_members} from {n_shards} shards "
         f"({total_bytes/1e6:.0f} MB), best {best:.2f} s -> "
         f"{total_bytes/1e6/best:.0f} MB/s, {n_members/best:.0f} members/s"
     )
 
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n_samples = read_webdataset(spark, str(tmp)).count()
-        best = min(best, time.perf_counter() - t0)
+    n_samples, walls = best_of(
+        3, lambda: read_webdataset(spark, str(tmp)).count()
+    )
+    best = min(walls)
     print(
         f"samples: {n_samples}, best {best:.2f} s -> "
         f"{total_bytes/1e6/best:.0f} MB/s, {n_samples/best:.0f} samples/s"

@@ -16,6 +16,8 @@
 #    so a silent regression in untouched code can't outlive a round even
 #    if the driver's bounded sweep hasn't cycled back to it (VERDICT r8
 #    task #2)
+# 5. perf_audit smoke: two entries through bench.py's timing path at
+#    sf0.001, table to /tmp (PERF.md untouched); exits 1 if one raises
 set -e
 cd "$(dirname "$0")/.."
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
@@ -25,4 +27,5 @@ python -m pytest perfbench/tests -q
 python tools/oracle_check.py
 ORACLE_MASTER='local[3]' ORACLE_SHUFFLE=3 python tools/oracle_check.py
 python tools/stale_recheck.py 20
+PERF_SF_DIR=/root/testdata/sf0.001 PERF_ONLY=q1_pricing_summary,rollup_average_xff PERF_OUT=/tmp/perf_smoke.md python tools/perf_audit.py
 echo "ci_check: all green"

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import struct
 import sys
-import time
 import zlib
 from pathlib import Path
 
@@ -26,6 +25,7 @@ import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from bench import best_of
 from whisper_pandas_spark.functions.codecs import _PNG_MAGIC, _chunk, encode_wav
 
 
@@ -111,11 +111,8 @@ def main() -> None:
     spark.range(10).count()  # warm
 
     img_df = spark.read.parquet(str(tmp / "images.parquet")).repartition(64)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = decode_image_stats(img_df, "doc_id").count()
-        best = min(best, time.perf_counter() - t0)
+    n, walls = best_of(3, lambda: decode_image_stats(img_df, "doc_id").count())
+    best = min(walls)
     px = n_images * side * side
     print(
         f"images: {n} decoded of {n_images}, {img_bytes/1e6:.1f} MB encoded, "
@@ -145,11 +142,8 @@ def main() -> None:
         tmp / "jpegs.parquet",
     )
     jpg_df = spark.read.parquet(str(tmp / "jpegs.parquet")).repartition(32)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = decode_image_stats(jpg_df, "doc_id").count()
-        best = min(best, time.perf_counter() - t0)
+    n, walls = best_of(3, lambda: decode_image_stats(jpg_df, "doc_id").count())
+    best = min(walls)
     px = n_jpegs * side * side
     print(
         f"jpegs: {n} decoded of {n_jpegs}, {jpeg_bytes/1e6:.1f} MB encoded, "
@@ -158,11 +152,8 @@ def main() -> None:
     )
 
     wav_df = spark.read.parquet(str(tmp / "audio.parquet")).repartition(32)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        n = decode_audio_stats(wav_df, "doc_id").count()
-        best = min(best, time.perf_counter() - t0)
+    n, walls = best_of(3, lambda: decode_audio_stats(wav_df, "doc_id").count())
+    best = min(walls)
     samples = n_wavs * 16000 * 2
     print(
         f"audio: {n} decoded of {n_wavs}, {wav_bytes/1e6:.1f} MB encoded, "

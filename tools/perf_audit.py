@@ -3,9 +3,15 @@
 PERF.md, slowest first — the sweep that catches a pathological plan hiding
 in a non-headline entry before the driver or judge does. Usage:
 
-    python tools/perf_audit.py            # sf0.01, one timed run per entry
+    python tools/perf_audit.py            # sf0.01, best of 2 reps per entry
 
-Timings are single-run on a shared local JVM, so treat anything under ~2×
+Settings: ``PERF_SF_DIR`` (data), ``PERF_OUT`` (table path, repo-root
+relative or absolute), ``PERF_ONLY`` (comma-separated entry names),
+``PERF_REPS`` (reps per entry). Every rep is ``bench.entry_reps``, the
+protocol bench.py times its headline with. Exits 1 after writing the table
+if any entry raised.
+
+Timings are best-of-few on a shared local JVM, so treat anything under ~2×
 of its neighbors as noise; the value of the sweep is the ORDER and the
 outliers, not the third decimal.
 """
@@ -14,10 +20,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from bench import entry_reps, warm_up
 
 SF_DIR = os.environ.get("PERF_SF_DIR", "/root/testdata/sf0.01")
 # Output file (repo-root relative): lets the 10x-scale sweep live next to
@@ -27,17 +34,12 @@ OUT = os.environ.get("PERF_OUT", "PERF.md")
 
 
 def main() -> None:
-    from whisper_pandas_spark.registry import QUERIES, reset_result_caches
+    from whisper_pandas_spark.registry import QUERIES
     from whisper_pandas_spark.session import get_spark
 
     spark = get_spark(app_name="perf_audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    # warm JVM + python workers + noop write path
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-    spark.range(8).repartition(8).mapInPandas(lambda it: it, "id long").count()
-    spark.read.parquet(f"{SF_DIR}/region.parquet").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, SF_DIR)
 
     reps = int(os.environ.get("PERF_REPS", "2"))
     targets = dict(QUERIES)
@@ -55,36 +57,24 @@ def main() -> None:
 
     rows = []
     for name, fn in targets.items():
-        best, n, err = float("inf"), -1, ""
-        for _ in range(reps):
-            reset_result_caches()
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, SF_DIR)
-                # Time FULL materialization (noop sink), not count():
-                # under count() Catalyst eliminates left joins whose
-                # build side has unique keys and prunes unreferenced
-                # projections/windows — a sweep row can silently time a
-                # fraction of the plan (round-11 lesson:
-                # text_repetition_profile's count() number was its
-                # scalar branch only). Same protocol as bench.py.
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # keep sweeping; oracle gate owns correctness
-                n, err = -1, f"{type(exc).__name__}: {exc}"[:120]
-                break
-            best = min(best, time.perf_counter() - t0)
-        if err == "":
-            n = df.count()  # row count reported, never timed
-        rows.append((round(best, 3) if err == "" else 0.0, name, n, err))
+        try:
+            df, walls = entry_reps(spark, fn, SF_DIR, reps)
+        except Exception as exc:  # keep sweeping; oracle gate owns correctness
+            rows.append((0.0, name, -1, f"{type(exc).__name__}: {exc}"[:120]))
+            continue
+        # row count reported, never timed
+        rows.append((round(min(walls), 3), name, df.count(), ""))
 
     rows.sort(reverse=True)
     out = [
         "# PERF — per-entry wall time, slowest first",
         "",
         f"Generated by `python tools/perf_audit.py` at sf_dir={SF_DIR},",
-        "local[8], best of $PERF_REPS (default 2) FULL materializations (noop",
-        "sink — count() would let Catalyst prune joins/windows; round-11 note",
-        "in BENCH_NOTES.md) per entry; ORDER and outliers matter, not 3rd decimals.",
+        "local[8], best of $PERF_REPS (default 2) reps per entry, each rep",
+        "bench.py's `entry_reps` protocol (JVM GC + result-cache reset, then",
+        "a FULL noop-sink materialization — count() would let Catalyst prune",
+        "joins/windows; round-11 note in BENCH_NOTES.md); ORDER and outliers",
+        "matter, not 3rd decimals.",
         "",
         "Entries that TRAIN in-engine (k-means / PQ codebooks / PageRank /",
         "component closures) run eager per-iteration checkpoints, so at",
@@ -104,6 +94,9 @@ def main() -> None:
     for sec, name, n, err in rows[:8]:
         print(f"  {sec:>7.3f}s  {name}  {err or n}")
     spark.stop()
+    failed = [name for _, name, _, err in rows if err]
+    if failed:
+        raise SystemExit(f"{len(failed)} entries raised: {failed}")
 
 
 if __name__ == "__main__":

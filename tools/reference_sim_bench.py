@@ -15,29 +15,24 @@ bench.py feeds the distributed scan, and prints seconds. Run:
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tests"))
+
+from bench import WHISPER_GEOMETRY, _whisper_fixture, timed
 
 DTYPE_POINT = np.dtype([("timestamp", ">u4"), ("value", ">f8")])
 
 
-def main() -> None:
-    from bench import WHISPER_BENCH_DIR, WHISPER_GEOMETRY, _whisper_fixture
-
-    path = _whisper_fixture()
-
-    t0 = time.perf_counter()
+def _reference_decode(path: str) -> list[pd.DataFrame]:
+    """The reference's decode of one file: one sorted frame per archive."""
     buffer = Path(path).read_bytes()  # whole file, like README.md:64
-    header = 16 + 12 * len(WHISPER_GEOMETRY)
-    offset = header
+    offset = 16 + 12 * len(WHISPER_GEOMETRY)  # header
     frames = []
-    for spp, points, _fill in WHISPER_GEOMETRY:
+    for _spp, points, _fill in WHISPER_GEOMETRY:
         arr = np.frombuffer(buffer, DTYPE_POINT, count=points, offset=offset)
         offset += 12 * points
         mask = arr["timestamp"] != 0          # drop_time_zero
@@ -45,9 +40,13 @@ def main() -> None:
         vals = arr["value"][mask].astype("float64")   # :227 endianness fix
         ts_dt = pd.to_datetime(ts, unit="s", utc=True)  # :222
         df = pd.DataFrame({"timestamp": ts_dt, "value": vals})
-        df = df.sort_values("timestamp")               # :231
-        frames.append(df)
-    elapsed = time.perf_counter() - t0
+        frames.append(df.sort_values("timestamp"))     # :231
+    return frames
+
+
+def main() -> None:
+    path = _whisper_fixture()
+    frames, elapsed = timed(_reference_decode, path)
     n = sum(len(f) for f in frames)
     print(
         f"reference-path single-thread decode: {elapsed:.3f}s "

@@ -27,11 +27,12 @@ deployment reality where some member is always mid-write.
 from __future__ import annotations
 
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tests"))
+
+from bench import WHISPER_GEOMETRY, timed
 
 TREE = Path("/tmp/whisper_scale_tree")
 TREE_SMALL = Path("/tmp/whisper_scale_tree_small")
@@ -47,7 +48,6 @@ _SMALL = False  # set by main() before build_tree
 
 def _build_one(args: tuple[str, int, bool]) -> None:
     path, seed, small = args
-    from bench import WHISPER_GEOMETRY
     from wsp_fixtures import build_wsp
 
     build_wsp(
@@ -96,9 +96,13 @@ def corrupt_scan(spark, files: list[Path]) -> None:
     )
     clean_total = sum(r["count"] for r in clean)
     # timed WARM clean scan — the baseline the mixed scan is compared to
-    t0 = time.perf_counter()
-    spark.read.format("whisper").load(paths).groupBy("archive").count().collect()
-    clean_dt = time.perf_counter() - t0
+    _, clean_dt = timed(
+        lambda: spark.read.format("whisper")
+        .load(paths)
+        .groupBy("archive")
+        .count()
+        .collect()
+    )
     print(
         f"clean scan (warm):   {len(files)} files           "
         f"{mb:8.1f} MB  {clean_total:>10} points  "
@@ -108,16 +112,14 @@ def corrupt_scan(spark, files: list[Path]) -> None:
     bad = files[0].parent / "corrupt_member.wsp"
     bad.write_bytes(b"\x00\x02not-a-whisper-header" * 64)
     try:
-        t0 = time.perf_counter()
-        mixed = (
-            spark.read.format("whisper")
+        mixed, dt = timed(
+            lambda: spark.read.format("whisper")
             .option("on_error", "skip")
             .load(paths + [str(bad)])
             .groupBy("archive")
             .count()
             .collect()
         )
-        dt = time.perf_counter() - t0
         mixed_total = sum(r["count"] for r in mixed)
         assert mixed_total == clean_total, (mixed_total, clean_total)
         print(
@@ -162,10 +164,13 @@ def main() -> None:
         (f"{n} files", files),
     ]:
         mb = sum(p.stat().st_size for p in paths) / 1e6
-        t0 = time.perf_counter()
-        df = spark.read.format("whisper").load([str(p) for p in paths])
-        rows = df.groupBy("archive").count().collect()
-        dt = time.perf_counter() - t0
+        rows, dt = timed(
+            lambda: spark.read.format("whisper")
+            .load([str(p) for p in paths])
+            .groupBy("archive")
+            .count()
+            .collect()
+        )
         total = sum(r["count"] for r in rows)
         print(
             f"{label:>10}: {mb:8.1f} MB  {total:>10} points  "

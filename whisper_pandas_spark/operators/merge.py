@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 
 _CURRENT = "_CURRENT"
 _LAST_BATCH = "_LAST_BATCH"
+# Written into a version directory once it is complete, before the pointer
+# flips to it; "_"-prefixed, so Spark's parquet reader skips it.
+_COMMITTED = "_COMMITTED"
 
 
 def _evolved_columns(
@@ -236,28 +239,38 @@ def _version_dirs(root: Path) -> list[Path]:
 
 
 def _committed_versions(base: str) -> list[Path]:
-    """The ``v<N>`` directories up to and including the live one, oldest
-    first. One numbered past the live one was never live and may belong
-    to a writer still running, so the vacuums neither count, delete nor
-    read it."""
+    """The finished ``v<N>`` directories up to the live one, oldest first:
+    the live one, and every older one holding the ``_COMMITTED`` marker.
+    One numbered past the live one was never live and may belong to a
+    writer still running; an unmarked one below it is a crashed writer's
+    torn directory that a later commit stepped over. The vacuums neither
+    count, delete nor read either kind. Versions written before the marker
+    existed carry none, so they too are left in place."""
     cur = current_version_path(base)
     if cur is None:
         return []
     live = int(Path(cur).name[1:])
-    return [d for d in _version_dirs(Path(base)) if int(d.name[1:]) <= live]
+    return [
+        d
+        for d in _version_dirs(Path(base))
+        if int(d.name[1:]) == live
+        or (int(d.name[1:]) < live and (d / _COMMITTED).is_file())
+    ]
 
 
 def _commit_version(base: str, write: Callable[[Path], None]) -> str:
-    """Fill the next version directory with ``write(new_dir)``, then
-    atomically flip ``_CURRENT`` to it. The new number is past EVERY
-    existing ``v<N>``: a directory the pointer does not name is never
-    live (the pointer flips only after a full write), so a torn one left
-    by a crashed writer is stepped over instead of colliding."""
+    """Fill the next version directory with ``write(new_dir)``, mark it
+    ``_COMMITTED``, then atomically flip ``_CURRENT`` to it. The new
+    number is past EVERY existing ``v<N>``: a directory the pointer does
+    not name is never live (the pointer flips only after a full write),
+    so a torn one left by a crashed writer is stepped over instead of
+    colliding, and stays unmarked."""
     root = Path(base)
     root.mkdir(parents=True, exist_ok=True)
     versions = _version_dirs(root)
     new_dir = root / f"v{int(versions[-1].name[1:]) + 1 if versions else 0}"
     write(new_dir)
+    (new_dir / _COMMITTED).touch()
     tmp = root / f"{_CURRENT}.tmp"
     tmp.write_text(new_dir.name)
     tmp.replace(root / _CURRENT)  # atomic pointer flip
@@ -335,7 +348,9 @@ def vacuum_versions(base: str, keep_last: int = 2) -> list[str]:
     pointer file is untouched, so readers mid-flight on a RETAINED
     version are unaffected — only versions older than the retention
     window disappear (the copy-on-write vacuum contract). A directory
-    numbered past the live one is left alone and not counted."""
+    numbered past the live one, or an unmarked (torn, or written before
+    the ``_COMMITTED`` marker) one below it, is left alone and not
+    counted."""
     import shutil
 
     if keep_last < 1:
@@ -566,7 +581,9 @@ def vacuum_partitioned(base: str, keep_last: int = 2) -> list[str]:
     including the live one) references it — unlike
     :func:`vacuum_versions`, age alone is not sufficient, because old
     versions keep serving untouched partitions. A directory numbered past
-    the live one is left alone, not counted and its manifest not read."""
+    the live one, or an unmarked (torn, or written before the
+    ``_COMMITTED`` marker) one below it, is left alone, not counted and
+    its manifest not read."""
     import shutil
 
     if keep_last < 1:
