@@ -64,6 +64,38 @@ def test_header_gzip_and_bad_compression(fixtures):
         read_header(str(d / "gz.wsp.gz"), compression="bogus")
 
 
+#: garbage bytes whose archive-count field reads as ~1.88e9 archives
+GARBAGE_HEADER = b"\x00\x02not-a-whisper-header" * 64
+
+
+@pytest.mark.parametrize("name", ["garbage.wsp", "garbage.wsp.gz"])
+def test_header_impossible_archive_count(spark, tmp_path, name):
+    """A header naming more archives than the file holds raises ValueError
+    (plain and gzip) instead of asking for 12 x count bytes, so a skip-mode
+    scan drops the file and keeps its healthy neighbour."""
+    import gzip
+
+    from whisper_pandas_spark.sources.format import read_header
+    from whisper_pandas_spark.sources.whisper import register_whisper
+
+    bad = tmp_path / name
+    bad.write_bytes(
+        gzip.compress(GARBAGE_HEADER) if name.endswith(".gz") else GARBAGE_HEADER
+    )
+    with pytest.raises(ValueError, match="archives"):
+        read_header(str(bad))
+
+    golden = build_wsp(str(tmp_path / "good.wsp"), archives=[(10, 64, 1.0)])
+    register_whisper(spark)
+    rows = (
+        spark.read.format("whisper").option("on_error", "skip")
+        .option("to_datetime", "false").load(str(tmp_path)).collect()
+    )
+    assert sorted((r.timestamp, r.value) for r in rows) == [
+        (int(t), v) for t, v in golden[0].filled
+    ]
+
+
 def test_scan_golden(spark, fixtures):
     from whisper_pandas_spark.sources.whisper import register_whisper
 
@@ -183,6 +215,22 @@ def test_cli(fixtures, capsys):
     # explicit subcommand form is equivalent (bare paths = reference CLI)
     main(["info", str(d / "sensors" / "temp.wsp")])
     assert "archive_count:       3" in capsys.readouterr().out
+
+
+def test_cli_fetch(spark, fixtures, capsys):
+    """`fetch` prints the header line, the selected archive's points and
+    the row total past --limit."""
+    from whisper_pandas_spark.cli import main
+
+    d, _ = fixtures
+    lo, hi = END_TS - 500, END_TS - 100
+    main(["fetch", str(d / "sensors" / "temp.wsp"), str(lo), str(hi),
+          "--now", str(END_TS), "--limit", "5"])
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[0] == f"{'metric':<30} {'archive':>7} {'timestamp':>20} {'value':>12}"
+    assert len(lines) == 7
+    assert all(ln.split()[:2] == ["temp", "0"] for ln in lines[1:6]), lines
+    assert lines[-1] == "... (41 rows total)"
 
 
 def test_cli_convert_materializes_parquet(spark, fixtures, tmp_path, capsys):
@@ -316,10 +364,16 @@ def test_metric_filter_prunes_partitions(spark, fixtures):
 
 def test_fetch_selects_archive_and_pushes_bounds(spark, tmp_path):
     """Graphite fetch semantics: finest archive covering (now - from),
-    both predicates pushed into the source."""
+    both predicates pushed into the source. The plan goldens run on a
+    file whose selected archive exceeds LOCAL_FETCH_SLOTS, the size that
+    still goes through the distributed DataSource scan."""
     from wsp_fixtures import END_TS, build_wsp
 
-    from whisper_pandas_spark.sources.fetch import fetch, select_archive
+    from whisper_pandas_spark.sources.fetch import (
+        LOCAL_FETCH_SLOTS,
+        fetch,
+        select_archive,
+    )
 
     p = str(tmp_path / "f.wsp")
     synth = build_wsp(p)  # archives: 10s x 1600 (16ks), 60s x 5300, 3600s x 90
@@ -338,20 +392,81 @@ def test_fetch_selects_archive_and_pushes_bounds(spark, tmp_path):
         int(t) for t, _ in synth[0].filled if lo <= t <= hi
     )
     assert got == exp and len(got) == 41
+    # archive selection spanning into the coarse archive
+    df2 = fetch(spark, p, END_TS - 10 * 1600 - 50, END_TS, now_epoch=END_TS)
+    assert {r["archive"] for r in df2.collect()} == {1}
 
     # the timestamp bounds and archive equality must reach the source
     # (and be consumed: no residual post-scan Filter)
     from whisper_pandas_spark.plans.inspect import formatted_plan
 
-    plan = formatted_plan(df)
+    big = str(tmp_path / "big.wsp")
+    build_wsp(big, archives=[(10, LOCAL_FETCH_SLOTS + 1, 0.01), (60, 100, 1.0)])
+    plan = formatted_plan(fetch(spark, big, lo, hi, now_epoch=END_TS))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln][0]
     assert "EqualTo(archive,0)" in pushed, plan
     assert "GreaterThanOrEqual(timestamp" in pushed, plan
     assert "LessThanOrEqual(timestamp" in pushed, plan
-    assert "(3) Filter" not in plan, plan
-    # archive selection spanning into the coarse archive
-    df2 = fetch(spark, p, END_TS - 10 * 1600 - 50, END_TS, now_epoch=END_TS)
-    assert {r["archive"] for r in df2.collect()} == {1}
+    assert "Filter" not in plan.replace("PushedFilters", ""), plan
+
+
+@pytest.mark.parametrize(
+    "case, lo, hi, local",
+    [
+        ("file", END_TS - 500, END_TS - 100, True),  # archive 0
+        ("file", END_TS - 10 * 1600 - 50, END_TS, True),  # archive 1
+        ("file", END_TS - 10**7, END_TS, True),  # archive 2
+        ("file", END_TS + 10, END_TS + 100, True),  # empty window
+        ("gzip", END_TS - 300, END_TS, True),
+        ("tree", END_TS - 300, END_TS, True),
+        ("big", END_TS - 3000, END_TS, False),
+    ],
+    ids=["archive0", "archive1", "archive2", "empty", "gzip", "tree", "above-bound"],
+)
+def test_fetch_matches_filtered_scan(spark, tmp_path, case, lo, hi, local):
+    """fetch() returns what the whisper source returns under the same
+    three predicates, row for row and with the same schema (nullability
+    included); a read of at most LOCAL_FETCH_SLOTS slots is a driver-side
+    LocalRelation with no data-source scan in its plan."""
+    from pyspark.sql import functions as F
+    from wsp_fixtures import build_wsp
+
+    from whisper_pandas_spark.sources.fetch import (
+        LOCAL_FETCH_SLOTS,
+        fetch,
+        select_archive,
+    )
+    from whisper_pandas_spark.sources.format import list_whisper_files
+    from whisper_pandas_spark.sources.whisper import register_whisper
+
+    if case == "tree":
+        path = str(tmp_path)
+        build_wsp(str(tmp_path / "a.wsp"))
+        build_wsp(str(tmp_path / "b.wsp"), seed=5)
+    elif case == "big":
+        path = str(tmp_path / "big.wsp")
+        build_wsp(path, archives=[(10, LOCAL_FETCH_SLOTS + 1, 0.01)])
+    else:
+        path = str(tmp_path / ("f.wsp.gz" if case == "gzip" else "f.wsp"))
+        build_wsp(path, gzip_out=case == "gzip")
+
+    got = fetch(spark, path, lo, hi, now_epoch=END_TS)
+    register_whisper(spark)
+    idx = select_archive(list_whisper_files(path)[0], END_TS - lo)
+    want = spark.read.format("whisper").load(path).filter(
+        (F.col("archive") == idx)
+        & (F.col("timestamp") >= F.timestamp_seconds(F.lit(lo)))
+        & (F.col("timestamp") <= F.timestamp_seconds(F.lit(hi)))
+    )
+    assert got.schema == want.schema
+    assert [f.nullable for f in got.schema.fields] == [False] * 5
+    rows = got.collect()
+    assert rows == want.collect()
+    assert (len(rows) == 0) == (lo > END_TS)
+
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert ("LocalRelation" in plan) == local, plan
+    assert ("RelationV2" in plan) == (not local), plan
 
 
 def test_metric_prefix_pushdown_prunes_partitions(spark, fixtures):

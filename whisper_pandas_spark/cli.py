@@ -5,8 +5,8 @@
 no Spark session, no data scan.
 
 ``fetch PATH FROM UNTIL`` reads a time range at the best resolution
-(Graphite fetch semantics, sources/fetch.py) through the Spark source
-and prints the points — the smallest end-to-end smoke of the engine.
+(Graphite fetch semantics, sources/fetch.py: small reads decode on the
+driver, larger ones through the Spark source) and prints the points.
 
 ``convert PATH OUT`` materializes a .wsp tree as metric-partitioned
 (optionally day-partitioned) parquet — the one-command "leave Whisper

@@ -131,11 +131,13 @@ ORDER BY metric, epoch
 )
 def whisper_fetch_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graphite fetch semantics (sources/fetch.py): finest archive
-    covering the requested span, archive + timestamp predicates pushed
-    into the source (partition pruning + pre-Arrow row masking). The
-    oracle replays the same time filter over the parquet-derived points,
-    so the pushed-down decode window is value-checked end to end;
-    plan/pushdown goldens stay in tests/test_whisper_source.py."""
+    covering the requested span, archive + timestamp predicates handed to
+    the whisper scan reader (partition pruning + pre-Arrow row masking),
+    decoded on the driver when the read is at most LOCAL_FETCH_SLOTS
+    slots, else by the distributed DataSource scan. The oracle replays
+    the same time filter over the parquet-derived points, so the pruned
+    decode window is value-checked end to end; plan/pushdown goldens stay
+    in tests/test_whisper_source.py."""
     from whisper_pandas_spark.sources.fetch import fetch
 
     d = _roundtrip_tree(spark, sf_dir)

@@ -151,7 +151,8 @@ def read_header(path: str, compression: str = "infer") -> FileInfo:
 
     Reads ≤ 16 + 12·N bytes — never the data section — so planning over a
     directory of millions of files stays cheap. Works on truncated files as
-    long as the header itself is intact.
+    long as the header itself is intact; a header whose archive table runs
+    past the end of the file raises ``ValueError``.
     """
     comp = resolve_compression(path, compression)
     opener = gzip.open if comp == "gzip" else open
@@ -160,8 +161,24 @@ def read_header(path: str, compression: str = "infer") -> FileInfo:
         if len(head) < FILE_HEADER.size:
             raise ValueError(f"{path}: too short for a Whisper header")
         archive_count = FILE_HEADER.unpack(head)[3]
-        head += f.read(ARCHIVE_HEADER.size * archive_count)
-    return parse_header(head, path, comp)
+        want = ARCHIVE_HEADER.size * archive_count
+        # The count is untrusted (garbage bytes can claim 2^32 archives):
+        # a plain file is checked against its size, and the table is read
+        # in bounded pieces, so memory never exceeds what the file holds.
+        if comp == "none" and FILE_HEADER.size + want > os.fstat(f.fileno()).st_size:
+            raise ValueError(
+                f"{path}: header names {archive_count} archives, more than the file holds"
+            )
+        pieces = [head]
+        while want:
+            piece = f.read(min(want, ARCHIVE_HEADER.size * 4096))
+            if not piece:
+                raise ValueError(
+                    f"{path}: header names {archive_count} archives but ends early"
+                )
+            pieces.append(piece)
+            want -= len(piece)
+    return parse_header(b"".join(pieces), path, comp)
 
 
 def read_points(

@@ -181,18 +181,21 @@ def build_wsp_bytes(
             slot_ts = (fine_ts // spp) * spp
             a_ts, a_vals = _dedup_last(slot_ts, fine_vals)
         else:
-            # roll up from the previous (finer) archive's aligned points
+            # roll up from the previous (finer) archive's aligned points.
+            # fine_ts is sorted at every level (_dedup_last's np.unique,
+            # buckets emitted in uniq order, an order-keeping retention
+            # filter), so each bucket is one contiguous slice.
             bucket = (fine_ts // spp) * spp
-            uniq, inverse = np.unique(bucket, return_inverse=True)
+            uniq, starts = np.unique(bucket, return_index=True)
+            ends = np.append(starts[1:], len(bucket))
             expected = spp // prev_spp
             a_ts_list, a_vals_list = [], []
-            for u_i, u in enumerate(uniq):
-                mask = inverse == u_i
-                if float(mask.sum()) / expected < x_files_factor:
+            for u, lo, hi in zip(uniq, starts, ends):
+                if float(hi - lo) / expected < x_files_factor:
                     continue
                 a_ts_list.append(int(u))
                 a_vals_list.append(
-                    _reduce(aggregation, fine_ts[mask], fine_vals[mask], expected)
+                    _reduce(aggregation, fine_ts[lo:hi], fine_vals[lo:hi], expected)
                 )
             a_ts = np.asarray(a_ts_list, dtype="int64")
             a_vals = np.asarray(a_vals_list, dtype="float64")
