@@ -29,7 +29,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Host gates (see main): thresholds, wait budgets and the wait cadence.
 QUIET_LOAD, QUIET_WAITS, QUIET_SLEEP = 0.5, 4, 60  # 1-min loadavg; s per wait
-QUIET_SPIN, SPIN_WAITS = 0.80, 4  # _spin_probe seconds
+# The spin wait also ends once two consecutive probes agree within
+# SPIN_STEADY s: a host that reads steadily over QUIET_SPIN is slow, not
+# contended, and waiting does not make it faster.
+QUIET_SPIN, SPIN_WAITS, SPIN_STEADY = 0.80, 4, 0.10  # _spin_probe seconds
 QUIET_STEAL, STEAL_WAITS = 5.0, 4  # all-core steal, percent
 # Reps per entry: quiet captures keep the best of REPS, throttled or
 # degraded ones the best of FULL_REPS.
@@ -338,17 +341,20 @@ def _steal_probe(seconds: float = 1.5) -> float | None:
     return _steal_pct(a, _stat_fields())
 
 
-def _wait_until_quiet(probe, threshold: float, waits: int):
+def _wait_until_quiet(probe, threshold: float, waits: int, steady=None):
     """Read ``probe()`` until it is at most ``threshold`` (None, no evidence,
     counts as quiet), sleeping QUIET_SLEEP s between reads, at most
     ``waits`` times; return (the last reading, the waits spent). A
     contended host usually quiets within a few minutes, so a bounded wait
     captures a quiet window when one exists; if none comes, the bench runs
-    anyway and its record says so."""
+    anyway and its record says so. With ``steady``, two consecutive
+    readings within ``steady`` of each other also end the wait."""
     value, waited = probe(), 0
     while value is not None and value > threshold and waited < waits:
         time.sleep(QUIET_SLEEP)
-        value, waited = probe(), waited + 1
+        last, value, waited = value, probe(), waited + 1
+        if steady is not None and abs(value - last) <= steady:
+            break
     return value, waited
 
 
@@ -408,6 +414,7 @@ def main() -> None:
     # - load: a 1-minute loadavg above QUIET_LOAD means a co-tenant; the
     #   bench itself drives load up once running, so this is stamped first;
     # - spin: the single-thread probe above QUIET_SPIN means a slow host;
+    #   the wait ends early once two probes agree within SPIN_STEADY;
     # - steal: loadavg and the spin probe both read quiet while the
     #   hypervisor steals 16%+ under parallel load (steal only shows when
     #   every core is busy, which is when the bench runs), so an all-core
@@ -421,7 +428,7 @@ def main() -> None:
     )
     gates["load_at_start"] = round(load, 2)
     gates["spin_s"], gates["spin_waits"] = _wait_until_quiet(
-        _spin_probe, QUIET_SPIN, SPIN_WAITS
+        _spin_probe, QUIET_SPIN, SPIN_WAITS, SPIN_STEADY
     )
     gates["steal_pct_start"], gates["steal_waits"] = _wait_until_quiet(
         _steal_probe, QUIET_STEAL, STEAL_WAITS

@@ -138,3 +138,27 @@ def test_final_line_keys_stanzas_and_size():
     assert line["value"] == round(15 * 12.3457, 4)
     assert line["capture"] == "best_of_5"
     assert len(json.dumps(line)) < 2000
+
+
+def _spin_readings(monkeypatch, readings):
+    """Feed ``readings`` to the spin gate with ``time.sleep`` stubbed out;
+    return the gate's (last reading, waits spent)."""
+    feed = iter(readings)
+    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
+    return bench._wait_until_quiet(
+        lambda: next(feed), bench.QUIET_SPIN, bench.SPIN_WAITS, bench.SPIN_STEADY
+    )
+
+
+def test_spin_gate_stops_on_a_steady_slow_host(monkeypatch):
+    """A probe that reads a steady 1.1 s is a slow host, not a busy one:
+    the gate spends at most one wait on it, not its whole budget."""
+    value, waited = _spin_readings(monkeypatch, [1.1] * (bench.SPIN_WAITS + 1))
+    assert value == 1.1 and waited <= 1
+
+
+def test_spin_gate_still_waits_out_a_busy_spell(monkeypatch):
+    """A slow reading followed by a quiet one waits once and passes."""
+    value, waited = _spin_readings(monkeypatch, [1.2, 0.7])
+    assert (value, waited) == (0.7, 1)
+    assert value <= bench.QUIET_SPIN

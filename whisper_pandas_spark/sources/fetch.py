@@ -49,14 +49,14 @@ from whisper_pandas_spark.sources.whisper import (
 
 # Largest read (total planned slots) decoded in-process. Measured as the
 # median of 5 fetch(...).toPandas() calls on one fully filled file, 4-core
-# host, local[4]: a DataFrame built from an Arrow table (a LocalRelation)
-# costs ~0.1-0.2 s + 2-4 µs per row, the DataSource path ~0.7 s + 0.7-1.2
-# µs per row (planner processes plus one job), so they cross at 200K-400K
-# rows. A 65,536-slot archive: 0.77 s distributed, 0.35 s in-process; a
-# 500,000-slot one: 1.08 s distributed, 1.18 s in-process (an earlier
-# measurement read 0.84 vs 0.42 s and 1.29 vs 2.19 s). The bound stays
-# well under the crossover.
-LOCAL_FETCH_SLOTS = 65_536
+# host, local[4], in-process vs distributed (the DataSource path: planner
+# processes plus one job): 8,192 slots 0.10 vs 0.17 s; 16,384 0.12 vs
+# 0.17 s; 32,768 0.14-0.16 vs 0.17-0.19 s; 49,152 0.18-0.21 vs 0.19 s;
+# 65,536 0.27 vs 0.21-0.23 s; 131,072 0.51 vs 0.23 s. A LocalRelation
+# built from an Arrow table costs ~0.1 s + ~3 µs per row, the DataSource
+# path ~0.17 s + ~0.5 µs per row, so they cross near 40K rows. The bound
+# stays under the crossover.
+LOCAL_FETCH_SLOTS = 32_768
 
 
 def select_archive(path: str, span_seconds: int, compression: str = "infer") -> int:

@@ -5,6 +5,13 @@ Header peeks are tiny (≤ 16+12·N bytes per file); for large trees the peek
 itself is distributed over the file list with a Pandas UDF-free
 ``spark.createDataFrame`` on the driver for small N, or ``mapInPandas``
 over a path DataFrame for millions of files.
+
+The driver-side tables are built from Arrow, not from a Python list: a
+list-built DataFrame pickles its rows through Python tasks in a worker pool
+that never imports this package, so each of its tasks paid PySpark's
+per-task import-cache reset (``session.py``). For the 6 rows of two files
+that was 0.36 s and 0.8 CPU-s of Python workers per collect; from Arrow it
+is 0.035 s and none.
 """
 
 from __future__ import annotations
@@ -12,7 +19,9 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     FloatType,
@@ -64,6 +73,14 @@ def _expand(paths: str | Iterable[str]) -> list[str]:
     return sorted(set(out))
 
 
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """*rows* as a driver-local DataFrame with *schema*, built from Arrow."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def scan_headers(paths: str | Iterable[str], compression: str = "infer") -> list[FileInfo]:
     """Driver-side header peek for each matching file."""
     return [read_header(f, compression) for f in _expand(paths)]
@@ -88,7 +105,7 @@ def file_meta(
         )
         for i in scan_headers(paths, compression)
     ]
-    return spark.createDataFrame(rows, FILE_META_SCHEMA)
+    return _local_frame(spark, rows, FILE_META_SCHEMA)
 
 
 def archive_meta(
@@ -101,7 +118,7 @@ def archive_meta(
         for i in scan_headers(paths, compression)
         for a in i.archives
     ]
-    return spark.createDataFrame(rows, ARCHIVE_META_SCHEMA)
+    return _local_frame(spark, rows, ARCHIVE_META_SCHEMA)
 
 
 def print_info(path: str, compression: str = "infer") -> None:

@@ -82,8 +82,13 @@ from whisper_pandas_spark.sources.format import (
 # 83 MB fixture (bench.py, best-of-3 per size): 2M→1.07 s, 1M→0.95 s,
 # 512K→0.80 s, 256K→0.86 s, 128K→1.46 s on local[32] — 512K chunks (14
 # tasks) balance parallelism against per-task Python-worker overhead.
-# Per-task decode stays ~25 ms against ~5 ms scheduling overhead, so the
-# split remains coarse enough for a 1000-executor cluster (where
+# That overhead was measured again on a 4-core host, local[4], as
+# Python-worker CPU from /proc: a trivial task cost 177-222 ms while
+# PySpark's per-task import-cache reset re-read pyspark.zip, and 19 ms
+# since session.py keeps zip directories; a scan task over two 83 MB
+# files (12 tasks) cost 0.30 CPU-s before and 0.12 after. The sizes
+# above predate that change. The split stays
+# coarse enough for a 1000-executor cluster (where
 # cross-FILE parallelism dominates and within-file splitting only has to
 # keep a few giant files from serializing).
 DEFAULT_CHUNK_POINTS = 512 * 1024
@@ -354,8 +359,10 @@ class WhisperScanReader(DataSourceReader):
             # floor (14 tasks, measured best); a 1 GB/12-file tree → ~1.3M
             # chunks (tree-level parallelism already saturates the pool, so
             # fewer, larger tasks cut per-task Python-worker overhead —
-            # 512K chunks measured 1.8× slower there). Cluster deployments
-            # should pin `chunk_points` explicitly.
+            # 512K chunks measured 1.8× slower there, while each Python
+            # task still paid ~0.2 CPU-s of fixed cost; now ~19 ms, see
+            # DEFAULT_CHUNK_POINTS). Cluster deployments should pin
+            # `chunk_points` explicitly.
             total = sum(
                 a.points
                 for _, _, info in planned
