@@ -26,6 +26,7 @@ needs, Spark-first:
 
 Skew guard: LSH buckets over-populated by degenerate content (e.g. empty
 docs) explode the within-bucket self-join quadratically. `lsh_pairs`
+(and, when asked, `hamming_band_join` for every hamming near-dup operator)
 drops buckets larger than `max_bucket` (configurable) — the standard
 recall/cost trade; at 100 TB you would log and route such buckets to the
 exact path keyed by content hash instead.
@@ -509,34 +510,86 @@ def simhash_pairs(
     trading recall (documented, observable) for a bounded pair count.
     Default ``None`` keeps the exact no-false-negative guarantee.
     """
-    # Arrow fingerprints, persisted (consumed by both join sides); bands
-    # via one posexplode pass (a 4-way union would recompute the
-    # fingerprint subtree per band — the same trap as minhash lsh_pairs).
+    # Arrow fingerprints, persisted (consumed by both join sides)
     base = simhash_arrow(df, id_col, text_col).persist()
+    return hamming_band_join(base, "simhash", 4, 15, max_hamming, max_bucket)
+
+
+def hamming_band_join(
+    base: DataFrame,
+    hash_col: str,
+    bands: int,
+    bits: int,
+    max_hamming: int | None,
+    max_bucket: int | None = None,
+    keys: tuple[str, ...] = (),
+    other: DataFrame | None = None,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """The pigeonhole band join over integer fingerprints — the one
+    blocking step behind every hamming near-dup operator.
+
+    Band b of a fingerprint is ``(h >>> b*bits) & (2^bits - 1)``; two
+    fingerprints within hamming ``bands - 1`` share at least one band, so
+    joining on any-band-equal (plus the extra equality *keys*, e.g.
+    ``frame_idx``) has no false negatives up to that distance. The bands
+    come from one ``posexplode`` pass (a per-band union would recompute
+    the fingerprint subtree once per band). The shift is unsigned, so a
+    sign bit in a 64-bit hash is harmless.
+
+    Self-join (*other* None): rows ``(doc_i, doc_j, hamming)`` from
+    *id_col* with ``doc_i < doc_j``; the caller persists *base*, which
+    feeds both sides. With *other*, ``doc_i`` comes from *base* and
+    ``doc_j`` from *other*, unordered. *base* is attached to the result as
+    ``_wps_cached`` for :func:`release_cached`. ``hamming = bit_count(h_i XOR
+    h_j)`` is kept when ``<= max_hamming``; ``max_hamming=None`` returns
+    the distinct candidate ``(doc_i, doc_j)`` pairs unverified. A NULL
+    fingerprint has NULL bands and pairs with nothing.
+
+    ``max_bucket`` is the cluster-scale skew guard: it drops every
+    (keys, band, value) bucket holding more than that many rows BEFORE
+    the join, bounding the quadratic within-bucket pair count at a
+    documented recall cost. Default None keeps exactness.
+    """
     band_keys = F.array(
         *[
-            F.shiftright("simhash", b * 15).bitwiseAND(F.lit((1 << 15) - 1))
-            for b in range(4)
+            F.shiftrightunsigned(hash_col, b * bits).bitwiseAND(F.lit((1 << bits) - 1))
+            for b in range(bands)
         ]
     )
-    bands = base.select(
-        "doc_id", "simhash", F.posexplode(band_keys).alias("band", "bkey")
-    )
-    if max_bucket is not None:
-        bands = bands.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")),
-        ).filter(F.col("bucket_n") <= max_bucket)
-    left = bands.select("band", "bkey", F.col("doc_id").alias("doc_i"), F.col("simhash").alias("sh_i"))
-    right = bands.select("band", "bkey", F.col("doc_id").alias("doc_j"), F.col("simhash").alias("sh_j"))
-    ham = F.bit_count(F.expr("sh_i ^ sh_j"))
-    out = (
-        left.join(right, ["band", "bkey"])
-        .filter(F.col("doc_i") < F.col("doc_j"))
-        .select("doc_i", "doc_j", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    on = [*keys, "band", "bkey"]
+
+    def banded(df: DataFrame) -> DataFrame:
+        out = df.select(
+            *keys,
+            F.col(id_col).alias("_id"),
+            F.col(hash_col).alias("_h"),
+            F.posexplode(band_keys).alias("band", "bkey"),
+        )
+        if max_bucket is not None:
+            out = out.withColumn(
+                "bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*on))
+            ).filter(F.col("bucket_n") <= max_bucket)
+        return out
+
+    def side(table: DataFrame, s: str) -> DataFrame:
+        return table.select(*on, F.col("_id").alias(f"doc_{s}"), F.col("_h").alias(f"h_{s}"))
+
+    left = banded(base)
+    right = left if other is None else banded(other)
+    pairs = side(left, "i").join(side(right, "j"), on)
+    if other is None:
+        pairs = pairs.filter(F.col("doc_i") < F.col("doc_j"))
+    if max_hamming is None:
+        out = pairs.select("doc_i", "doc_j").distinct()
+    else:
+        out = (
+            pairs.select(
+                "doc_i", "doc_j", F.bit_count(F.expr("h_i ^ h_j")).alias("hamming")
+            )
+            .distinct()
+            .filter(F.col("hamming") <= max_hamming)
+        )
     out._wps_cached = [base]  # release via release_cached(out)
     return out
 

@@ -31,10 +31,12 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whisper_pandas_spark.operators.dedup import hamming_band_join
 
 FEATURE_BINS = 16
 FRAME_BYTES = 64  # fake fixed-size "frame" for the sampling pipeline
@@ -171,6 +173,92 @@ def sample_frames(
     )
 
 
+_NULLABLE_DTYPES = {"int": "Int32", "long": "Int64", "double": "Float64"}
+
+
+def _decode_pass(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    on_error: str,
+    decode: Callable[[bytes], list[tuple]],
+    schema: str,
+    null_row: tuple | None = None,
+) -> DataFrame:
+    """The one tolerant decode pass behind every ``on_error`` leaf: one
+    narrow Arrow `mapInPandas` pass over ``(id, payload)`` with the
+    skip/null/fail contract documented on :func:`decode_image_stats`.
+
+    ``decode(bytes)`` returns the payload's output rows (a list of tuples
+    matching *schema*, the columns after ``doc_id``) and raises
+    ``CodecError`` (or ``NotImplementedError`` for an unsupported codec
+    variant) on a payload it cannot decode; a NULL payload counts as one.
+    ``null`` mode emits one ``(doc_id, *null_row)`` row per such payload,
+    all NULL when *null_row* is None.
+
+    A NULL id passes through as NULL. No integer is rounded through
+    float64: the id reaches pandas with its NULLs as a separate mask
+    (a NULL in a long column would turn the column into float64), and
+    every numeric output column is a nullable pandas array.
+    """
+    import pandas as pd
+
+    from whisper_pandas_spark.functions.codecs import CodecError
+
+    if on_error not in ("skip", "null", "fail"):
+        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
+    cols = [c.split(None, 1) for c in f"doc_id long, {schema}".split(",")]
+    names = [name for name, _ in cols]
+    dtypes = [_NULLABLE_DTYPES.get(typ.strip()) for _, typ in cols]
+    if null_row is None:
+        null_row = (None,) * (len(cols) - 1)
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            ids = pd.array(pdf["_id"], dtype="Int64")
+            ids[pdf["_id_null"].to_numpy()] = pd.NA
+            rows: list[tuple] = []
+            for doc_id, p in zip(ids, pdf["_payload"]):
+                try:
+                    if p is None:
+                        raise CodecError("null payload")
+                    decoded = decode(bytes(p))
+                except (CodecError, NotImplementedError):
+                    if on_error == "fail":
+                        raise
+                    if on_error == "skip":
+                        continue
+                    decoded = [null_row]
+                rows.extend((doc_id, *r) for r in decoded)
+            if not rows:
+                continue
+            yield pd.DataFrame(
+                {
+                    name: list(vals) if dtype is None else pd.array(vals, dtype=dtype)
+                    for name, dtype, vals in zip(names, dtypes, zip(*rows))
+                }
+            )
+
+    src = df.select(
+        F.coalesce(F.col(id_col), F.lit(0)).alias("_id"),
+        F.col(id_col).isNull().alias("_id_null"),
+        F.col(payload_col).alias("_payload"),
+    )
+    return src.mapInPandas(run, f"doc_id long, {schema}")
+
+
+def _px_stats(img) -> tuple[float, str]:
+    """(mean pixel value, md5 of the pixel bytes) of a decoded image."""
+    import hashlib
+
+    import numpy as np
+
+    return (
+        float(np.asarray(img, dtype=np.float64).mean()),
+        hashlib.md5(img.tobytes()).hexdigest(),
+    )
+
+
 def decode_image_stats(
     df: DataFrame,
     id_col: str,
@@ -192,60 +280,15 @@ def decode_image_stats(
       caller can count/inspect failures);
     - ``"fail"``  — re-raise (fail the task).
     """
-    import hashlib
+    from whisper_pandas_spark.functions.codecs import decode_image as _dec
 
-    import numpy as np
-    import pandas as pd
+    def decode(raw: bytes) -> list[tuple]:
+        h, w, c, img = _dec(raw)
+        return [(h, w, c, *_px_stats(img))]
 
-    from whisper_pandas_spark.functions.codecs import CodecError, decode_image as _dec
-
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, hs, ws, chs, means, hashes = [], [], [], [], [], []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    h, w, c, img = _dec(bytes(p))
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    ids.append(doc_id)
-                    hs.append(None)
-                    ws.append(None)
-                    chs.append(None)
-                    means.append(None)
-                    hashes.append(None)
-                    continue
-                ids.append(doc_id)
-                hs.append(h)
-                ws.append(w)
-                chs.append(c)
-                means.append(float(np.asarray(img, dtype=np.float64).mean()))
-                hashes.append(hashlib.md5(img.tobytes()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "height": pd.array(hs, dtype="Int32"),
-                    "width": pd.array(ws, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "mean_px": pd.array(means, dtype="Float64"),
-                    "px_md5": hashes,
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(
-        run,
-        "doc_id long, height int, width int, channels int, "
-        "mean_px double, px_md5 string",
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "height int, width int, channels int, mean_px double, px_md5 string",
     )
 
 
@@ -268,81 +311,31 @@ def decode_frame_stats(
     as :func:`decode_image_stats` (frames stay on executors; narrow, no
     shuffle — row explosion happens inside the pass).
     """
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     from whisper_pandas_spark.functions.codecs import (
-        CodecError,
         decode_gif_frames,
         decode_image as _dec,
     )
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
     if every < 1:
         raise ValueError(f"every must be >= 1, got {every}")
 
-    def frames_of(raw: bytes):
-        """Sampled frames; entry j carries original frame index j*every
-        (decode_gif_frames samples at the container level, so unsampled
-        frames are never LZW-decoded)."""
+    def decode(raw: bytes) -> list[tuple]:
+        # decode_gif_frames samples at the container level, so unsampled
+        # frames are never LZW-decoded; entry j is original frame j*every
         if raw[:6] in (b"GIF87a", b"GIF89a"):
             _sw, _sh, frames = decode_gif_frames(raw, every=every)
-            return frames
-        h, w, _c, img = _dec(raw)
-        return [(0, 0, h, w, img)]
+        else:
+            h, w, _c, img = _dec(raw)
+            frames = [(0, 0, h, w, img)]
+        return [
+            (j * every, left, top, h, w, *_px_stats(img))
+            for j, (left, top, h, w, img) in enumerate(frames)
+        ]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = ("doc_id", "frame_idx", "left", "top", "height", "width")
-        for pdf in batches:
-            rows = {c: [] for c in cols}
-            means, hashes = [], []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    frames = frames_of(bytes(p))
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    for c in cols:
-                        rows[c].append(doc_id if c == "doc_id" else None)
-                    means.append(None)
-                    hashes.append(None)
-                    continue
-                for j, (left, top, h, w, img) in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(j * every)
-                    rows["left"].append(left)
-                    rows["top"].append(top)
-                    rows["height"].append(h)
-                    rows["width"].append(w)
-                    means.append(float(np.asarray(img, dtype=np.float64).mean()))
-                    hashes.append(hashlib.md5(img.tobytes()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": rows["doc_id"],
-                    "frame_idx": pd.array(rows["frame_idx"], dtype="Int32"),
-                    "left": pd.array(rows["left"], dtype="Int32"),
-                    "top": pd.array(rows["top"], dtype="Int32"),
-                    "height": pd.array(rows["height"], dtype="Int32"),
-                    "width": pd.array(rows["width"], dtype="Int32"),
-                    "mean_px": pd.array(means, dtype="Float64"),
-                    "px_md5": hashes,
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(
-        run,
-        "doc_id long, frame_idx int, left int, top int, height int, "
-        "width int, mean_px double, px_md5 string",
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "frame_idx int, left int, top int, height int, width int, "
+        "mean_px double, px_md5 string",
     )
 
 
@@ -360,63 +353,23 @@ def decode_audio_stats(
     :func:`decode_image_stats`.
     """
     import numpy as np
-    import pandas as pd
 
-    from whisper_pandas_spark.functions.codecs import CodecError, decode_audio as _dec
+    from whisper_pandas_spark.functions.codecs import decode_audio as _dec
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
+    def decode(raw: bytes) -> list[tuple]:
+        rate, ch, samples = _dec(raw)
+        n = samples.shape[0]
+        rms = (
+            float(np.sqrt(np.mean(np.square(samples.astype(np.float64)))))
+            if n
+            else 0.0
+        )
+        return [(rate, ch, n, n / rate if rate else None, rms)]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "doc_id": [], "sample_rate": [], "channels": [],
-                "n_samples": [], "duration_s": [], "rms": [],
-            }
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    rate, ch, samples = _dec(bytes(p))
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    rows["doc_id"].append(doc_id)
-                    for k in ("sample_rate", "channels", "n_samples",
-                              "duration_s", "rms"):
-                        rows[k].append(None)
-                    continue
-                n = samples.shape[0]
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(rate)
-                rows["channels"].append(ch)
-                rows["n_samples"].append(n)
-                rows["duration_s"].append(n / rate if rate else None)
-                rows["rms"].append(
-                    float(np.sqrt(np.mean(np.square(samples.astype(np.float64)))))
-                    if n
-                    else 0.0
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": rows["doc_id"],
-                    "sample_rate": pd.array(rows["sample_rate"], dtype="Int32"),
-                    "channels": pd.array(rows["channels"], dtype="Int32"),
-                    "n_samples": pd.array(rows["n_samples"], dtype="Int64"),
-                    "duration_s": pd.array(rows["duration_s"], dtype="Float64"),
-                    "rms": pd.array(rows["rms"], dtype="Float64"),
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(
-        run,
-        "doc_id long, sample_rate int, channels int, n_samples long, "
-        "duration_s double, rms double",
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "sample_rate int, channels int, n_samples long, duration_s double, "
+        "rms double",
     )
 
 
@@ -520,25 +473,19 @@ def audio_features(
     skip/null/fail tolerant-decode contract as the other decode leaves.
     """
     import numpy as np
-    import pandas as pd
 
     from whisper_pandas_spark.functions.codecs import (
         CodecError,
         decode_audio as _dec,
     )
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
     if hop < 1 or frame < 2 or hop > frame:
         raise ValueError("need frame >= 2, 1 <= hop <= frame")
 
-    cols = [
-        "n_frames", "zcr", "spectral_centroid_hz", "spectral_bandwidth_hz",
-        "spectral_rolloff_hz", "peak", "rms_mean", "rms_max",
-        "silence_ratio",
-    ]
-
-    def clip_features(rate: int, samples: "np.ndarray") -> list:
+    def decode(raw: bytes) -> list[tuple]:
+        rate, _ch, samples = _dec(raw)
+        if rate <= 0 or samples.shape[0] == 0:
+            raise CodecError("empty clip")
         mono = samples.astype(np.float64).mean(axis=1) / 32768.0
         n = mono.shape[0]
         if n < frame:
@@ -571,44 +518,16 @@ def audio_features(
             spec = [float(cent.mean()), float(bw.mean()), float(roll.mean())]
         else:
             spec = [None, None, None]
-        return [
+        return [(
             int(n_frames), zcr, *spec, peak,
             float(rms.mean()), float(rms.max()), silence_ratio,
-        ]
+        )]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out: list[list] = []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    rate, _ch, samples = _dec(bytes(p))
-                    if rate <= 0 or samples.shape[0] == 0:
-                        raise CodecError("empty clip")
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    out.append([doc_id] + [None] * len(cols))
-                    continue
-                out.append([doc_id] + clip_features(rate, samples))
-            if not out:
-                continue
-            yield pd.DataFrame(out, columns=["doc_id"] + cols).astype(
-                {"doc_id": "int64", "n_frames": "Int64"}
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(
-        run,
-        "doc_id long, n_frames long, zcr double, "
-        "spectral_centroid_hz double, spectral_bandwidth_hz double, "
-        "spectral_rolloff_hz double, peak double, rms_mean double, "
-        "rms_max double, silence_ratio double",
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "n_frames long, zcr double, spectral_centroid_hz double, "
+        "spectral_bandwidth_hz double, spectral_rolloff_hz double, "
+        "peak double, rms_mean double, rms_max double, silence_ratio double",
     )
 
 
@@ -650,22 +569,11 @@ def image_features(
     the other decode leaves.
     """
     import numpy as np
-    import pandas as pd
 
-    from whisper_pandas_spark.functions.codecs import (
-        CodecError,
-        decode_image as _dec,
-    )
+    from whisper_pandas_spark.functions.codecs import decode_image as _dec
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
-
-    cols = [
-        "height", "width", "channels", "mean_px", "std_px", "skew_px",
-        "grad_x_mean", "grad_y_mean", "orient_hist",
-    ]
-
-    def one_image(h: int, w: int, c: int, img: "np.ndarray") -> list:
+    def decode(raw: bytes) -> list[tuple]:
+        h, w, c, img = _dec(raw)
         plane = img[:, :, 0] if c == 1 else img.mean(axis=2)
         n = h * w
         if c == 1:
@@ -703,42 +611,11 @@ def image_features(
             orient = (hist / hist.sum()).tolist()
         else:
             orient = None
-        return [h, w, c, mean, std, skew, gx_mean, gy_mean, orient]
+        return [(h, w, c, mean, std, skew, gx_mean, gy_mean, orient)]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out: list[list] = []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    h, w, c, img = _dec(bytes(p))
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    out.append([doc_id] + [None] * len(cols))
-                    continue
-                out.append([doc_id] + one_image(h, w, c, img))
-            if not out:
-                continue
-            pdf_out = pd.DataFrame(out, columns=["doc_id"] + cols)
-            yield pdf_out.astype(
-                {
-                    "doc_id": "int64",
-                    "height": "Int32",
-                    "width": "Int32",
-                    "channels": "Int32",
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(
-        run,
-        "doc_id long, height int, width int, channels int, mean_px double, "
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "height int, width int, channels int, mean_px double, "
         "std_px double, skew_px double, grad_x_mean double, "
         "grad_y_mean double, orient_hist array<double>",
     )
@@ -817,17 +694,14 @@ def image_dhash(
     pass, scan-aligned, no shuffle — numpy touches each IMAGE once.
     """
     import numpy as np
-    import pandas as pd
 
     from whisper_pandas_spark.functions.codecs import (
         CodecError,
         decode_image as _dec,
     )
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
-
-    def one_hash(h: int, w: int, c: int, img: "np.ndarray") -> int:
+    def decode(raw: bytes) -> list[tuple]:
+        h, w, c, img = _dec(raw)
         if h < DHASH_ROWS or w < DHASH_COLS:
             raise CodecError(f"image {h}x{w} smaller than dHash grid")
         plane = (
@@ -838,36 +712,9 @@ def image_dhash(
             # the arithmetic exact where averaging would need floats)
             else img.astype(np.int64).sum(axis=2)
         )
-        return _dhash_bits_value(_dhash_grid(plane, h, w))
+        return [(_dhash_bits_value(_dhash_grid(plane, h, w)),)]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list = []
-            hashes: list = []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    h, w, c, img = _dec(bytes(p))
-                    val = one_hash(h, w, c, img)
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    val = None
-                ids.append(doc_id)
-                hashes.append(val)
-            if not ids:
-                continue
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes}).astype(
-                {"doc_id": "int64", "dhash": "Int64"}
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(run, "doc_id long, dhash long")
+    return _decode_pass(df, id_col, payload_col, on_error, decode, "dhash long")
 
 
 def phash_neardup_pairs(
@@ -896,41 +743,8 @@ def phash_neardup_pairs(
 
     Returns (doc_i, doc_j, hamming) with doc_i < doc_j.
     """
-    from pyspark.sql import Window
-
     base = image_dhash(df, id_col, payload_col).persist()
-    band_keys = F.array(
-        *[
-            F.shiftrightunsigned("dhash", b * 8).bitwiseAND(F.lit(255))
-            for b in range(8)
-        ]
-    )
-    bands = base.select(
-        "doc_id", "dhash", F.posexplode(band_keys).alias("band", "bkey")
-    )
-    if max_bucket is not None:
-        bands = bands.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")),
-        ).filter(F.col("bucket_n") <= max_bucket)
-    left = bands.select(
-        "band", "bkey",
-        F.col("doc_id").alias("doc_i"), F.col("dhash").alias("dh_i"),
-    )
-    right = bands.select(
-        "band", "bkey",
-        F.col("doc_id").alias("doc_j"), F.col("dhash").alias("dh_j"),
-    )
-    ham = F.bit_count(F.expr("dh_i ^ dh_j"))
-    out = (
-        left.join(right, ["band", "bkey"])
-        .filter(F.col("doc_i") < F.col("doc_j"))
-        .select("doc_i", "doc_j", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    out._wps_cached = [base]
-    return out
+    return hamming_band_join(base, "dhash", 8, 8, max_hamming, max_bucket)
 
 
 AFP_FRAME = 32    # samples per energy frame
@@ -963,19 +777,16 @@ def audio_fingerprint(
     pass, scan-aligned, no shuffle.
     """
     import numpy as np
-    import pandas as pd
 
     from whisper_pandas_spark.functions.codecs import (
         CodecError,
         decode_audio as _dec,
     )
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
-
     need = AFP_FRAME * (AFP_BITS + 1)
 
-    def one_fp(samples: "np.ndarray") -> int:
+    def decode(raw: bytes) -> list[tuple]:
+        _rate, _ch, samples = _dec(raw)
         mono = samples if samples.ndim == 1 else samples[:, 0]
         if mono.shape[0] < need:
             raise CodecError(
@@ -988,36 +799,9 @@ def audio_fingerprint(
         for k, bit in enumerate(bits):
             if bit:
                 val |= 1 << k
-        return val
+        return [(val,)]
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list = []
-            fps: list = []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    _rate, _ch, samples = _dec(bytes(p))
-                    val = one_fp(samples)
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    val = None
-                ids.append(doc_id)
-                fps.append(val)
-            if not ids:
-                continue
-            yield pd.DataFrame({"doc_id": ids, "afp": fps}).astype(
-                {"doc_id": "int64", "afp": "Int64"}
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return src.mapInPandas(run, "doc_id long, afp long")
+    return _decode_pass(df, id_col, payload_col, on_error, decode, "afp long")
 
 
 def audio_neardup_pairs(
@@ -1036,41 +820,8 @@ def audio_neardup_pairs(
     oracle, so both engines enumerate the same pairs. ``max_bucket`` is
     the usual dense-bucket skew guard. Returns (doc_i, doc_j, hamming),
     doc_i < doc_j."""
-    from pyspark.sql import Window
-
     base = audio_fingerprint(df, id_col, payload_col).persist()
-    band_keys = F.array(
-        *[
-            F.shiftright("afp", b * 8).bitwiseAND(F.lit(255))
-            for b in range(4)
-        ]
-    )
-    bands = base.select(
-        "doc_id", "afp", F.posexplode(band_keys).alias("band", "bkey")
-    )
-    if max_bucket is not None:
-        bands = bands.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(Window.partitionBy("band", "bkey")),
-        ).filter(F.col("bucket_n") <= max_bucket)
-    left = bands.select(
-        "band", "bkey",
-        F.col("doc_id").alias("doc_i"), F.col("afp").alias("fp_i"),
-    )
-    right = bands.select(
-        "band", "bkey",
-        F.col("doc_id").alias("doc_j"), F.col("afp").alias("fp_j"),
-    )
-    ham = F.bit_count(F.expr("fp_i ^ fp_j"))
-    out = (
-        left.join(right, ["band", "bkey"])
-        .filter(F.col("doc_i") < F.col("doc_j"))
-        .select("doc_i", "doc_j", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    out._wps_cached = [base]
-    return out
+    return hamming_band_join(base, "afp", 4, 8, max_hamming, max_bucket)
 
 
 def video_frame_dhash(
@@ -1088,15 +839,14 @@ def video_frame_dhash(
     average to the 9x8 grid over the channel-sum luma). One narrow
     Arrow pass; rows explode inside the task, no shuffle."""
     import numpy as np
-    import pandas as pd
 
     from whisper_pandas_spark.functions.codecs import (
         CodecError,
         decode_gif_frames,
     )
 
-    if on_error not in ("skip", "null", "fail"):
-        raise ValueError(f"on_error must be skip|null|fail, got {on_error!r}")
+    if every < 1:
+        raise ValueError(f"every must be >= 1, got {every}")
 
     def one_hash(img: "np.ndarray") -> int:
         h, w = img.shape[:2]
@@ -1104,40 +854,17 @@ def video_frame_dhash(
             raise CodecError(f"frame {h}x{w} smaller than dHash grid")
         return _dhash_bits_value(_dhash_grid(img.astype(np.int64).sum(axis=2), h, w))
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids: list = []
-            fidx: list = []
-            hs: list = []
-            for doc_id, p in zip(pdf["_id"], pdf["_payload"]):
-                try:
-                    if p is None:
-                        raise CodecError("null payload")
-                    _sw, _sh, frames = decode_gif_frames(bytes(p), every)
-                    vals = [
-                        (j * every, one_hash(img))
-                        for j, (_l, _t, _h, _w, img) in enumerate(frames)
-                    ]
-                except (CodecError, NotImplementedError):
-                    if on_error == "fail":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    vals = [(0, None)]
-                for fi, v in vals:
-                    ids.append(doc_id)
-                    fidx.append(fi)
-                    hs.append(v)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": fidx, "dhash": hs}
-            ).astype({"doc_id": "int64", "frame_idx": "int32", "dhash": "Int64"})
+    def decode(raw: bytes) -> list[tuple]:
+        _sw, _sh, frames = decode_gif_frames(raw, every)
+        return [
+            (j * every, one_hash(img))
+            for j, (_l, _t, _h, _w, img) in enumerate(frames)
+        ]
 
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(payload_col).alias("_payload")
+    return _decode_pass(
+        df, id_col, payload_col, on_error, decode,
+        "frame_idx int, dhash long", null_row=(0, None),
     )
-    return src.mapInPandas(run, "doc_id long, frame_idx int, dhash long")
 
 
 def video_neardup_pairs(
@@ -1163,37 +890,9 @@ def video_neardup_pairs(
     Returns (doc_i, doc_j, total_hamming), doc_i < doc_j. The frame
     table shuffles only (ids, 8-byte hashes); payloads never move.
     """
-    from pyspark.sql import Window
-
     base = video_frame_dhash(df, id_col, payload_col, every).persist()
-    band_keys = F.array(
-        *[
-            F.shiftrightunsigned("dhash", b * 8).bitwiseAND(F.lit(255))
-            for b in range(8)
-        ]
-    )
-    bands = base.select(
-        "doc_id", "frame_idx", F.posexplode(band_keys).alias("band", "bkey")
-    )
-    if max_bucket is not None:
-        bands = bands.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(
-                Window.partitionBy("frame_idx", "band", "bkey")
-            ),
-        ).filter(F.col("bucket_n") <= max_bucket)
-    cands = (
-        bands.alias("l")
-        .join(
-            bands.alias("r"),
-            ["frame_idx", "band", "bkey"],
-        )
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("doc_i"),
-            F.col("r.doc_id").alias("doc_j"),
-        )
-        .distinct()
+    cands = hamming_band_join(
+        base, "dhash", 8, 8, None, max_bucket, keys=("frame_idx",)
     )
     hi = base.select(
         F.col("doc_id").alias("doc_i"),

@@ -51,6 +51,38 @@ def time_bucket(ts: Column | str, resolution_seconds: int) -> Column:
     return F.timestamp_seconds((epoch - (epoch % F.lit(resolution_seconds))))
 
 
+def _whisper_agg(
+    resolution_seconds: int,
+    method: str,
+    x_files_factor: float,
+    fine_resolution_seconds: int | None,
+    ts_col: str,
+    value_col: str,
+) -> tuple[list[Column], Column | None]:
+    """The rollup's aggregates — ``value`` by *method* and ``n_points`` —
+    and its xFilesFactor keep-condition (None when ungated). Shared by the
+    batch :func:`rollup` and ``streaming.rollup.streaming_rollup``, which
+    differ only in how they bucket."""
+    if method not in ROLLUP_METHODS:
+        raise ValueError(f"unknown rollup method {method!r}; one of {ROLLUP_METHODS}")
+    needs_slots = method == "avg_zero" or x_files_factor > 0.0
+    if needs_slots and not fine_resolution_seconds:
+        raise ValueError(
+            f"method {method!r} / xFilesFactor > 0 require fine_resolution_seconds"
+        )
+
+    v, t = F.col(value_col), F.col(ts_col)
+    slots = resolution_seconds // fine_resolution_seconds if needs_slots else None
+    if method == "avg_zero":
+        agg = (F.sum(v) / F.lit(slots)).alias("value")
+    else:
+        agg = _METHODS[method](v, t).alias("value")
+    keep = None
+    if x_files_factor > 0.0:
+        keep = F.col("n_points") / F.lit(float(slots)) >= F.lit(float(x_files_factor))
+    return [agg, F.count(v).alias("n_points")], keep
+
+
 def rollup(
     df: DataFrame,
     resolution_seconds: int,
@@ -71,28 +103,11 @@ def rollup(
 
     Returns columns: ``*keys, bucket TIMESTAMP, value DOUBLE, n_points LONG``.
     """
-    if method not in ROLLUP_METHODS:
-        raise ValueError(f"unknown rollup method {method!r}; one of {ROLLUP_METHODS}")
-    needs_slots = method == "avg_zero" or x_files_factor > 0.0
-    if needs_slots and not fine_resolution_seconds:
-        raise ValueError(
-            f"method {method!r} / xFilesFactor > 0 require fine_resolution_seconds"
-        )
-
-    v, t = F.col(value_col), F.col(ts_col)
-    if method == "avg_zero":
-        slots = resolution_seconds // fine_resolution_seconds
-        agg = (F.sum(v) / F.lit(slots)).alias("value")
-    else:
-        agg = _METHODS[method](v, t).alias("value")
-
-    out = (
-        df.groupBy(*keys, time_bucket(ts_col, resolution_seconds).alias("bucket"))
-        .agg(agg, F.count(v).alias("n_points"))
+    aggs, keep = _whisper_agg(
+        resolution_seconds, method, x_files_factor, fine_resolution_seconds,
+        ts_col, value_col,
     )
-    if x_files_factor > 0.0:
-        slots = resolution_seconds // fine_resolution_seconds
-        out = out.filter(
-            F.col("n_points") / F.lit(float(slots)) >= F.lit(float(x_files_factor))
-        )
-    return out
+    out = df.groupBy(
+        *keys, time_bucket(ts_col, resolution_seconds).alias("bucket")
+    ).agg(*aggs)
+    return out if keep is None else out.filter(keep)

@@ -1,10 +1,10 @@
 """Metadata API over Whisper files: the reference's ``WhisperFileMeta`` /
 ``describe_*`` surface (whisper_pandas.py:75-85,147-168) as Spark DataFrames.
 
-Header peeks are tiny (≤ 16+12·N bytes per file); for large trees the peek
-itself is distributed over the file list with a Pandas UDF-free
-``spark.createDataFrame`` on the driver for small N, or ``mapInPandas``
-over a path DataFrame for millions of files.
+Header peeks are tiny (≤ 16+12·N bytes per file) and all run on the driver:
+:func:`scan_headers` reads each matching file's header in turn and the
+tables are driver-local frames, so the cost grows with the file count on
+the driver alone; no Spark task reads a header.
 
 The driver-side tables are built from Arrow, not from a Python list: a
 list-built DataFrame pickles its rows through Python tasks in a worker pool

@@ -12,9 +12,10 @@ Semantics per micro-batch (deterministic given the batch sequence):
    near-but-not-identical images in the SAME batch both register —
    documented; a production variant would band within the batch too);
 3. reject any survivor within ``max_hamming`` of an EXISTING registry
-   fingerprint — the banded candidate join transplanted from the batch
-   operator (8x8-bit bands: complete for max_hamming <= 7, so the
-   reject set is exactly the hamming ball, no false accepts);
+   fingerprint — the batch operators' band join
+   (operators/dedup.py:hamming_band_join, batch against registry;
+   8x8-bit bands: complete for max_hamming <= 7, so the reject set is
+   exactly the hamming ball, no false accepts);
 4. append the accepted (dhash, img_id) rows to the versioned state.
 
 Merge law: hamming-ball-filtered append (idempotent — a replayed
@@ -34,20 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from whisper_pandas_spark.operators.dedup import hamming_band_join
 from whisper_pandas_spark.stage import stage_materialize
 from whisper_pandas_spark.streaming.sink import maintain_table
-
-
-def _bands(df: DataFrame) -> DataFrame:
-    keys = F.array(
-        *[
-            F.shiftrightunsigned("dhash", b * 8).bitwiseAND(F.lit(255))
-            for b in range(8)
-        ]
-    )
-    return df.select(
-        "dhash", F.posexplode(keys).alias("band", "bkey")
-    )
 
 
 def stream_phash_dedup(
@@ -78,14 +68,11 @@ def stream_phash_dedup(
         if prior is None:
             return batch_min
         state = prior.select("dhash", "img_id")
-        lb = _bands(batch_min).select(
-            F.col("dhash").alias("bh"), "band", "bkey"
-        )
-        rb = _bands(state).select(F.col("dhash").alias("sh"), "band", "bkey")
         conflict = (
-            lb.join(rb, ["band", "bkey"])
-            .filter(F.bit_count(F.expr("bh ^ sh")) <= max_hamming)
-            .select(F.col("bh").alias("dhash"))
+            hamming_band_join(
+                batch_min, "dhash", 8, 8, max_hamming, other=state, id_col="dhash"
+            )
+            .select(F.col("doc_i").alias("dhash"))
             .distinct()
         )
         accepted = batch_min.join(conflict, "dhash", "left_anti")

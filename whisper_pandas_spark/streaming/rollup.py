@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.operators.rollup import ROLLUP_METHODS, _METHODS
+from whisper_pandas_spark.operators.rollup import _whisper_agg
 
 
 def streaming_rollup(
@@ -48,34 +48,18 @@ def streaming_rollup(
     the same contract as the batch :func:`~operators.rollup.rollup`, with
     ``bucket = window.start``.
     """
-    if method not in ROLLUP_METHODS:
-        raise ValueError(f"unknown rollup method {method!r}; one of {ROLLUP_METHODS}")
-    needs_slots = method == "avg_zero" or x_files_factor > 0.0
-    if needs_slots and not fine_resolution_seconds:
-        raise ValueError(
-            f"method {method!r} / xFilesFactor > 0 require fine_resolution_seconds"
-        )
-
-    v, t = F.col(value_col), F.col(ts_col)
-    if method == "avg_zero":
-        slots = resolution_seconds // fine_resolution_seconds
-        agg = (F.sum(v) / F.lit(slots)).alias("value")
-    else:
-        agg = _METHODS[method](v, t).alias("value")
-
-    win = F.window(t, f"{resolution_seconds} seconds")
+    aggs, keep = _whisper_agg(
+        resolution_seconds, method, x_files_factor, fine_resolution_seconds,
+        ts_col, value_col,
+    )
+    win = F.window(ts_col, f"{resolution_seconds} seconds")
     out = (
         sdf.withWatermark(ts_col, watermark)
         .groupBy(*keys, win.alias("win"))
-        .agg(agg, F.count(v).alias("n_points"))
+        .agg(*aggs)
         .select(*keys, F.col("win.start").alias("bucket"), "value", "n_points")
     )
-    if x_files_factor > 0.0:
-        slots = resolution_seconds // fine_resolution_seconds
-        out = out.filter(
-            F.col("n_points") / F.lit(float(slots)) >= F.lit(float(x_files_factor))
-        )
-    return out
+    return out if keep is None else out.filter(keep)
 
 
 def dedup_last_wins(
