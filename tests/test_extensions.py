@@ -13,6 +13,7 @@ from whisper_pandas_spark.operators.dedup import (
     minhash_signature,
     minhash_signature_arrow,
     ngram_jaccard_pairs,
+    shingle_hashes_arrow,
     simhash_arrow,
     simhash_df,
     simhash_pairs,
@@ -2082,3 +2083,26 @@ def test_holt_winters_matches_python_fold(spark):
         holt_winters_forecast(df, ("metric",), "ts", "value", 1, res)
     with _pt.raises(ValueError):
         holt_winters_forecast(df, ("metric",), "ts", "value", P, res, alpha=0.0)
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda df: simhash_arrow(df, "doc_id", "text"),
+        lambda df: minhash_signature_arrow(df, "doc_id", "text", 4),
+        lambda df: shingle_hashes_arrow(df, "doc_id", "text"),
+    ],
+    ids=["simhash_arrow", "minhash_signature_arrow", "shingle_hashes_arrow"],
+)
+def test_arrow_passes_keep_64bit_ids_beside_null_ids(spark, op):
+    """A NULL id makes PySpark hand its batch's long id column to pandas
+    as float64; every id above 2^53 in that batch must still come back
+    exact, and the NULL ids stay NULL. Each list-built partition here
+    holds both kinds of id."""
+    ids = [None if i % 3 == 2 else 2**60 + 1 + 2 * i for i in range(48)]
+    df = spark.createDataFrame([(i, BASE) for i in ids], "doc_id long, text string")
+    got = [r["doc_id"] for r in op(df).collect()]
+    assert sorted(i for i in got if i is not None) == sorted(
+        i for i in ids if i is not None
+    )
+    assert got.count(None) == ids.count(None)

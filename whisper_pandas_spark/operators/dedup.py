@@ -132,6 +132,27 @@ def _spread(src: DataFrame) -> DataFrame:
     return src
 
 
+def _with_id_mask(df: DataFrame, id_col: str, *cols) -> DataFrame:
+    """``(_id, _id_null, *cols)`` for an Arrow pass: the id with NULL
+    coalesced to 0, and its NULL mask. A NULL in a long column would reach
+    pandas as float64 and round every id above 2^53 in its batch; read the
+    pair back with :func:`_batch_ids`."""
+    return df.select(
+        F.coalesce(F.col(id_col), F.lit(0)).alias("_id"),
+        F.col(id_col).isNull().alias("_id_null"),
+        *cols,
+    )
+
+
+def _batch_ids(pdf):
+    """A batch's ids as a nullable Int64 array, NULLs restored."""
+    import pandas as pd
+
+    ids = pd.array(pdf["_id"], dtype="Int64")
+    ids[pdf["_id_null"].to_numpy()] = pd.NA
+    return ids
+
+
 def minhash_signature_arrow(
     df: DataFrame, id_col: str, text_col: str, num_perm: int, shingle_n: int = 3
 ) -> DataFrame:
@@ -165,7 +186,7 @@ def minhash_signature_arrow(
         non_alnum = re.compile(r"[^a-z0-9]+")
         for pdf in batches:
             ids, hhs, sigs = [], [], []
-            for doc_id, text in zip(pdf["_id"], pdf["_text"]):
+            for doc_id, text in zip(_batch_ids(pdf), pdf["_text"]):
                 if text is None:
                     continue  # expr path: size(NULL shingles) > 0 filter drops it
                 toks = non_alnum.sub(" ", str(text).lower()).strip().split(" ")
@@ -187,9 +208,11 @@ def minhash_signature_arrow(
                 sigs.append(sig.tolist())
             if ids:  # an all-skipped batch would yield untyped empty
                 # columns that Arrow can't map to array<long>
-                yield pd.DataFrame({"doc_id": ids, "hh": hhs, "sig": sigs})
+                yield pd.DataFrame(
+                    {"doc_id": pd.array(ids, dtype="Int64"), "hh": hhs, "sig": sigs}
+                )
 
-    src = _spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
+    src = _spread(_with_id_mask(df, id_col, F.col(text_col).alias("_text")))
     return src.mapInPandas(
         compute, "doc_id long, hh array<long>, sig array<long>"
     )
@@ -317,7 +340,7 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
         for pdf in batches:
             ids, out = [], []
-            for doc_id, text in zip(pdf["_id"], pdf["_text"]):
+            for doc_id, text in zip(_batch_ids(pdf), pdf["_text"]):
                 if text is None:
                     # expr path: votes over a NULL token array never pass
                     # the > 0 test, so the fingerprint is 0 — mirror it
@@ -336,9 +359,11 @@ def simhash_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 ids.append(doc_id)
                 out.append(sim)
             if ids:
-                yield pd.DataFrame({"doc_id": ids, "simhash": out})
+                yield pd.DataFrame(
+                    {"doc_id": pd.array(ids, dtype="Int64"), "simhash": out}
+                )
 
-    src = _spread(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")))
+    src = _spread(_with_id_mask(df, id_col, F.col(text_col).alias("_text")))
     return src.mapInPandas(compute, "doc_id long, simhash long")
 
 
@@ -376,7 +401,7 @@ def shingle_hashes_arrow(
             ids, hhs = [], []
             extras: list[list] = [[] for _ in carry]
             for doc_id, text, *rest in zip(
-                pdf["_id"], pdf["_text"], *(pdf[c] for c in carry)
+                _batch_ids(pdf), pdf["_text"], *(pdf[c] for c in carry)
             ):
                 if text is None:
                     continue  # expr path drops NULL-text docs
@@ -398,15 +423,13 @@ def shingle_hashes_arrow(
                 for lst, v in zip(extras, rest):
                     lst.append(v)
             if ids:
-                out = {"doc_id": ids, "hh": hhs}
+                out = {"doc_id": pd.array(ids, dtype="Int64"), "hh": hhs}
                 out.update(dict(zip(carry, extras)))
                 yield pd.DataFrame(out)
 
     src = _spread(
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_text"),
-            *(F.col(c) for c in carry),
+        _with_id_mask(
+            df, id_col, F.col(text_col).alias("_text"), *(F.col(c) for c in carry)
         )
     )
     schema = "doc_id long, hh array<long>" + "".join(

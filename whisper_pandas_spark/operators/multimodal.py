@@ -36,7 +36,11 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from whisper_pandas_spark.operators.dedup import hamming_band_join
+from whisper_pandas_spark.operators.dedup import (
+    _batch_ids,
+    _with_id_mask,
+    hamming_band_join,
+)
 
 FEATURE_BINS = 16
 FRAME_BYTES = 64  # fake fixed-size "frame" for the sampling pipeline
@@ -215,10 +219,8 @@ def _decode_pass(
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            ids = pd.array(pdf["_id"], dtype="Int64")
-            ids[pdf["_id_null"].to_numpy()] = pd.NA
             rows: list[tuple] = []
-            for doc_id, p in zip(ids, pdf["_payload"]):
+            for doc_id, p in zip(_batch_ids(pdf), pdf["_payload"]):
                 try:
                     if p is None:
                         raise CodecError("null payload")
@@ -239,11 +241,7 @@ def _decode_pass(
                 }
             )
 
-    src = df.select(
-        F.coalesce(F.col(id_col), F.lit(0)).alias("_id"),
-        F.col(id_col).isNull().alias("_id_null"),
-        F.col(payload_col).alias("_payload"),
-    )
+    src = _with_id_mask(df, id_col, F.col(payload_col).alias("_payload"))
     return src.mapInPandas(run, f"doc_id long, {schema}")
 
 

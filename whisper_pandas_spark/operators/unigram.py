@@ -41,10 +41,12 @@ from __future__ import annotations
 import math
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from whisper_pandas_spark.operators.bpe_train import _word_vocab
+from whisper_pandas_spark.sources.meta import _local_frame
 from whisper_pandas_spark.stage import stage_materialize
 
 _MAX_WORD = 64  # lattice cost is O(len * max_piece_len); cap abusive words
@@ -216,8 +218,18 @@ def unigram_train(
         kept = dict(ranked[:keep])
         logp = {p: lp for p, lp in logp.items() if len(p) == 1 or p in kept}
 
-    out = sorted(logp.items())
-    return spark.createDataFrame(out, "piece string, logp double")
+    return vocab_frame(spark, sorted(logp.items()))
+
+
+_VOCAB_SCHEMA = StructType(
+    [StructField("piece", StringType()), StructField("logp", DoubleType())]
+)
+
+
+def vocab_frame(spark: SparkSession, rows: list[tuple[str, float]]) -> DataFrame:
+    """(piece, logp) rows as a driver-local frame built from Arrow: a
+    list-built frame would pickle its rows through Python tasks."""
+    return _local_frame(spark, rows, _VOCAB_SCHEMA)
 
 
 def _viterbi(word: str, logp: dict, max_len: int) -> list[str] | None:

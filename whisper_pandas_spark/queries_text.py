@@ -398,14 +398,14 @@ def _frozen_unigram_vocab(spark: SparkSession, docs: DataFrame) -> DataFrame:
     import math
 
     from whisper_pandas_spark.operators.bpe_train import _word_vocab
-    from whisper_pandas_spark.operators.unigram import _seed_vocab
+    from whisper_pandas_spark.operators.unigram import _seed_vocab, vocab_frame
 
     seed = _seed_vocab(
         _word_vocab(docs, "text"), _U_MAX_PIECE, _U_TOPK
     ).collect()
     total = float(sum(r["cnt"] for r in seed))
     rows = sorted((r["piece"], math.log(r["cnt"] / total)) for r in seed)
-    return spark.createDataFrame(rows, "piece string, logp double")
+    return vocab_frame(spark, rows)
 
 
 _UNIGRAM_ORACLE = f"""

@@ -17,7 +17,13 @@ Semantics per the Whisper model:
 - coarser archives: rolled up from the next-FINER archive with the file's
   aggregation method, gated by xFilesFactor on EXPECTED slots — the same
   cascade the batch/streaming rollup operators implement
-  (operators/rollup.py), here in numpy at write time.
+  (operators/rollup.py), here in numpy at write time. Each archive's
+  buckets are reduced together by :func:`_reduce_segments`. ``average``,
+  ``sum`` and ``avg_zero`` sum a bucket left to right, the order of
+  Graphite's ``float(sum(knownValues))``. Earlier versions summed
+  pairwise (``np.mean``/``np.sum``), so on buckets of more than 8 points
+  these three may differ from their files in the last ulp; sums of
+  integer-valued points are exact either way.
 
 Distribution contract: each executor task writes the files for the
 metrics it holds, so the caller must ensure one partition per metric —
@@ -44,29 +50,43 @@ from whisper_pandas_spark.sources.format import (
     POINT_SIZE,
 )
 
-# method name -> numpy reducer over (ts, vals) of one coarse window
 _AGG_IDS = {name: i for i, name in AGGREGATION_METHODS.items()}
 
 
-def _reduce(method: str, ts, vals, expected_slots: int):
+def _reduce_segments(method: str, vals, starts, ends, counts, expected: int):
+    """Aggregate every coarse bucket at once: bucket ``k`` is the
+    contiguous slice ``vals[starts[k]:ends[k]]`` of ``counts[k]`` points
+    (each > 0; there may be no buckets), ``expected`` the finer slots one
+    bucket spans.
+
+    Sums run left to right (``np.bincount`` accumulates in index order),
+    the order of Graphite's ``float(sum(knownValues))``. ``absmax`` and
+    ``absmin`` return the first point that reaches the bucket's extreme
+    ``|v|``, a NaN counting as the extreme, as ``np.argmax`` does.
+    """
     import numpy as np
 
-    if method == "average":
-        return float(np.mean(vals))
-    if method == "sum":
-        return float(np.sum(vals))
     if method == "last":
-        return float(vals[np.argmax(ts)])
+        return vals[ends - 1]
     if method == "max":
-        return float(np.max(vals))
+        return np.maximum.reduceat(vals, starts)
     if method == "min":
-        return float(np.min(vals))
-    if method == "avg_zero":
-        return float(np.sum(vals) / expected_slots)
-    if method == "absmax":
-        return float(vals[np.argmax(np.abs(vals))])
-    if method == "absmin":
-        return float(vals[np.argmin(np.abs(vals))])
+        return np.minimum.reduceat(vals, starts)
+    seg = np.repeat(np.arange(len(starts)), counts)
+    if method in ("average", "sum", "avg_zero"):
+        total = np.bincount(seg, weights=vals, minlength=len(starts))
+        if method == "sum":
+            return total
+        return total / (counts if method == "average" else expected)
+    if method in ("absmax", "absmin"):
+        mag = np.abs(vals)
+        pick = np.maximum if method == "absmax" else np.minimum
+        # a NaN propagates through reduceat, so it is its bucket's extreme
+        hit = (mag == pick.reduceat(mag, starts)[seg]) | np.isnan(mag)
+        first = np.minimum.reduceat(
+            np.where(hit, np.arange(len(vals)), len(vals)), starts
+        )
+        return vals[first]
     raise ValueError(f"unknown aggregation method {method!r}")
 
 
@@ -187,18 +207,16 @@ def build_wsp_bytes(
             # filter), so each bucket is one contiguous slice.
             bucket = (fine_ts // spp) * spp
             uniq, starts = np.unique(bucket, return_index=True)
-            ends = np.append(starts[1:], len(bucket))
+            # sliced so an empty finer archive gives no buckets, not one
+            ends = np.append(starts[1:], len(bucket))[: len(starts)]
+            counts = ends - starts
             expected = spp // prev_spp
-            a_ts_list, a_vals_list = [], []
-            for u, lo, hi in zip(uniq, starts, ends):
-                if float(hi - lo) / expected < x_files_factor:
-                    continue
-                a_ts_list.append(int(u))
-                a_vals_list.append(
-                    _reduce(aggregation, fine_ts[lo:hi], fine_vals[lo:hi], expected)
-                )
-            a_ts = np.asarray(a_ts_list, dtype="int64")
-            a_vals = np.asarray(a_vals_list, dtype="float64")
+            a_vals = _reduce_segments(
+                aggregation, fine_vals, starts, ends, counts, expected
+            )
+            # xFilesFactor gate on EXPECTED slots (a NaN factor drops none)
+            keep = ~(counts / expected < x_files_factor)
+            a_ts, a_vals = uniq[keep], a_vals[keep]
 
         if old_arch is not None:
             # overlay onto stored points: old first, so on a slot-ts tie
@@ -234,9 +252,11 @@ class WhisperWriter(DataSourceArrowWriter):
     emits one .wsp per metric (caller repartitions by metric).
 
     Arrow variant (``DataSourceArrowWriter``): each task receives
-    RecordBatches, so column extraction and the per-metric grouping are
-    vectorized numpy — no per-Row Python objects on the write path,
-    matching the reader's Arrow-out design."""
+    RecordBatches. Columns go to numpy, and rows are grouped by a stable
+    sort of the metric column's Arrow dictionary codes, so the only Python
+    objects on the write path are one ``str`` per distinct metric in a
+    batch, matching the reader's Arrow-out design. Roll-ups and their
+    summation order are described in the module docstring."""
 
     def __init__(self, options) -> None:
         self.out_dir = options.get("out_dir") or options.get("path")
@@ -281,17 +301,20 @@ class WhisperWriter(DataSourceArrowWriter):
                 .cast(pa.float64())
                 .to_numpy(zero_copy_only=False)
             )
-            mets = np.asarray(
-                batch.column(batch.schema.get_field_index("metric")).to_pylist(),
-                dtype=object,
-            )
-            order = np.argsort(mets, kind="stable")
-            sm = mets[order]
-            uniq, starts = np.unique(sm, return_index=True)
-            bounds = np.append(starts, len(sm))
-            for m, lo, hi in zip(uniq, bounds[:-1], bounds[1:]):
-                sel = order[lo:hi]
-                by_metric.setdefault(str(m), []).append((ts[sel], vals[sel]))
+            # group by the metric's Arrow dictionary code (stable sort)
+            mets = batch.column(batch.schema.get_field_index("metric"))
+            if mets.null_count:
+                raise ValueError("whisper write: NULL metric name")
+            enc = mets.dictionary_encode()
+            codes = enc.indices.to_numpy()
+            order = np.argsort(codes, kind="stable")
+            codes, ts, vals = codes[order], ts[order], vals[order]
+            bounds = np.flatnonzero(np.diff(codes, prepend=-1, append=-1))
+            names = enc.dictionary.to_numpy(zero_copy_only=False)
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                by_metric.setdefault(names[codes[lo]], []).append(
+                    (ts[lo:hi], vals[lo:hi])
+                )
 
         written = []
         for metric, chunks in by_metric.items():
